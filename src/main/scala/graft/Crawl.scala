@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.frontier.{Discover, Ledger, Robots, WaveLoop}
+import graft.frontier.{Discover, Robots, WaveLoop}
 import graft.pipeline.TextPipeline
 
 /** End-to-end crawl CLI — the rebuild's twin of the reference's `__main__`
@@ -57,7 +57,8 @@ import graft.pipeline.TextPipeline
   * [[graft.sources.PageTable]] (there is no live network in a 100 TB batch
   * job — divergence recorded in SURVEY.md §7.3). Output layout:
   *
-  *   out/frontier/…        wave state (schedule/seen/metrics/manifests)
+  *   out/frontier/…        wave state (schedule/next/metrics/manifests,
+  *                         seenstate/ seen-set ledger)
   *   out/results.parquet   url, full_text, chunks, embeddings
   *   out/results.json/     one JSON object per url (reference `:231-232`
   *                         contract, via the same to_json shape as q32)
@@ -137,10 +138,9 @@ object Crawl {
     val pages = graft.sources.PageTable.read(spark, a.pages)
     val seeds = a.urls.zipWithIndex.map { case (u, i) => (u, i.toLong) }
       .toDF("url", "seed_idx")
-    val ledger = new Ledger(spark, s"${a.out}/frontier/seenstate")
     WaveLoop.run(spark, s"${a.out}/frontier", seeds,
       Discover.fromPages(pages), maxWaves = a.waves, gapSeconds = a.gapSeconds,
-      robots = Robots.AllowAll, pages = Some(pages), ledger = Some(ledger),
+      robots = Robots.AllowAll, pages = Some(pages),
       refreshAfter = a.refreshAfter,
       retryErrorsAfter = a.retryAfter,
       edgesOf = a.rankEvery.map(_ => Discover.edgesFromPages(pages)),

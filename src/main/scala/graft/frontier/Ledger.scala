@@ -1,9 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import graft.functions.{bloom_agg, bloom_merge_agg, cuckoo_agg, cuckoo_delete_keys, cuckoo_merge_agg, BloomBank, BloomBankProbe, CuckooBank, CuckooBankProbe, CuckooFilter}
+import graft.functions.{bloom_agg, bloom_merge_agg}
 import graft.core.Fs
 
 /** Persistent seen-set ledger, the 10^10-scale layout the north rule names:
@@ -44,12 +43,7 @@ final class Ledger(
     val fpp: Double = 1e-2,
     val maxBankBytes: Long = 256L << 20,
     val compactEvery: Int = 8,
-    val bankSingleFileBytes: Long = 64L << 20,
-    val sketch: String = "bloom") extends Serializable {
-
-  import Ledger._
-
-  require(sketch == "bloom" || sketch == "cuckoo", s"sketch: $sketch")
+    val bankSingleFileBytes: Long = 64L << 20) extends Serializable {
 
   /** Catalog name is derived from the root path so independent crawls in one
     * session never collide; the version suffix changes on compaction.
@@ -80,14 +74,20 @@ final class Ledger(
   def ensure(): Unit = {
     Fs.mkdirs(root)
     if (!Fs.exists(versionFile)) Fs.writeString(versionFile, "0")
-    val params = s"""{"buckets":$buckets,"expectedPerBucket":$expectedPerBucket,"fpp":$fpp,"sketch":"$sketch"}"""
+    val params = s"""{"buckets":$buckets,"expectedPerBucket":$expectedPerBucket,"fpp":$fpp,"sketch":"bloom"}"""
     // roots written before the sketch field existed carry the 3-field form;
-    // they are bit-identical to sketch="bloom" and must stay openable
+    // they are bit-identical to the bloom form and must stay openable
     val legacyParams = s"""{"buckets":$buckets,"expectedPerBucket":$expectedPerBucket,"fpp":$fpp}"""
     if (!Fs.exists(paramsFile)) Fs.writeString(paramsFile, params)
     else {
       val stored = Fs.readString(paramsFile).trim
-      require(stored == params || (sketch == "bloom" && stored == legacyParams),
+      // a bank of another sketch family would be probed as blooms —
+      // garbage answers, i.e. lost dedup; say which family the root holds
+      val storedSketch = """"sketch":"([^"]*)"""".r.findFirstMatchIn(stored)
+        .map(_.group(1)).getOrElse("bloom")
+      require(storedSketch == "bloom",
+        s"ledger at $root holds a '$storedSketch' sketch bank; only bloom banks are supported")
+      require(stored == params || stored == legacyParams,
         s"ledger at $root was created with $stored; this instance has $params — " +
           "sketch parameters are part of the on-disk format and cannot change on resume")
     }
@@ -150,8 +150,7 @@ final class Ledger(
     * that already switches the bank to a single file), because bloom OR is
     * bitwise-commutative, so the driver-side merge is byte-identical to
     * the distributed `bloom_merge_agg`. Falls back to the two-pass
-    * append + writeBlooms when any precondition fails: cuckoo sketches
-    * (fingerprint re-insertion is not order-invariant), a coverage gap
+    * append + writeBlooms when either precondition fails: a coverage gap
     * (healing must read the table), or a bank past the driver threshold
     * (the merge must stay distributed). The wave loop calls this — at
     * steady state it saves one full delta read + aggregate job per wave.
@@ -162,7 +161,7 @@ final class Ledger(
     val covered = prevOpt.getOrElse(-1)
     val estBank = prevOpt.map(w => Fs.treeBytes(bloomDir(w), ".parquet"))
       .getOrElse(buckets.toLong * emptyBloomBytes)
-    if (sketch != "bloom" || covered < wave - 1 || estBank > bankSingleFileBytes) {
+    if (covered < wave - 1 || estBank > bankSingleFileBytes) {
       append(delta, wave)
       writeBlooms(delta, wave)
       return
@@ -219,46 +218,17 @@ final class Ledger(
       Fs.deleteTree(s"$root/blooms/$n")
   }
 
-  /** Serialized bytes of one EMPTY per-bucket sketch — the bank-size
-    * estimator's unit when no previous bank exists (both families'
-    * serialized size is fixed by (expectedPerBucket, fpp) regardless of
-    * fill, so this is the right order of magnitude pre-compression).
+  /** Serialized bytes of one EMPTY per-bucket bloom — the bank-size
+    * estimator's unit when no previous bank exists (the serialized size is
+    * fixed by (expectedPerBucket, fpp) regardless of fill, so this is the
+    * right order of magnitude pre-compression).
     */
-  private lazy val emptyBloomBytes: Long =
-    if (sketch == "cuckoo")
-      CuckooFilter.create(math.max(expectedPerBucket, 1024L)).serialize().length.toLong
-    else {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.spark.util.sketch.BloomFilter
-        .create(math.max(expectedPerBucket, 1024L), fpp).writeTo(out)
-      out.size().toLong
-    }
-
-  /** Sketch-family dispatch: the bank build/merge/probe column factories.
-    * Bank files keep the `bloom` column name in either family (readers are
-    * family-blind; the params file is the source of truth).
-    */
-  private def sketchAggCol(keys: Column): Column =
-    if (sketch == "cuckoo") cuckoo_agg(keys, math.max(expectedPerBucket, 1024L))
-    else bloom_agg(keys, math.max(expectedPerBucket, 1024L), fpp)
-
-  private def sketchMergeAggCol(c: Column): Column =
-    if (sketch == "cuckoo") cuckoo_merge_agg(c) else bloom_merge_agg(c)
-
-  private def bankProbeCol(rows: Array[(Int, Array[Byte])]): Column =
-    if (sketch == "cuckoo") {
-      val bank = new CuckooBank(spark.sparkContext.broadcast(rows))
-      Bridge.column(CuckooBankProbe(bank,
-        Bridge.expression(bucketOf(col("url_hash"))),
-        Bridge.expression(col("url_hash"))))
-    } else {
-      val bank = new BloomBank(spark.sparkContext.broadcast(rows))
-      Bridge.column(BloomBankProbe(bank,
-        Bridge.expression(bucketOf(col("url_hash"))),
-        Bridge.expression(col("url_hash"))))
-    }
-
-  private def bucketOf(c: Column): Column = pmod(c, lit(buckets)).cast("int")
+  private lazy val emptyBloomBytes: Long = {
+    val out = new java.io.ByteArrayOutputStream()
+    org.apache.spark.util.sketch.BloomFilter
+      .create(math.max(expectedPerBucket, 1024L), fpp).writeTo(out)
+    out.size().toLong
+  }
 
   /** Latest materialized bloom state at or before `wave` (committed waves
     * only — the caller passes lastCommitted). Requires the writer's
@@ -292,13 +262,13 @@ final class Ledger(
       else delta.select("url_hash").unionByName(
         committedFrame(wave - 1).where(col("wave") > covered).select("url_hash"))
     val deltaBlooms = keys
-      .groupBy(bucketOf(col("url_hash")).as("bucket"))
-      .agg(sketchAggCol(col("url_hash")).as("bloom"))
+      .groupBy(Seen.bucketOf(col("url_hash"), buckets).as("bucket"))
+      .agg(bloom_agg(col("url_hash"), math.max(expectedPerBucket, 1024L), fpp).as("bloom"))
     val merged = prevOpt match {
       case None => deltaBlooms
       case Some(prev) =>
         spark.read.parquet(bloomDir(prev)).unionByName(deltaBlooms)
-          .groupBy("bucket").agg(sketchMergeAggCol(col("bloom")).as("bloom"))
+          .groupBy("bucket").agg(bloom_merge_agg(col("bloom")).as("bloom"))
     }
     // SIZE-ADAPTIVE layout. Big bank (estimated > bankSingleFileBytes):
     // one FILE per bucket (dir partitioned by bucket) — the merge stays
@@ -338,21 +308,15 @@ final class Ledger(
     * tombstones never outlive their purpose). [[compact]] applies
     * tombstones physically and clears them.
     *
-    * Sketch side: under `sketch="cuckoo"` the current bank is PATCHED with
-    * [[graft.functions.cuckoo_delete_keys]] — the deletable-sketch payoff:
-    * bank selectivity is restored immediately, where a bloom cannot
-    * unlearn. Under bloom the bank is left over-approximate — unseen keys
-    * probe positive, fall into the verify-anti-join, and pass because the
-    * tombstone removed them from [[committedFrame]]: exactness never
-    * depends on the patch (which is also why a crash mid-patch — no
-    * `_SUCCESS` — only degrades the pre-filter, see [[latestBloomWave]]).
+    * The bloom bank is left as it is: a bloom cannot unlearn, so unseen
+    * keys probe positive, fall into the verifying anti-join, and pass
+    * because the tombstone removed them from [[committedFrame]]. Exactness
+    * never depends on the sketch; a retried key only costs a row of
+    * anti-join traffic.
     *
     * The input is restricted to currently-seen keys first (semi-join
-    * against [[committedFrame]]): the cuckoo delete contract allows
-    * deleting only inserted keys (deleting an absent key whose fingerprint
-    * collides would evict someone else's copy = bank false negative), and
-    * the restriction also makes unsee idempotent — a second unsee of the
-    * same key finds it already gone and writes nothing.
+    * against [[committedFrame]]), which makes unsee idempotent — a second
+    * unsee of the same key finds it already gone and writes nothing.
     *
     * `wave` is the caller's last COMMITTED wave; keys re-appended after it
     * are not affected.
@@ -360,58 +324,18 @@ final class Ledger(
   def unsee(keys: DataFrame, wave: Int): Unit = {
     ensure()
     // materialize BEFORE writing tombstones: `dead` reads committedFrame,
-    // which the tombstone append is about to change under it — a lazy
-    // recompute after the append would see the keys already gone and the
-    // bank patch would delete nothing
+    // which reads the tombstone directory the append below writes into
     val dead = keys.select(col("url_hash").cast("long").as("url_hash")).distinct()
       .join(committedFrame(wave).select("url_hash"), Seq("url_hash"), "left_semi")
       .distinct() // committedFrame keeps at-least-once duplicate appends
       .localCheckpoint(true)
     // empty batch (second unsee of the same keys, or keys never seen):
     // writing a 0-row tombstone file would flip committedFrame onto the
-    // subtraction path for nothing, and the cuckoo arm would rewrite the
-    // whole bank through a no-op patch — bail before any state changes
+    // subtraction path for nothing — bail before any state changes
     if (dead.isEmpty) return
     dead.withColumn("t_wave", lit(wave).cast("int"))
       .coalesce(1) // maintenance-sized batch; one tombstone file per unsee
       .write.mode(SaveMode.Append).parquet(tombstoneDir)
-    if (sketch == "cuckoo") latestBloomWave(wave).foreach { w =>
-      // delete each dead key ONCE from its bucket's filter. Duplicate
-      // inserts (the same url in several wave deltas) may leave residual
-      // copies — the bank stays over-approximate, which is sound.
-      //
-      // The patch set must honor the delete contract AGAINST THIS BANK:
-      // when the bank lags the table (w < wave — the latest bank write
-      // crashed or was skipped), keys committed in (w, wave] were never
-      // inserted into bank w, and deleting an absent key can evict a
-      // colliding LIVE fingerprint = bank false negative = silently lost
-      // dedup. Restrict to keys the bank actually covers (raw table rows
-      // at wave ≤ w — pre-tombstone view, since the tombstones just
-      // written would empty the normal w == wave case); the uncovered
-      // remainder simply stays unpatched, which is over-approximate and
-      // sound.
-      val coveredDead =
-        if (w >= wave) dead
-        else dead.join(
-          spark.table(tableName(currentVersion)).where(col("wave") <= w)
-            .select("url_hash"),
-          Seq("url_hash"), "left_semi").localCheckpoint(true)
-      val bank = spark.read.parquet(bloomDir(w)).localCheckpoint(true) // free the dir for overwrite
-      val byBucket = coveredDead.groupBy(bucketOf(col("url_hash")).as("bucket"))
-        .agg(collect_list(col("url_hash")).as("ks"))
-      val bankBytes = Fs.treeBytes(bloomDir(w), ".parquet")
-      val patched = bank.join(broadcast(byBucket), Seq("bucket"), "left")
-        .select(col("bucket").cast("int").as("bucket"),
-          when(col("ks").isNull, col("bloom"))
-            .otherwise(cuckoo_delete_keys(col("bloom"), col("ks"))).as("bloom"))
-      // same size-adaptive layout as writeBlooms: a big bank must patch and
-      // write bucket-parallel, a small one as a single file
-      if (bankBytes <= bankSingleFileBytes)
-        patched.coalesce(1).write.mode(SaveMode.Overwrite).parquet(bloomDir(w))
-      else
-        patched.repartition(col("bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(bloomDir(w))
-    }
   }
 
   /** Exact unseen filter against the committed ledger: bloom-bank pre-filter
@@ -422,14 +346,14 @@ final class Ledger(
   def filterUnseen(candidates: DataFrame, upToWave: Int): DataFrame = {
     ensure()
     if (upToWave < 0) return candidates
-    val antiRight = committedFrame(upToWave).select("url_hash")
+    val committed = committedFrame(upToWave)
     latestBloomWave(upToWave) match {
       case None =>
         // no (committed) bloom state. The LEDGER is the ground truth — a
         // missing/disabled bank must degrade to the exact anti-join, never
         // to a pass-through (which would re-crawl everything the table
         // remembers). Cheap when the table is actually empty.
-        candidates.join(antiRight, Seq("url_hash"), "left_anti")
+        candidates.join(committed.select("url_hash"), Seq("url_hash"), "left_anti")
       case Some(w) =>
         // broadcast-ceiling check from FILE METADATA: collecting first and
         // measuring after would OOM the driver at exactly the scale the
@@ -437,26 +361,22 @@ final class Ledger(
         val bankBytes = Fs.treeBytes(bloomDir(w), ".parquet")
         if (bankBytes > maxBankBytes) {
           // co-partitioned fallback: bucketed scan probes in place
-          candidates.join(antiRight, Seq("url_hash"), "left_anti")
+          candidates.join(committed.select("url_hash"), Seq("url_hash"), "left_anti")
         } else {
           val rows = spark.read.parquet(bloomDir(w)).collect()
-          val maybeSeen = bankProbeCol(
-            rows.map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom"))))
-          val positives = candidates.where(maybeSeen)
-            .join(antiRight, Seq("url_hash"), "left_anti")
-          val negatives = candidates.where(!maybeSeen)
+            .map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom")))
           // The bank may lag the table (caller appended waves (w, upToWave]
           // without writeBlooms, or a bloom write crashed): keys committed in
           // that gap probe bloom-NEGATIVE and would bypass the anti-join —
           // silent lost dedup, the worst seen-set failure. Negatives must
           // anti-join the uncovered slice; when the bank is current
           // (w == upToWave, the WaveLoop invariant) this adds nothing.
-          val checkedNegatives =
-            if (w >= upToWave) negatives
-            else negatives.join(
-              committedFrame(upToWave).where(col("wave") > w).select("url_hash"),
+          val checkNegatives: DataFrame => DataFrame =
+            if (w >= upToWave) identity
+            else _.join(committed.where(col("wave") > w).select("url_hash"),
               Seq("url_hash"), "left_anti")
-          checkedNegatives.unionByName(positives)
+          Seen.verifyPositives(candidates, Seen.bloomBankProbe(spark, rows, buckets),
+            committed, checkNegatives)
         }
     }
   }
@@ -539,9 +459,9 @@ final class Ledger(
     * fetches before re-fetches, by construction rather than by luck.
     *
     * Re-crawling a scheduled refresh row re-appends it at the new wave
-    * (the loop's normal seen-delta write), which re-stamps its last-fetch
-    * age — one re-crawl per TTL window, exactly ([[compact]] keeps
-    * max-wave so the stamp survives compaction).
+    * (the loop appends every committed schedule), which re-stamps its
+    * last-fetch age — one re-crawl per TTL window, exactly ([[compact]]
+    * keeps max-wave so the stamp survives compaction).
     */
   def staleFrontier(currentWave: Int, maxAgeWaves: Int): DataFrame = {
     require(maxAgeWaves >= 1, s"maxAgeWaves must be >= 1: $maxAgeWaves")

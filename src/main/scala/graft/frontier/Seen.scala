@@ -21,7 +21,7 @@ import graft.functions.{bloom_agg, bloom_might_contain, canonicalize_url, cuckoo
   *     lives in [[Ledger]] — the anti-join there reads the ledger
   *     pre-partitioned and shuffles only the candidate side. The helpers
   *     in THIS object take ad-hoc ledger frames (benchmarks, single-shot
-  *     jobs) and build the bloom bank on the fly;
+  *     jobs) with a sketch built on the fly or supplied by the caller;
   *   - bloom pre-filter: one BloomFilter per run (or per bucket at scale),
   *     built by the [[graft.functions.BloomAgg]] TypedImperativeAggregate.
   *     `might_contain == false` → DEFINITELY new → skips the join entirely.
@@ -51,7 +51,6 @@ object Seen {
     */
   def filterUnseen(candidates: DataFrame, seenLedger: DataFrame,
       expectedSeen: Long = 1L << 20, fpp: Double = 1e-3): DataFrame = {
-    val spark = candidates.sparkSession
     // Build the bloom with one aggregate job over the ledger. At sf scale a
     // single bloom is fine; at 10^10 this becomes one bloom per hash bucket
     // with the probe routed by pmod(url_hash, buckets) — same dataflow.
@@ -61,111 +60,91 @@ object Seen {
     val bloomBytes = if (bloomRow.isEmpty || bloomRow(0).isNullAt(0)) null
       else bloomRow(0).getAs[Array[Byte]](0)
     if (bloomBytes == null) return candidates
-    val maybeSeen = bloom_might_contain(lit(bloomBytes), col("url_hash"))
-    // definitely-new rows bypass the shuffle; bloom-positives get verified.
-    // NOTE the two branches each re-evaluate `candidates` — callers should
-    // pass a cheap upstream (scan + canonicalize), i.e. run this BEFORE any
-    // shuffling stage like dropInWaveDuplicates (the two commute: seen-status
-    // is a function of url_hash, constant within a duplicate group).
-    val positives = candidates.where(maybeSeen)
-      .join(seenLedger.select("url_hash"), Seq("url_hash"), "left_anti")
-    val negatives = candidates.where(!maybeSeen)
-    negatives.unionByName(positives)
+    // NOTE the verify split re-evaluates `candidates` on both branches —
+    // callers should pass a cheap upstream (scan + canonicalize), i.e. run
+    // this BEFORE any shuffling stage like dropInWaveDuplicates (the two
+    // commute: seen-status is a function of url_hash, constant within a
+    // duplicate group).
+    verifyPositives(candidates, bloom_might_contain(lit(bloomBytes), col("url_hash")),
+      seenLedger)
   }
 
-  /** Partitioned-bloom variant of [[filterUnseen]] — the 10^10-scale shape
-    * the north rule names ("partitioned bloom seen-set"):
+  /** Partitioned-bloom variant of [[filterUnseen]] with a CALLER-SUPPLIED
+    * bank — the 10^10-scale shape the north rule names ("partitioned bloom
+    * seen-set"): one bloom per `pmod(url_hash, buckets)` bucket, shipped as
+    * ONE TorrentBroadcast (a plan Literal would re-ship with every stage's
+    * task binary), probes routed to their bucket's bloom. [[Ledger]] keeps
+    * such a bank persistent across waves; this entry point serves
+    * pipelines that build the per-bucket blooms INSIDE an upstream job
+    * (e.g. as `observe()` aggregates riding a staging write: the bank costs
+    * ZERO extra jobs and zero extra passes over the data).
     *
-    *  - the ledger is bucketed by `pmod(url_hash, buckets)`; one bloom is
-    *    built PER BUCKET, so partial merges fan out across `buckets` reduce
-    *    tasks instead of funneling into one serial reducer;
-    *  - the bank of sketches ships as ONE TorrentBroadcast (bytes move once
-    *    per executor — a plan Literal would re-ship with every stage's task
-    *    binary and destabilize the codegen cache);
-    *  - probes route to their bucket's bloom; negatives skip the anti-join.
-    *
-    * Membership stays exact: positives are verified by the left-anti join.
-    */
-  def filterUnseenBucketed(candidates: DataFrame, seenLedger: DataFrame,
-      buckets: Int = 64, expectedPerBucket: Long = 1 << 16,
-      fpp: Double = 1e-2): DataFrame = {
-    val spark = candidates.sparkSession
-    val bucketOf = (c: Column) => pmod(c, lit(buckets)).cast("int")
-    val bloomRows = seenLedger
-      .groupBy(bucketOf(col("url_hash")).as("bucket"))
-      .agg(bloom_agg(col("url_hash"), math.max(expectedPerBucket, 1024L), fpp).as("bloom"))
-      .collect()
-    if (bloomRows.isEmpty) return candidates
-    val bank = new BloomBank(spark.sparkContext.broadcast(
-      bloomRows.map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom")))))
-    val maybeSeen = Bridge.column(BloomBankProbe(bank,
-      Bridge.expression(bucketOf(col("url_hash"))),
-      Bridge.expression(col("url_hash"))))
-    val positives = candidates.where(maybeSeen)
-      .join(seenLedger.select("url_hash"), Seq("url_hash"), "left_anti")
-    val negatives = candidates.where(!maybeSeen)
-    negatives.unionByName(positives)
-  }
-
-  /** [[filterUnseenBucketed]] with a CALLER-SUPPLIED bank — for pipelines
-    * that build the per-bucket blooms INSIDE an upstream job (e.g. as
-    * `observe()` aggregates riding a staging write: the bloom partials
-    * compute in the write's own tasks, so the bank costs ZERO extra jobs
-    * and zero extra passes over the data — the layout that closed the
-    * bench's bank-build job boundary). CONTRACT: the bank must contain AT
-    * LEAST every `seenLedger` key — negatives bypass the anti-join, so a
-    * bank MISSING seen keys mints false negatives = silently lost dedup
-    * (the worst seen-set failure; same invariant as [[Ledger]]'s
-    * `_SUCCESS`-gated banks). The safe direction is over-approximation:
-    * a bank built from MORE keys (e.g. the whole staged frame instead of
-    * the seen half) only costs extra anti-join traffic, never answers.
-    * Pass rows as (bucket, serialized bloom).
+    * CONTRACT: the bank must contain AT LEAST every `seenLedger` key —
+    * negatives bypass the anti-join, so a bank MISSING seen keys mints
+    * false negatives = silently lost dedup (the worst seen-set failure;
+    * same invariant as [[Ledger]]'s `_SUCCESS`-gated banks). The safe
+    * direction is over-approximation: a bank built from MORE keys (e.g. the
+    * whole staged frame instead of the seen half) only costs extra
+    * anti-join traffic, never answers. Pass rows as (bucket, serialized
+    * bloom).
     */
   def filterUnseenWithBank(candidates: DataFrame, seenLedger: DataFrame,
       bankRows: Array[(Int, Array[Byte])], buckets: Int): DataFrame = {
-    val spark = candidates.sparkSession
     if (bankRows.isEmpty) return candidates
-    val bucketOf = (c: Column) => pmod(c, lit(buckets)).cast("int")
-    val bank = new BloomBank(spark.sparkContext.broadcast(bankRows))
-    val maybeSeen = Bridge.column(BloomBankProbe(bank,
-      Bridge.expression(bucketOf(col("url_hash"))),
-      Bridge.expression(col("url_hash"))))
-    val positives = candidates.where(maybeSeen)
-      .join(seenLedger.select("url_hash"), Seq("url_hash"), "left_anti")
-    val negatives = candidates.where(!maybeSeen)
-    negatives.unionByName(positives)
+    verifyPositives(candidates,
+      bloomBankProbe(candidates.sparkSession, bankRows, buckets), seenLedger)
   }
 
-  /** Cuckoo-bank twin of [[filterUnseenBucketed]] — the OTHER sketch family
-    * the north rule names ("partitioned bloom/cuckoo URL-seen set"). Same
-    * dataflow (per-bucket sketch aggregate → one broadcast bank → probe
-    * routes negatives past the anti-join) with the cuckoo trade: ~1.2e-4
-    * fpp at 19.5 bits/key — fewer false positives reach the anti-join than
-    * the 1e-2 bloom default at comparable bytes — and the bank supports
-    * DELETION ([[graft.functions.CuckooFilter.delete]]) so seen-set
-    * maintenance (unsee-on-error, TTL expiry) can patch sketches in place
-    * instead of rebuilding from the ledger. Membership stays exact either
-    * way: sketch positives are verified by the left-anti join, so a filter
-    * false positive costs a shuffled row, never a wrong answer.
+  /** Cuckoo-bank twin of [[filterUnseenWithBank]] that builds its bank from
+    * `seenLedger` (the cuckoo family of "partitioned bloom/cuckoo URL-seen
+    * set"; oracle query q69). Same dataflow — per-bucket sketch aggregate →
+    * one broadcast bank → probe routes negatives past the anti-join — with
+    * the cuckoo trade: ~1.2e-4 fpp at 19.5 bits/key, fewer false positives
+    * reach the anti-join than the 1e-2 bloom default at comparable bytes.
+    * Membership stays exact either way: sketch positives are verified by
+    * the left-anti join, so a filter false positive costs a shuffled row,
+    * never a wrong answer.
     */
   def filterUnseenCuckooBucketed(candidates: DataFrame, seenLedger: DataFrame,
       buckets: Int = 64, expectedPerBucket: Long = 1 << 16): DataFrame = {
     val spark = candidates.sparkSession
-    val bucketOf = (c: Column) => pmod(c, lit(buckets)).cast("int")
     val rows = seenLedger
-      .groupBy(bucketOf(col("url_hash")).as("bucket"))
+      .groupBy(bucketOf(col("url_hash"), buckets).as("bucket"))
       .agg(cuckoo_agg(col("url_hash"), math.max(expectedPerBucket, 1024L)).as("ck"))
       .collect()
     if (rows.isEmpty) return candidates
     val bank = new CuckooBank(spark.sparkContext.broadcast(
       rows.map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("ck")))))
-    val maybeSeen = Bridge.column(CuckooBankProbe(bank,
-      Bridge.expression(bucketOf(col("url_hash"))),
+    verifyPositives(candidates, Bridge.column(CuckooBankProbe(bank,
+      Bridge.expression(bucketOf(col("url_hash"), buckets)),
+      Bridge.expression(col("url_hash")))), seenLedger)
+  }
+
+  /** Bank bucket of a url_hash: the routing every per-bucket sketch shares. */
+  private[frontier] def bucketOf(c: Column, buckets: Int): Column =
+    pmod(c, lit(buckets)).cast("int")
+
+  /** Probe column over a broadcast bank of (bucket, serialized bloom) rows. */
+  private[frontier] def bloomBankProbe(spark: SparkSession,
+      rows: Array[(Int, Array[Byte])], buckets: Int): Column = {
+    val bank = new BloomBank(spark.sparkContext.broadcast(rows))
+    Bridge.column(BloomBankProbe(bank,
+      Bridge.expression(bucketOf(col("url_hash"), buckets)),
       Bridge.expression(col("url_hash"))))
+  }
+
+  /** The exact tail every sketch pre-filter shares: probe-negatives are
+    * definitely new and skip the join; probe-positives are verified by the
+    * left-anti join against `seenKeys`. `checkNegatives` lets a caller whose
+    * sketch may lag its keys (see [[Ledger.filterUnseen]]) verify the
+    * negatives too. The probe stays a plain `where` condition on both
+    * branches, so plans show it as a Filter over the candidates.
+    */
+  private[frontier] def verifyPositives(candidates: DataFrame, maybeSeen: Column,
+      seenKeys: DataFrame, checkNegatives: DataFrame => DataFrame = identity): DataFrame = {
     val positives = candidates.where(maybeSeen)
-      .join(seenLedger.select("url_hash"), Seq("url_hash"), "left_anti")
-    val negatives = candidates.where(!maybeSeen)
-    negatives.unionByName(positives)
+      .join(seenKeys.select("url_hash"), Seq("url_hash"), "left_anti")
+    checkNegatives(candidates.where(!maybeSeen)).unionByName(positives)
   }
 
   /** In-wave duplicate collapse: the reference re-fetches duplicate seeds but

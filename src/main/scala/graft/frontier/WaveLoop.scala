@@ -12,9 +12,17 @@ import graft.core.Fs
   * 10^10-frontier cannot live in driver memory):
   *
   *   root/
-  *     seen/wave=K/        url_hash, canonical_url   (ledger delta)
   *     schedule/wave=K/    slot, host_rev, url, seed_idx, host_pos
+  *     next/wave=K/        url, seed_idx                (wave K+1 frontier)
+  *     seenstate/          the seen-set [[Ledger]] (default location)
   *     _manifest_K.json    commit marker: row counts + per-partition lineage
+  *
+  * The seen-set's commit order within a wave: schedule → next → ledger
+  * append (fed from the committed schedule) → bloom bank → manifest; the
+  * optional channels' outputs (metrics, edges, cards, …) land between
+  * next and the manifest. Each of these writes is an overwrite or fenced
+  * by the ledger's wave column, so a crash between any two re-runs the
+  * wave to the same result.
   *
   * A wave is committed iff its manifest exists (manifest written LAST →
   * atomic-enough on a filesystem with atomic rename; on an object store the
@@ -56,19 +64,19 @@ object WaveLoop {
     *                    ([[Discover.fetchParse]]: status 200/404, parse char
     *                    + chunk counts) are written to `metrics/wave=K` and
     *                    the fetched/missed totals land in the manifest
-    * @param ledger      when present, the seen-set lives in a bucketed
-    *                    catalog table with incrementally-merged per-bucket
-    *                    blooms ([[Ledger]]) instead of the union-of-deltas
-    *                    read — the 10^10-scale layout: per-wave cost tracks
-    *                    the delta, the anti-join never re-shuffles the
-    *                    ledger, and compaction bounds file counts
+    * @param ledger      the seen-set: a bucketed catalog table with
+    *                    incrementally-merged per-bucket blooms ([[Ledger]]) —
+    *                    the 10^10-scale layout: per-wave cost tracks the
+    *                    delta, the anti-join never re-shuffles the ledger,
+    *                    and compaction bounds file counts. None opens a
+    *                    default-parameter Ledger at `root/seenstate`
     * @param fullRules   PARSED robots rules ([[Robots.parse]]): longest-match
     *                    Allow/Disallow gate AND per-host Crawl-delay — the
     *                    scheduler slots each host at its own gap. Denied rows
     *                    are not silently dropped: when metrics are on they
     *                    land in `metrics/wave=K` with status 451. Takes
     *                    precedence over the prefix-model `robots` param.
-    * @param refreshAfter when Some(n) (requires `ledger`), every wave also
+    * @param refreshAfter when Some(n), every wave also
     *                    re-schedules committed urls whose LAST fetch is ≥ n
     *                    waves old ([[Ledger.staleFrontier]]): age-priority
     *                    order keys put refreshes after the wave's fresh
@@ -162,16 +170,15 @@ object WaveLoop {
       focusEvery: Int = 4,
       focusTopK: Int = 10000): Seq[WaveResult] = {
 
-    require(refreshAfter.forall(_ => ledger.nonEmpty),
-      "refreshAfter needs a ledger (last-fetch age lives in the ledger's wave column)")
-    require(retryErrorsAfter.forall(n => n >= 1 && ledger.nonEmpty && pages.nonEmpty),
-      "retryErrorsAfter needs n >= 1, a ledger (unsee lives there) and pages metrics (errors live there)")
+    require(retryErrorsAfter.forall(n => n >= 1 && pages.nonEmpty),
+      "retryErrorsAfter needs n >= 1 and pages metrics (errors live there)")
     require(dustEvery == 0 || pages.nonEmpty,
       "dustEvery needs the pages corpus (DUST rules learn from fetched bodies)")
     require(focusQueries.isEmpty || pages.nonEmpty,
       "focusQueries needs the pages corpus (anchor evidence lives in fetched bodies)")
 
     Fs.mkdirs(root)
+    val seen = ledger.getOrElse(new Ledger(spark, s"$root/seenstate"))
     val already = committedWaves(root)
     val startWave = if (already.isEmpty) 0 else already.max + 1
     val results = scala.collection.mutable.ArrayBuffer.empty[WaveResult]
@@ -186,15 +193,15 @@ object WaveLoop {
       // refresh channel: committed urls due for a re-fetch this wave. The
       // staleness scan is one groupBy over the bucketed ledger — checkpoint
       // it so the emptiness probe and the union below run it once.
-      val refreshRows = (for { n <- refreshAfter; l <- ledger if wave > 0 }
-        yield l.staleFrontier(wave - 1, n).select("url", "seed_idx").localCheckpoint(true))
+      val refreshRows = (for { n <- refreshAfter if wave > 0 }
+        yield seen.staleFrontier(wave - 1, n).select("url", "seed_idx").localCheckpoint(true))
         .filter(!_.isEmpty)
       // error-retry channel: fetch errors (status 404) of wave K−n get ONE
-      // retry — tombstoned out of the seen set ([[Ledger.unsee]], the
-      // production caller of the deletable sketch) and re-injected as plain
-      // frontier rows that flow the NORMAL path: url gate → robots → seen
-      // filter (which now passes them) → in-wave dedup (so an organic
-      // rediscovery of the same url this wave schedules once, not twice).
+      // retry — tombstoned out of the seen set ([[Ledger.unsee]]) and
+      // re-injected as plain frontier rows that flow the NORMAL path: url
+      // gate → robots → seen filter (which now passes them) → in-wave
+      // dedup (so an organic rediscovery of the same url this wave
+      // schedules once, not twice).
       // The `retried/` set caps attempts at ONE: the retry attempt itself
       // re-appends the url at the retry wave (> its tombstone's t_wave),
       // so after a failed retry the url is seen again AND retired — no
@@ -206,7 +213,7 @@ object WaveLoop {
       // retry (errs recomputes, the unsee no-ops, injection proceeds) —
       // at-least-tombstoned, at-most-once-retired.
       for {
-        n <- retryErrorsAfter; l <- ledger if wave >= n
+        n <- retryErrorsAfter if wave >= n
         dir = s"$root/metrics/wave=${wave - n}" if Fs.exists(dir)
       } {
         val errs0 = spark.read.parquet(dir)
@@ -220,7 +227,7 @@ object WaveLoop {
               Seq("url_hash"), "left_anti")
           else errs0).localCheckpoint(true)
         if (!errs.isEmpty) {
-          l.unsee(errs.select("url_hash"), wave - 1)
+          seen.unsee(errs.select("url_hash"), wave - 1)
           errs.select("url_hash").write.mode(SaveMode.Append).parquet(retriedDir)
           frontier = frontier.unionByName(errs.select("url", "seed_idx"))
         }
@@ -236,9 +243,6 @@ object WaveLoop {
         if (dustEvery > 0 && Fs.exists(s"$root/dust/rules/_SUCCESS"))
           Dust.applyRules(frontier, spark.read.parquet(s"$root/dust/rules"))
         else frontier
-      // seen-filter BEFORE the dedup shuffle: filterUnseen's bloom split
-      // re-evaluates its input twice, so its input must stay scan-cheap;
-      // the two stages commute (seen-status is constant per url_hash group)
       val keyed0 = Seen.withUrlKeys(dustFrontier)
       // URL-policy gate FIRST (blocklist + path words, [[graft.url.UrlGate]]):
       // the cheapest signal runs before robots matching and the seen-set
@@ -292,15 +296,14 @@ object WaveLoop {
           }
           Seen.dropInWaveDuplicates(d)
         }
-      // partitioned bloom pre-filter (north rule): per-bucket sketches over
-      // the ledger, probes routed by pmod(url_hash, buckets); positives
-      // verified exactly by the anti-join inside. Ledger mode reads the
-      // PERSISTED bank + bucketed table (committed waves only: wave-1);
-      // legacy mode rebuilds the bank from the delta-union read.
-      val unseen = ledger match {
-        case Some(l) => l.filterUnseen(gated, wave - 1)
-        case None => Seen.filterUnseenBucketed(gated, readSeen(spark, root))
-      }
+      // partitioned bloom pre-filter (north rule): the ledger's PERSISTED
+      // per-bucket bank (committed waves only: wave-1), probes routed by
+      // pmod(url_hash, buckets), positives verified exactly by the
+      // bucket-aligned anti-join. It runs BEFORE the dedup shuffle: the
+      // probe split reads its input twice, so the input must stay
+      // scan-cheap, and the two stages commute (seen-status is constant per
+      // url_hash group)
+      val unseen = seen.filterUnseen(gated, wave - 1)
       // seed range from the raw wave input (cheap pruned scan) so neither
       // the domain cap's salted rank nor the scheduler re-executes the
       // dedup/anti-join upstream for stats
@@ -408,8 +411,6 @@ object WaveLoop {
       scheduled
         .select("slot", "host_rev", "canonical_url", "url", "url_hash", "seed_idx", "host_pos")
         .write.mode(SaveMode.Overwrite).parquet(s"$root/schedule/wave=$wave")
-      scheduled.select("url_hash", "canonical_url")
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/seen/wave=$wave")
 
       val next0 = discover(spark.read.parquet(s"$root/schedule/wave=$wave"))
       // deferred over-budget urls ride into the next wave's frontier
@@ -490,14 +491,12 @@ object WaveLoop {
         }
 
       // ledger + bloom state BEFORE the manifest (the commit point): a crash
-      // here re-appends on resume — harmless, the wave column fences it
-      ledger.foreach { l =>
-        val delta = spark.read.parquet(s"$root/seen/wave=$wave")
-        // one delta pass: the per-bucket delta blooms ride the append as
-        // observed aggregates (falls back to append + writeBlooms for
-        // cuckoo banks / gaps / big banks — see Ledger.appendWithBlooms)
-        l.appendWithBlooms(delta, wave)
-      }
+      // here re-appends on resume — harmless, the wave column fences it.
+      // The delta is the committed schedule's keys; the per-bucket delta
+      // blooms ride the append as observed aggregates (coverage gaps and
+      // big banks take the two-pass path — see Ledger.appendWithBlooms)
+      seen.appendWithBlooms(spark.read.parquet(s"$root/schedule/wave=$wave")
+        .select("url_hash", "canonical_url"), wave)
 
       // metrics + per-partition lineage from the COMMITTED files
       val sched = spark.read.parquet(s"$root/schedule/wave=$wave")
@@ -551,23 +550,12 @@ object WaveLoop {
       Fs.writeString(manifestPath(root, wave), manifest)
 
       results += WaveResult(wave, nScheduled, nScheduled)
-      ledger.foreach(_.maybeCompact(wave))
+      seen.maybeCompact(wave)
       frontier = spark.read.parquet(s"$root/next/wave=$wave")
       wave += 1
       } // else (non-exhausted wave body)
     }
     results.toSeq
-  }
-
-  /** Union of all committed seen-ledger deltas (empty frame if none). */
-  def readSeen(spark: SparkSession, root: String): DataFrame = {
-    val waves = committedWaves(root)
-    val paths = waves.map(w => s"$root/seen/wave=$w").filter(Fs.exists)
-    if (paths.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("url_hash", LongType), StructField("canonical_url", StringType))))
-    } else spark.read.parquet(paths: _*)
   }
 
   /** Merge the per-wave host sketches (`hostCards = true`) into one

@@ -12,9 +12,8 @@ import org.apache.spark.sql.types._
   * What it buys over the bloom bank at the same job:
   *
   *  - **deletion**: a bloom cannot unlearn a key; a cuckoo filter removes
-  *    one fingerprint copy exactly. That is the sketch-side primitive for
-  *    "unsee" maintenance (purge error URLs for retry, drop expired seen
-  *    entries at refresh TTL) without rebuilding the bank from the ledger;
+  *    one fingerprint copy exactly (the crawl ledger does not need it: its
+  *    unsee is exact through tombstones and the verifying anti-join);
   *  - **lower fpp per bit at scale**: 16-bit fingerprints in 4-way buckets
   *    give fpp ≈ 2·4/2^16 ≈ 1.2e-4 at ~19.5 bits/key (load 0.84) — the
   *    bloom needs the same bits for 1e-4 and can never delete.
@@ -37,8 +36,7 @@ import org.apache.spark.sql.types._
   *
   * Deletion is safe only for keys actually inserted (deleting an absent key
   * whose fingerprint collides in-bucket removes someone else's copy —
-  * standard cuckoo-filter contract; callers delete from the ledger's own
-  * key set, which satisfies it by construction).
+  * standard cuckoo-filter contract).
   *
   * Not thread-safe for writes; probes are read-only and safe after
   * publication (the Spark lifecycle: build in an aggregate buffer or on the
@@ -318,97 +316,6 @@ case class CuckooAgg(
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CuckooAgg =
     copy(child = cs.head)
   override def prettyName: String = "cuckoo_agg"
-}
-
-/** Merge aggregate over SERIALIZED cuckoo filters (identical numBuckets —
-  * built with the same literal `expectedItems`): BINARY → BINARY. The
-  * incremental-bank counterpart of [[BloomMergeAgg]]: wave K's bank =
-  * merge(bank K-1, filter over delta K). Merge re-inserts fingerprints
-  * from slot coordinates; overflow degrades to stash/saturation, never to
-  * a false negative.
-  */
-case class CuckooMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooMergeAgg.Holder] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): CuckooMergeAgg.Holder =
-    new CuckooMergeAgg.Holder(null)
-
-  override def update(buf: CuckooMergeAgg.Holder, input: InternalRow): CuckooMergeAgg.Holder = {
-    val e = child.eval(input)
-    if (e != null) {
-      val other = CuckooFilter.deserialize(e.asInstanceOf[Array[Byte]])
-      if (buf.cf == null) buf.cf = other else buf.cf.mergeInPlace(other)
-    }
-    buf
-  }
-
-  override def merge(buf: CuckooMergeAgg.Holder, other: CuckooMergeAgg.Holder): CuckooMergeAgg.Holder = {
-    if (other.cf != null) {
-      if (buf.cf == null) buf.cf = other.cf else buf.cf.mergeInPlace(other.cf)
-    }
-    buf
-  }
-
-  override def eval(buf: CuckooMergeAgg.Holder): Any =
-    if (buf.cf == null) null else buf.cf.serialize()
-
-  override def serialize(buf: CuckooMergeAgg.Holder): Array[Byte] =
-    if (buf.cf == null) Array.emptyByteArray else buf.cf.serialize()
-
-  override def deserialize(bytes: Array[Byte]): CuckooMergeAgg.Holder =
-    if (bytes.isEmpty) new CuckooMergeAgg.Holder(null)
-    else new CuckooMergeAgg.Holder(CuckooFilter.deserialize(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CuckooMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CuckooMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CuckooMergeAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "cuckoo_merge_agg"
-}
-object CuckooMergeAgg {
-  /** Buffer adopts the first filter it sees (sizes must match to merge). */
-  final class Holder(var cf: CuckooFilter)
-}
-
-/** Sketch maintenance patch: delete every key of an ARRAY<BIGINT> from a
-  * serialized cuckoo filter, returning the patched image — what the
-  * bloom cannot do. Used by the ledger's unsee path to restore bank
-  * selectivity after tombstoning (semantically optional: banks only
-  * pre-filter; exactness lives in the anti-join).
-  */
-case class CuckooDeleteKeys(filterBytes: Expression, keys: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  // CodegenFallback: runs once per BANK row (≤ buckets per wave), never in
-  // a per-record hot path — interpreted eval is the right trade here.
-  override def left: Expression = filterBytes
-  override def right: Expression = keys
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(f: Any, ks: Any): Any = {
-    val cf = CuckooFilter.deserialize(f.asInstanceOf[Array[Byte]])
-    val arr = ks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    var i = 0
-    while (i < arr.numElements()) {
-      cf.delete(arr.getLong(i))
-      i += 1
-    }
-    cf.serialize()
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooDeleteKeys =
-    copy(filterBytes = l, keys = r)
-  override def prettyName: String = "cuckoo_delete_keys"
 }
 
 /** Cuckoo membership probe: (serialized filter BINARY, key BIGINT) →

@@ -198,16 +198,6 @@ package object functions {
   def cuckoo_agg(keys: Column, expectedItems: Long): Column =
     col(CuckooAgg(expr(keys), expectedItems).toAggregateExpression())
 
-  /** Merge aggregate over serialized same-size cuckoo filters → BINARY. */
-  def cuckoo_merge_agg(filters: Column): Column =
-    col(CuckooMergeAgg(expr(filters)).toAggregateExpression())
-
-  /** Delete an ARRAY<BIGINT> of (previously inserted) keys from a
-    * serialized cuckoo filter → patched BINARY image.
-    */
-  def cuckoo_delete_keys(filter: Column, keys: Column): Column =
-    col(CuckooDeleteKeys(expr(filter), expr(keys)))
-
   /** Component-wise vector-sum aggregate (ARRAY<FLOAT|DOUBLE> →
     * ARRAY<DOUBLE>); one double[dim] buffer per group, map-side partials.
     */

@@ -126,6 +126,15 @@ object UrlKit {
     Parts(scheme, host.toLowerCase(java.util.Locale.ROOT), port, rawPath, query)
   }
 
+  /** A non-ASCII authority char that the parser's
+    * `toLowerCase(Locale.ROOT)` would rewrite: any case-mapped char (upper
+    * and title case, U+0130 `İ`, …) or a surrogate half (supplementary
+    * letters lowercase as pairs). Lower-case IDN hosts stay on the fast
+    * paths.
+    */
+  private def lowersNonAscii(c: Char): Boolean =
+    c >= 0x80 && (Character.isSurrogate(c) || Character.toLowerCase(c) != c)
+
   /** True iff `raw` is PROVABLY already canonical — one conservative scan,
     * no allocation. Exclusions err toward the slow path (a hidden-file
     * segment like `/.well-known/` or an explicit non-default port merely
@@ -152,7 +161,7 @@ object UrlKit {
     while (i < n && s.charAt(i) != '/') {
       val c = s.charAt(i)
       if (c == ':' || c == '@' || c == '?' || c == '#' ||
-        (c >= 'A' && c <= 'Z')) return false
+        (c >= 'A' && c <= 'Z') || lowersNonAscii(c)) return false
       i += 1
     }
     // empty authority, or no '/' after it (empty path would rebuild as "/",
@@ -227,7 +236,7 @@ object UrlKit {
         return if (i == start) null else s.substring(start, i)
       }
       if (c == ':' || c == '@' || c == '#' || c <= ' ' ||
-        (c >= 'A' && c <= 'Z')) return null
+        (c >= 'A' && c <= 'Z') || lowersNonAscii(c)) return null
       i += 1
     }
     if (i == start) null else s.substring(start)

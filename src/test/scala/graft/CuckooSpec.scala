@@ -113,40 +113,4 @@ class CuckooSpec extends AnyFunSuite {
     val empty = keyed.where(lit(false)).select("url_hash", "canonical_url")
     assert(Seen.filterUnseenCuckooBucketed(keyed, empty).count() == 1)
   }
-
-  test("cuckoo_merge_agg: incremental bank merge has no false negatives") {
-    // two wave deltas aggregated separately, merged through the SQL
-    // aggregate — the Ledger's bank-maintenance shape
-    val w0 = spark.range(0, 3000).select(xxhash64(col("id").cast("string")).as("k"))
-    val w1 = spark.range(3000, 6000).select(xxhash64(col("id").cast("string")).as("k"))
-    def filt(df: org.apache.spark.sql.DataFrame) =
-      df.select(graft.functions.cuckoo_agg(col("k"), 8192).as("c"))
-    val merged = filt(w0).unionByName(filt(w1))
-      .select(graft.functions.cuckoo_merge_agg(col("c")).as("c"))
-      .collect()(0).getAs[Array[Byte]](0)
-    val all = w0.unionByName(w1)
-    val misses = all
-      .where(!graft.functions.cuckoo_might_contain(lit(merged), col("k")))
-      .count()
-    assert(misses == 0)
-  }
-
-  test("cuckoo_delete_keys: deleted keys probe negative, survivors positive") {
-    val keys = spark.range(4000).select(xxhash64(col("id").cast("string")).as("k"))
-    val img = keys.select(graft.functions.cuckoo_agg(col("k"), 8192).as("c"))
-      .collect()(0).getAs[Array[Byte]](0)
-    val dead = keys.where(pmod(col("k"), lit(2)) === 0)
-    val patched = dead.agg(collect_list(col("k")).as("ks"))
-      .select(graft.functions.cuckoo_delete_keys(lit(img), col("ks")).as("c"))
-      .collect()(0).getAs[Array[Byte]](0)
-    val f = CuckooFilter.deserialize(patched)
-    val survivors = keys.where(pmod(col("k"), lit(2)) =!= 0)
-      .as[Long].collect()
-    assert(survivors.forall(f.mightContain), "delete must not lose survivors")
-    val deadKeys = dead.as[Long].collect()
-    val stillPositive = deadKeys.count(f.mightContain)
-    // deleted keys may stay positive only via genuine fp-collisions with
-    // survivors — at fpp ≈ 1.2e-4 over 2000 probes, expect ~0
-    assert(stillPositive < 20, s"deleted keys still probing positive: $stillPositive")
-  }
 }

@@ -231,7 +231,11 @@ class SeenSpec extends AnyFunSuite {
     // served stale sketches from the first (BloomBank cache isolation)
     for (m <- Seq(3, 7)) {
       val seen = keyed.where(col("seed_idx") % m === 0).select("url_hash", "canonical_url")
-      val got = Seen.filterUnseenBucketed(keyed, seen, buckets = 16)
+      val bank = seen
+        .groupBy(pmod(col("url_hash"), lit(16)).cast("int").as("bucket"))
+        .agg(graft.functions.bloom_agg(col("url_hash"), 1024L, 1e-2).as("bloom"))
+        .as[(Int, Array[Byte])].collect()
+      val got = Seen.filterUnseenWithBank(keyed, seen, bank, buckets = 16)
         .select("seed_idx").as[Long].collect().toSet
       val want = (0 until 3000).filter(_ % m != 0).map(_.toLong).toSet
       assert(got == want, s"mod $m")
@@ -597,6 +601,35 @@ class WaveLoopSpec extends AnyFunSuite {
     // and the wave-1 metrics show the retry attempts as 404s again
     val m1 = spark.read.parquet(s"$root/metrics/wave=1")
     assert(m1.where(col("status") === 404).count() == 2)
+  }
+
+  test("one seen-set path: steady waves run a pinned job count, no seen/ deltas") {
+    // every wave is one run call (maxWaves = w + 1 resumes from the last
+    // manifest), so the jobs a call starts are the jobs of one wave. A
+    // re-added per-wave write or recompute raises the count and fails here.
+    // Waves 1 and 2 are the steady state (wave 0 has no ledger to probe;
+    // wave 3 of this graph schedules nothing).
+    val pinned = Seq(22, 29, 29)
+    val root = java.nio.file.Files.createTempDirectory("wavejobs").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val perWave = try pinned.indices.map { w =>
+      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+      jobs.set(0)
+      WaveLoop.run(spark, root, seeds, discover, maxWaves = w + 1)
+      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+    assert(perWave == pinned, s"jobs per wave: $perWave")
+    // the seen set is the default ledger, appended from the committed
+    // schedule; no per-wave seen delta is written
+    assert(graft.core.Fs.exists(s"$root/seenstate/_ledger_params"))
+    assert(!graft.core.Fs.exists(s"$root/seen"), "seen/ deltas are written again")
   }
 
   test("resume: crash between data write and manifest → identical final state") {

@@ -206,31 +206,68 @@ class LedgerSpec extends AnyFunSuite {
     assert(unseen == (500L until 600L).toSet)
   }
 
-  test("ledger-mode resume: crash between append and manifest is exact") {
-    def discover(sched: org.apache.spark.sql.DataFrame) =
-      sched.select(col("seed_idx")).where(col("seed_idx") < 300)
-        .select(concat(lit("http://h"), ((col("seed_idx") + 13) % 5).cast("string"),
-          lit(".test/"), (col("seed_idx") + 13).cast("string")).as("url"),
-          (col("seed_idx") + 13).as("seed_idx"))
-    val seeds = (0 until 15).map(i => (s"http://h${i % 5}.test/$i", i.toLong)).toDF("url", "seed_idx")
-    val rootA = java.nio.file.Files.createTempDirectory("ledgerA").toString
-    val rootB = java.nio.file.Files.createTempDirectory("ledgerB").toString
-    WaveLoop.run(spark, rootA, seeds, discover, maxWaves = 3,
-      ledger = Some(new Ledger(spark, rootA + "/seenstate", buckets = 4)))
-    // crash: manifest of wave 1 deleted AFTER ledger append happened
-    WaveLoop.run(spark, rootB, seeds, discover, maxWaves = 2,
-      ledger = Some(new Ledger(spark, rootB + "/seenstate", buckets = 4)))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(WaveLoop.manifestPath(rootB, 1)))
-    // resume with a FRESH Ledger instance (same root): wave 1 re-runs against
-    // committed state only; the duplicate append is fenced by the wave column
-    WaveLoop.run(spark, rootB, seeds, discover, maxWaves = 3,
-      ledger = Some(new Ledger(spark, rootB + "/seenstate", buckets = 4)))
-    val a = WaveLoop.crawlOrder(spark, rootA)
-      .select("wave", "slot", "host_rev", "canonical_url").collect().toSeq
-    val b = WaveLoop.crawlOrder(spark, rootB)
-      .select("wave", "slot", "host_rev", "canonical_url").collect().toSeq
-    assert(a == b)
+  // Crash states at the commit points of wave 1, in write order. The first
+  // two lie before the ledger append; they are built by stopping a run at
+  // wave 0 and putting back the wave-1 files a full run writes, which is
+  // exactly what a crash there leaves on disk. The last two delete the
+  // later artifacts of a completed wave 1.
+  private val resumeWave = 1
+  private val crashStates: Seq[(String, Boolean, Seq[String])] = Seq(
+    // (name, wave 1 completed before the crash, artifacts to copy/delete)
+    ("after the schedule write", false, Seq(s"schedule/wave=$resumeWave")),
+    ("after the next write", false,
+      Seq(s"schedule/wave=$resumeWave", s"next/wave=$resumeWave")),
+    ("after the ledger append (bank absent)", true,
+      Seq(s"seenstate/blooms/wave=$resumeWave")),
+    ("between append and manifest", true, Nil))
+
+  private def resumeDiscover(sched: org.apache.spark.sql.DataFrame) =
+    sched.select(col("seed_idx")).where(col("seed_idx") < 300)
+      .select(concat(lit("http://h"), ((col("seed_idx") + 13) % 5).cast("string"),
+        lit(".test/"), (col("seed_idx") + 13).cast("string")).as("url"),
+        (col("seed_idx") + 13).as("seed_idx"))
+
+  private def resumeSeeds =
+    (0 until 15).map(i => (s"http://h${i % 5}.test/$i", i.toLong)).toDF("url", "seed_idx")
+
+  private def runLedgerCrawl(root: String, waves: Int): Unit =
+    WaveLoop.run(spark, root, resumeSeeds, resumeDiscover, maxWaves = waves,
+      ledger = Some(new Ledger(spark, root + "/seenstate", buckets = 4)))
+
+  private lazy val completedCrawl: String = {
+    val root = java.nio.file.Files.createTempDirectory("ledgerA").toString
+    runLedgerCrawl(root, 3)
+    root
   }
+
+  for ((state, waveDone, artifacts) <- crashStates)
+    test(s"ledger-mode resume: crash $state is exact") {
+      val rootA = completedCrawl
+      val rootB = java.nio.file.Files.createTempDirectory("ledgerB").toString
+      if (waveDone) {
+        runLedgerCrawl(rootB, resumeWave + 1)
+        artifacts.foreach(a => graft.core.Fs.deleteTree(s"$rootB/$a"))
+        java.nio.file.Files.delete(
+          java.nio.file.Paths.get(WaveLoop.manifestPath(rootB, resumeWave)))
+      } else {
+        runLedgerCrawl(rootB, resumeWave)
+        for (a <- artifacts)
+          org.apache.commons.io.FileUtils.copyDirectory(
+            new java.io.File(s"$rootA/$a"), new java.io.File(s"$rootB/$a"))
+      }
+      assert(WaveLoop.committedWaves(rootB) == (0 until resumeWave))
+      // resume with a FRESH Ledger instance (same root): wave 1 re-runs
+      // against committed state only; a duplicate append is fenced by the
+      // wave column
+      runLedgerCrawl(rootB, 3)
+      def order(root: String) = WaveLoop.crawlOrder(spark, root)
+        .select("wave", "slot", "host_rev", "canonical_url").collect().toSeq
+      def committed(root: String) = new Ledger(spark, root + "/seenstate", buckets = 4)
+        .committedFrame(2).select("url_hash", "canonical_url", "wave")
+        .distinct().collect().map(_.toString).sorted.toSeq
+      assert(order(rootA) == order(rootB))
+      assert(committed(rootA) == committed(rootB))
+    }
 
   test("appendWithBlooms ≡ append+writeBlooms: same answers, same bank bytes") {
     val rootA = java.nio.file.Files.createTempDirectory("ledgerObsA").toString
@@ -258,129 +295,65 @@ class LedgerSpec extends AnyFunSuite {
     val ua = a.filterUnseen(probe, 2).select("seed_idx").as[Long].collect().toSet
     val ub = b.filterUnseen(probe, 2).select("seed_idx").as[Long].collect().toSet
     assert(ua == ub && ub == (2300L until 3000L).toSet)
-    // fallback routing: a cuckoo ledger takes the two-pass path and stays
-    // exact (appendWithBlooms must never run the driver merge on cuckoo)
-    val rootC = java.nio.file.Files.createTempDirectory("ledgerObsC").toString
-    val c = new Ledger(spark, rootC, buckets = 8, expectedPerBucket = 4096,
-      sketch = "cuckoo")
-    c.appendWithBlooms(keyed(0 until 500).select("url_hash", "canonical_url"), 0)
-    assert(c.filterUnseen(keyed(0 until 800), 0)
-      .select("seed_idx").as[Long].collect().toSet == (500L until 800L).toSet)
-  }
-
-  test("cuckoo-mode ledger: multi-wave filterUnseen stays exact") {
-    val root = java.nio.file.Files.createTempDirectory("ledgerck").toString
-    val l = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096,
-      sketch = "cuckoo")
-    var expectedSeen = Set.empty[Long]
-    for (w <- 0 until 4) {
-      val lo = w * 900
-      val cands = keyed(lo until (lo + 1000))
-      val unseen = l.filterUnseen(cands, w - 1)
-        .select("seed_idx").as[Long].collect().toSet
-      val want = (lo until (lo + 1000)).map(_.toLong).toSet -- expectedSeen
-      assert(unseen == want, s"wave $w exactness (cuckoo)")
-      val delta = cands.where(col("seed_idx").isin(unseen.toSeq: _*))
-        .select("url_hash", "canonical_url")
-      l.append(delta, w)
-      l.writeBlooms(delta, w)
-      expectedSeen ++= want
-    }
-    // params are persisted: re-opening in bloom mode must fail fast
-    val err = intercept[IllegalArgumentException] {
-      new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096).ensure()
-    }
-    assert(err.getMessage.contains("sketch"))
   }
 
   test("unsee makes keys re-crawlable; a later re-append re-seens them") {
-    for (sk <- Seq("bloom", "cuckoo")) {
-      val root = java.nio.file.Files.createTempDirectory(s"unsee$sk").toString
-      val l = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096,
-        sketch = sk)
-      val all = keyed(0 until 1000)
-      l.append(all.select("url_hash", "canonical_url"), 0)
-      l.writeBlooms(all.select("url_hash", "canonical_url"), 0)
-      assert(l.filterUnseen(all, 0).count() == 0, s"$sk: everything seen")
-      // purge the 0-mod-5 slice (e.g. fetch errors queued for retry)
-      val purge = all.where(col("seed_idx") % 5 === 0)
-      l.unsee(purge.select("url_hash"), 0)
-      val back = l.filterUnseen(all, 0).select("seed_idx").as[Long].collect().toSet
-      assert(back == (0L until 1000L).filter(_ % 5 == 0).toSet, s"$sk: unseen set")
-      // idempotent: unseeing again changes nothing
-      l.unsee(purge.select("url_hash"), 0)
-      assert(l.filterUnseen(all, 0).count() == 200, s"$sk: idempotence")
-      // retry crawl re-appends at wave 1 → seen again (t_wave fencing)
-      l.append(purge.select("url_hash", "canonical_url"), 1)
-      l.writeBlooms(purge.select("url_hash", "canonical_url"), 1)
-      assert(l.filterUnseen(all, 1).count() == 0, s"$sk: re-seen after re-append")
-    }
-  }
-
-  test("unsee under cuckoo PATCHES the bank: selectivity restored in-sketch") {
-    val root = java.nio.file.Files.createTempDirectory("unseepatch").toString
-    val l = new Ledger(spark, root, buckets = 4, expectedPerBucket = 4096,
-      sketch = "cuckoo")
+    val root = java.nio.file.Files.createTempDirectory("unsee").toString
+    val l = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096)
     val all = keyed(0 until 1000)
     l.append(all.select("url_hash", "canonical_url"), 0)
     l.writeBlooms(all.select("url_hash", "canonical_url"), 0)
-    val purge = all.where(col("seed_idx") % 2 === 0)
+    assert(l.filterUnseen(all, 0).count() == 0, "everything seen")
+    // purge the 0-mod-5 slice (e.g. fetch errors queued for retry): the
+    // bank still probes them positive, the tombstones let them through
+    val purge = all.where(col("seed_idx") % 5 === 0)
     l.unsee(purge.select("url_hash"), 0)
-    // read the patched bank straight off disk and probe the filters: the
-    // purged keys must be GONE FROM THE SKETCH (a bloom could only deliver
-    // the unseen answer via the anti-join; the cuckoo delivers it pre-join)
-    val bank = spark.read.parquet(s"$root/blooms/wave=0")
-      .collect().map(r => (r.getAs[Int]("bucket"),
-        graft.functions.CuckooFilter.deserialize(r.getAs[Array[Byte]]("bloom")))).toMap
-    val rows = all.select(pmod(col("url_hash"), lit(4)).cast("int").as("b"),
-        col("url_hash"), col("seed_idx"))
-      .as[(Int, Long, Long)].collect()
-    val (deadRows, aliveRows) = rows.partition(_._3 % 2 == 0)
-    assert(aliveRows.forall { case (b, k, _) => bank(b).mightContain(k) },
-      "survivors must stay positive")
-    val stillPos = deadRows.count { case (b, k, _) => bank(b).mightContain(k) }
-    assert(stillPos < 10, s"purged keys still in the sketch: $stillPos / ${deadRows.length}")
+    val back = l.filterUnseen(all, 0).select("seed_idx").as[Long].collect().toSet
+    assert(back == (0L until 1000L).filter(_ % 5 == 0).toSet, "unseen set")
+    // idempotent: unseeing again changes nothing
+    l.unsee(purge.select("url_hash"), 0)
+    assert(l.filterUnseen(all, 0).count() == 200, "idempotence")
+    // retry crawl re-appends at wave 1 → seen again (t_wave fencing)
+    l.append(purge.select("url_hash", "canonical_url"), 1)
+    l.writeBlooms(purge.select("url_hash", "canonical_url"), 1)
+    assert(l.filterUnseen(all, 1).count() == 0, "re-seen after re-append")
   }
 
-  test("unsee on a LAGGING cuckoo bank patches only covered keys") {
+  test("unsee on a lagging bank stays exact") {
     val root = java.nio.file.Files.createTempDirectory("unseelag").toString
-    val l = new Ledger(spark, root, buckets = 4, expectedPerBucket = 4096,
-      sketch = "cuckoo")
+    val l = new Ledger(spark, root, buckets = 4, expectedPerBucket = 4096)
     val w0 = keyed(0 until 500)
     val w1 = keyed(500 until 900)
     l.append(w0.select("url_hash", "canonical_url"), 0)
     l.writeBlooms(w0.select("url_hash", "canonical_url"), 0)
     l.append(w1.select("url_hash", "canonical_url"), 1) // NO writeBlooms: bank lags
-    // unsee a mix of wave-0 (bank-covered) and wave-1 (uncovered) keys
+    // unsee a mix of wave-0 (bank-covered) and wave-1 (uncovered) keys:
+    // covered keys probe positive and pass the anti-join, uncovered ones
+    // probe negative and pass the uncovered-slice check; every other key
+    // of both waves stays filtered
     val purge = keyed(400 until 600)
     l.unsee(purge.select("url_hash"), 1)
-    // wave-1 keys were never inserted into bank 0 — deleting them could
-    // evict colliding live fingerprints; they must remain PRESENT-or-absent
-    // untouched, i.e. every wave-0 survivor still probes positive
-    val bank = spark.read.parquet(s"$root/blooms/wave=0")
-      .collect().map(r => (r.getAs[Int]("bucket"),
-        graft.functions.CuckooFilter.deserialize(r.getAs[Array[Byte]]("bloom")))).toMap
-    val survivors = keyed(0 until 400)
-      .select(pmod(col("url_hash"), lit(4)).cast("int"), col("url_hash"))
-      .as[(Int, Long)].collect()
-    assert(survivors.forall { case (b, k) => bank(b).mightContain(k) },
-      "lagging-bank patch must not touch uncovered keys' fingerprints")
-    // and exactness holds end to end: purged keys pass, others filtered
     val back = l.filterUnseen(keyed(0 until 900), 1)
       .select("seed_idx").as[Long].collect().toSet
     assert(back == (400L until 600L).toSet)
   }
 
   test("legacy 3-field params file opens as bloom, rejects cuckoo") {
-    val root = java.nio.file.Files.createTempDirectory("ledgerlegacy").toString
-    graft.core.Fs.mkdirs(root)
-    graft.core.Fs.writeString(s"$root/_ledger_params",
-      """{"buckets":8,"expectedPerBucket":4096,"fpp":0.01}""")
-    new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096).ensure() // ok
-    intercept[IllegalArgumentException] {
-      new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096,
-        sketch = "cuckoo").ensure()
+    def rootWith(params: String): String = {
+      val root = java.nio.file.Files.createTempDirectory("ledgerparams").toString
+      graft.core.Fs.writeString(s"$root/_ledger_params", params)
+      root
     }
+    def open(root: String): Unit =
+      new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096).ensure()
+    // roots from before the sketch field, and bloom roots that carry it
+    open(rootWith("""{"buckets":8,"expectedPerBucket":4096,"fpp":0.01}"""))
+    open(rootWith("""{"buckets":8,"expectedPerBucket":4096,"fpp":0.01,"sketch":"bloom"}"""))
+    // a cuckoo bank would be probed as blooms: refuse, naming the sketch
+    val e = intercept[IllegalArgumentException] {
+      open(rootWith("""{"buckets":8,"expectedPerBucket":4096,"fpp":0.01,"sketch":"cuckoo"}"""))
+    }
+    assert(e.getMessage.contains("cuckoo"), e.getMessage)
   }
 
   test("unsee of never-seen keys is a no-op: no tombstones, no bank rewrite") {

@@ -17,10 +17,21 @@ object UrlPropertySpec extends Properties("UrlKit") {
       1 -> Gen.oneOf('-', '_', '~', '.'),
       1 -> Gen.oneOf('%', '~', '!'))).map(_.mkString.take(12))
 
+  // non-ASCII host chars: lower-case IDN letters the fast paths keep, and
+  // the case traps the parser's toLowerCase(Locale.ROOT) rewrites —
+  // upper-case Latin-1, U+0130 (lowercases to two chars), title-case U+01C5
+  // and a supplementary upper-case letter (U+10400, a surrogate pair)
+  private val idnLower = Seq("ä", "é", "ß", "я", "ǆ", "\uD801\uDC28")
+  private val idnUpper = Seq("Ä", "É", "Ø", "Þ", "İ", "ǅ", "\uD801\uDC00")
+
+  private val label: Gen[String] =
+    Gen.nonEmptyListOf(Gen.frequency(
+      8 -> Gen.alphaLowerChar.map(_.toString),
+      1 -> Gen.oneOf(idnLower),
+      1 -> Gen.oneOf(idnUpper))).map(_.take(8).mkString)
+
   private val host: Gen[String] =
-    Gen.chooseNum(1, 3).flatMap(n =>
-      Gen.listOfN(n, Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString.take(8)))
-        .map(_.mkString(".")))
+    Gen.chooseNum(1, 3).flatMap(n => Gen.listOfN(n, label).map(_.mkString(".")))
 
   private val url: Gen[String] = for {
     scheme <- Gen.oneOf("http", "https", "HTTP", "Https")
@@ -62,7 +73,11 @@ object UrlPropertySpec extends Properties("UrlKit") {
     Gen.const("http://a.test?q=1"),
     Gen.const("http://user@a.test/p"),
     Gen.const("http://a.test/p%41%7e%2F"),
-    Gen.const("https://a.test/q/r/s?x=./y"))
+    Gen.const("https://a.test/q/r/s?x=./y"),
+    Gen.const("http://ä.test/x"),
+    Gen.const("http://bücher.test"),
+    Gen.oneOf(idnUpper).map(c => s"http://$c.test/x"),
+    Gen.oneOf(idnUpper).map(c => s"https://a$c?q=1"))
   property("fast path == full rebuild on any input") =
     forAll(Gen.oneOf(garbage, url, trickyCanonical)) { s =>
       UrlKit.canonicalize(s) == UrlKit.canonicalizeSlow(s)
@@ -74,11 +89,12 @@ object UrlPropertySpec extends Properties("UrlKit") {
     }
 
   // EXHAUSTIVE over the characters the scanner branches on: every suffix of
-  // length ≤ 4 from a 12-char adversarial alphabet, appended to the
-  // prefixes that reach each scanner state — ~350k inputs, far stronger
-  // than sampling for a hand-written state machine
+  // length ≤ 4 from a 14-char adversarial alphabet (one lower- and one
+  // upper-case non-ASCII letter among them), appended to the prefixes that
+  // reach each scanner state — ~290k inputs, far stronger than sampling for
+  // a hand-written state machine
   property("fast path == full rebuild, exhaustive short suffixes") = {
-    val alpha = "aA./?#%:@~0 ".toCharArray
+    val alpha = "aA./?#%:@~0 äÄ".toCharArray
     val prefixes = Seq("", "http://", "https://", "http://a", "http://a/",
       "HTTP://a/", "http://a/p")
     var ok = true
