@@ -18,11 +18,10 @@ package graft.core
 object Py {
 
   @inline def isSpace(c: Char): Boolean =
-    (c <= 0x20 && (c == ' ' || (c >= '\t' && c <= '\r'))) ||
-      (c >= 0x1c && c <= 0x1f) ||
-      c == 0x85 || // NEL
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r') || (c >= 0x1c && c <= 0x1f)
+    else c == 0x85 || c == 0xa0 || // NEL, NBSP
       c == 0x2028 || c == 0x2029 || // Zl / Zp, also Python-space
-      Character.getType(c) == Character.SPACE_SEPARATOR
+      (c >= 0x1680 && Character.getType(c) == Character.SPACE_SEPARATOR)
 
   /** Python `str.strip()` (no args). */
   def strip(s: String): String = {
@@ -50,8 +49,11 @@ object Py {
   }
 
   /** Word count without materializing the array (hot path). */
-  def wordCount(s: String): Int = {
-    var i = 0; var n = 0; val len = s.length
+  def wordCount(s: String): Int = wordCount(s, 0, s.length)
+
+  /** Word count of `s[from, to)`. */
+  def wordCount(s: String, from: Int, to: Int): Int = {
+    var i = from; var n = 0; val len = to
     while (i < len) {
       while (i < len && isSpace(s.charAt(i))) i += 1
       if (i < len) { n += 1; while (i < len && !isSpace(s.charAt(i))) i += 1 }

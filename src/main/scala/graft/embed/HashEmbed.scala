@@ -25,14 +25,30 @@ object HashEmbed {
   def embed(text: String, dim: Int = Dim): Array[Float] = {
     val v = new Array[Float](dim)
     if (text == null) return v
-    val toks = Py.split(text)
+    val n = text.length
     var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      val bucket = Math.floorMod(MurmurHash3.stringHash(t, 42), dim)
-      val sign = if (MurmurHash3.stringHash(t, 1337) >= 0) 1.0f else -1.0f
-      v(bucket) += sign
-      i += 1
+    while (i < n) {
+      while (i < n && Py.isSpace(text.charAt(i))) i += 1
+      if (i < n) {
+        // `MurmurHash3.stringHash` of the token under both seeds in one
+        // pass over its chars, without a token substring
+        val start = i
+        var hb = 42
+        var hs = 1337
+        while (i + 1 < n && !Py.isSpace(text.charAt(i)) && !Py.isSpace(text.charAt(i + 1))) {
+          val data = (text.charAt(i) << 16) + text.charAt(i + 1)
+          hb = MurmurHash3.mix(hb, data)
+          hs = MurmurHash3.mix(hs, data)
+          i += 2
+        }
+        if (i < n && !Py.isSpace(text.charAt(i))) {
+          hb = MurmurHash3.mixLast(hb, text.charAt(i))
+          hs = MurmurHash3.mixLast(hs, text.charAt(i))
+          i += 1
+        }
+        val bucket = Math.floorMod(MurmurHash3.finalizeHash(hb, i - start), dim)
+        v(bucket) += (if (MurmurHash3.finalizeHash(hs, i - start) >= 0) 1.0f else -1.0f)
+      }
     }
     var norm = 0.0
     i = 0
@@ -65,12 +81,6 @@ object HashEmbed {
     val n = math.min(a.length, b.length)
     while (i < n) { d += a(i).toDouble * b(i).toDouble; i += 1 }
     d
-  }
-
-  def l2norm(a: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * a(i).toDouble; i += 1 }
-    math.sqrt(s)
   }
 
   /** Sign-random-projection bucket (Charikar LSH for cosine): `bits`-bit

@@ -2,7 +2,6 @@ package graft.fixtures
 
 import graft.Schemas.Page
 import graft.core.Py
-import graft.text.HtmlText
 import scala.util.Random
 
 /** Deterministic synthetic-pages generator (FIXTURES.md §2).
@@ -124,6 +123,14 @@ object PageGen {
       case _ => "<style>a > b { content: \"<li>nope</li>\"; }</style>"
     }
 
+  // `preprocess_text` (`:95-99`) spelled as the reference's regexes, so the
+  // expected text owes nothing to the extractor's fused scan
+  private val SpacesTabs = java.util.regex.Pattern.compile("[ \t]+")
+  private val MultiNewline = java.util.regex.Pattern.compile("\n{2,}")
+
+  private def preprocess(text: String): String =
+    Py.strip(MultiNewline.matcher(SpacesTabs.matcher(text).replaceAll(" ")).replaceAll("\n"))
+
   /** Generate one page. Deterministic in (seed, docId). */
   def page(docId: Long, host: String, seed: Long = 42L, lang: String = "en"): Page = {
     val rnd = new Random(seed * 1000003L + docId)
@@ -171,7 +178,7 @@ object PageGen {
     frags += "</body></html>"
     val html = frags.mkString
     val rawExtract = expected.mkString("\n")
-    val text = HtmlText.preprocess(rawExtract)
+    val text = preprocess(rawExtract)
     val url = s"http://$host/d/$docId"
     val ts = java.sql.Timestamp.valueOf(java.time.LocalDateTime
       .of(2024, 1, 1, 0, 0, 0).plusSeconds(docId % 86400))

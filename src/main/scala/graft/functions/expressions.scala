@@ -36,9 +36,6 @@ object Impl {
   def hostReverse(u: UTF8String): UTF8String =
     UTF8String.fromString(UrlKit.hostReverse(u.toString))
 
-  def extractText(html: UTF8String): UTF8String =
-    UTF8String.fromString(HtmlText.extract(html.toString))
-
   def extractReadable(html: UTF8String): UTF8String =
     UTF8String.fromString(HtmlText.extractReadable(html.toString))
 
@@ -49,6 +46,17 @@ object Impl {
 
   def hashEmbed(text: UTF8String, dim: Int): ArrayData =
     ArrayData.toArrayData(HashEmbed.embed(text.toString, dim))
+
+  /** html → (full_text, chunks, embeddings) with the html decoded once and
+    * each chunk embedded from its String, not re-decoded per stage.
+    */
+  def pageResults(html: UTF8String): InternalRow = {
+    val text = HtmlText.extractReadable(html.toString)
+    val chunks = Chunker.chunk(text)
+    new GenericInternalRow(Array[Any](UTF8String.fromString(text),
+      new GenericArrayData(chunks.map(UTF8String.fromString).toArray[Any]),
+      new GenericArrayData(chunks.map(c => ArrayData.toArrayData(HashEmbed.embed(c))).toArray[Any])))
+  }
 
   def simHash64(text: UTF8String): Long = TextStats.simHash64(text.toString)
 
@@ -309,18 +317,6 @@ case class HostReverse(child: Expression)
   override def prettyName: String = "host_reverse"
 }
 
-/** clean_html + extract_readable_text in one pass (reference `:72-92`). */
-case class ExtractText(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.extractText(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.extractText($c)")
-  override protected def withNewChildInternal(c: Expression): ExtractText = copy(c)
-  override def prettyName: String = "extract_text"
-}
-
 /** Content-type sniff over fetched bytes (WHATWG magic-byte subset;
   * [[graft.multimodal.Mime]]). Binary in, mime string out, codegen'd.
   */
@@ -346,6 +342,28 @@ case class ExtractReadable(child: Expression)
     defineCodeGen(ctx, ev, c => s"graft.functions.Impl.extractReadable($c)")
   override protected def withNewChildInternal(c: Expression): ExtractReadable = copy(c)
   override def prettyName: String = "extract_readable"
+}
+
+/** The reference's per-URL contract (`:186-233`) as ONE expression:
+  * html → STRUCT(full_text, chunks, embeddings), the same values as
+  * `extract_readable`, `chunk_text` and `hash_embed` over every chunk.
+  * One call per row decodes the html once and hands Strings between the
+  * stages, and needs no `transform(chunks, hash_embed)` (Spark runs
+  * `ArrayTransform` interpreted: it is `CodegenFallback`).
+  */
+case class PageResults(child: Expression)
+    extends UnaryExpression {
+  override val dataType: DataType = StructType(Seq(
+    StructField("full_text", StringType, nullable = false),
+    StructField("chunks", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("embeddings", ArrayType(ArrayType(FloatType, containsNull = false),
+      containsNull = false), nullable = false)))
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(v: Any): Any = Impl.pageResults(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.pageResults($c)")
+  override protected def withNewChildInternal(c: Expression): PageResults = copy(c)
+  override def prettyName: String = "page_results"
 }
 
 /** Hybrid chunker as a scalar expression: String → ARRAY<STRING>. */

@@ -23,9 +23,6 @@ package object functions {
   /** SURT-style host reversal: www.example.org → org.example.www. */
   def host_reverse(c: Column): Column = col(HostReverse(expr(c)))
 
-  /** clean_html + extract_readable_text (reference `:72-92`). */
-  def extract_text(c: Column): Column = col(ExtractText(expr(c)))
-
   /** extract + preprocess — the per-row text invariant (input_hint). */
   def extract_readable(c: Column): Column = col(ExtractReadable(expr(c)))
 
@@ -48,6 +45,11 @@ package object functions {
       maxWords: Int = text.Chunker.MaxWords,
       overlap: Int = text.Chunker.OverlapWords): Column =
     col(ChunkText(expr(c), maxWords, overlap))
+
+  /** html → STRUCT(full_text, chunks, embeddings), one kernel call per row
+    * (reference `:186-233`).
+    */
+  def page_results(c: Column): Column = col(PageResults(expr(c)))
 
   /** Lateral-view chunker: (chunk_id INT, chunk STRING) rows. */
   def chunk_explode(c: Column,
@@ -279,7 +281,6 @@ package object functions {
     reg.createOrReplaceTempFunction("canonicalize_url", es => CanonicalizeUrl(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("host_of", es => HostOf(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("host_reverse", es => HostReverse(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_text", es => ExtractText(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("extract_readable", es => ExtractReadable(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("chunk_text", es => new ChunkText(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("chunk_explode", es => new ChunkGenerator(es.head), "scala_udf")

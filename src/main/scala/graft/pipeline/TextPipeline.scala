@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{chunk_explode, chunk_text, extract_readable, hash_embed}
+import graft.functions.{chunk_explode, extract_readable, hash_embed, page_results}
 
 /** The per-row document pipeline — the declarative form of the reference's
   * `scrape_and_prepare` + `process_urls`
@@ -12,10 +12,13 @@ import graft.functions.{chunk_explode, chunk_text, extract_readable, hash_embed}
   *     → hybrid_chunk → embed
   *
   * Here "fetch" is a column read (`html` from the pages table — Common-Crawl
-  * replay; there is no live network in a 100 TB batch job), and every stage
-  * is a codegen'd expression, so the whole pipeline is ONE whole-stage-
-  * codegen'd map over the scan: no shuffle, no materialization between
-  * stages, linear scaling by adding executors.
+  * replay; there is no live network in a 100 TB batch job). The first four
+  * stages are one scan ([[graft.text.HtmlText.extractReadable]]), and
+  * [[results]] evaluates the whole chain as one codegen'd expression per
+  * row, so the pipeline is ONE whole-stage-codegen'd map over the scan: no
+  * shuffle, no materialization between stages, linear scaling by adding
+  * executors. The per-stage entry points below expose the same kernels one
+  * stage at a time.
   */
 object TextPipeline {
 
@@ -33,20 +36,13 @@ object TextPipeline {
     chunkRows.withColumn("embedding", hash_embed(col("chunk")))
 
   /** The reference's full output contract, one row per url
-    * (`README.md:38-47`): {url, full_text, chunks, embeddings}. Array-typed
-    * columns computed per-row (no groupBy — the chunker emits the array
-    * directly, so assembling the result row costs zero shuffles).
+    * (`README.md:38-47`): {url, full_text, chunks, embeddings}. One
+    * struct-valued expression per row (html decoded once, every chunk
+    * embedded from its String); array-typed columns computed per-row, no
+    * groupBy, so assembling the result row costs zero shuffles.
     */
   def results(pages: DataFrame, htmlCol: String = "html"): DataFrame =
-    withExtractedText(pages, htmlCol)
-      .withColumn("chunks", chunk_text(col("text")))
-      .withColumn("embeddings", transform(col("chunks"), c => hash_embed(c)))
-      .select(col("url"), col("text").as("full_text"), col("chunks"), col("embeddings"))
-
-  /** JSON parity with the reference's `json.dump` (`:231-232`): one JSON
-    * object per url.
-    */
-  def resultsJson(pages: DataFrame): DataFrame =
-    results(pages).select(col("url"),
-      to_json(struct(col("full_text"), col("chunks"), col("embeddings"))).as("result_json"))
+    pages.select(col("url"), page_results(col(htmlCol).cast("string")).as("r"))
+      .select(col("url"), col("r.full_text").as("full_text"),
+        col("r.chunks").as("chunks"), col("r.embeddings").as("embeddings"))
 }

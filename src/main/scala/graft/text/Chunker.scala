@@ -102,32 +102,37 @@ object Chunker {
     splitRecursive(left, maxWords) ++ splitRecursive(right, maxWords)
   }
 
+  /** Walks line and word boundaries by index: each line's words are
+    * counted once and buffered lines are appended straight into one
+    * builder, so the common single-chunk text is one join.
+    */
   def chunk(text: String, cfg: Config = Config()): Vector[String] = {
     if (text == null) return Vector.empty
-    val paragraphs = text.split("\n", -1).filter(p => Py.strip(p).nonEmpty)
-
     val chunks = Vector.newBuilder[String]
-    var current = List.newBuilder[String]
-    var currentNonEmpty = false
+    val current = new java.lang.StringBuilder
     var currentSize = 0
 
-    def flush(): Unit = {
-      if (currentNonEmpty) {
-        val joined = Py.strip(current.result().mkString(" "))
-        if (Py.wordCount(joined) > cfg.maxWords) chunks ++= splitRecursive(joined, cfg.maxWords)
-        else chunks += joined
-        current = List.newBuilder[String]
-        currentNonEmpty = false
-        currentSize = 0
-      }
+    def flush(): Unit = if (currentSize > 0) {
+      val joined = Py.strip(current.toString)
+      // a joined buffer has exactly the words of its lines
+      if (currentSize > cfg.maxWords) chunks ++= splitRecursive(joined, cfg.maxWords)
+      else chunks += joined
+      current.setLength(0)
+      currentSize = 0
     }
 
-    for (para <- paragraphs) {
-      val w = Py.wordCount(para)
-      if (currentSize + w > cfg.maxWords) flush()
-      current += para
-      currentNonEmpty = true
-      currentSize += w
+    var lineStart = 0
+    while (lineStart <= text.length) {
+      var lineEnd = text.indexOf('\n', lineStart)
+      if (lineEnd < 0) lineEnd = text.length
+      val w = Py.wordCount(text, lineStart, lineEnd)
+      if (w > 0) { // blank (Python-strip-empty) lines are dropped
+        if (currentSize + w > cfg.maxWords) flush()
+        if (currentSize > 0) current.append(' ')
+        current.append(text, lineStart, lineEnd)
+        currentSize += w
+      }
+      lineStart = lineEnd + 1
     }
     flush()
 

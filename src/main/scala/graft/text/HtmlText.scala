@@ -5,7 +5,8 @@ import graft.core.Py
 /** Single-pass HTML → readable-text extraction.
   *
   * Reproduces the observable composition of the reference's `clean_html` +
-  * `extract_readable_text` (`/root/reference/web_scraper_pipeline.py:72-92`):
+  * `extract_readable_text` + `preprocess_text`
+  * (reference `web_scraper_pipeline.py:72-99`):
   *
   *  1. every `script/style/noscript/header/footer/nav/aside` subtree is
   *     removed (`:76` decompose);
@@ -16,14 +17,20 @@ import graft.core.Py
   *  3. per element, `get_text(strip=True, separator=" ")`: every descendant
   *     text node is Python-stripped, empties dropped, survivors joined with a
   *     single space (`:89`);
-  *  4. empty results dropped, elements joined with "\n" (`:90-92`).
+  *  4. empty results dropped, elements joined with "\n" (`:90-92`);
+  *  5. `preprocess_text`: `[ \t]+` → " ", `\n{2,}` → "\n", Python strip
+  *     (`:95-99`).
   *
   * The reference parses with lxml TWICE (clean re-serializes `str(soup)` then
   * extract re-parses). Since `str(soup)` of an lxml tree re-parses to the same
   * tree, a single pass is output-equivalent (SURVEY.md §4.1); the rebuild does
-  * clean+extract in one scan with no DOM materialization at all — O(n) time,
-  * O(depth) extra space per row, which is what lets this run inside
-  * whole-stage codegen over 100 TB of html bytes.
+  * all five steps in ONE scan of the decoded html with no DOM and no
+  * intermediate strings: tag names are matched in place, text nodes are
+  * decoded, stripped and collapsed by index into their elements' buffers.
+  * O(n) time, O(depth) extra space per row, which is what lets this run
+  * inside whole-stage codegen over 100 TB of html bytes. The extract-then-
+  * regex composition it replaces is kept as the test-scope reference
+  * (`HtmlTextReference`), and a property spec holds the two byte-equal.
   *
   * Scope: the well-formed HTML subset produced by [[graft.fixtures.PageGen]]
   * (FIXTURES.md §2). bs4+lxml error recovery on arbitrary broken HTML is
@@ -35,23 +42,87 @@ object HtmlText {
   // extracted anchor)
   private val AnyWhitespace = java.util.regex.Pattern.compile("\\s+")
 
-  private val StripTags: Set[String] =
-    Set("script", "style", "noscript", "header", "footer", "nav", "aside")
-
-  private val Whitelist: Set[String] =
-    Set("h1", "h2", "h3", "h4", "h5", "h6", "p", "li")
-
-  /** Tags that never take content (void elements) in our subset. */
-  private val VoidTags: Set[String] =
-    Set("br", "hr", "img", "meta", "link", "input", "area", "base", "col",
-      "embed", "source", "track", "wbr")
-
-  /** Common named entities beyond the XML five + nbsp (the web-text set a
-    * Common-Crawl extractor meets constantly; values = Python
-    * `html.unescape` for the same names — parity with the reference's bs4
-    * output). Numeric forms (`&#8212;` / `&#x2014;`) were already decoded.
+  /** Tag names matched in place, grouped by index: [0, 3) raw-text (also
+    * stripped), [0, 7) stripped subtrees, [7, 15) the whitelist, [15, 28)
+    * void elements (never take content), then common tags with no rule of
+    * their own, listed so that their names need no allocation either.
     */
-  private val NamedEntities: Map[String, Char] = Map(
+  private val KnownTags: Array[String] = Array(
+    "script", "style", "noscript", "header", "footer", "nav", "aside",
+    "h1", "h2", "h3", "h4", "h5", "h6", "p", "li",
+    "br", "hr", "img", "meta", "link", "input", "area", "base", "col",
+    "embed", "source", "track", "wbr",
+    "a", "b", "i", "em", "strong", "span", "div", "ul", "ol",
+    "html", "head", "body", "title")
+
+  @inline private def isRawText(k: Int): Boolean = k >= 0 && k < 3
+  @inline private def isStripped(k: Int): Boolean = k >= 0 && k < 7
+  @inline private def isWhitelisted(k: Int): Boolean = k >= 7 && k < 15
+  @inline private def isVoid(k: Int): Boolean = k >= 15 && k < 28
+
+  /** [[KnownTags]] index of the ASCII name `html[from, to)` under ASCII case
+    * folding (= `toLowerCase(Locale.ROOT)` on ASCII); −1 if unknown or
+    * not ASCII.
+    */
+  private def knownTag(html: String, from: Int, to: Int): Int = {
+    var k = 0
+    while (k < KnownTags.length) {
+      val name = KnownTags(k)
+      if (name.length == to - from) {
+        var j = 0
+        var same = true
+        while (same && j < name.length) {
+          val c = html.charAt(from + j)
+          val t = name.charAt(j)
+          same = c == t || (c >= 'A' && c <= 'Z' && c + 32 == t)
+          j += 1
+        }
+        if (same) return k
+      }
+      k += 1
+    }
+    -1
+  }
+
+  /** Start of the name of the tag at `html(lt) == '<'`: after an optional '/'. */
+  private def nameStart(html: String, lt: Int): Int =
+    if (html.charAt(lt + 1) == '/') lt + 2 else lt + 1
+
+  /** End of a tag name starting at `from` in a tag ending at `gt`: the first
+    * ' ', '\t', '\n' or '\r', or a final '/'.
+    */
+  private def nameEnd(html: String, from: Int, gt: Int): Int = {
+    val end = if (gt > from && html.charAt(gt - 1) == '/') gt - 1 else gt
+    var i = from
+    while (i < end && { val c = html.charAt(i); c != ' ' && c != '\t' && c != '\n' && c != '\r' }) i += 1
+    i
+  }
+
+  /** `toLowerCase(Locale.ROOT)` of the name `html[from, to)`; a known
+    * ASCII name is the shared [[KnownTags]] instance, not a copy.
+    */
+  private def lowerName(html: String, from: Int, to: Int, known: Int): String =
+    if (known >= 0) KnownTags(known) else html.substring(from, to).toLowerCase(java.util.Locale.ROOT)
+
+  /** Lower-cased name of the tag `html[lt, gt]`. */
+  private def tagName(html: String, lt: Int, gt: Int): String = {
+    val from = nameStart(html, lt)
+    val to = nameEnd(html, from, gt)
+    lowerName(html, from, to, knownTag(html, from, to))
+  }
+
+  @inline private def isClosing(html: String, lt: Int): Boolean = html.charAt(lt + 1) == '/'
+  @inline private def isSelfClosed(html: String, lt: Int, gt: Int): Boolean =
+    gt > lt + 1 && html.charAt(gt - 1) == '/'
+
+  /** Named entities: the XML five, nbsp, and the common web-text set a
+    * Common-Crawl extractor meets constantly (values = Python
+    * `html.unescape` for the same names — parity with the reference's bs4
+    * output). Numeric forms (`&#8212;` / `&#x2014;`) decode separately.
+    */
+  private val Entities: Array[(String, Char)] = Array(
+    "amp" -> '&', "lt" -> '<', "gt" -> '>', "quot" -> '"', "apos" -> '\'',
+    "nbsp" -> '\u00a0',
     "mdash" -> '—', "ndash" -> '–', "hellip" -> '…',
     "lsquo" -> '‘', "rsquo" -> '’',
     "ldquo" -> '“', "rdquo" -> '”',
@@ -67,39 +138,46 @@ object HtmlText {
     "agrave" -> 'à', "uuml" -> 'ü', "ouml" -> 'ö',
     "auml" -> 'ä', "ntilde" -> 'ñ', "ccedil" -> 'ç')
 
-  private def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
+  /** The entity reference at `s(amp) == '&'` in text ending at `end`: its
+    * code point and the index just past its ';', packed as
+    * `(codePoint << 32) | next`, or −1 when the '&' is literal. At most 7
+    * chars may sit between '&' and the first ';'; numeric references parse
+    * with `Integer.parseInt` and must not be negative.
+    */
+  private def entityAt(s: String, amp: Int, end: Int): Long = {
+    val limit = math.min(end, amp + 9)
+    var semi = amp + 1
+    while (semi < limit && s.charAt(semi) != ';') semi += 1
+    if (semi >= limit) return -1L
+    val len = semi - amp - 1
+    var k = 0
+    while (k < Entities.length) {
+      val (name, c) = Entities(k)
+      if (name.length == len && s.regionMatches(amp + 1, name, 0, len))
+        return (c.toLong << 32) | (semi + 1)
+      k += 1
+    }
+    if (len == 0 || s.charAt(amp + 1) != '#') return -1L
+    val hex = len > 1 && (s.charAt(amp + 2) == 'x' || s.charAt(amp + 2) == 'X')
+    val code =
+      try Integer.parseInt(s.substring(if (hex) amp + 3 else amp + 2, semi), if (hex) 16 else 10)
+      catch { case _: NumberFormatException => -1 }
+    if (code < 0) -1L else (code.toLong << 32) | (semi + 1)
+  }
+
+  private[graft] def decodeEntities(s: String): String = {
+    var amp = s.indexOf('&')
+    if (amp < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i)
-        if (semi > i && semi - i <= 8) {
-          s.substring(i + 1, semi) match {
-            case "amp" => sb.append('&'); i = semi + 1
-            case "lt" => sb.append('<'); i = semi + 1
-            case "gt" => sb.append('>'); i = semi + 1
-            case "quot" => sb.append('"'); i = semi + 1
-            case "apos" => sb.append('\''); i = semi + 1
-            case "nbsp" => sb.append(' '); i = semi + 1
-            case ent if NamedEntities.contains(ent) =>
-              sb.append(NamedEntities(ent)); i = semi + 1
-            case ent if ent.startsWith("#") =>
-              val code =
-                try {
-                  if (ent.length > 1 && (ent.charAt(1) == 'x' || ent.charAt(1) == 'X'))
-                    Integer.parseInt(ent.substring(2), 16)
-                  else Integer.parseInt(ent.substring(1))
-                } catch { case _: NumberFormatException => -1 }
-              if (code >= 0) { sb.appendCodePoint(code); i = semi + 1 }
-              else { sb.append(c); i += 1 }
-            case _ => sb.append(c); i += 1
-          }
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+    while (amp >= 0) {
+      sb.append(s, i, amp)
+      val e = entityAt(s, amp, s.length)
+      if (e < 0) { sb.append('&'); i = amp + 1 }
+      else { sb.appendCodePoint((e >>> 32).toInt); i = e.toInt }
+      amp = s.indexOf('&', i)
     }
-    sb.toString
+    sb.append(s, i, s.length).toString
   }
 
   /** Index of the tag-closing '>' at or after `from`, skipping quoted
@@ -149,121 +227,208 @@ object HtmlText {
     -1
   }
 
-  /** One whitelisted element mid-collection. */
-  private final class Collector(val order: Int) {
-    val parts = new java.lang.StringBuilder(64)
-    def add(stripped: String): Unit = {
-      if (parts.length() > 0) parts.append(' ')
-      parts.append(stripped)
+  /** Extract readable text: `preprocess_text(extract_readable_text(clean_html(html)))`
+    * in one scan. This output is the per-row invariant column
+    * (`BASELINE.json` input_hint: "byte-identical extracted text per url").
+    */
+  def extractReadable(html: String): String =
+    if (html == null) null else new ReadableScan(html).run()
+
+  /** One scan of `html` producing the extracted, preprocessed text.
+    *
+    * Tag names are matched in place (ASCII case folding; a non-ASCII name
+    * is lower-cased with `Locale.ROOT` as a string). Each text node is
+    * entity-decoded, Python-stripped and whitespace-collapsed by index
+    * straight into the innermost open whitelisted element's buffer, then
+    * copied to the enclosing ones. `preprocess_text` (`:95-99`: `[ \t]+` →
+    * " ", `\n{2,}` → "\n", then strip) needs no pass of its own: every
+    * element's text starts and ends with a non-space char, so its runs never
+    * cross the " " and "\n" joins and the final strip has nothing to remove;
+    * collapsing each stripped node on the way in gives the same bytes.
+    */
+  private final class ReadableScan(html: String) {
+    private val n = html.length
+    private var stripDepth = 0 // >0 → inside a removed subtree
+    // lower-cased names of the open elements
+    private var names = new Array[String](16)
+    private var depth = 0
+    // open whitelisted elements (innermost last), and the closed non-empty
+    // ones in open order
+    private val open = new scala.collection.mutable.ArrayBuffer[Collector](4)
+    private val done = new scala.collection.mutable.ArrayBuffer[Collector](16)
+    private var order = 0
+
+    def run(): String = {
+      var i = 0
+      while (i < n) {
+        val lt = html.indexOf('<', i)
+        if (lt < 0) { text(i, n); i = n }
+        else {
+          if (lt > i) text(i, lt)
+          i = if (lt + 1 < n && html.charAt(lt + 1) == '!') skipMarkup(lt) else tag(lt)
+        }
+      }
+      // close any still-open elements (unclosed trailing elements)
+      while (open.nonEmpty) closeCollector()
+      val out = new CharBuf(n / 2)
+      for (c <- done) {
+        if (out.length > 0) out.add('\n')
+        out.add(c.text.chars, 0, c.text.length)
+      }
+      out.toString
+    }
+
+    /** Comment, CDATA section (its content may hold '>' and tag-shaped
+      * text that must not be tokenized, FIXTURES.md §2) or doctype.
+      */
+    private def skipMarkup(lt: Int): Int =
+      if (html.startsWith("<!--", lt)) past(html.indexOf("-->", lt + 4), 3)
+      else if (html.startsWith("<![CDATA[", lt)) past(html.indexOf("]]>", lt + 9), 3)
+      else past(html.indexOf('>', lt), 1)
+
+    private def past(end: Int, len: Int): Int = if (end < 0) n else end + len
+
+    private def tag(lt: Int): Int = {
+      val gt = tagEnd(html, lt + 1)
+      if (gt < 0) return n
+      val from = nameStart(html, lt)
+      val to = nameEnd(html, from, gt)
+      if (to == from) return gt + 1 // stray '<>'
+      var kind = knownTag(html, from, to)
+      val name = lowerName(html, from, to, kind)
+      if (kind < 0) kind = KnownTags.indexOf(name) // e.g. a Kelvin-sign spelling
+      if (isClosing(html, lt)) {
+        if (isStripped(kind)) { if (stripDepth > 0) stripDepth -= 1 }
+        else if (stripDepth == 0) closeTag(name)
+      } else if (isSelfClosed(html, lt, gt) || isVoid(kind)) {
+        // <br/> acts as a text-node separator in bs4 (no string content)
+      } else if (isRawText(kind)) {
+        // raw-text strip element: content is DATA, not markup — jump
+        // straight past the literal close tag so a '<p>' or stray quote
+        // inside JS/CSS can neither leak text nor desync the tokenizer
+        return past(closeOf(html, gt + 1, name), 0)
+      } else if (isStripped(kind)) stripDepth += 1
+      else if (stripDepth == 0) openTag(name, isWhitelisted(kind))
+      gt + 1
+    }
+
+    private def openTag(name: String, whitelisted: Boolean): Unit = {
+      if (depth == names.length) names = java.util.Arrays.copyOf(names, depth * 2)
+      names(depth) = name
+      if (whitelisted) { open += new Collector(depth, order); order += 1 }
+      depth += 1
+    }
+
+    /** Pops up to and including the innermost open element of this name
+      * (tolerates our well-formed subset); no-op if none is open.
+      */
+    private def closeTag(name: String): Unit = {
+      var idx = depth - 1
+      while (idx >= 0 && names(idx) != name) idx -= 1
+      while (idx >= 0 && depth > idx) {
+        depth -= 1
+        if (open.nonEmpty && open.last.tag == depth) closeCollector()
+      }
+    }
+
+    /** A nested element closes before the one around it, so its place
+      * in open order is found from the end.
+      */
+    private def closeCollector(): Unit = {
+      val c = open.remove(open.length - 1)
+      var k = done.length
+      while (k > 0 && done(k - 1).order > c.order) k -= 1
+      if (c.text.length > 0) done.insert(k, c)
+    }
+
+    /** Text node `html[from, to)`: decoded, stripped and collapsed into the
+      * innermost open element, then copied to the enclosing ones.
+      */
+    private def text(from: Int, to: Int): Unit = {
+      if (stripDepth > 0 || open.isEmpty) return
+      val buf = open.last.text
+      val hadText = buf.length > 0
+      var start = -1 // index in buf of the node's first char
+      var keep = 0 // buf length after the node's last non-space char
+      var run = 0 // 1 after a collapsed [ \t] run, 2 after a \n run
+      var i = from
+      while (i < to) {
+        var c = html.charAt(i)
+        var next = i + 1
+        var low = '\u0000' // low surrogate of a decoded supplementary char
+        if (c == '&') {
+          val e = entityAt(html, i, to)
+          if (e >= 0) {
+            val cp = (e >>> 32).toInt
+            next = e.toInt
+            if (cp < 0x10000) c = cp.toChar
+            else { c = Character.highSurrogate(cp); low = Character.lowSurrogate(cp) }
+          }
+        }
+        if (Py.isSpace(c)) {
+          if (start >= 0) {
+            if (c == ' ' || c == '\t') { if (run != 1) buf.add(' '); run = 1 }
+            else if (c == '\n') { if (run != 2) buf.add('\n'); run = 2 }
+            else { buf.add(c); run = 0 }
+          }
+        } else {
+          if (start < 0) {
+            if (hadText) buf.add(' ')
+            start = buf.length
+          }
+          if (next == i + 1) {
+            // a run of plain chars is copied in bulk
+            while (next < to && { val d = html.charAt(next); d != '&' && !Py.isSpace(d) }) next += 1
+            buf.add(html, i, next)
+          } else {
+            buf.add(c)
+            if (low != 0) buf.add(low)
+          }
+          keep = buf.length
+          run = 0
+        }
+        i = next
+      }
+      if (start >= 0) {
+        buf.length = keep
+        for (k <- open.length - 2 to 0 by -1) {
+          val outer = open(k).text
+          if (outer.length > 0) outer.add(' ')
+          outer.add(buf.chars, start, keep)
+        }
+      }
     }
   }
 
-  /** Extract readable text (strip-tags removed, whitelist collected). */
-  def extract(html: String): String = {
-    if (html == null) return null
-    val n = html.length
-    var i = 0
-    var stripDepth = 0 // >0 → inside a removed subtree
-    var order = 0
-    // stack of (tagName, collectorOrNull) for open elements we care about
-    val tagStack = new scala.collection.mutable.ArrayBuffer[String](16)
-    val openCollectors = new scala.collection.mutable.ArrayBuffer[Collector](8)
-    val collectorDepth = new scala.collection.mutable.ArrayBuffer[Int](8) // tagStack size at open
-    val done = new scala.collection.mutable.ArrayBuffer[(Int, String)](32)
+  /** A whitelisted element being collected: the stack index of its tag,
+    * its open order, and its text so far.
+    */
+  private final class Collector(val tag: Int, val order: Int) {
+    val text = new CharBuf(64)
+  }
 
-    def emitText(raw: String): Unit = {
-      if (stripDepth > 0 || openCollectors.isEmpty) return
-      val stripped = Py.strip(decodeEntities(raw))
-      if (stripped.nonEmpty) {
-        var k = 0
-        while (k < openCollectors.length) { openCollectors(k).add(stripped); k += 1 }
-      }
-    }
+  /** Growable char buffer: bulk appends are array copies, with none of
+    * `StringBuilder`'s per-append coder checks.
+    */
+  private final class CharBuf(capacity: Int) {
+    var chars = new Array[Char](math.max(capacity, 16))
+    var length = 0
 
-    def closeTag(name: String): Unit = {
-      // pop until matching open tag (tolerates our well-formed subset)
-      var idx = tagStack.lastIndexOf(name)
-      if (idx < 0) return
-      while (tagStack.length > idx) {
-        tagStack.remove(tagStack.length - 1)
-        if (collectorDepth.nonEmpty && collectorDepth.last == tagStack.length) {
-          collectorDepth.remove(collectorDepth.length - 1)
-          val c = openCollectors.remove(openCollectors.length - 1)
-          val text = c.parts.toString
-          if (text.nonEmpty) done += ((c.order, text))
-        }
-      }
+    private def reserve(extra: Int): Unit =
+      if (length + extra > chars.length)
+        chars = java.util.Arrays.copyOf(chars, math.max(chars.length * 2, length + extra))
+
+    def add(c: Char): Unit = { reserve(1); chars(length) = c; length += 1 }
+
+    def add(s: String, from: Int, to: Int): Unit = {
+      reserve(to - from); s.getChars(from, to, chars, length); length += to - from
     }
 
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) { emitText(html.substring(i)); i = n }
-      else {
-        if (lt > i) emitText(html.substring(i, lt))
-        if (lt + 1 < n && html.charAt(lt + 1) == '!') {
-          // comment, CDATA section, or doctype
-          if (html.startsWith("<!--", lt)) {
-            val end = html.indexOf("-->", lt + 4)
-            i = if (end < 0) n else end + 3
-          } else if (html.startsWith("<![CDATA[", lt)) {
-            // skipped wholesale to ']]>' — its content may contain '>' and
-            // tag-shaped text that must not be tokenized (FIXTURES.md §2)
-            val end = html.indexOf("]]>", lt + 9)
-            i = if (end < 0) n else end + 3
-          } else {
-            val end = html.indexOf('>', lt)
-            i = if (end < 0) n else end + 1
-          }
-        } else {
-          val gt = tagEnd(html, lt + 1)
-          if (gt < 0) { i = n }
-          else {
-            val inner = html.substring(lt + 1, gt)
-            val closing = inner.startsWith("/")
-            val selfClosed = inner.endsWith("/")
-            val body = inner.stripPrefix("/").stripSuffix("/")
-            val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-            val name = (if (sp < 0) body else body.substring(0, sp)).toLowerCase(java.util.Locale.ROOT)
-            var nextI = gt + 1
-            if (name.isEmpty) { /* stray '<>' — ignore */ }
-            else if (closing) {
-              if (StripTags.contains(name)) {
-                if (stripDepth > 0) stripDepth -= 1
-              } else if (stripDepth == 0) closeTag(name)
-            } else if (selfClosed || VoidTags.contains(name)) {
-              // <br/> acts as a text-node separator in bs4 (no string content)
-            } else if (RawTextTags.contains(name)) {
-              // raw-text strip element: content is DATA, not markup — jump
-              // straight past the literal close tag so a '<p>' or stray
-              // quote inside JS/CSS can neither leak text nor desync the
-              // tokenizer (all three are also StripTags: nothing is kept)
-              val end = closeOf(html, gt + 1, name)
-              nextI = if (end < 0) n else end
-            } else if (StripTags.contains(name)) {
-              stripDepth += 1
-            } else if (stripDepth == 0) {
-              tagStack += name
-              if (Whitelist.contains(name)) {
-                val c = new Collector(order); order += 1
-                openCollectors += c
-                collectorDepth += tagStack.length - 1
-              }
-              // raw-text elements we also skip wholesale when stripping is off
-              // (title etc. are not whitelisted so their text only leaks into
-              // an enclosing whitelisted element — matches bs4)
-            }
-            i = nextI
-          }
-        }
-      }
+    def add(a: Array[Char], from: Int, to: Int): Unit = {
+      reserve(to - from); System.arraycopy(a, from, chars, length, to - from); length += to - from
     }
-    // close any still-open collectors (unclosed trailing elements)
-    while (openCollectors.nonEmpty) {
-      val c = openCollectors.remove(openCollectors.length - 1)
-      val text = c.parts.toString
-      if (text.nonEmpty) done += ((c.order, text))
-    }
-    done.sortInPlaceBy(_._1).iterator.map(_._2).mkString("\n")
+
+    override def toString: String = new String(chars, 0, length)
   }
 
   /** All `<a href>` attribute values in document order (entities decoded,
@@ -276,46 +441,57 @@ object HtmlText {
   def extractLinks(html: String): Vector[String] = {
     if (html == null) return Vector.empty
     val out = Vector.newBuilder[String]
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        // a commented-out <a href> is not a link (bs4 parses comments as
-        // Comment nodes, find_all('a') never sees them)
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else if (lt + 2 < n && (html.charAt(lt + 1) == 'a' || html.charAt(lt + 1) == 'A')
-          && Character.isWhitespace(html.charAt(lt + 2))) {
-        val gt = tagEnd(html, lt + 1) // quote-aware: href values may hold '>'
-        if (gt < 0) i = n
-        else {
-          val href = findHref(html, lt + 2, gt)
-          if (href != null) out += decodeEntities(href)
-          i = gt + 1
-        }
-      } else {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
-        else {
-          // raw-text elements: an '<a href>' inside JS/CSS source is data,
-          // not a link — jump past the literal close tag (same rule the
-          // extractor applies)
-          val inner = html.substring(lt + 1, gt)
-          val body = inner.stripPrefix("/").stripSuffix("/")
-          val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-          val name = (if (sp < 0) body else body.substring(0, sp))
-            .toLowerCase(java.util.Locale.ROOT)
-          if (!inner.startsWith("/") && !inner.endsWith("/") && RawTextTags.contains(name)) {
-            val end = closeOf(html, gt + 1, name)
-            i = if (end < 0) n else end
-          } else i = gt + 1
-        }
+    walkTags(html) { (lt, gt, _) =>
+      if (isAnchorOpen(html, lt)) {
+        val href = findAttr(html, lt + 2, gt, "href") // quote-aware: href values may hold '>'
+        if (href != null) out += decodeEntities(href)
       }
+      gt + 1
     }
     out.result()
   }
+
+  /** The tag walk the link, anchor, directive, hreflang and outline
+    * scanners share: comments are skipped (bs4 parses them as Comment
+    * nodes, so a commented-out tag is not a tag), tag ends are quote-aware,
+    * a raw-text element is jumped past its literal close tag (an `<a href>`
+    * or `<h1>` inside JS/CSS source is data, the extractor's rule), and
+    * every other tag goes to `onTag(lt, gt, name)`, which returns the index
+    * to resume at (`html.length` stops the walk). `onText` gets the spans
+    * between them.
+    */
+  private def walkTags(html: String, from: Int = 0, onText: (Int, Int) => Unit = (_, _) => ())(
+      onTag: (Int, Int, String) => Int): Unit = {
+    val n = html.length
+    var i = from
+    while (i < n) {
+      val lt = html.indexOf('<', i)
+      if (lt < 0) { onText(i, n); i = n }
+      else if (html.startsWith("<!--", lt)) {
+        onText(i, lt)
+        val end = html.indexOf("-->", lt + 4)
+        i = if (end < 0) n else end + 3
+      } else {
+        onText(i, lt)
+        val gt = tagEnd(html, lt + 1)
+        if (gt < 0) i = n
+        else {
+          val name = tagName(html, lt, gt)
+          i = if (isClosing(html, lt) || isSelfClosed(html, lt, gt) || !RawTextTags.contains(name))
+            onTag(lt, gt, name)
+          else {
+            val end = closeOf(html, gt + 1, name)
+            if (end < 0) n else end
+          }
+        }
+      }
+    }
+  }
+
+  /** `<a` and whitespace: an anchor's open tag. */
+  private def isAnchorOpen(html: String, lt: Int): Boolean =
+    lt + 2 < html.length && (html.charAt(lt + 1) == 'a' || html.charAt(lt + 1) == 'A') &&
+      Character.isWhitespace(html.charAt(lt + 2))
 
   /** All (href, anchor-text) pairs of `<a href>` elements in document
     * order — the web-search signal ("what the rest of the web calls this
@@ -337,76 +513,22 @@ object HtmlText {
     if (html == null) return Vector.empty
     val out = Vector.newBuilder[(String, String)]
     val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else if (lt + 2 < n && (html.charAt(lt + 1) == 'a' || html.charAt(lt + 1) == 'A')
-          && Character.isWhitespace(html.charAt(lt + 2))) {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
-        else {
-          val href = findHref(html, lt + 2, gt)
-          if (href == null) i = gt + 1
-          else {
-            val sb = new java.lang.StringBuilder
-            var j = gt + 1
-            var open = true
-            while (open && j < n) {
-              val lt2 = html.indexOf('<', j)
-              if (lt2 < 0) { sb.append(html, j, n); j = n }
-              else {
-                sb.append(html, j, lt2)
-                if (html.startsWith("<!--", lt2)) {
-                  val e = html.indexOf("-->", lt2 + 4)
-                  j = if (e < 0) n else e + 3
-                } else {
-                  val gt2 = tagEnd(html, lt2 + 1)
-                  if (gt2 < 0) j = n
-                  else {
-                    val inner = html.substring(lt2 + 1, gt2)
-                    val body = inner.stripPrefix("/").stripSuffix("/")
-                    val sp = body.indexWhere(ch =>
-                      ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-                    val name = (if (sp < 0) body else body.substring(0, sp))
-                      .toLowerCase(java.util.Locale.ROOT)
-                    if (name == "a") {
-                      open = false
-                      // implicit close on a nested open: resume AT the new
-                      // `<a` so the outer loop captures it as its own anchor
-                      j = if (inner.startsWith("/")) gt2 + 1 else lt2
-                    } else if (!inner.startsWith("/") && !inner.endsWith("/") &&
-                        RawTextTags.contains(name)) {
-                      val e = closeOf(html, gt2 + 1, name)
-                      j = if (e < 0) n else e
-                    } else j = gt2 + 1
-                  }
-                }
-              }
-            }
-            val text = AnyWhitespace.matcher(decodeEntities(sb.toString))
-              .replaceAll(" ").trim
-            out += ((decodeEntities(href), text))
-            i = j
-          }
+    walkTags(html) { (lt, gt, _) =>
+      val href = if (isAnchorOpen(html, lt)) findAttr(html, lt + 2, gt, "href") else null
+      if (href == null) gt + 1
+      else {
+        // the body runs to the matching `</a>`; a nested `<a` open tag
+        // closes it implicitly, and the walk resumes AT that tag
+        val sb = new java.lang.StringBuilder
+        var j = n
+        walkTags(html, gt + 1, (a, b) => sb.append(html, a, b)) { (lt2, gt2, name) =>
+          if (name != "a") gt2 + 1
+          else { j = if (isClosing(html, lt2)) gt2 + 1 else lt2; n }
         }
-      } else {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
-        else {
-          val inner = html.substring(lt + 1, gt)
-          val body = inner.stripPrefix("/").stripSuffix("/")
-          val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-          val name = (if (sp < 0) body else body.substring(0, sp))
-            .toLowerCase(java.util.Locale.ROOT)
-          if (!inner.startsWith("/") && !inner.endsWith("/") && RawTextTags.contains(name)) {
-            val end = closeOf(html, gt + 1, name)
-            i = if (end < 0) n else end
-          } else i = gt + 1
-        }
+        val text = AnyWhitespace.matcher(decodeEntities(sb.toString))
+          .replaceAll(" ").trim
+        out += ((decodeEntities(href), text))
+        j
       }
     }
     out.result()
@@ -428,58 +550,34 @@ object HtmlText {
     if (html == null) return Directives(noindex = false, nofollow = false, "")
     // fast path: a page with neither substring cannot carry a directive —
     // the COMMON page pays one allocation-free case-blind scan instead of
-    // the tag walk (which substrings every tag); a body-text false hit
-    // just takes the slow path, same answer
+    // the tag walk; a body-text false hit just takes the walk, same answer
     if (indexOfIgnoreCase(html, "robots") < 0 &&
         indexOfIgnoreCase(html, "canonical") < 0)
       return Directives(noindex = false, nofollow = false, "")
     var noindex = false; var nofollow = false; var canonical = ""
     var sawRobots = false; var sawCanonical = false
-    val n = html.length
-    var i = 0
-    while (i < n && !(sawRobots && sawCanonical)) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
-        else {
-          val inner = html.substring(lt + 1, gt)
-          val body = inner.stripPrefix("/").stripSuffix("/")
-          val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-          val name = (if (sp < 0) body else body.substring(0, sp))
-            .toLowerCase(java.util.Locale.ROOT)
-          if (!inner.startsWith("/") && name == "meta" && !sawRobots) {
-            val nm = findAttr(html, lt + 5, gt, "name")
-            if (nm != null && nm.trim.equalsIgnoreCase("robots")) {
-              sawRobots = true
-              val content = findAttr(html, lt + 5, gt, "content")
-              if (content != null) {
-                val toks = decodeEntities(content).toLowerCase(java.util.Locale.ROOT)
-                  .split(',').map(_.trim).toSet
-                noindex = toks.contains("noindex") || toks.contains("none")
-                nofollow = toks.contains("nofollow") || toks.contains("none")
-              }
-            }
-            i = gt + 1
-          } else if (!inner.startsWith("/") && name == "link" && !sawCanonical) {
-            val rel = findAttr(html, lt + 5, gt, "rel")
-            if (rel != null && rel.trim.equalsIgnoreCase("canonical")) {
-              sawCanonical = true
-              val href = findAttr(html, lt + 5, gt, "href")
-              if (href != null) canonical = decodeEntities(href)
-            }
-            i = gt + 1
-          } else if (!inner.startsWith("/") && !inner.endsWith("/") &&
-              RawTextTags.contains(name)) {
-            val end = closeOf(html, gt + 1, name)
-            i = if (end < 0) n else end
-          } else i = gt + 1
+    walkTags(html) { (lt, gt, name) =>
+      if (!isClosing(html, lt) && name == "meta" && !sawRobots) {
+        val nm = findAttr(html, lt + 5, gt, "name")
+        if (nm != null && nm.trim.equalsIgnoreCase("robots")) {
+          sawRobots = true
+          val content = findAttr(html, lt + 5, gt, "content")
+          if (content != null) {
+            val toks = decodeEntities(content).toLowerCase(java.util.Locale.ROOT)
+              .split(',').map(_.trim).toSet
+            noindex = toks.contains("noindex") || toks.contains("none")
+            nofollow = toks.contains("nofollow") || toks.contains("none")
+          }
+        }
+      } else if (!isClosing(html, lt) && name == "link" && !sawCanonical) {
+        val rel = findAttr(html, lt + 5, gt, "rel")
+        if (rel != null && rel.trim.equalsIgnoreCase("canonical")) {
+          sawCanonical = true
+          val href = findAttr(html, lt + 5, gt, "href")
+          if (href != null) canonical = decodeEntities(href)
         }
       }
+      if (sawRobots && sawCanonical) html.length else gt + 1
     }
     Directives(noindex, nofollow, canonical)
   }
@@ -501,43 +599,21 @@ object HtmlText {
     if (html == null) return Vector.empty
     if (indexOfIgnoreCase(html, "hreflang") < 0) return Vector.empty
     val out = Vector.newBuilder[(String, String)]
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
-        else {
-          val inner = html.substring(lt + 1, gt)
-          val body = inner.stripPrefix("/").stripSuffix("/")
-          val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-          val name = (if (sp < 0) body else body.substring(0, sp))
-            .toLowerCase(java.util.Locale.ROOT)
-          if (!inner.startsWith("/") && name == "link") {
-            val rel = findAttr(html, lt + 5, gt, "rel")
-            val relToks = if (rel == null) Set.empty[String]
-              else rel.toLowerCase(java.util.Locale.ROOT)
-                .split("[ \t\n\r]+").filter(_.nonEmpty).toSet
-            if (relToks.contains("alternate")) {
-              val lang = findAttr(html, lt + 5, gt, "hreflang")
-              val href = findAttr(html, lt + 5, gt, "href")
-              if (lang != null && lang.trim.nonEmpty && href != null)
-                out += ((decodeEntities(lang).trim
-                  .toLowerCase(java.util.Locale.ROOT), decodeEntities(href)))
-            }
-            i = gt + 1
-          } else if (!inner.startsWith("/") && !inner.endsWith("/") &&
-              RawTextTags.contains(name)) {
-            val end = closeOf(html, gt + 1, name)
-            i = if (end < 0) n else end
-          } else i = gt + 1
+    walkTags(html) { (lt, gt, name) =>
+      if (!isClosing(html, lt) && name == "link") {
+        val rel = findAttr(html, lt + 5, gt, "rel")
+        val relToks = if (rel == null) Set.empty[String]
+          else rel.toLowerCase(java.util.Locale.ROOT)
+            .split("[ \t\n\r]+").filter(_.nonEmpty).toSet
+        if (relToks.contains("alternate")) {
+          val lang = findAttr(html, lt + 5, gt, "hreflang")
+          val href = findAttr(html, lt + 5, gt, "href")
+          if (lang != null && lang.trim.nonEmpty && href != null)
+            out += ((decodeEntities(lang).trim
+              .toLowerCase(java.util.Locale.ROOT), decodeEntities(href)))
         }
       }
+      gt + 1
     }
     out.result()
   }
@@ -551,13 +627,6 @@ object HtmlText {
     }
     -1
   }
-
-  /** href value inside an attribute span [from, to) of `html`; null if none.
-    * Handles `href="x"`, `href='x'`, bare `href=x`, any key case, spaces
-    * around '='.
-    */
-  private def findHref(html: String, from: Int, to: Int): String =
-    findAttr(html, from, to, "href")
 
   /** Value of attribute `key` inside span [from, to); null if absent.
     * Same states as the href parser it generalizes: quoted either way,
@@ -595,30 +664,6 @@ object HtmlText {
     null
   }
 
-  /** `preprocess_text` (`:95-99`): collapse [ \t]+ → " ", \n{2,} → "\n",
-    * then Python-strip. Pure-Scala twin of the column pipeline in
-    * [[graft.functions]] (which uses codegen'd regexp_replace built-ins).
-    */
-  // precompiled: String.replaceAll compiles its Pattern on EVERY call, and
-  // preprocess runs once per page in the extraction hot path — identical
-  // regex semantics, one compile per JVM instead of two per page
-  private val SpacesTabs = java.util.regex.Pattern.compile("[ \t]+")
-  private val MultiNewline = java.util.regex.Pattern.compile("\n{2,}")
-
-  def preprocess(text: String): String = {
-    if (text == null) return null
-    val a = SpacesTabs.matcher(text).replaceAll(" ")
-    val b = MultiNewline.matcher(a).replaceAll("\n")
-    Py.strip(b)
-  }
-
-  /** Full per-row text pipeline: clean+extract then preprocess. This output
-    * is the per-row invariant column (`BASELINE.json` input_hint:
-    * "byte-identical extracted text per url").
-    */
-  def extractReadable(html: String): String =
-    if (html == null) null else preprocess(extract(html))
-
   /** Title + heading outline of a page. */
   final case class Outline(title: String, h: Array[Int])
 
@@ -639,52 +684,32 @@ object HtmlText {
     if (html == null) return Outline("", h)
     var title: String = null
     val n = html.length
-    var i = 0
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else {
-        val gt = tagEnd(html, lt + 1)
-        if (gt < 0) i = n
+    walkTags(html) { (lt, gt, name) =>
+      if (isClosing(html, lt)) gt + 1
+      else if (name == "title" && title == null) {
+        if (isSelfClosed(html, lt, gt)) { title = ""; gt + 1 }
         else {
-          val inner = html.substring(lt + 1, gt)
-          val body = inner.stripPrefix("/").stripSuffix("/")
-          val sp = body.indexWhere(ch => ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')
-          val name = (if (sp < 0) body else body.substring(0, sp))
-            .toLowerCase(java.util.Locale.ROOT)
-          val isOpen = !inner.startsWith("/")
-          if (isOpen && name == "title" && title == null) {
-            if (inner.endsWith("/")) { title = ""; i = gt + 1 }
-            else {
-              // RCDATA: content ends at the literal close tag only
-              var j = gt + 1
-              var close = -1
-              while (close < 0 && j < n) {
-                val c = html.indexOf("</", j)
-                if (c < 0) j = n
-                else if (html.regionMatches(true, c + 2, "title", 0, 5)) close = c
-                else j = c + 2
-              }
-              val raw = html.substring(gt + 1, if (close < 0) n else close)
-              title = decodeEntities(raw).trim
-                .split("\\s+").filter(_.nonEmpty).mkString(" ")
-              i = if (close < 0) n else {
-                val cgt = html.indexOf('>', close + 2)
-                if (cgt < 0) n else cgt + 1
-              }
-            }
-          } else if (isOpen && name.length == 2 && name.charAt(0) == 'h' &&
-              name.charAt(1) >= '1' && name.charAt(1) <= '6') {
-            h(name.charAt(1) - '1') += 1
-            i = gt + 1
-          } else if (isOpen && !inner.endsWith("/") && RawTextTags.contains(name)) {
-            val end = closeOf(html, gt + 1, name)
-            i = if (end < 0) n else end
-          } else i = gt + 1
+          // RCDATA: content ends at the literal close tag only
+          var j = gt + 1
+          var close = -1
+          while (close < 0 && j < n) {
+            val c = html.indexOf("</", j)
+            if (c < 0) j = n
+            else if (html.regionMatches(true, c + 2, "title", 0, 5)) close = c
+            else j = c + 2
+          }
+          val raw = html.substring(gt + 1, if (close < 0) n else close)
+          title = decodeEntities(raw).trim
+            .split("\\s+").filter(_.nonEmpty).mkString(" ")
+          if (close < 0) n else {
+            val cgt = html.indexOf('>', close + 2)
+            if (cgt < 0) n else cgt + 1
+          }
         }
+      } else {
+        if (name.length == 2 && name.charAt(0) == 'h' && name.charAt(1) >= '1' && name.charAt(1) <= '6')
+          h(name.charAt(1) - '1') += 1
+        gt + 1
       }
     }
     Outline(if (title == null) "" else title, h)

@@ -201,6 +201,41 @@ class PlanSpec extends AnyFunSuite {
       res.queryExecution.executedPlan.toString)
   }
 
+  test("page results: one page_results call per row, no ArrayTransform, same schema and rows") {
+    import spark.implicits._
+    import graft.functions.{chunk_text, extract_readable, hash_embed, PageResults}
+    import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
+    // staged through parquet: a local relation would fold the projection away
+    val dir = java.nio.file.Files.createTempDirectory("planpages").toString + "/pages"
+    spark.createDataset(graft.fixtures.PageGen.pages(40)).toDF().write.parquet(dir)
+    val pages = spark.read.parquet(dir)
+    val res = graft.pipeline.TextPipeline.results(pages)
+    // the stage-by-stage composition the single expression replaced
+    val staged = pages.withColumn("text", extract_readable(col("html").cast("string")))
+      .withColumn("chunks", chunk_text(col("text")))
+      .withColumn("embeddings", transform(col("chunks"), c => hash_embed(c)))
+      .select(col("url"), col("text").as("full_text"), col("chunks"), col("embeddings"))
+    assert(res.schema == staged.schema, res.schema.treeString)
+    assert(res.schema.map(_.name) == Seq("url", "full_text", "chunks", "embeddings"))
+    assert(res.schema("chunks").dataType == ArrayType(StringType, containsNull = false))
+    assert(res.schema("embeddings").dataType ==
+      ArrayType(ArrayType(FloatType, containsNull = false), containsNull = false))
+    assert(res.orderBy("url").collect().toSeq == staged.orderBy("url").collect().toSeq)
+
+    res.collect()
+    val plan = res.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exprs = plan.collect { case node => node.expressions }.flatten
+    val calls = exprs.flatMap(_.collect { case e: PageResults => e })
+    assert(calls.size == 1, plan.toString)
+    assert(exprs.forall(_.find(_.isInstanceOf[ArrayTransform]).isEmpty), plan.toString)
+    assert(countShuffles(plan) == 0, plan.toString)
+  }
+
   test("repetition signals are a shuffle-free projection (quality gate in the scan)") {
     import graft.text.Repetition
     val docs = spark.range(100).select(col("id"),

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Py
-import graft.text.{Chunker, HtmlText, SentenceSplit, TextStats}
+import graft.text.{Chunker, HtmlText, HtmlTextReference, SentenceSplit, TextStats}
 
 class PySpec extends AnyFunSuite {
   test("strip matches Python str.strip semantics") {
@@ -28,48 +28,50 @@ class HtmlTextSpec extends AnyFunSuite {
     val html = "<html><head><script>var x=1;</script></head><body>" +
       "<h1>Title</h1><p>Para one.</p><div>ignored</div>" +
       "<nav><p>menu</p></nav><p>Para two.</p></body></html>"
-    assert(HtmlText.extract(html) == "Title\nPara one.\nPara two.")
+    assert(HtmlText.extractReadable(html) == "Title\nPara one.\nPara two.")
   }
 
   test("nested li duplication quirk (bs4 find_all returns nested matches)") {
     val html = "<ul><li>outer<ul><li>inner</li></ul></li></ul>"
-    assert(HtmlText.extract(html) == "outer inner\ninner")
+    assert(HtmlText.extractReadable(html) == "outer inner\ninner")
   }
 
   test("get_text(strip=True, separator=' '): per-node strip, empties dropped") {
     val html = "<p>  foo \t <b> bar </b>\n baz  </p>"
-    assert(HtmlText.extract(html) == "foo bar baz")
+    assert(HtmlText.extractReadable(html) == "foo bar baz")
     // whitespace-only node contributes nothing
-    assert(HtmlText.extract("<p>a<b>   </b>b</p>") == "a b")
-    // internal whitespace inside one node survives extract (preprocess collapses it)
-    assert(HtmlText.extract("<p>a  b</p>") == "a  b")
+    assert(HtmlText.extractReadable("<p>a<b>   </b>b</p>") == "a b")
+    // internal whitespace inside one node survives extract; preprocess
+    // collapses it, and the one-pass kernel does both
+    assert(HtmlTextReference.extract("<p>a  b</p>") == "a  b")
+    assert(HtmlText.extractReadable("<p>a  b</p>") == "a b")
   }
 
   test("entities, comments, void elements") {
-    assert(HtmlText.extract("<p>a &amp; b &lt;c&gt;</p>") == "a & b <c>")
-    assert(HtmlText.extract("<p>x<!-- hidden <p>no</p> -->y</p>") == "x y")
-    assert(HtmlText.extract("<p>a<br/>b</p>") == "a b")
+    assert(HtmlText.extractReadable("<p>a &amp; b &lt;c&gt;</p>") == "a & b <c>")
+    assert(HtmlText.extractReadable("<p>x<!-- hidden <p>no</p> -->y</p>") == "x y")
+    assert(HtmlText.extractReadable("<p>a<br/>b</p>") == "a b")
   }
 
   test("empty page and non-whitelisted text") {
-    assert(HtmlText.extract("<div>only divs here</div>") == "")
-    assert(HtmlText.extract("") == "")
+    assert(HtmlText.extractReadable("<div>only divs here</div>") == "")
+    assert(HtmlText.extractReadable("") == "")
   }
 
   test("named entities, CDATA, quoted '>' attributes, raw-text elements") {
-    assert(HtmlText.extract("<p>a &mdash; b &hellip; &copy; &eacute;</p>") == "a — b … © é")
-    assert(HtmlText.extract("<p>n &#8212; h &#x2026; end</p>") == "n — h … end")
+    assert(HtmlText.extractReadable("<p>a &mdash; b &hellip; &copy; &eacute;</p>") == "a — b … © é")
+    assert(HtmlText.extractReadable("<p>n &#8212; h &#x2026; end</p>") == "n — h … end")
     // unknown entity passes through verbatim (bs4/lxml behavior)
-    assert(HtmlText.extract("<p>a &unknown; b</p>") == "a &unknown; b")
+    assert(HtmlText.extractReadable("<p>a &unknown; b</p>") == "a &unknown; b")
     // CDATA skipped wholesale, even with '>' and tag-shaped content inside
-    assert(HtmlText.extract("<p>x</p><![CDATA[ 1 > 0 <p>no</p> ]]><p>y</p>") == "x\ny")
+    assert(HtmlText.extractReadable("<p>x</p><![CDATA[ 1 > 0 <p>no</p> ]]><p>y</p>") == "x\ny")
     // quoted '>' in attributes must not end the tag
-    assert(HtmlText.extract("""<p title="a>b">t1<a href="/q?x>y">t2</a></p>""") == "t1 t2")
+    assert(HtmlText.extractReadable("""<p title="a>b">t1<a href="/q?x>y">t2</a></p>""") == "t1 t2")
     // raw-text script/style: body is data, not markup — including fake
     // close-tag-looking strings and unbalanced quotes
-    assert(HtmlText.extract(
+    assert(HtmlText.extractReadable(
       """<script data-q=">">var a='<p>no</p>'; if(1>0){}</script><p>keep</p>""") == "keep")
-    assert(HtmlText.extract(
+    assert(HtmlText.extractReadable(
       "<style>a > b { content: \"<li>nope</li>\"; }</style><p>k</p>") == "k")
   }
 
@@ -112,9 +114,12 @@ class HtmlTextSpec extends AnyFunSuite {
   }
 
   test("preprocess: collapse spaces/tabs, blank lines, python strip") {
-    assert(HtmlText.preprocess(" \t a  b\tc \n\n\n d \n") == "a b c \n d")
-    assert(HtmlText.preprocess("x") == "x")
-    assert(HtmlText.preprocess("  \n ") == "")
+    assert(HtmlTextReference.preprocess(" \t a  b\tc \n\n\n d \n") == "a b c \n d")
+    assert(HtmlTextReference.preprocess("x") == "x")
+    assert(HtmlTextReference.preprocess("  \n ") == "")
+    // the same collapse inside the one-pass kernel
+    assert(HtmlText.extractReadable("<p> \t a  b\tc \n\n\n d \n</p>") == "a b c \n d")
+    assert(HtmlText.extractReadable("<p>  \n </p>") == "")
   }
 
   test("PageGen invariant: extract_readable(html) == text, 300 pages") {
