@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.frontier.{Discover, Robots, WaveLoop}
+import graft.frontier.{Discover, WaveLoop}
 import graft.pipeline.TextPipeline
 
 /** End-to-end crawl CLI — the rebuild's twin of the reference's `__main__`
@@ -140,7 +140,7 @@ object Crawl {
       .toDF("url", "seed_idx")
     WaveLoop.run(spark, s"${a.out}/frontier", seeds,
       Discover.fromPages(pages), maxWaves = a.waves, gapSeconds = a.gapSeconds,
-      robots = Robots.AllowAll, pages = Some(pages),
+      pages = Some(pages),
       refreshAfter = a.refreshAfter,
       retryErrorsAfter = a.retryAfter,
       edgesOf = a.rankEvery.map(_ => Discover.edgesFromPages(pages)),

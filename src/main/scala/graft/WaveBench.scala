@@ -14,7 +14,8 @@ import graft.frontier.{Discover, Ledger, WaveLoop}
 object WaveBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val nPages = sys.env.getOrElse("SPARK_GRAFT_WAVE_PAGES", "400000").toInt
     val nSeeds = sys.env.getOrElse("SPARK_GRAFT_WAVE_SEEDS", "150000").toInt
     val waves = sys.env.getOrElse("SPARK_GRAFT_WAVES", "3").toInt

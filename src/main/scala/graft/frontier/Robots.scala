@@ -10,9 +10,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * regardless (`/root/reference/web_scraper_pipeline.py:61`), so the DEFAULT
   * here is allow-all to preserve reference parity (SURVEY.md §2.3). The
   * north rule mandates the machinery: a per-executor robots cache broadcast
-  * from the driver. Rules are a compact prefix model: per host, a list of
-  * disallowed path prefixes (the subset of the robots exclusion protocol that
-  * is decidable without fetch-time state).
+  * from the driver. Rules are each host's parsed robots.txt ([[FullRules]]:
+  * RFC 9309 longest-match Allow/Disallow plus Crawl-delay).
   *
   * At 10^10 scale the broadcast holds rules only for hosts present in the
   * current wave (robots for 10^8 hosts do not fit one broadcast; per-wave
@@ -20,51 +19,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object Robots {
 
-  /** host → disallowed path prefixes. Empty map = allow everything. */
-  final case class Rules(disallowByHost: Map[String, Seq[String]]) extends Serializable {
-    def allows(host: String, path: String): Boolean =
-      disallowByHost.get(host) match {
-        case None => true
-        case Some(prefixes) => !prefixes.exists(p => p.nonEmpty && path.startsWith(p))
-      }
-  }
-
-  val AllowAll: Rules = Rules(Map.empty)
-
-  /** Filter a frame carrying `host` and `canonical_url` by broadcast rules.
-    * The predicate is a codegen'd Catalyst expression over a broadcast
-    * handle — one deserialized rules map per executor, zero per-row
-    * allocation, no udf. Path extraction reuses the URL parser
-    * ([[graft.url.UrlKit.path]]) so `http://h?x=/admin` matches on "/" and
-    * never on query bytes.
-    */
-  def filterAllowed(df: DataFrame, rules: Rules): DataFrame = {
-    if (rules.disallowByHost.isEmpty) return df // allow-all: no-op, no scan cost
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(rules)
-    val pred = Bridge.column(RobotsAllowedExpr(bc,
-      Bridge.expression(col("host")),
-      Bridge.expression(graft.functions.url_path(col("canonical_url")))))
-    df.where(pred)
-  }
-
-  /** Rules in relational form — one (host, prefix) row per disallow prefix.
-    * This is the shape a 10^8-host rule set actually lives in at scale (a
-    * robots TABLE on storage, not a driver map); [[filterAllowedJoin]]
-    * consumes it directly, and this helper lifts a driver-side [[Rules]]
-    * into it for the small/test case.
-    */
-  def rulesFrame(spark: SparkSession, rules: Rules): DataFrame = {
-    import spark.implicits._
-    rules.disallowByHost.toSeq
-      .flatMap { case (h, ps) => ps.filter(_.nonEmpty).map(h -> _) }
-      .toDF("host", "prefix")
-  }
-
-  /** [[filterAllowed]] for rule sets that outgrow a broadcast (10^8 hosts ×
-    * prefix lists): ONE left-anti join of the wave against the (host, prefix)
-    * rules frame — a row is denied iff some nonempty prefix for its host
-    * prefixes its path, exactly [[Rules.allows]]. Nothing is ever
+  /** The robots gate for rule tables that outgrow a broadcast (10^8 hosts ×
+    * prefix lists): ONE left-anti join of the wave against a (host, prefix)
+    * rules frame — a row is denied iff some nonempty Disallow prefix for its
+    * host prefixes its path (the Allow-free, wildcard-free subset of
+    * [[HostRules.allows]], which is what a rule TABLE on storage carries,
+    * not a driver map). Nothing is ever
     * materialized on the driver (the round-2 version collected the wave's
     * distinct hosts — a driver OOM at exactly the scale this path exists
     * for); Catalyst/AQE picks broadcast-hash vs shuffle-hash for the anti
@@ -78,12 +38,6 @@ object Robots {
       df("host") === col("__r_host") &&
         startswith(graft.functions.url_path(df("canonical_url")), col("__r_prefix")),
       "left_anti")
-  }
-
-  /** Driver-map convenience over [[filterAllowedJoin]]. */
-  def filterAllowedScalable(df: DataFrame, rules: Rules): DataFrame = {
-    if (rules.disallowByHost.isEmpty) return df
-    filterAllowedJoin(df, rulesFrame(df.sparkSession, rules))
   }
 
   // ---------- robots.txt parsing (RFC 9309 subset) ---------------------------
@@ -283,40 +237,10 @@ object Robots {
     parse(txt, agent).allows(path)
 }
 
-/** (host, path) → allowed? over a broadcast [[Robots.Rules]]. The rules ride
-  * a TorrentBroadcast (bytes once per executor, not per task) and the probe
-  * stays inside whole-stage codegen via `addReferenceObj`.
-  */
-case class RobotsAllowedExpr(
-    bc: org.apache.spark.broadcast.Broadcast[Robots.Rules],
-    left: org.apache.spark.sql.catalyst.expressions.Expression,
-    right: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{BooleanType, DataType}
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(host: Any, path: Any): Any =
-    bc.value.allows(host.asInstanceOf[UTF8String].toString, path.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftRobots", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[Robots.Rules]].getName)
-    defineCodeGen(ctx, ev, (h, p) =>
-      s"((graft.frontier.Robots.Rules) $ref.value()).allows($h.toString(), $p.toString())")
-  }
-  override protected def withNewChildrenInternal(
-      l: org.apache.spark.sql.catalyst.expressions.Expression,
-      r: org.apache.spark.sql.catalyst.expressions.Expression): RobotsAllowedExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = "robots_allowed"
-}
-
 /** (host, path) → allowed? over broadcast PARSED [[Robots.FullRules]]
-  * (longest-match Allow/Disallow precedence, RFC 9309) — same broadcast +
-  * codegen shape as [[RobotsAllowedExpr]], richer rule model.
+  * (longest-match Allow/Disallow precedence, RFC 9309). The rules ride a
+  * TorrentBroadcast (bytes once per executor, not per task) and the probe
+  * stays inside whole-stage codegen via `addReferenceObj`.
   */
 case class RobotsFullAllowedExpr(
     bc: org.apache.spark.broadcast.Broadcast[Robots.FullRules],

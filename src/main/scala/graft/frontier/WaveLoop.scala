@@ -74,8 +74,8 @@ object WaveLoop {
     *                    Allow/Disallow gate AND per-host Crawl-delay — the
     *                    scheduler slots each host at its own gap. Denied rows
     *                    are not silently dropped: when metrics are on they
-    *                    land in `metrics/wave=K` with status 451. Takes
-    *                    precedence over the prefix-model `robots` param.
+    *                    land in `metrics/wave=K` with status 451. None
+    *                    allows every url.
     * @param refreshAfter when Some(n), every wave also
     *                    re-schedules committed urls whose LAST fetch is ≥ n
     *                    waves old ([[Ledger.staleFrontier]]): age-priority
@@ -149,7 +149,6 @@ object WaveLoop {
       discover: DataFrame => DataFrame,
       maxWaves: Int,
       gapSeconds: Long = 3L,
-      robots: Robots.Rules = Robots.AllowAll,
       pages: Option[DataFrame] = None,
       ledger: Option[Ledger] = None,
       fullRules: Option[Robots.FullRules] = None,
@@ -265,10 +264,7 @@ object WaveLoop {
       // time at metrics time
       val allowedPred = fullRules.map(fr => Robots.allowedColFull(spark, fr,
         col("host"), graft.functions.url_path(col("canonical_url"))))
-      val gated = allowedPred match {
-        case Some(p) => keyed.where(p)
-        case None => Robots.filterAllowed(keyed, robots)
-      }
+      val gated = allowedPred.fold(keyed)(keyed.where(_))
       // refresh rows get their own keyed frame: they must NOT pass through
       // filterUnseen (being in the ledger is what makes them refreshes) but
       // robots still binds — a rule change since first crawl must deny the
@@ -339,10 +335,7 @@ object WaveLoop {
       // url-distinct), so a url can never schedule twice in one wave
       val inWave = refreshKeyed match {
         case Some(rk) =>
-          val rkGated = allowedPred match {
-            case Some(p) => rk.where(p)
-            case None => Robots.filterAllowed(rk, robots)
-          }
+          val rkGated = allowedPred.fold(rk)(rk.where(_))
           unseenCapped.unionByName(rkGated.select(keyed.columns.map(col): _*))
         case None => unseenCapped
       }

@@ -62,10 +62,13 @@ object HeavyHitters {
     // the row's distinct-gram count, so one projection + an 8-byte-row sum
     // replaces a full explode pass (the round-5 layout ran the n-gram
     // kernel 4× per call; this and the broadcast below make it 3×, with
-    // the explode paths the only ones that shuffle)
+    // the explode paths the only ones that shuffle). A null text has no
+    // grams: array_size is NULL for it in every ANSI mode (size(NULL) is -1
+    // with ANSI off), so the coalesce counts it as 0
     val perDoc = docs
       .select(col(idCol).as("id"),
-        size(graft.functions.ngram_hash_keys(col(textCol), n)).cast("long").as("__k"))
+        coalesce(array_size(graft.functions.ngram_hash_keys(col(textCol), n)), lit(0))
+          .cast("long").as("__k"))
       .groupBy("id").agg(sum(col("__k")).as("n_grams"))
     // hot is bounded by rows/minDocFreq — broadcast it so the hits pass
     // filters grams in the explode's own stage instead of shuffling them

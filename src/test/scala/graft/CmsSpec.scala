@@ -70,19 +70,28 @@ class CmsSpec extends AnyFunSuite {
     val docs = (0 until 20).map { i =>
       (i.toLong, s"unique prose $i words alpha$i beta$i gamma$i delta$i $footer")
     } :+ (100L, "all prose here nothing shared with anyone else at all") :+
-      (101L, "tiny")
-    val got = HeavyHitters.boilerplateDensity(
-        docs.toDF("id", "text"), "id", "text", n = 5, minDocFreq = 5L,
-        width = 4096)
-      .select("id", "n_grams", "n_hot", "hot_ppm")
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    // the 6-token footer contributes 2 hot 5-grams per template doc
-    (0L until 20L).foreach { i =>
-      assert(got(i)._2 == 2L, s"doc $i n_hot")
-      assert(got(i)._3 > 0L)
+      (101L, "tiny") :+ (102L, null)
+    val ansiKey = "spark.sql.ansi.enabled"
+    val ansiBefore = spark.conf.getOption(ansiKey)
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set(ansiKey, ansi)
+      val got = HeavyHitters.boilerplateDensity(
+          docs.toDF("id", "text"), "id", "text", n = 5, minDocFreq = 5L,
+          width = 4096)
+        .select("id", "n_grams", "n_hot", "hot_ppm")
+        .as[(Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+      // the 6-token footer contributes 2 hot 5-grams per template doc
+      (0L until 20L).foreach { i =>
+        assert(got(i)._2 == 2L, s"doc $i n_hot (ansi=$ansi)")
+        assert(got(i)._3 > 0L)
+      }
+      assert(got(100L)._2 == 0L && got(100L)._3 == 0L)
+      assert(got(101L) == ((0L, 0L, 0L)), s"short doc (ansi=$ansi)")
+      assert(got(102L) == ((0L, 0L, 0L)), s"null-text doc (ansi=$ansi)")
+    } finally ansiBefore match {
+      case Some(v) => spark.conf.set(ansiKey, v)
+      case None => spark.conf.unset(ansiKey)
     }
-    assert(got(100L)._2 == 0L && got(100L)._3 == 0L)
-    assert(got(101L) == ((0L, 0L, 0L)))
   }
 }

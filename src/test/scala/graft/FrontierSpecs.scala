@@ -277,9 +277,9 @@ class RobotsSpec extends AnyFunSuite {
     val f = Seen.withUrlKeys(Seq(
       ("http://a.test/private/x", 1L), ("http://a.test/public/x", 2L),
       ("http://b.test/private/x", 3L)).toDF("url", "seed_idx"))
-    assert(Robots.filterAllowed(f, Robots.AllowAll).count() == 3)
-    val rules = Robots.Rules(Map("a.test" -> Seq("/private")))
-    val kept = Robots.filterAllowed(f, rules).select("seed_idx").as[Long].collect().toSet
+    assert(Robots.filterAllowedFull(f, Robots.FullAllowAll).count() == 3)
+    val rules = Robots.FullRules(Map("a.test" -> Robots.HostRules(Nil, Seq("/private"), None)))
+    val kept = Robots.filterAllowedFull(f, rules).select("seed_idx").as[Long].collect().toSet
     assert(kept == Set(2L, 3L)) // b.test has no rules → allowed
   }
 
@@ -288,8 +288,8 @@ class RobotsSpec extends AnyFunSuite {
     val f = Seen.withUrlKeys(Seq(
       ("http://a.test?x=/private", 1L), ("http://a.test/private?x=1", 2L))
       .toDF("url", "seed_idx"))
-    val rules = Robots.Rules(Map("a.test" -> Seq("/private")))
-    val kept = Robots.filterAllowed(f, rules).select("seed_idx").as[Long].collect().toSet
+    val rules = Robots.FullRules(Map("a.test" -> Robots.HostRules(Nil, Seq("/private"), None)))
+    val kept = Robots.filterAllowedFull(f, rules).select("seed_idx").as[Long].collect().toSet
     assert(kept == Set(1L))
   }
 
@@ -299,10 +299,11 @@ class RobotsSpec extends AnyFunSuite {
         lit(".test/private/"), col("id").cast("string")).as("url"),
       col("id").as("seed_idx")))
     // rules for 1000 hosts; only 10 appear in the wave
-    val rules = Robots.Rules(
-      (0 until 1000).map(i => s"h$i.test" -> Seq(if (i % 2 == 0) "/private" else "/other")).toMap)
-    val full = Robots.filterAllowed(f, rules).select("seed_idx").as[Long].collect().toSet
-    val scalable = Robots.filterAllowedScalable(f, rules).select("seed_idx").as[Long].collect().toSet
+    val prefixes = (0 until 1000).map(i => s"h$i.test" -> (if (i % 2 == 0) "/private" else "/other"))
+    val rules = Robots.FullRules(prefixes.map { case (h, p) => h -> Robots.HostRules(Nil, Seq(p), None) }.toMap)
+    val full = Robots.filterAllowedFull(f, rules).select("seed_idx").as[Long].collect().toSet
+    val scalable = Robots.filterAllowedJoin(f, prefixes.toDF("host", "prefix"))
+      .select("seed_idx").as[Long].collect().toSet
     assert(scalable == full)
     assert(full == (0L until 200L).filter(i => (i % 10) % 2 == 1).toSet)
   }
@@ -385,10 +386,11 @@ class RobotsSpec extends AnyFunSuite {
     val f = Seen.withUrlKeys(spark.range(10)
       .select(concat(lit("http://a.test/x/"), col("id").cast("string")).as("url"),
         col("id").as("seed_idx")))
-    val filtered = Robots.filterAllowed(f, Robots.Rules(Map("a.test" -> Seq("/p"))))
+    val filtered = Robots.filterAllowedFull(f,
+      Robots.FullRules(Map("a.test" -> Robots.HostRules(Nil, Seq("/p"), None))))
     val plan = filtered.queryExecution.executedPlan.toString
     assert(!plan.contains("UDF"), plan)
-    assert(plan.contains("robots_allowed"), plan)
+    assert(plan.contains("robots_allowed_full"), plan)
     assert(filtered.count() == 10)
   }
 }

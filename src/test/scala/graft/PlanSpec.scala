@@ -143,9 +143,9 @@ class PlanSpec extends AnyFunSuite {
       .select(concat(lit("http://h"), (col("id") % 5).cast("string"),
         lit(".test/private/"), col("id").cast("string")).as("url"),
         col("id").as("seed_idx")))
-    val rules = frontier.Robots.Rules(
-      (0 until 100).map(i => s"h$i.test" -> Seq("/private")).toMap)
-    val plan = frontier.Robots.filterAllowedScalable(f, rules)
+    import spark.implicits._
+    val rules = (0 until 100).map(i => s"h$i.test" -> "/private").toDF("host", "prefix")
+    val plan = frontier.Robots.filterAllowedJoin(f, rules)
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftAnti"), plan)
   }
