@@ -75,9 +75,11 @@ object Decontaminate {
     def keys(c: Column) = graft.functions.ngram_hash_keys(c, n)
     val evalGrams = broadcast(
       evalSet.select(explode(keys(col(evalTextCol))).as("gh")).distinct())
-    // in-row totals: no shuffle, no explode
+    // in-row totals: no shuffle, no explode. A null text has no ngrams:
+    // array_size is NULL for it in every ANSI mode (size(NULL) is -1 with
+    // ANSI off), so the coalesce counts it as 0
     val totals = corpus.select(col(idCol).as("id"),
-      size(keys(col(textCol))).cast("long").as("n_ngrams"))
+      coalesce(array_size(keys(col(textCol))), lit(0)).cast("long").as("n_ngrams"))
     // matches only: the explode is filtered by the broadcast join before
     // any exchange — unmatched grams (the corpus bulk) never shuffle
     val matched = corpus

@@ -3,6 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import graft.functions.{extract_links, resolve_url, extract_readable, chunk_text}
+import graft.sources.PageTable
 
 /** Link discovery and per-URL fetch/parse metrics — the two operators that
   * close the crawl loop (the reference never discovers links: its URL list
@@ -34,32 +35,13 @@ object Discover {
     * a [[graft.sources.PageTable]]), html never survives past the explode,
     * and the explode output is (2 longs + 1 string)/link.
     */
-  /** Static bucket pruning of a PageTable-layout frame against a url-keyed
-    * wave: the wave's DISTINCT derived buckets (≤ `buckets` ints, one cheap
-    * map-side-combined job) become a partition filter on the pages scan —
-    * a selective wave reads only its buckets of the (huge) table. No-op
-    * for frames without the `bucket` partition column.
-    */
-  private def pruneToWave(pages: DataFrame, wave: DataFrame, urlCol: String,
-      buckets: Int): DataFrame =
-    if (pages.columns.contains("bucket")) {
-      // modulus from the PageTable's own column metadata when present — a
-      // caller-supplied count disagreeing with the committed layout would
-      // prune away matching pages (false 404s / lost links)
-      val b = graft.sources.PageTable.bucketCountOf(pages).getOrElse(buckets)
-      val waveBuckets = wave
-        .select(pmod(hash(col(urlCol)), lit(b)).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      pages.where(col("bucket").isin(waveBuckets: _*))
-    } else pages
-
   def fromPages(pages: DataFrame, maxLinksPerPage: Int = 1024,
       buckets: Int = 64, respectNofollow: Boolean = true): DataFrame => DataFrame = {
     require(maxLinksPerPage >= 1 && maxLinksPerPage <= 8192,
       s"maxLinksPerPage out of range: $maxLinksPerPage")
     val m = Discover.nextPow2(maxLinksPerPage)
     scheduled => {
-      val p = pruneToWave(pages, scheduled, "canonical_url", buckets)
+      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
         .select(col("url").as("canonical_url"), col("html"))
       scheduled.select("canonical_url", "seed_idx")
         .join(p, Seq("canonical_url"))
@@ -104,7 +86,7 @@ object Discover {
       s"maxLinksPerPage out of range: $maxLinksPerPage")
     val m = Discover.nextPow2(maxLinksPerPage) * 2 // two channels per block
     scheduled => {
-      val p = pruneToWave(pages, scheduled, "canonical_url", buckets)
+      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
         .select(col("url").as("canonical_url"), col("html"))
       val routed = scheduled.select("canonical_url", "seed_idx")
         .join(p, Seq("canonical_url"))
@@ -151,7 +133,7 @@ object Discover {
     require(maxLinksPerPage >= 1 && maxLinksPerPage <= 8192,
       s"maxLinksPerPage out of range: $maxLinksPerPage")
     scheduled => {
-      val p = pruneToWave(pages, scheduled, "canonical_url", buckets)
+      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
         .select(col("url").as("canonical_url"), col("html"))
       scheduled.select("canonical_url")
         .join(p, Seq("canonical_url"))
@@ -236,7 +218,7 @@ object Discover {
       urlCol: String = "url", buckets: Int = 64,
       robots: Robots.FullRules = Robots.FullAllowAll,
       parseStats: Boolean = true): DataFrame = {
-    val p = pruneToWave(pages, frontier, urlCol, buckets)
+    val p = PageTable.pruneTo(pages, frontier, urlCol, buckets)
       .select(col("url").as("__page_url"), col("html").as("__html"))
     val denied =
       if (robots.byHost.isEmpty && (robots.default eq Robots.HostRules.AllowAll)) lit(false)

@@ -1,7 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{bloom_agg, bloom_merge_agg}
 import graft.core.Fs
 
@@ -63,6 +64,25 @@ final class Ledger(
 
   private def tableLocation(version: Int) = s"$root/ledger_v$version"
 
+  private def createTable(version: Int): Unit = spark.sql(
+    s"""CREATE TABLE IF NOT EXISTS ${tableName(version)}
+       |  (url_hash BIGINT, canonical_url STRING, wave INT)
+       |USING PARQUET
+       |CLUSTERED BY (url_hash) SORTED BY (url_hash) INTO $buckets BUCKETS
+       |LOCATION '${tableLocation(version)}'""".stripMargin)
+
+  /** Appends (url_hash, canonical_url, wave) rows to the table of
+    * `version`. `repartition(buckets, url_hash)` uses the same murmur3-pmod
+    * layout as the table's bucketing, so every task holds exactly one
+    * bucket → ONE file per bucket per write (without it, each task would
+    * write a file per bucket it touches: tasks×buckets files).
+    */
+  private def appendRows(rows: DataFrame, version: Int): Unit =
+    rows.repartition(buckets, col("url_hash"))
+      .write.mode(SaveMode.Append).format("parquet")
+      .bucketBy(buckets, "url_hash").sortBy("url_hash") // must restate the table's spec
+      .saveAsTable(tableName(version))
+
   /** Idempotent: registers the current version's table (fresh session resume
     * re-registers over the existing files — the bucketing METADATA lives in
     * the catalog, so resume must restore it before the files are useful),
@@ -92,17 +112,9 @@ final class Ledger(
           "sketch parameters are part of the on-disk format and cannot change on resume")
     }
     val v = currentVersion
-    val name = tableName(v)
     // the insert path LISTS the location before writing — it must exist
     Fs.mkdirs(tableLocation(v))
-    if (!spark.catalog.tableExists(name)) {
-      spark.sql(
-        s"""CREATE TABLE IF NOT EXISTS $name
-           |  (url_hash BIGINT, canonical_url STRING, wave INT)
-           |USING PARQUET
-           |CLUSTERED BY (url_hash) SORTED BY (url_hash) INTO $buckets BUCKETS
-           |LOCATION '${tableLocation(v)}'""".stripMargin)
-    }
+    if (!spark.catalog.tableExists(tableName(v))) createTable(v)
     // sweep leaked older versions (crash between version bump and cleanup)
     for (old <- 0 until v) {
       spark.sql(s"DROP TABLE IF EXISTS ${tableName(old)}")
@@ -111,6 +123,8 @@ final class Ledger(
   }
 
   private def tombstoneDir = s"$root/tombstones"
+
+  private def readTombstones = spark.read.schema(Ledger.TombstoneSchema).parquet(tombstoneDir)
 
   /** The committed slice of the ledger (bucketed scan — no exchange needed
     * on this side of a url_hash join), minus tombstoned rows ([[unsee]]).
@@ -122,25 +136,37 @@ final class Ledger(
   def committedFrame(upToWave: Int): DataFrame = {
     val base = spark.table(tableName(currentVersion)).where(col("wave") <= upToWave)
     if (!Fs.exists(tombstoneDir)) base
-    else Ledger.applyTombstones(base,
-      spark.read.parquet(tombstoneDir).where(col("t_wave") <= upToWave))
+    else Ledger.applyTombstones(base, readTombstones.where(col("t_wave") <= upToWave))
   }
 
-  /** Append one wave's delta. `repartition(buckets, url_hash)` uses the same
-    * murmur3-pmod layout as the table's bucketing, so every task holds
-    * exactly one bucket → ONE file per bucket per wave (without it, each
-    * task would write a file per bucket it touches: tasks×buckets files).
-    */
+  /** Append one wave's delta: one file per bucket. */
   def append(delta: DataFrame, wave: Int): Unit = {
     ensure()
-    delta.select(col("url_hash"), col("canonical_url"), lit(wave).cast("int").as("wave"))
-      .repartition(buckets, col("url_hash"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(buckets, "url_hash").sortBy("url_hash") // must restate the table's spec
-      .saveAsTable(tableName(currentVersion))
+    appendRows(delta.select(col("url_hash"), col("canonical_url"),
+      lit(wave).cast("int").as("wave")), currentVersion)
   }
 
   private def bloomDir(wave: Int) = s"$root/blooms/wave=$wave"
+
+  /** The bank committed at `wave`, in either layout (see [[writeBlooms]]). */
+  private def readBank(wave: Int) = spark.read.schema(Ledger.BankSchema).parquet(bloomDir(wave))
+
+  /** Bank-size estimate from FILE METADATA of the previous bank (or one
+    * empty serialized bloom per bucket when there is none) — never the data.
+    */
+  private def estBankBytes(prev: Option[Int]): Long =
+    prev.map(w => Fs.treeBytes(bloomDir(w), ".parquet"))
+      .getOrElse(buckets.toLong * emptyBloomBytes)
+
+  /** GC: each bank is FULL state (tens of GB at 10^10 keys), so stale wave
+    * dirs accumulate unboundedly on a long crawl. Keep one predecessor for
+    * crash-resume (a crash before this wave's manifest re-runs against it),
+    * drop everything older.
+    */
+  private def dropBanksBefore(wave: Int): Unit =
+    for (n <- Fs.childNames(s"$root/blooms")
+         if n.startsWith("wave=") && n.stripPrefix("wave=").toIntOption.exists(_ < wave - 1))
+      Fs.deleteTree(s"$root/blooms/$n")
 
   /** [[append]] + [[writeBlooms]] in ONE pass over the delta: the
     * per-bucket delta blooms ride the bucketed table append as `observe()`
@@ -159,24 +185,18 @@ final class Ledger(
     ensure()
     val prevOpt = latestBloomWave(wave - 1)
     val covered = prevOpt.getOrElse(-1)
-    val estBank = prevOpt.map(w => Fs.treeBytes(bloomDir(w), ".parquet"))
-      .getOrElse(buckets.toLong * emptyBloomBytes)
-    if (covered < wave - 1 || estBank > bankSingleFileBytes) {
+    if (covered < wave - 1 || estBankBytes(prevOpt) > bankSingleFileBytes) {
       append(delta, wave)
       writeBlooms(delta, wave)
       return
     }
     val obs = org.apache.spark.sql.Observation()
-    delta.select(col("url_hash"), col("canonical_url"), lit(wave).cast("int").as("wave"))
+    appendRows(delta.select(col("url_hash"), col("canonical_url"), lit(wave).cast("int").as("wave"))
       // ONE whole-bank aggregate (bucket computed once per row): the
       // N-separate-bloom_agg form evaluated N when() children per row and
       // measurably slowed the append it was riding
       .observe(obs, graft.functions.bloom_bank_agg(col("url_hash"), buckets,
-        expectedPerBucket, fpp).as("bank"))
-      .repartition(buckets, col("url_hash"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(buckets, "url_hash").sortBy("url_hash")
-      .saveAsTable(tableName(currentVersion))
+        expectedPerBucket, fpp).as("bank")), currentVersion)
     val observed = obs.get
     if (observed.isEmpty) {
       // an EMPTY delta write surfaces no observed metrics — the append
@@ -192,7 +212,7 @@ final class Ledger(
     }
     val prevRows: Map[Int, Array[Byte]] = prevOpt match {
       case None => Map.empty
-      case Some(w) => spark.read.parquet(bloomDir(w)).collect()
+      case Some(w) => readBank(w).collect()
         .map(r => r.getAs[Int]("bucket") -> r.getAs[Array[Byte]]("bloom")).toMap
     }
     val deltaBank = observed("bank").asInstanceOf[scala.collection.Seq[Array[Byte]]]
@@ -203,19 +223,12 @@ final class Ledger(
         case None => (b, d)
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("bloom",
-        org.apache.spark.sql.types.BinaryType, nullable = false)))
     spark.createDataFrame(
         spark.sparkContext.parallelize(
           merged.map { case (b, by) => org.apache.spark.sql.Row(b, by) }, 1),
-        schema)
+        Ledger.BankSchema)
       .write.mode(SaveMode.Overwrite).parquet(bloomDir(wave))
-    for (n <- Fs.childNames(s"$root/blooms")
-         if n.startsWith("wave=") && n.stripPrefix("wave=").toIntOption.exists(_ < wave - 1))
-      Fs.deleteTree(s"$root/blooms/$n")
+    dropBanksBefore(wave)
   }
 
   /** Serialized bytes of one EMPTY per-bucket bloom — the bank-size
@@ -267,7 +280,7 @@ final class Ledger(
     val merged = prevOpt match {
       case None => deltaBlooms
       case Some(prev) =>
-        spark.read.parquet(bloomDir(prev)).unionByName(deltaBlooms)
+        readBank(prev).unionByName(deltaBlooms)
           .groupBy("bucket").agg(bloom_merge_agg(col("bloom")).as("bloom"))
     }
     // SIZE-ADAPTIVE layout. Big bank (estimated > bankSingleFileBytes):
@@ -278,23 +291,13 @@ final class Ledger(
     // ~`buckets` extra file commits per wave, pure overhead when the whole
     // bank is a few MB (measured: it cost WaveBench ~10% end-to-end).
     // Readers are layout-blind: both forms surface (bucket, bloom) rows.
-    // The estimate reads file METADATA of the previous bank (or sizes one
-    // empty serialized bloom when there is none) — never the data.
-    val estBank = prevOpt.map(w => graft.core.Fs.treeBytes(bloomDir(w), ".parquet"))
-      .getOrElse(buckets.toLong * emptyBloomBytes)
-    if (estBank <= bankSingleFileBytes)
+    if (estBankBytes(prevOpt) <= bankSingleFileBytes)
       merged.coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(bloomDir(wave))
     else
       merged.repartition(col("bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(bloomDir(wave))
-    // GC: each bank is FULL state (tens of GB at 10^10 keys), so stale wave
-    // dirs accumulate unboundedly on a long crawl. Keep one predecessor for
-    // crash-resume (a crash before this wave's manifest re-runs against it),
-    // drop everything older.
-    for (n <- Fs.childNames(s"$root/blooms")
-         if n.startsWith("wave=") && n.stripPrefix("wave=").toIntOption.exists(_ < wave - 1))
-      Fs.deleteTree(s"$root/blooms/$n")
+    dropBanksBefore(wave)
   }
 
   /** Maintenance op: UNSEE a batch of keys (purge fetch-error urls for
@@ -333,7 +336,7 @@ final class Ledger(
     // writing a 0-row tombstone file would flip committedFrame onto the
     // subtraction path for nothing — bail before any state changes
     if (dead.isEmpty) return
-    dead.withColumn("t_wave", lit(wave).cast("int"))
+    dead.select(col("url_hash"), lit(wave).cast("int").as("t_wave"))
       .coalesce(1) // maintenance-sized batch; one tombstone file per unsee
       .write.mode(SaveMode.Append).parquet(tombstoneDir)
   }
@@ -363,7 +366,7 @@ final class Ledger(
           // co-partitioned fallback: bucketed scan probes in place
           candidates.join(committed.select("url_hash"), Seq("url_hash"), "left_anti")
         } else {
-          val rows = spark.read.parquet(bloomDir(w)).collect()
+          val rows = readBank(w).collect()
             .map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom")))
           // The bank may lag the table (caller appended waves (w, upToWave]
           // without writeBlooms, or a bloom write crashed): keys committed in
@@ -401,19 +404,13 @@ final class Ledger(
     ensure()
     val v = currentVersion
     val next = v + 1
-    val nextName = tableName(next)
     // idempotent retry: a previous crashed compaction may have left the
     // target table registered and/or its location non-empty — start clean
     // (the version file still points at v, so nothing committed is lost)
-    spark.sql(s"DROP TABLE IF EXISTS $nextName")
+    spark.sql(s"DROP TABLE IF EXISTS ${tableName(next)}")
     Fs.deleteTree(tableLocation(next))
     Fs.mkdirs(tableLocation(next))
-    spark.sql(
-      s"""CREATE TABLE $nextName
-         |  (url_hash BIGINT, canonical_url STRING, wave INT)
-         |USING PARQUET
-         |CLUSTERED BY (url_hash) SORTED BY (url_hash) INTO $buckets BUCKETS
-         |LOCATION '${tableLocation(next)}'""".stripMargin)
+    createTable(next)
     val all = spark.table(tableName(v))
     // tombstones ≤ upToWave are APPLIED here (their dead rows drop out of
     // the fold) and cleared below; later ones pass through untouched
@@ -421,16 +418,12 @@ final class Ledger(
     val inScope =
       if (!hasTombstones) all.where(col("wave") <= upToWave)
       else Ledger.applyTombstones(all.where(col("wave") <= upToWave),
-        spark.read.parquet(tombstoneDir).where(col("t_wave") <= upToWave))
+        readTombstones.where(col("t_wave") <= upToWave))
     val folded = inScope
       .groupBy(col("url_hash"), col("canonical_url"))
       .agg(max(col("wave")).as("wave"))
-    folded.unionByName(all.where(col("wave") > upToWave))
-      .select(col("url_hash"), col("canonical_url"), col("wave").cast("int").as("wave"))
-      .repartition(buckets, col("url_hash"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(buckets, "url_hash").sortBy("url_hash")
-      .saveAsTable(nextName)
+    appendRows(folded.unionByName(all.where(col("wave") > upToWave))
+      .select(col("url_hash"), col("canonical_url"), col("wave").cast("int").as("wave")), next)
     Fs.writeString(versionFile, next.toString)
     spark.sql(s"DROP TABLE IF EXISTS ${tableName(v)}")
     Fs.deleteTree(tableLocation(v))
@@ -438,7 +431,7 @@ final class Ledger(
       // consumed tombstones go; a crash BEFORE this point leaves them in
       // place, which is idempotent — re-applying a tombstone against the
       // compacted table matches nothing it hasn't already killed
-      val rest = spark.read.parquet(tombstoneDir)
+      val rest = readTombstones
         .where(col("t_wave") > upToWave).localCheckpoint(true)
       if (rest.isEmpty) Fs.deleteTree(tombstoneDir)
       else rest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tombstoneDir)
@@ -482,6 +475,11 @@ final class Ledger(
 
 object Ledger {
 
+  /** The bloom bank: one serialized bloom per bucket. */
+  val BankSchema: StructType = StructType.fromDDL("bucket INT NOT NULL, bloom BINARY NOT NULL")
+  /** An unsee batch ([[Ledger.unsee]]). */
+  val TombstoneSchema: StructType = StructType.fromDDL("url_hash BIGINT, t_wave INT")
+
   /** [[Ledger.staleFrontier]]'s kernel over any (url_hash, canonical_url,
     * wave) frame — split out so the staleness policy is testable (and
     * oracle-checkable: the age arithmetic is pure SQL) without standing up
@@ -491,16 +489,20 @@ object Ledger {
     */
   def staleFrontierFrom(committed: DataFrame, currentWave: Int,
       maxAgeWaves: Int): DataFrame =
+    withAge(committed, currentWave)
+      .where(col("age") >= maxAgeWaves)
+      .select(refreshCols: _*)
+
+  private def withAge(committed: DataFrame, currentWave: Int): DataFrame =
     committed
       .groupBy(col("url_hash"), col("canonical_url"))
       .agg(max(col("wave")).as("last_wave"))
       .withColumn("age", lit(currentWave) - col("last_wave"))
-      .where(col("age") >= maxAgeWaves)
-      .select(
-        col("canonical_url").as("url"),
-        Scheduler.priorityOrderKey(col("age"), pmod(col("url_hash"), lit(1L << 40)))
-          .as("seed_idx"),
-        col("age"))
+
+  private def refreshCols: Seq[Column] = Seq(
+    col("canonical_url").as("url"),
+    Scheduler.priorityOrderKey(col("age"), pmod(col("url_hash"), lit(1L << 40))).as("seed_idx"),
+    col("age"))
 
   /** [[staleFrontierFrom]] under PER-HOST TTLs — the adaptive-refresh
     * composition: [[Revisit.ttlFromChangeRates]] turns measured per-host
@@ -512,20 +514,13 @@ object Ledger {
   def staleFrontierAdaptiveFrom(committed: DataFrame, currentWave: Int,
       hostTtls: DataFrame, defaultTtlWaves: Long): DataFrame = {
     require(defaultTtlWaves >= 1, s"defaultTtlWaves: $defaultTtlWaves")
-    committed
-      .groupBy(col("url_hash"), col("canonical_url"))
-      .agg(max(col("wave")).as("last_wave"))
-      .withColumn("age", lit(currentWave) - col("last_wave"))
+    withAge(committed, currentWave)
       .withColumn("__host", graft.functions.host_of(col("canonical_url")))
       .join(broadcast(hostTtls
         .select(col("host").as("__host"), col("ttl_waves"))), Seq("__host"), "left")
       .withColumn("ttl_waves", coalesce(col("ttl_waves"), lit(defaultTtlWaves)))
       .where(col("age") >= col("ttl_waves"))
-      .select(
-        col("canonical_url").as("url"),
-        Scheduler.priorityOrderKey(col("age"), pmod(col("url_hash"), lit(1L << 40)))
-          .as("seed_idx"),
-        col("age"), col("ttl_waves"))
+      .select(refreshCols :+ col("ttl_waves"): _*)
   }
 
   /** [[Ledger.unsee]]'s subtraction kernel over any (url_hash, …, wave)

@@ -231,12 +231,12 @@ object Scheduler {
     metrics
       .groupBy(col(hostCol).as("host"))
       .agg(
-        // robots-denied (451) rows were never fetch ATTEMPTS — the crawler
-        // chose not to ask. Counting them as server errors would back off a
-        // host that merely disallows many paths (and, combined with the
-        // greatest(robots, adaptive) rule, slow its ALLOWED paths forever).
-        sum(when(col(statusCol) >= 400 &&
-          col(statusCol) =!= Discover.StatusRobotsDenied, 1L).otherwise(0L)).as("_err"),
+        // denied rows (robots 451, URL policy 452) were never fetch ATTEMPTS
+        // — the crawler chose not to ask. Counting them as server errors
+        // would back off a host that merely disallows many paths (and, with
+        // the greatest(robots, adaptive) rule, slow its ALLOWED paths forever).
+        sum(when(col(statusCol) >= 400 && !col(statusCol).isin(
+          Discover.StatusRobotsDenied, Discover.StatusUrlPolicyDenied), 1L).otherwise(0L)).as("_err"),
         count(lit(1)).as("_n"))
       .select(col("host"),
         (lit(base) + ceil(lit(scale) * col("_err").cast("double") / col("_n")).cast("long"))

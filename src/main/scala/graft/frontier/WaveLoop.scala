@@ -1,21 +1,28 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.Fs
 
 /** Iterative-batch frontier loop with checkpoint/resume and per-partition
   * lineage (north rule: "checkpoint-resumable frontier state with
   * per-partition lineage and fetch/parse metrics").
   *
-  * Each wave is one Spark job; state crosses waves ONLY via storage (a
-  * 10^10-frontier cannot live in driver memory):
+  * A steady wave runs about 28 Spark jobs (10k-URL PageTable waves with
+  * robots rules). State crosses waves ONLY via storage (a 10^10-frontier
+  * cannot live in driver memory). Every table the loop reads back is
+  * written through and read with one declared schema (`next/` with the
+  * schema of the frame just written), so no read pays a Parquet
+  * schema-inference job:
   *
   *   root/
-  *     schedule/wave=K/    slot, host_rev, url, seed_idx, host_pos
+  *     schedule/wave=K/    [[ScheduleSchema]]
   *     next/wave=K/        url, seed_idx                (wave K+1 frontier)
+  *     metrics/wave=K/     [[MetricsSchema]]            (with `pages`)
   *     seenstate/          the seen-set [[Ledger]] (default location)
-  *     _manifest_K.json    commit marker: row counts + per-partition lineage
+  *     _manifest_K.json    commit marker: counts (from the wave's own work,
+  *                         not re-reads) + per-partition lineage
   *
   * The seen-set's commit order within a wave: schedule → next → ledger
   * append (fed from the committed schedule) → bloom bank → manifest; the
@@ -44,6 +51,23 @@ object WaveLoop {
   // java.nio.file manifest would land on the driver's local disk and
   // resume-from-another-machine would replay committed waves
   def manifestPath(root: String, wave: Int): String = f"$root/_manifest_$wave%05d.json"
+
+  /** Declared schemas of the loop's tables (see the class doc). */
+  val ScheduleSchema: StructType = StructType.fromDDL("slot BIGINT, host_rev STRING, " +
+    "canonical_url STRING, url STRING, url_hash BIGINT, seed_idx BIGINT, host_pos BIGINT")
+  val MetricsSchema: StructType = StructType.fromDDL("url STRING, canonical_url STRING, " +
+    "url_hash BIGINT, seed_idx BIGINT, status INT, n_chars BIGINT, n_chunks BIGINT")
+  val EdgesSchema: StructType = StructType.fromDDL("src BIGINT, dst BIGINT")
+  private val RetriedSchema = StructType.fromDDL("url_hash BIGINT")
+  private val RankSchema = StructType.fromDDL("node BIGINT, score DOUBLE")
+  private val DustSchema = StructType.fromDDL("host STRING, param STRING, support BIGINT")
+  private val FocusSchema = StructType.fromDDL("url_hash BIGINT, focus_fp BIGINT")
+
+  private def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+
+  def readSchedule(spark: SparkSession, root: String, wave: Int): DataFrame =
+    spark.read.schema(ScheduleSchema).parquet(s"$root/schedule/wave=$wave")
 
   def committedWaves(root: String): Seq[Int] =
     Fs.childNames(root)
@@ -215,23 +239,28 @@ object WaveLoop {
         n <- retryErrorsAfter if wave >= n
         dir = s"$root/metrics/wave=${wave - n}" if Fs.exists(dir)
       } {
-        val errs0 = spark.read.parquet(dir)
+        val errs0 = spark.read.schema(MetricsSchema).parquet(dir)
           .where(col("status") === Discover.StatusMiss)
           .select("url", "seed_idx", "url_hash")
         val retriedDir = s"$root/retried"
         // materialize BEFORE mutating state: the anti-join reads retried/,
         // which the append below is about to grow under it
         val errs = (if (Fs.exists(retriedDir))
-            errs0.join(spark.read.parquet(retriedDir).select("url_hash"),
+            errs0.join(spark.read.schema(RetriedSchema).parquet(retriedDir),
               Seq("url_hash"), "left_anti")
           else errs0).localCheckpoint(true)
         if (!errs.isEmpty) {
           seen.unsee(errs.select("url_hash"), wave - 1)
-          errs.select("url_hash").write.mode(SaveMode.Append).parquet(retriedDir)
+          conform(errs, RetriedSchema).write.mode(SaveMode.Append).parquet(retriedDir)
           frontier = frontier.unionByName(errs.select("url", "seed_idx"))
         }
       }
-      if (frontier.isEmpty && refreshRows.isEmpty) {
+      // size and seed range of the raw wave input in one cheap pruned scan;
+      // the range spares the domain cap and the scheduler a stats pass
+      // that would re-execute the dedup/anti-join upstream
+      val stats = frontier.agg(count(lit(1)), min(col("seed_idx")), max(col("seed_idx")))
+        .collect()(0)
+      if (stats.getLong(0) == 0L && refreshRows.isEmpty) {
         exhausted = true
       } else {
       // DUST channel (apply side): strip learned content-irrelevant params
@@ -240,7 +269,7 @@ object WaveLoop {
       // only once their _SUCCESS exists (same fencing as the rank scores).
       val dustFrontier =
         if (dustEvery > 0 && Fs.exists(s"$root/dust/rules/_SUCCESS"))
-          Dust.applyRules(frontier, spark.read.parquet(s"$root/dust/rules"))
+          Dust.applyRules(frontier, spark.read.schema(DustSchema).parquet(s"$root/dust/rules"))
         else frontier
       val keyed0 = Seen.withUrlKeys(dustFrontier)
       // URL-policy gate FIRST (blocklist + path words, [[graft.url.UrlGate]]):
@@ -300,12 +329,7 @@ object WaveLoop {
       // scan-cheap, and the two stages commute (seen-status is constant per
       // url_hash group)
       val unseen = seen.filterUnseen(gated, wave - 1)
-      // seed range from the raw wave input (cheap pruned scan) so neither
-      // the domain cap's salted rank nor the scheduler re-executes the
-      // dedup/anti-join upstream for stats
-      val mm = frontier.agg(min(col("seed_idx")).as("lo"), max(col("seed_idx")).as("hi")).collect()(0)
-      val range = if (mm.isNullAt(0)) None
-        else Some((mm.getAs[Long]("lo"), mm.getAs[Long]("hi")))
+      val range = if (stats.isNullAt(1)) None else Some((stats.getLong(1), stats.getLong(2)))
       // domain-budget channel (`maxPerDomain`): per-SITE cap at
       // registrable-domain grain via the salted skew-proof rank — a
       // 10^7-subdomain farm shares ONE budget instead of dodging the
@@ -348,7 +372,7 @@ object WaveLoop {
       val adaptiveGaps = adaptiveBackoff.flatMap { case (base, scale) =>
         if (wave > 0 && Fs.exists(prevMetrics))
           Some((base, Scheduler.adaptiveGaps(
-            spark.read.parquet(prevMetrics)
+            spark.read.schema(MetricsSchema).parquet(prevMetrics)
               .select(graft.functions.host_of(col("canonical_url")).as("host"), col("status")),
             base = base, scale = scale)))
         else None
@@ -373,7 +397,7 @@ object WaveLoop {
       // range is computed by the scheduler itself.
       val authority = edgesOf
         .filter(_ => Fs.exists(s"$root/rank/scores/_SUCCESS"))
-        .map(_ => spark.read.parquet(s"$root/rank/scores")
+        .map(_ => spark.read.schema(RankSchema).parquet(s"$root/rank/scores")
           .select(col("node").as("url_hash"),
             floor(col("score") * 100.0d).cast("long").as("_prio")))
       // focus channel (consume side): the latest committed anchor-BM25
@@ -382,7 +406,7 @@ object WaveLoop {
       // sooner"; the order key clamps the sum).
       val focusScores = focusQueries
         .filter(_ => Fs.exists(s"$root/focus/scores/_SUCCESS"))
-        .map(_ => spark.read.parquet(s"$root/focus/scores")
+        .map(_ => spark.read.schema(FocusSchema).parquet(s"$root/focus/scores")
           .select(col("url_hash"), expr("focus_fp DIV 100000").as("_prio")))
       val prios = authority.toSeq ++ focusScores.toSeq
       val (toScheduleAuth, schedOrderCol, schedRange) =
@@ -401,11 +425,12 @@ object WaveLoop {
         gapCol = gapCol, orderCol = schedOrderCol)
 
       // wave data writes (overwrite → idempotent re-run of an uncommitted wave)
-      scheduled
-        .select("slot", "host_rev", "canonical_url", "url", "url_hash", "seed_idx", "host_pos")
+      conform(scheduled, ScheduleSchema)
         .write.mode(SaveMode.Overwrite).parquet(s"$root/schedule/wave=$wave")
+      // every later step of the wave reads the COMMITTED schedule
+      val sched = readSchedule(spark, root, wave)
 
-      val next0 = discover(spark.read.parquet(s"$root/schedule/wave=$wave"))
+      val next0 = discover(sched)
       // deferred over-budget urls ride into the next wave's frontier
       val next = deferredRows match {
         case Some(d) => next0.select(col("url"), col("seed_idx"))
@@ -421,8 +446,7 @@ object WaveLoop {
       // [[hostCardinalities]] rolls ANY subset of waves up to exact-union
       // estimates without ever re-reading urls. Overwrite → idempotent.
       if (hostCards) {
-        spark.read.parquet(s"$root/schedule/wave=$wave")
-          .groupBy("host_rev")
+        sched.groupBy("host_rev")
           .agg(graft.functions.hll_agg(col("url_hash"), hostCardsP).as("sketch"))
           .write.mode(SaveMode.Overwrite).parquet(s"$root/cards/wave=$wave")
       }
@@ -433,32 +457,87 @@ object WaveLoop {
       // idempotent on crash-resume of an uncommitted wave; the scores table
       // is only trusted once its _SUCCESS exists.
       edgesOf.foreach { ef =>
-        ef(spark.read.parquet(s"$root/schedule/wave=$wave"))
-          .select(
+        conform(ef(sched).select(
             xxhash64(graft.functions.canonicalize_url(col("src"))).as("src"),
-            xxhash64(graft.functions.canonicalize_url(col("dst"))).as("dst"))
+            xxhash64(graft.functions.canonicalize_url(col("dst"))).as("dst")), EdgesSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/edges/wave=$wave")
         if ((wave + 1) % math.max(1, rankEvery) == 0) {
-          val dirs = (0 to wave).map(w => s"$root/edges/wave=$w").filter(Fs.exists)
-          val edges = dirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-          Rank.pageRank(edges, iters = rankIters)
+          val edges = (0 to wave).map(w => s"$root/edges/wave=$w").filter(Fs.exists)
+            .map(spark.read.schema(EdgesSchema).parquet(_)).reduce(_.unionByName(_))
+          conform(Rank.pageRank(edges, iters = rankIters), RankSchema)
             .write.mode(SaveMode.Overwrite).parquet(s"$root/rank/scores")
         }
       }
 
-      // DUST channel (learn side): every dustEvery waves, re-learn per-host
-      // param-strip rules from everything fetched so far (committed
-      // schedules ⋈ page bodies — digest evidence only accumulates where a
-      // fetch actually happened). Overwrite → idempotent on crash-resume;
-      // the apply side trusts the table only via its _SUCCESS.
-      if (dustEvery > 0 && (wave + 1) % dustEvery == 0) pages.foreach { pg =>
-        val dirs = (0 to wave).map(w => s"$root/schedule/wave=$w").filter(Fs.exists)
-        val fetched = dirs
-          .map(spark.read.parquet(_).select(col("canonical_url").as("url")))
+      // ledger + bloom state BEFORE the manifest (the commit point): a crash
+      // here re-appends on resume — harmless, the wave column fences it.
+      // The delta is the committed schedule's keys; the per-bucket delta
+      // blooms ride the append as observed aggregates (coverage gaps and
+      // big banks take the two-pass path — see Ledger.appendWithBlooms)
+      seen.appendWithBlooms(sched.select("url_hash", "canonical_url"), wave)
+
+      // per-partition lineage from the COMMITTED files; its row counts sum
+      // to the wave's scheduled total
+      val lineage = sched.groupBy(spark_partition_id().as("partition_id"))
+        .agg(count(lit(1)).as("rows"), countDistinct(col("host_rev")).as("hosts"))
+        .orderBy(col("partition_id"))
+        .collect()
+      val nScheduled = lineage.map(_.getLong(1)).sum
+      val byPartition = lineage
+        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)},"hosts":${r.getLong(2)}}""")
+        .mkString("[", ",", "]")
+      // per-URL fetch/parse metrics (north rule) — written next to the wave;
+      // the manifest's totals are observed on that write
+      val fetchStats = pages.map { pg =>
+        // parseStats=false is the 100 TB setting: the downstream text
+        // pipeline extracts anyway, so the metrics pass should not pay a
+        // SECOND full extract+chunk of every fetched page just for counts
+        val fetched = Discover.fetchParse(
+          sched.select("url", "canonical_url", "url_hash", "seed_idx"), pg,
+          urlCol = "canonical_url", parseStats = metricsParseStats)
+        // robots-denied (451) and URL-policy-denied (452) rows join the
+        // metrics table with null parse columns — every frontier row is
+        // accounted for, nothing vanishes at a gate
+        def deniedAs(status: Int)(d: DataFrame) = conform(d.withColumn("status", lit(status))
+          .withColumn("n_chars", lit(null)).withColumn("n_chunks", lit(null)), MetricsSchema)
+        val metrics = (deniedRows.map(deniedAs(Discover.StatusRobotsDenied)) ++
+          urlDeniedRows.map(deniedAs(Discover.StatusUrlPolicyDenied)))
+          .foldLeft(conform(fetched, MetricsSchema))(_.unionByName(_))
+        val status = col("status")
+        def rows(p: Column) = sum(when(p, 1L).otherwise(0L))
+        val obs = Observation()
+        metrics.observe(obs, rows(status === Discover.StatusOk).as("fetched"),
+            // disjoint taxonomy: denied rows were never fetch attempts, so
+            // they must not ALSO count as missed (double-reporting)
+            rows(!status.isin(Discover.StatusOk, Discover.StatusRobotsDenied,
+              Discover.StatusUrlPolicyDenied)).as("missed"),
+            rows(status === Discover.StatusRobotsDenied).as("denied"),
+            rows(status === Discover.StatusUrlPolicyDenied).as("url_denied"),
+            sum(col("n_chars")).as("parse_chars"), sum(col("n_chunks")).as("parse_chunks"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$root/metrics/wave=$wave")
+        // a sum over zero rows is NULL, and a write of zero rows observes
+        // nothing at all: either way that total is 0
+        val m = obs.get
+        Seq("fetched", "missed", "denied", "url_denied", "parse_chars", "parse_chunks")
+          .map(k => s""","$k":${m.get(k).flatMap(Option(_)).getOrElse(0L)}""").mkString
+      }.getOrElse("")
+      // The learned channels write after the metrics, whose denied rows still
+      // read this wave's DUST rules. Their evidence is everything fetched so
+      // far (committed schedules ⋈ page bodies): digest and anchor evidence
+      // only accumulates where a fetch actually happened.
+      def fetchedCorpus(pg: DataFrame): DataFrame =
+        (0 to wave).filter(w => Fs.exists(s"$root/schedule/wave=$w"))
+          .map(readSchedule(spark, root, _).select(col("canonical_url").as("url")))
           .reduce(_.unionByName(_))
           .distinct()
-        val corpus = fetched.join(pg.select(col("url"), col("html")), "url")
-        Dust.paramStripRules(corpus, minSupport = dustMinSupport)
+          .join(pg.select(col("url"), col("html")), "url")
+
+      // DUST channel (learn side): every dustEvery waves, re-learn per-host
+      // param-strip rules from everything fetched so far. Overwrite →
+      // idempotent on crash-resume; the apply side trusts the table only
+      // via its _SUCCESS.
+      if (dustEvery > 0 && (wave + 1) % dustEvery == 0) pages.foreach { pg =>
+        conform(Dust.paramStripRules(fetchedCorpus(pg), minSupport = dustMinSupport), DustSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/dust/rules")
       }
 
@@ -470,73 +549,13 @@ object WaveLoop {
       // _SUCCESS-fenced like the other learned channels.
       if (focusQueries.nonEmpty && (wave + 1) % math.max(1, focusEvery) == 0)
         for (fq <- focusQueries; pg <- pages) {
-          val dirs = (0 to wave).map(w => s"$root/schedule/wave=$w").filter(Fs.exists)
-          val fetched = dirs
-            .map(spark.read.parquet(_).select(col("canonical_url").as("url")))
-            .reduce(_.unionByName(_))
-            .distinct()
-          val corpus = fetched.join(pg.select(col("url"), col("html")), "url")
-          Anchors.focusPriorities(corpus, fq, k = focusTopK)
+          conform(Anchors.focusPriorities(fetchedCorpus(pg), fq, k = focusTopK)
             .groupBy("url").agg(sum(col("score_fp")).as("focus_fp"))
             .select(xxhash64(graft.functions.canonicalize_url(col("url")))
-              .as("url_hash"), col("focus_fp"))
+              .as("url_hash"), col("focus_fp")), FocusSchema)
             .write.mode(SaveMode.Overwrite).parquet(s"$root/focus/scores")
         }
 
-      // ledger + bloom state BEFORE the manifest (the commit point): a crash
-      // here re-appends on resume — harmless, the wave column fences it.
-      // The delta is the committed schedule's keys; the per-bucket delta
-      // blooms ride the append as observed aggregates (coverage gaps and
-      // big banks take the two-pass path — see Ledger.appendWithBlooms)
-      seen.appendWithBlooms(spark.read.parquet(s"$root/schedule/wave=$wave")
-        .select("url_hash", "canonical_url"), wave)
-
-      // metrics + per-partition lineage from the COMMITTED files
-      val sched = spark.read.parquet(s"$root/schedule/wave=$wave")
-      val nScheduled = sched.count()
-      val byPartition = sched.groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows"), countDistinct(col("host_rev")).as("hosts"))
-        .orderBy(col("partition_id"))
-        .collect()
-        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)},"hosts":${r.getLong(2)}}""")
-        .mkString("[", ",", "]")
-      // per-URL fetch/parse metrics (north rule) — written next to the wave,
-      // totals into the manifest
-      val fetchStats = pages.map { pg =>
-        // parseStats=false is the 100 TB setting: the downstream text
-        // pipeline extracts anyway, so the metrics pass should not pay a
-        // SECOND full extract+chunk of every fetched page just for counts
-        val fetched = Discover.fetchParse(
-          sched.select("url", "canonical_url", "url_hash", "seed_idx"), pg,
-          urlCol = "canonical_url", parseStats = metricsParseStats)
-        // robots-denied rows join the metrics table with status 451 — every
-        // frontier row is accounted for, nothing vanishes at the gate
-        def deniedAs(d: DataFrame, status: Int): DataFrame =
-          d.select(col("url"), col("canonical_url"), col("url_hash"), col("seed_idx"),
-            lit(status).cast("int").as("status"),
-            lit(null).cast("long").as("n_chars"),
-            lit(null).cast("long").as("n_chunks"))
-        val withDenied = Seq(
-          deniedRows.map(deniedAs(_, Discover.StatusRobotsDenied)),
-          urlDeniedRows.map(deniedAs(_, Discover.StatusUrlPolicyDenied)))
-          .flatten.foldLeft(fetched)(_.unionByName(_))
-        withDenied.write.mode(SaveMode.Overwrite).parquet(s"$root/metrics/wave=$wave")
-        val m = spark.read.parquet(s"$root/metrics/wave=$wave")
-          .agg(sum(when(col("status") === 200, 1L).otherwise(0L)).as("fetched"),
-            // disjoint taxonomy: denied rows were never fetch attempts, so
-            // they must not ALSO count as missed (double-reporting)
-            sum(when(col("status") =!= 200 &&
-              col("status") =!= Discover.StatusRobotsDenied &&
-              col("status") =!= Discover.StatusUrlPolicyDenied, 1L).otherwise(0L)).as("missed"),
-            sum(when(col("status") === Discover.StatusRobotsDenied, 1L).otherwise(0L)).as("denied"),
-            sum(when(col("status") === Discover.StatusUrlPolicyDenied, 1L).otherwise(0L)).as("url_denied"),
-            coalesce(sum(col("n_chars")), lit(0L)).as("parse_chars"),
-            coalesce(sum(col("n_chunks")), lit(0L)).as("parse_chunks"))
-          .collect()(0)
-        s""","fetched":${m.getAs[Long]("fetched")},"missed":${m.getAs[Long]("missed")},""" +
-          s""""denied":${m.getAs[Long]("denied")},"url_denied":${m.getAs[Long]("url_denied")},""" +
-          s""""parse_chars":${m.getAs[Long]("parse_chars")},"parse_chunks":${m.getAs[Long]("parse_chunks")}"""
-      }.getOrElse("")
       val manifest =
         s"""{"wave":$wave,"scheduled":$nScheduled,"gap_seconds":$gapSeconds$fetchStats,
            |"lineage":$byPartition}""".stripMargin.replace("\n", "")
@@ -544,7 +563,7 @@ object WaveLoop {
 
       results += WaveResult(wave, nScheduled, nScheduled)
       seen.maybeCompact(wave)
-      frontier = spark.read.parquet(s"$root/next/wave=$wave")
+      frontier = spark.read.schema(next.schema).parquet(s"$root/next/wave=$wave")
       wave += 1
       } // else (non-exhausted wave body)
     }
@@ -573,9 +592,8 @@ object WaveLoop {
     * checks against the reference's sequential order.
     */
   def crawlOrder(spark: SparkSession, root: String): DataFrame = {
-    val waves = committedWaves(root)
-    val frames = waves.map(w =>
-      spark.read.parquet(s"$root/schedule/wave=$w").withColumn("wave", lit(w)))
+    val frames = committedWaves(root).map(w =>
+      readSchedule(spark, root, w).withColumn("wave", lit(w)))
     if (frames.isEmpty) return spark.emptyDataFrame
     frames.reduce(_.unionByName(_))
       .orderBy(col("wave"), col("slot"), col("host_rev"), col("seed_idx"))

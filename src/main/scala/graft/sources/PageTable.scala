@@ -224,38 +224,38 @@ object PageTable {
     (drop, dropDirs)
   }
 
+  /** Static bucket pruning of a [[read]] frame to the DISTINCT derived
+    * buckets of a url-keyed frame (one cheap job), so a selective wave reads
+    * only its buckets. (Dynamic partition pruning doesn't fire: it wants a
+    * selective predicate on the frontier side — measured.) No-op for frames
+    * without the `bucket` column.
+    */
+  def pruneTo(pages: DataFrame, keys: DataFrame, urlCol: String,
+      buckets: Int = 64): DataFrame =
+    if (pages.columns.contains("bucket")) {
+      // modulus from the table's own metadata when present — a
+      // caller-supplied count that disagrees with the committed layout
+      // would prune away MATCHING pages (false 404s / lost links)
+      val b = bucketCountOf(pages).getOrElse(buckets)
+      val keyBuckets = keys
+        .select(pmod(hash(col(urlCol)), lit(b)).as("b")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      pages.where(col("bucket").isin(keyBuckets: _*))
+    } else pages
+
   /** Fetch replay: frontier(url, …) ⋈ pages ON url — the rebuild's analogue
     * of the reference's `driver.get(url)` (`web_scraper_pipeline.py:61`):
     * at 100 TB this is a bucket-aligned join; at test scale Catalyst
     * broadcasts whichever side is small. `html` only enters the plan when
     * `withHtml` asks for it — column pruning keeps the fat binary out of
-    * frontier-only scans.
-    *
-    * When `pages` still carries the layout's `bucket` partition column
-    * (i.e. it came from [[read]]), the frontier's DISTINCT derived buckets
-    * (≤ `buckets` ints, one cheap map-side-combined job) become a STATIC
-    * partition filter on the pages scan — a selective wave reads only its
-    * buckets of the table instead of all of it. (Dynamic partition pruning
-    * doesn't fire here: its benefit heuristic wants a selective predicate
-    * on the frontier side, which a frontier never has — measured, not
-    * assumed.) Pruning the right side of the left join by a function of
-    * the join key is semantics-preserving: removed rows couldn't match.
+    * frontier-only scans. The pages side is bucket-pruned to the
+    * frontier's buckets ([[pruneTo]]).
     */
   def fetch(frontier: DataFrame, pages: DataFrame, withHtml: Boolean = true,
       buckets: Int = 64): DataFrame = {
     val cols = if (withHtml) Seq("url", "warc_ts", "html", "text", "lang")
       else Seq("url", "warc_ts", "text", "lang")
-    val pruned =
-      if (pages.columns.contains("bucket")) {
-        // modulus from the table's own metadata when present — a
-        // caller-supplied count that disagrees with the committed layout
-        // would prune away MATCHING pages (false 404s)
-        val b = bucketCountOf(pages).getOrElse(buckets)
-        val waveBuckets = frontier
-          .select(pmod(hash(col("url")), lit(b)).as("b")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        pages.where(col("bucket").isin(waveBuckets: _*))
-      } else pages
-    frontier.join(pruned.select(cols.map(col): _*), Seq("url"), "left")
+    frontier.join(pruneTo(pages, frontier, "url", buckets).select(cols.map(col): _*),
+      Seq("url"), "left")
   }
 }

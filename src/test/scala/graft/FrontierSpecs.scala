@@ -117,14 +117,17 @@ class SchedulerSpec extends AnyFunSuite {
     val metrics = Seq(
       ("err.test", 200), ("err.test", 404), ("err.test", 451), ("err.test", 404),
       ("ok.test", 200), ("ok.test", 200),
-      ("denied.test", 451), ("denied.test", 451), ("denied.test", 200)
+      ("denied.test", 451), ("denied.test", 451), ("denied.test", 200),
+      ("policy.test", 452), ("policy.test", 200)
     ).toDF("host", "status")
     val gaps = Scheduler.adaptiveGaps(metrics, base = 1L, scale = 3)
       .as[(String, Long)].collect().toMap
     // err.test: 451 is NOT a fetch error → 2/4 errors → 1 + ceil(1.5) = 3;
     // denied.test: all-denied host is NOT backed off (the crawler chose not
-    // to ask — robots compliance is not server misbehavior)
-    assert(gaps == Map("err.test" -> 3L, "ok.test" -> 1L, "denied.test" -> 1L))
+    // to ask — robots compliance is not server misbehavior); policy.test:
+    // a URL-policy denial (452) is not a fetch error either
+    assert(gaps == Map("err.test" -> 3L, "ok.test" -> 1L, "denied.test" -> 1L,
+      "policy.test" -> 1L))
   }
 
   test("per-host budget cap partitions the schedule at host_pos") {
@@ -395,6 +398,25 @@ class RobotsSpec extends AnyFunSuite {
   }
 }
 
+/** A wave manifest's fetch totals next to the same aggregate recomputed
+  * over the wave's committed metrics table.
+  */
+object WaveManifest {
+  def totals(spark: org.apache.spark.sql.SparkSession, root: String,
+      wave: Int): (Map[String, Long], Map[String, Long]) = {
+    val keys = Seq("fetched", "missed", "denied", "url_denied", "parse_chars", "parse_chunks")
+    val doc = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(WaveLoop.manifestPath(root, wave))))
+    val manifest = keys.map(k => k -> (doc \ k).asInstanceOf[org.json4s.JInt].num.toLong).toMap
+    val status = col("status")
+    val r = spark.read.parquet(s"$root/metrics/wave=$wave").agg(
+      count(when(status === 200, 1)), count(when(!status.isin(200, 451, 452), 1)),
+      count(when(status === 451, 1)), count(when(status === 452, 1)),
+      coalesce(sum("n_chars"), lit(0L)), coalesce(sum("n_chunks"), lit(0L))).collect()(0)
+    (manifest, keys.indices.map(i => keys(i) -> r.getLong(i)).toMap)
+  }
+}
+
 class WaveLoopSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -506,6 +528,8 @@ class WaveLoopSpec extends AnyFunSuite {
     assert(m.where(col("status") === 200).count() == 11)
     val mf = java.nio.file.Files.readString(java.nio.file.Paths.get(WaveLoop.manifestPath(root, 0)))
     assert(mf.contains("\"denied\":1"), mf)
+    val (manifest, recomputed) = WaveManifest.totals(spark, root, 0)
+    assert(manifest == recomputed)
     // parseStats=false (the 100 TB setting): statuses survive, parse columns
     // are null for EVERY row — the metrics pass pays no second extract
     val root2 = java.nio.file.Files.createTempDirectory("wavesrobots2").toString
@@ -515,6 +539,8 @@ class WaveLoopSpec extends AnyFunSuite {
     assert(m2.where(col("status") === 200).count() == 11)
     assert(m2.where(col("status") === 451).count() == 1)
     assert(m2.where(col("n_chars").isNotNull || col("n_chunks").isNotNull).count() == 0)
+    val (manifest2, recomputed2) = WaveManifest.totals(spark, root2, 0)
+    assert(manifest2 == recomputed2)
   }
 
   test("adaptive backoff: wave-0 error rates set wave-1 per-host gaps") {
@@ -611,27 +637,66 @@ class WaveLoopSpec extends AnyFunSuite {
     // re-added per-wave write or recompute raises the count and fails here.
     // Waves 1 and 2 are the steady state (wave 0 has no ledger to probe;
     // wave 3 of this graph schedules nothing).
-    val pinned = Seq(22, 29, 29)
+    val pinned = Seq(16, 20, 20)
     val root = java.nio.file.Files.createTempDirectory("wavejobs").toString
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val perWave = pinned.indices.map { w =>
+      SparkTestSession.jobsDuring(
+        WaveLoop.run(spark, root, seeds, discover, maxWaves = w + 1))._2
     }
-    sc.addSparkListener(listener)
-    val perWave = try pinned.indices.map { w =>
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      jobs.set(0)
-      WaveLoop.run(spark, root, seeds, discover, maxWaves = w + 1)
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-    assert(perWave == pinned, s"jobs per wave: $perWave")
+    assert(perWave.map(_.size) == pinned, s"jobs per wave: ${perWave.map(_.size)}")
+    // loop state is read back with its declared schema: the only schema
+    // inference is a resumed call's read of the caller-shaped next/ frontier
+    assert(perWave.map(_.count(_.schemaInference)) == Seq(0, 1, 1),
+      perWave.map(_.filter(_.schemaInference).flatMap(_.stageNames)).toString)
     // the seen set is the default ledger, appended from the committed
     // schedule; no per-wave seen delta is written
     assert(graft.core.Fs.exists(s"$root/seenstate/_ledger_params"))
     assert(!graft.core.Fs.exists(s"$root/seen"), "seen/ deltas are written again")
+  }
+
+  test("learned channels read their state back without schema inference, every wave") {
+    // dust rules, rank scores, the edges and schedules they learn from grow
+    // with the crawl; reading them with their declared schemas keeps each
+    // wave's inference at the resume read of next/ alone, whatever its age
+    val pages = (0 until 100).map { i =>
+      (s"http://h${i % 3}.test/p/$i",
+        s"""<html><body><p>doc $i</p><a href="${i + 3}">n</a><a href="/p/${2 * i}">d</a></body></html>""")
+    }.toDF("url", "html")
+    val seeds = Seq(("http://h0.test/p/0", 0L), ("http://h1.test/p/1", 1L),
+      ("http://h2.test/p/2", 2L)).toDF("url", "seed_idx")
+    val root = java.nio.file.Files.createTempDirectory("waveinfer").toString
+    val inference = (0 until 5).map { w =>
+      SparkTestSession.jobsDuring(WaveLoop.run(spark, root, seeds,
+        graft.frontier.Discover.fromPages(pages), maxWaves = w + 1, pages = Some(pages),
+        edgesOf = Some(graft.frontier.Discover.edgesFromPages(pages)), rankEvery = 1,
+        dustEvery = 1))._2.filter(_.schemaInference)
+    }
+    assert(WaveLoop.committedWaves(root) == (0 until 5))
+    assert(inference.map(_.size) == Seq(0, 1, 1, 1, 1),
+      inference.map(_.flatMap(_.stageNames)).toString)
+  }
+
+  test("dust rules relearned in a wave with a robots gate: its denied rows still land") {
+    // the metrics write reads the wave's dust-stripped frontier for its
+    // denied rows; relearning the rules before that write deleted the
+    // files it read
+    val pages = Seq(("http://a.test/x?page=1&sid=1", "<p>x</p>"), ("http://a.test/x?page=1", "<p>x</p>"))
+      .toDF("url", "html")
+    val seeds = Seq(("http://a.test/x?page=1&sid=1", 0L), ("http://a.test/x?page=1", 1L),
+      ("http://a.test/private/1", 2L)).toDF("url", "seed_idx")
+    val rules = Robots.parseAll(Map("a.test" -> "User-agent: *\nDisallow: /private\n"))
+    def disc(sched: org.apache.spark.sql.DataFrame) = sched.limit(1)
+      .select(lit("http://a.test/private/2?sid=3").as("url"), lit(100L).as("seed_idx"))
+    val root = java.nio.file.Files.createTempDirectory("wavedustrobots").toString
+    WaveLoop.run(spark, root, seeds, disc, maxWaves = 3, pages = Some(pages),
+      fullRules = Some(rules), dustEvery = 1, dustMinSupport = 1L)
+    // wave 1 schedules nothing (its one url is denied), so wave 2 finds an
+    // empty frontier and the crawl stops
+    assert(WaveLoop.committedWaves(root) == Seq(0, 1))
+    for (w <- 0 to 1) {
+      val (manifest, recomputed) = WaveManifest.totals(spark, root, w)
+      assert(manifest("denied") == 1L && manifest == recomputed, s"wave $w: $manifest")
+    }
   }
 
   test("resume: crash between data write and manifest → identical final state") {

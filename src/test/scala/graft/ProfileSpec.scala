@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,18 +27,10 @@ class ProfileSpec extends AnyFunSuite {
   }
 
   test("profile: an unknown name fails before any job runs, naming it") {
-    val jobs = new AtomicInteger(0)
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Profile.run(spark, sf, Seq("q01_canonicalize", "q01_canonicalise"))
-      }
-      assert(e.getMessage.contains("q01_canonicalise"), e.getMessage)
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      assert(jobs.get == 0)
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (e, jobs) = SparkTestSession.jobsDuring(intercept[IllegalArgumentException] {
+      Profile.run(spark, sf, Seq("q01_canonicalize", "q01_canonicalise"))
+    })
+    assert(e.getMessage.contains("q01_canonicalise"), e.getMessage)
+    assert(jobs.isEmpty)
   }
 }

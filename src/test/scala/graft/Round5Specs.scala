@@ -28,12 +28,23 @@ class DecontaminateSpec extends AnyFunSuite {
   }
 
   test("texts shorter than n yield zero ngrams, zero ppm (no descending sequence)") {
-    val corpus = Seq((1L, "just two")).toDF("id", "text")
+    val corpus = Seq((1L, "just two"), (2L, null)).toDF("id", "text")
     val eval = Seq("just two").toDF("eval_text")
-    val r = Decontaminate.contamination(corpus, "id", "text", eval, "eval_text", n = 13)
-      .collect()(0)
-    assert(r.getAs[Long]("n_ngrams") == 0 && r.getAs[Long]("n_hit") == 0
-      && r.getAs[Long]("frac_ppm") == 0)
+    // the null text has no ngrams in either ANSI mode (size(NULL) is -1
+    // with ANSI off and NULL with it on)
+    val ansiKey = "spark.sql.ansi.enabled"
+    val ansiBefore = spark.conf.getOption(ansiKey)
+    try Seq("false", "true").foreach { ansi =>
+      spark.conf.set(ansiKey, ansi)
+      val got = Decontaminate.contamination(corpus, "id", "text", eval, "eval_text", n = 13)
+        .select("id", "n_ngrams", "n_hit", "frac_ppm").collect()
+        .map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      assert(got(1L) == Seq(0L, 0L, 0L), s"short doc (ansi=$ansi)")
+      assert(got(2L) == Seq(0L, 0L, 0L), s"null-text doc (ansi=$ansi)")
+    } finally ansiBefore match {
+      case Some(v) => spark.conf.set(ansiKey, v)
+      case None => spark.conf.unset(ansiKey)
+    }
   }
 
   test("doc-frequency cap drops boilerplate grams (the skew/precision gate)") {
@@ -768,6 +779,10 @@ class WaveUrlGateSpec extends AnyFunSuite {
       java.nio.file.Paths.get(WaveLoop.manifestPath(root, 1)))
     assert(manifest.contains("\"url_denied\":2"), manifest)
     assert(manifest.contains("\"missed\":0"), manifest) // denials are not misses
+    for (w <- 0 to 1) {
+      val (totals, recomputed) = WaveManifest.totals(spark, root, w)
+      assert(totals == recomputed, s"wave $w")
+    }
   }
 }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (suites share it; Spark
@@ -16,5 +18,38 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** One job a block started: the names of its stages (a stage is named
+    * after its call site, e.g. `parquet at WaveLoop.scala:188`) and whether
+    * it ran under a SQL execution.
+    */
+  final case class Job(stageNames: Seq[String], sql: Boolean) {
+    /** A Parquet read's footer scan: a plain RDD job outside any SQL
+      * execution (a Parquet WRITE is named `parquet at …` too, but runs
+      * under its query's execution).
+      */
+    def schemaInference: Boolean = !sql && stageNames.exists(_.startsWith("parquet at "))
+  }
+
+  /** Runs `f` and returns its value plus the jobs it started, in start
+    * order. The listener bus is drained on both sides, so jobs started
+    * before `f` are not counted.
+    */
+  def jobsDuring[A](f: => A): (A, Seq[Job]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Job(e.stageInfos.map(_.name),
+          Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null)))
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      ListenerBridge.drain(sc)
+      (out, jobs.toArray(Array.empty[Job]).toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }
