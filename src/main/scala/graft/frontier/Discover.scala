@@ -18,47 +18,51 @@ object Discover {
     *
     * seed_idx policy: `pmod(xxhash64(parent_url), 2^40 ∕ M) × M +
     * link_position` (M = next power of two ≥ maxLinksPerPage) — a
-    * deterministic priority, NOT an id: the scheduler only needs a stable
-    * total order per wave and the dedup keeps the min per URL. Hashing the
-    * parent (instead of compounding the parent's own seed_idx) keeps the
-    * key bounded FOREVER — a multiplicative parent_seed × K scheme
-    * overflows Long after ~5 waves and silently corrupts crawl order. The
-    * product stays < 2^40, the documented seed domain of
-    * [[Scheduler.priorityOrderKey]]: a wider seed would silently bleed its
-    * high bits into the packed PRIORITY field when the two compose (the
-    * intended frontier-prioritization use). BFS layering comes from the
-    * waves themselves; within a wave the order is (parent-hash,
-    * position-on-page), the usual arbitrary-but-deterministic frontier
-    * priority.
+    * deterministic priority, NOT an id: the scheduler needs a stable total
+    * order per wave and the dedup keeps the min per URL. Hashing the parent
+    * (a parent_seed × K scheme overflows Long after ~5 waves and silently
+    * corrupts crawl order) keeps the key below 2^40 forever, inside the
+    * seed domain of [[Scheduler.priorityOrderKey]] (a wider seed would
+    * bleed into its packed PRIORITY field). Within a wave the order is
+    * (parent-hash, position-on-page); BFS layering comes from the waves.
     *
-    * Scale shape: inner join on canonical_url (bucket-aligned when pages is
-    * a [[graft.sources.PageTable]]), html never survives past the explode,
-    * and the explode output is (2 longs + 1 string)/link.
+    * Scale shape: one bucket-pruned join on canonical_url, html never
+    * survives the projection that builds the link array, and the explode
+    * output is (2 longs + 1 string)/link.
     */
   def fromPages(pages: DataFrame, maxLinksPerPage: Int = 1024,
-      buckets: Int = 64, respectNofollow: Boolean = true): DataFrame => DataFrame = {
+      buckets: Int = 64, respectNofollow: Boolean = true): PageLinks =
+    PageLinks(pages, maxLinksPerPage, buckets, respectNofollow)
+
+  /** Link EDGES of a scheduled wave — the producer for [[WaveLoop.run]]'s
+    * authority channel (`edgesOf`): [[fromPages]]'s link rows as `(src,
+    * dst)` resolved-URL pairs. Always nofollow-gated: edges a page
+    * disallowed must not feed authority either.
+    */
+  def edgesFromPages(pages: DataFrame, maxLinksPerPage: Int = 1024,
+      buckets: Int = 64): PageLinks =
+    PageLinks(pages, maxLinksPerPage, buckets, asEdges = true)
+
+  /** A discovery function backed by a pages table ([[fromPages]],
+    * [[edgesFromPages]]): called on a wave it joins the pages itself; a
+    * [[WaveLoop.run]] over this very `pages` frame hands it the wave's one
+    * fetched frame instead ([[rows]]).
+    */
+  final case class PageLinks(pages: DataFrame, maxLinksPerPage: Int = 1024,
+      buckets: Int = 64, respectNofollow: Boolean = true, asEdges: Boolean = false)
+      extends (DataFrame => DataFrame) {
     require(maxLinksPerPage >= 1 && maxLinksPerPage <= 8192,
       s"maxLinksPerPage out of range: $maxLinksPerPage")
-    val m = Discover.nextPow2(maxLinksPerPage)
-    scheduled => {
-      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
-        .select(col("url").as("canonical_url"), col("html"))
-      scheduled.select("canonical_url", "seed_idx")
-        .join(p, Seq("canonical_url"))
-        // meta-robots nofollow: the page asked not to have its links
-        // followed — a polite crawler honors it at DISCOVERY time (one
-        // extra codegen'd scan per page, fused into the same projection)
-        .where(if (respectNofollow)
-          !graft.functions.page_directives(col("html").cast("string"))
-            .getField("nofollow")
-          else lit(true))
-        .select(col("canonical_url").as("base"),
-          posexplode(extract_links(col("html").cast("string"))).as(Seq("pos", "href")))
-        .where(col("pos") < maxLinksPerPage)
-        .select(resolve_url(col("base"), col("href")).as("url"),
-          (pmod(xxhash64(col("base")), lit((1L << 40) / m)) * m + col("pos"))
-            .as("seed_idx"))
-        .where(col("url").isNotNull)
+
+    def apply(scheduled: DataFrame): DataFrame =
+      rows(fetched(scheduled.select("canonical_url"), pages, "canonical_url", buckets,
+        parseStats = false)(h => Seq(gatedLinks(h, respectNofollow).as("links"))))
+
+    /** The rows from a [[fetched]] frame carrying this gate's `links`. */
+    private[frontier] def rows(fetchedLinks: DataFrame): DataFrame = {
+      val r = linkRows(fetchedLinks, maxLinksPerPage, nextPow2(maxLinksPerPage))
+      if (asEdges) r.select(col("base").as("src"), col("url").as("dst"))
+      else r.select("url", "seed_idx")
     }
   }
 
@@ -66,88 +70,54 @@ object Discover {
     * the right link extractor by what its BYTES are (the q94 sniffing
     * lesson: servers lie about content types, and feeding a plain-text
     * or binary payload to the HTML walker silently discovers nothing):
-    *
-    *  - `text/html` / `text/xml` → the `extract_links` walker, with the
-    *    meta-robots nofollow gate as in [[fromPages]];
-    *  - `text/plain` → `text_urls` naked-url extraction (forums, READMEs,
-    *    plain-text mirrors — absolute urls resolve to themselves through
-    *    the same RFC 3986 path);
-    *  - anything else (images, audio, archives, binary junk) → zero
-    *    links, zero parse cost beyond the ≤64-byte sniff.
-    *
-    * One sniff per payload (codegen'd), the two extractor branches share
-    * the bucket-pruned join, and the seed_idx contract is [[fromPages]]'s
-    * (text-channel positions offset by `maxLinksPerPage` so the two
-    * channels cannot collide inside a page's 2^40 block).
+    * `text/html` / `text/xml` → the nofollow-gated `extract_links` walker;
+    * `text/plain` → `text_urls` naked-url extraction (forums, READMEs,
+    * plain-text mirrors); anything else (images, audio, archives, binary
+    * junk) → zero links, zero parse cost beyond the ≤64-byte sniff. One
+    * sniff per payload picks one link array per page, exploded once; the
+    * seed_idx contract is [[fromPages]]'s, text-channel positions offset
+    * by `maxLinksPerPage` so the channels cannot collide in a page's block.
     */
   def fromPagesSniffed(pages: DataFrame, maxLinksPerPage: Int = 1024,
       buckets: Int = 64, respectNofollow: Boolean = true): DataFrame => DataFrame = {
     require(maxLinksPerPage >= 1 && maxLinksPerPage <= 4096,
       s"maxLinksPerPage out of range: $maxLinksPerPage")
     val m = Discover.nextPow2(maxLinksPerPage) * 2 // two channels per block
-    scheduled => {
-      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
-        .select(col("url").as("canonical_url"), col("html"))
-      val routed = scheduled.select("canonical_url", "seed_idx")
-        .join(p, Seq("canonical_url"))
-        .withColumn("_mime",
-          graft.functions.sniff_mime(col("html").cast("binary")))
-        .localCheckpoint(true) // read by both channel branches
-      val htmlLinks = routed
-        .where(col("_mime").isin("text/html", "text/xml"))
-        .where(if (respectNofollow)
-          !graft.functions.page_directives(col("html").cast("string"))
-            .getField("nofollow")
-          else lit(true))
-        .select(col("canonical_url").as("base"),
-          posexplode(extract_links(col("html").cast("string")))
-            .as(Seq("pos", "href")))
-      val textLinks = routed
-        .where(col("_mime") === "text/plain")
-        .select(col("canonical_url").as("base"),
-          posexplode(graft.functions.text_urls(col("html").cast("string")))
-            .as(Seq("pos0", "href")))
-        .select(col("base"), (col("pos0") + maxLinksPerPage).as("pos"),
-          col("href"))
-      htmlLinks.where(col("pos") < maxLinksPerPage)
-        .unionByName(textLinks.where(col("pos") < 2 * maxLinksPerPage))
-        .select(resolve_url(col("base"), col("href")).as("url"),
-          (pmod(xxhash64(col("base")), lit((1L << 40) / m)) * m + col("pos"))
-            .as("seed_idx"))
-        .where(col("url").isNotNull)
-    }
+    scheduled => linkRows(fetched(scheduled.select("canonical_url"), pages, "canonical_url",
+        buckets, parseStats = false) { h =>
+      val mime = graft.functions.sniff_mime(h.cast("binary"))
+      Seq(when(mime.isin("text/html", "text/xml"), gatedLinks(h, respectNofollow))
+          .when(mime === "text/plain", graft.functions.text_urls(h)).otherwise(NoLinks).as("links"),
+        when(mime === "text/plain", maxLinksPerPage).otherwise(0).as("offset"))
+    }, maxLinksPerPage, m, Some("offset")).select("url", "seed_idx")
   }
 
-  /** Link EDGES of a scheduled wave — the producer for
-    * [[WaveLoop.run]]'s authority channel (`edgesOf`): same
-    * bucket-pruned pages join and href explode as [[fromPages]], emitting
-    * `(src, dst)` resolved-URL pairs instead of frontier rows. A
-    * production loop that runs BOTH channels pays the extract twice; the
-    * single-pass fusion (stage one explode, derive both) is a
-    * straightforward specialization when that matters — the channels are
-    * kept separate here because discovery runs every wave while edges
-    * only need to be fresh per rank refresh.
+  private val NoLinks = typedLit(Seq.empty[String])
+
+  /** The page's links; empty when `respectNofollow` and its meta robots say
+    * nofollow (a polite crawler honors that at discovery time).
     */
-  def edgesFromPages(pages: DataFrame, maxLinksPerPage: Int = 1024,
-      buckets: Int = 64): DataFrame => DataFrame = {
-    require(maxLinksPerPage >= 1 && maxLinksPerPage <= 8192,
-      s"maxLinksPerPage out of range: $maxLinksPerPage")
-    scheduled => {
-      val p = PageTable.pruneTo(pages, scheduled, "canonical_url", buckets)
-        .select(col("url").as("canonical_url"), col("html"))
-      scheduled.select("canonical_url")
-        .join(p, Seq("canonical_url"))
-        // same nofollow contract as fromPages — edges a page disallowed
-        // must not feed authority either
-        .where(!graft.functions.page_directives(col("html").cast("string"))
-          .getField("nofollow"))
-        .select(col("canonical_url").as("src"),
-          posexplode(extract_links(col("html").cast("string"))).as(Seq("pos", "href")))
-        .where(col("pos") < maxLinksPerPage)
-        .select(col("src"), resolve_url(col("src"), col("href")).as("dst"))
-        .where(col("dst").isNotNull)
-    }
-  }
+  private[frontier] def gatedLinks(html: Column, respectNofollow: Boolean): Column =
+    if (respectNofollow)
+      when(graft.functions.page_directives(html).getField("nofollow"), NoLinks)
+        .otherwise(extract_links(html))
+    else extract_links(html)
+
+  /** The link-row builder: (canonical_url, links) → one (base, url,
+    * seed_idx) row per link among the first `maxLinksPerPage`, resolved
+    * against the page url (unresolvable hrefs drop), seed_idx packed at
+    * stride `m`; an `offset` column shifts its page's positions after the cap.
+    */
+  private def linkRows(fetchedLinks: DataFrame, maxLinksPerPage: Int, m: Long,
+      offset: Option[String] = None): DataFrame =
+    fetchedLinks
+      .select((col("canonical_url").as("base") +: offset.map(col).toSeq) :+
+        posexplode(col("links")).as(Seq("pos", "href")): _*)
+      .where(col("pos") < maxLinksPerPage)
+      .select(col("base"), resolve_url(col("base"), col("href")).as("url"),
+        (pmod(xxhash64(col("base")), lit((1L << 40) / m)) * m +
+          offset.fold(col("pos"))(col("pos") + col(_))).as("seed_idx"))
+      .where(col("url").isNotNull)
 
   /** Smallest power of two ≥ n (n ≥ 1) — the position stride in the
     * seed_idx packing, power-of-two so `seed_idx mod stride` is exactly the
@@ -202,13 +172,10 @@ object Discover {
     * @param robots   parsed rules; denied rows FLOW THROUGH with status 451
     *                 (metrics must account for every frontier row — a gate
     *                 that silently drops rows makes wave totals unauditable)
-    * @param parseStats when false, skip the extract+chunk pass entirely:
-    *                 status degrades to {200, 404, 451} (no 422 — nothing
-    *                 parsed) and the parse columns are NULL. At 100 TB the
-    *                 extractor dominates per-row cost and the DOWNSTREAM
-    *                 text pipeline extracts anyway — a metrics pass that
-    *                 re-extracts doubles the bill, so the loop can turn it
-    *                 off and let parse stats come from the consumer.
+    * @param parseStats when false, skip the extract+chunk pass: status is
+    *                 one of {200, 404, 451} and the parse columns are NULL.
+    *                 At 100 TB the downstream text pipeline extracts anyway,
+    *                 and a second extract would double the per-row bill.
     * @return frontier columns + (status INT 200|404|422|451,
     *         n_chars BIGINT, n_chunks BIGINT; parse columns NULL unless 200)
     */
@@ -217,41 +184,50 @@ object Discover {
       overlap: Int = graft.text.Chunker.OverlapWords,
       urlCol: String = "url", buckets: Int = 64,
       robots: Robots.FullRules = Robots.FullAllowAll,
-      parseStats: Boolean = true): DataFrame = {
-    val p = PageTable.pruneTo(pages, frontier, urlCol, buckets)
-      .select(col("url").as("__page_url"), col("html").as("__html"))
+      parseStats: Boolean = true): DataFrame =
+    fetched(frontier, pages, urlCol, buckets, robots, parseStats, maxWords, overlap)()
+
+  /** The fetch builder: frontier ⋈ bucket-pruned pages (one
+    * [[PageTable.pruneTo]], one left join; a miss is a NULL page), projected
+    * once to the frontier columns, the [[fetchParse]] columns and `extra`
+    * columns over the page cast to string once (NULL on a miss or a robots
+    * denial: denied rows parse nothing). Every reader of a page selects
+    * from it; [[WaveLoop.run]] builds it once per wave.
+    */
+  private[frontier] def fetched(frontier: DataFrame, pages: DataFrame, urlCol: String,
+      buckets: Int = 64, robots: Robots.FullRules = Robots.FullAllowAll,
+      parseStats: Boolean = true,
+      maxWords: Int = graft.text.Chunker.MaxWords,
+      overlap: Int = graft.text.Chunker.OverlapWords)(
+      extra: Column => Seq[Column] = _ => Nil): DataFrame = {
     val denied =
       if (robots.byHost.isEmpty && (robots.default eq Robots.HostRules.AllowAll)) lit(false)
       else !Robots.allowedColFull(frontier.sparkSession, robots,
         graft.functions.host_of(frontier(urlCol)),
         graft.functions.url_path(frontier(urlCol)))
+    val p = PageTable.pruneTo(pages, frontier, urlCol, buckets)
+      .select(col("url").as("__page_url"), col("html").as("__page"))
     val joined = frontier.join(p, frontier(urlCol) === p("__page_url"), "left")
+      .withColumn("__html", col("__page").cast("string"))
+    // the gate would have skipped the fetch; at scale the extractor is the
+    // dominant per-row cost
+    val html = when(denied, lit(null)).otherwise(col("__html"))
+    val status = when(denied, StatusRobotsDenied).when(col("__html").isNull, StatusMiss)
     val statused =
       if (!parseStats)
-        joined
-          .withColumn("status",
-            when(denied, StatusRobotsDenied)
-              .when(col("__html").isNull, StatusMiss)
-              .otherwise(StatusOk).cast("int"))
+        joined.withColumn("status", status.otherwise(StatusOk).cast("int"))
           .withColumn("n_chars", lit(null).cast("long"))
           .withColumn("n_chunks", lit(null).cast("long"))
-      else
-        joined
-          // denied rows skip the parse entirely (the gate would have skipped
-          // the fetch; at scale the extractor is the dominant per-row cost)
-          .withColumn("__extracted",
-            when(denied, lit(null)).otherwise(extract_readable(col("__html").cast("string"))))
-          .withColumn("status",
-            when(denied, StatusRobotsDenied)
-              .when(col("__html").isNull, StatusMiss)
-              .when(length(col("__extracted")) === 0, StatusParseError)
-              .otherwise(StatusOk).cast("int"))
-          .withColumn("n_chars",
-            when(col("status") === StatusOk, length(col("__extracted"))).cast("long"))
-          .withColumn("n_chunks",
-            when(col("status") === StatusOk,
-              size(chunk_text(col("__extracted"), maxWords, overlap))).cast("long"))
-          .drop("__extracted")
-    statused.drop("__page_url", "__html")
+      else {
+        val extracted = col("__extracted")
+        val ok = col("status") === StatusOk
+        joined.withColumn("__extracted", extract_readable(html))
+          .withColumn("status", status.when(length(extracted) === 0, StatusParseError)
+            .otherwise(StatusOk).cast("int"))
+          .withColumn("n_chars", when(ok, length(extracted)).cast("long"))
+          .withColumn("n_chunks", when(ok, size(chunk_text(extracted, maxWords, overlap))).cast("long"))
+      }
+    statused.select(frontier.columns.map(col) ++
+      Seq(col("status"), col("n_chars"), col("n_chunks")) ++ extra(html): _*)
   }
 }

@@ -9,8 +9,9 @@ import graft.core.Fs
   * lineage (north rule: "checkpoint-resumable frontier state with
   * per-partition lineage and fetch/parse metrics").
   *
-  * A steady wave runs about 28 Spark jobs (10k-URL PageTable waves with
-  * robots rules). State crosses waves ONLY via storage (a 10^10-frontier
+  * A steady wave runs about 23 Spark jobs (22.7 measured on 10k-URL
+  * PageTable waves with robots rules, 4 cores), one pages join among them.
+  * State crosses waves ONLY via storage (a 10^10-frontier
   * cannot live in driver memory). Every table the loop reads back is
   * written through and read with one declared schema (`next/` with the
   * schema of the frame just written), so no read pays a Parquet
@@ -62,6 +63,7 @@ object WaveLoop {
   private val RankSchema = StructType.fromDDL("node BIGINT, score DOUBLE")
   private val DustSchema = StructType.fromDDL("host STRING, param STRING, support BIGINT")
   private val FocusSchema = StructType.fromDDL("url_hash BIGINT, focus_fp BIGINT")
+  private val CardsSchema = StructType.fromDDL("host_rev STRING, sketch BINARY")
 
   private def conform(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
@@ -82,7 +84,11 @@ object WaveLoop {
     *                    next-wave frontier (url, seed_idx). Production:
     *                    [[Discover.fromPages]] (href extraction + RFC 3986
     *                    resolution against the pages table); tests may
-    *                    inject a synthetic link function.
+    *                    inject a synthetic link function. When it or
+    *                    `edgesOf` is a [[Discover.PageLinks]] over this very
+    *                    `pages` frame, next/, edges/ and metrics/ come from
+    *                    one fetched frame (one pages join per wave); any
+    *                    other function is called on the committed schedule.
     * @param gapSeconds  politeness budget (reference: 3 s sleep)
     * @param pages       when present, per-URL fetch/parse metrics
     *                    ([[Discover.fetchParse]]: status 200/404, parse char
@@ -137,8 +143,8 @@ object WaveLoop {
    * breaks ties. Scores cross waves only via storage (`rank/scores`),
    * like every other piece of loop state; a half-written score table (no
    * `_SUCCESS`) degrades to plain discovery order, never to a broken
-   * wave. Production pairs this with a link extractor sharing
-   * [[Discover.fromPages]]'s join; tests inject synthetic edges.
+   * wave. Production passes [[Discover.edgesFromPages]], which reads the
+   * wave's fetched frame; tests inject synthetic edges.
    *
    * Domain-budget channel (`maxPerDomain`): each wave keeps only the
    * first `maxPerDomain` DISCOVERY urls per registrable domain (salted
@@ -430,7 +436,24 @@ object WaveLoop {
       // every later step of the wave reads the COMMITTED schedule
       val sched = readSchedule(spark, root, wave)
 
-      val next0 = discover(sched)
+      // the page side of the wave, built once: schedule ⋈ pages with status,
+      // parse counts and, for PageLinks over this very `pages` (at the
+      // metrics' bucket count), their gated link array; cached until commit
+      def shares(p: Discover.PageLinks) = pages.exists(_ eq p.pages) && p.buckets == 64
+      val linkGate = (discover +: edgesOf.toSeq).collectFirst {
+        case p: Discover.PageLinks if shares(p) => p.respectNofollow
+      }
+      val fetched = pages.map(pg => Discover.fetched(
+        sched.select("url", "canonical_url", "url_hash", "seed_idx"), pg, "canonical_url",
+        parseStats = metricsParseStats)(h => linkGate.map(Discover.gatedLinks(h, _).as("links")).toSeq))
+      val held = fetched.filter(_ => linkGate.nonEmpty).map(_.persist())
+      def fromFetched(f: DataFrame => DataFrame): DataFrame = (f, fetched) match {
+        case (p: Discover.PageLinks, Some(fr)) if shares(p) && linkGate.contains(p.respectNofollow) =>
+          p.rows(fr)
+        case _ => f(sched)
+      }
+
+      val next0 = fromFetched(discover)
       // deferred over-budget urls ride into the next wave's frontier
       val next = deferredRows match {
         case Some(d) => next0.select(col("url"), col("seed_idx"))
@@ -446,8 +469,8 @@ object WaveLoop {
       // [[hostCardinalities]] rolls ANY subset of waves up to exact-union
       // estimates without ever re-reading urls. Overwrite → idempotent.
       if (hostCards) {
-        sched.groupBy("host_rev")
-          .agg(graft.functions.hll_agg(col("url_hash"), hostCardsP).as("sketch"))
+        conform(sched.groupBy("host_rev")
+          .agg(graft.functions.hll_agg(col("url_hash"), hostCardsP).as("sketch")), CardsSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/cards/wave=$wave")
       }
 
@@ -457,7 +480,7 @@ object WaveLoop {
       // idempotent on crash-resume of an uncommitted wave; the scores table
       // is only trusted once its _SUCCESS exists.
       edgesOf.foreach { ef =>
-        conform(ef(sched).select(
+        conform(fromFetched(ef).select(
             xxhash64(graft.functions.canonicalize_url(col("src"))).as("src"),
             xxhash64(graft.functions.canonicalize_url(col("dst"))).as("dst")), EdgesSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/edges/wave=$wave")
@@ -476,25 +499,21 @@ object WaveLoop {
       // big banks take the two-pass path — see Ledger.appendWithBlooms)
       seen.appendWithBlooms(sched.select("url_hash", "canonical_url"), wave)
 
-      // per-partition lineage from the COMMITTED files; its row counts sum
-      // to the wave's scheduled total
-      val lineage = sched.groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows"), countDistinct(col("host_rev")).as("hosts"))
-        .orderBy(col("partition_id"))
-        .collect()
-      val nScheduled = lineage.map(_.getLong(1)).sum
+      // per-partition lineage from the COMMITTED files, one pass over each
+      // partition (no shuffle); its row counts sum to the scheduled total
+      val lineage = sched.select("host_rev").rdd.mapPartitionsWithIndex { (pid, it) =>
+        val hosts = scala.collection.mutable.HashSet.empty[String]
+        var rows = 0L
+        it.foreach { r => rows += 1; if (!r.isNullAt(0)) hosts += r.getString(0) }
+        if (rows == 0) Iterator.empty else Iterator((pid, rows, hosts.size.toLong))
+      }.collect().sortBy(_._1)
+      val nScheduled = lineage.map(_._2).sum
       val byPartition = lineage
-        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)},"hosts":${r.getLong(2)}}""")
+        .map { case (p, rows, hosts) => s"""{"partition":$p,"rows":$rows,"hosts":$hosts}""" }
         .mkString("[", ",", "]")
       // per-URL fetch/parse metrics (north rule) — written next to the wave;
       // the manifest's totals are observed on that write
-      val fetchStats = pages.map { pg =>
-        // parseStats=false is the 100 TB setting: the downstream text
-        // pipeline extracts anyway, so the metrics pass should not pay a
-        // SECOND full extract+chunk of every fetched page just for counts
-        val fetched = Discover.fetchParse(
-          sched.select("url", "canonical_url", "url_hash", "seed_idx"), pg,
-          urlCol = "canonical_url", parseStats = metricsParseStats)
+      val fetchStats = fetched.map { f =>
         // robots-denied (451) and URL-policy-denied (452) rows join the
         // metrics table with null parse columns — every frontier row is
         // accounted for, nothing vanishes at a gate
@@ -502,7 +521,7 @@ object WaveLoop {
           .withColumn("n_chars", lit(null)).withColumn("n_chunks", lit(null)), MetricsSchema)
         val metrics = (deniedRows.map(deniedAs(Discover.StatusRobotsDenied)) ++
           urlDeniedRows.map(deniedAs(Discover.StatusUrlPolicyDenied)))
-          .foldLeft(conform(fetched, MetricsSchema))(_.unionByName(_))
+          .foldLeft(conform(f, MetricsSchema))(_.unionByName(_))
         val status = col("status")
         def rows(p: Column) = sum(when(p, 1L).otherwise(0L))
         val obs = Observation()
@@ -560,6 +579,7 @@ object WaveLoop {
         s"""{"wave":$wave,"scheduled":$nScheduled,"gap_seconds":$gapSeconds$fetchStats,
            |"lineage":$byPartition}""".stripMargin.replace("\n", "")
       Fs.writeString(manifestPath(root, wave), manifest)
+      held.foreach(_.unpersist(blocking = true))
 
       results += WaveResult(wave, nScheduled, nScheduled)
       seen.maybeCompact(wave)
@@ -582,7 +602,7 @@ object WaveLoop {
     val waves = committedWaves(root)
       .map(w => s"$root/cards/wave=$w").filter(Fs.exists)
     require(waves.nonEmpty, s"no cards/ tables under $root (hostCards off?)")
-    waves.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    waves.map(spark.read.schema(CardsSchema).parquet(_)).reduce(_.unionByName(_))
       .groupBy("host_rev")
       .agg(graft.functions.hll_merge_agg(col("sketch")).as("sketch"))
       .withColumn("est_urls", graft.functions.hll_card_corrected(col("sketch")))

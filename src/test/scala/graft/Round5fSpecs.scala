@@ -225,6 +225,10 @@ class HostCardsSpec extends AnyFunSuite {
     }
     WaveLoop.run(spark, root, seeds, discover, maxWaves = 3,
       metricsParseStats = false, hostCards = true)
+    // the sketches are read back with their declared schema: no Parquet
+    // schema-inference job, however many waves are committed
+    val cardJobs = SparkTestSession.jobsDuring(WaveLoop.hostCardinalities(spark, root))._2
+    assert(cardJobs.count(_.schemaInference) == 0, cardJobs.flatMap(_.stageNames).toString)
     val exact = WaveLoop.crawlOrder(spark, root)
       .groupBy("host_rev").agg(countDistinct("url_hash").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -503,35 +507,6 @@ class DomainBudgetLoopSpec extends AnyFunSuite {
       .where(col("canonical_url").contains("farm"))
       .select("seed_idx").as[Long].collect().toSet
     assert(w0farm == (0L until 10L).toSet)
-  }
-}
-
-class SniffedDiscoverySpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("mime routing: html walks links, text extracts naked urls, binary is inert") {
-    val pngish = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A, 1, 2)
-    val pages = Seq(
-      ("http://m.test/html",
-        "<html><body><a href=\"/child\">c</a></body></html>".getBytes("UTF-8")),
-      ("http://m.test/txt",
-        "see https://cited.test/doc. and nothing else".getBytes("UTF-8")),
-      ("http://m.test/img", pngish),
-      // server lied: served as a "page" but the bytes are plain text —
-      // the html walker would find nothing; the router must
-      ("http://m.test/liar",
-        "mirror list: http://mirror.test/a http://mirror.test/b".getBytes("UTF-8")))
-      .toDF("url", "html")
-    val sched = pages.select(col("url").as("canonical_url"))
-      .withColumn("seed_idx", lit(1L))
-    val got = graft.frontier.Discover.fromPagesSniffed(pages)(sched)
-      .select("url").as[String].collect().toSet
-    assert(got == Set(
-      "http://m.test/child",
-      "https://cited.test/doc",
-      "http://mirror.test/a",
-      "http://mirror.test/b"))
   }
 }
 

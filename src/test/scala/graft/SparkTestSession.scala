@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (suites share it; Spark
@@ -21,10 +22,16 @@ object SparkTestSession {
   }
 
   /** One job a block started: the names of its stages (a stage is named
-    * after its call site, e.g. `parquet at WaveLoop.scala:188`) and whether
-    * it ran under a SQL execution.
+    * after its call site, e.g. `parquet at WaveLoop.scala:188`), and the
+    * call site of the SQL execution it ran under, if any. Under AQE a SQL
+    * job's stages are named after the adaptive executor's thread, so the
+    * execution's call site (e.g. `collect at PageTable.scala:242`) is the
+    * one that names the program line.
     */
-  final case class Job(stageNames: Seq[String], sql: Boolean) {
+  final case class Job(stageNames: Seq[String], execution: Option[Long],
+      sqlCallSite: Option[String]) {
+    def sql: Boolean = execution.nonEmpty
+
     /** A Parquet read's footer scan: a plain RDD job outside any SQL
       * execution (a Parquet WRITE is named `parquet at …` too, but runs
       * under its query's execution).
@@ -39,10 +46,17 @@ object SparkTestSession {
   def jobsDuring[A](f: => A): (A, Seq[Job]) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val sites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Job(e.stageInfos.map(_.name),
-          Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sites.put(s.executionId, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val execution = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+        jobs.add(Job(e.stageInfos.map(_.name), execution, execution.flatMap(id => Option(sites.get(id)))))
+      }
     }
     ListenerBridge.drain(sc)
     sc.addSparkListener(listener)
