@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 
 /** Connected components over a near-duplicate pair list — the step that
   * turns pairwise dedup output ((id_a, id_b) from minhash/simhash/cosine/
@@ -17,11 +18,12 @@ import org.apache.spark.sql.functions._
   * rounds but ~20 star rounds).
   *
   * Scale shape: every round moves only (u: LONG, v: LONG) pairs — 16
-  * bytes/row; the per-round frames are `localCheckpoint`ed so the plan
-  * does not grow with iteration count (lineage-truncation, the standard
-  * iterative-DataFrame pattern); convergence is detected from a
-  * count+hash signature (one tiny aggregate per round, no driver-side
-  * edge materialization).
+  * bytes/row — under the round rules of [[graft.core.Rounds]]: each
+  * round's edge frame is checkpointed so the plan does not grow with
+  * iteration count, the superseded one is released, and shuffles are
+  * right-sized to the input edge count; convergence is detected from a
+  * count+hash signature observed on each round's checkpoint (no extra
+  * job, no driver-side edge materialization).
   */
 object Components {
 
@@ -45,39 +47,17 @@ object Components {
     */
   def connectedComponentsWithRounds(pairs: DataFrame, idACol: String = "id_a",
       idBCol: String = "id_b", maxIters: Int = 25): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
     // materialize the input edge list ONCE: the first round's star passes
     // and the signature each re-evaluate their input 2-3×, and `pairs` is
     // typically an expensive upstream (LSH candidate generation + verify) —
     // without this the upstream runs 3-4× per call (measured 21 s → ~6 s on
     // the bench's minhash-pairs input).
-    //
-    // The fixed-point signature (count, hash-sum) and the initial edge
-    // count RIDE THE CHECKPOINT ACTION as observe() aggregates — the
-    // round-5 layout ran a separate signature job per round plus an initial
-    // count job, and on an iterative workload whose per-round data is tiny
-    // those driver round-trips were ~40% of the operator's wall time
-    // (bench semdedup/cluster_dedup). One eager action per round total.
-    val (e0, obs0) = observed(pairs
+    // The signature and edge count ride each checkpoint (observe()): a
+    // separate job per round was ~40% of the operator's wall time.
+    var (e, sig) = observed(pairs
       .select(col(idACol).cast("long").as("u"), col(idBCol).cast("long").as("v"))
       .where(col("u") =!= col("v")))
-    var e = e0
-    // Right-size the round shuffles to the edge count: each round is ~6
-    // tiny shuffle stages, and at the session's full shuffle width their
-    // per-task fixed costs dominate an iterative workload whose data
-    // shrinks every round (measured 17.3 s → 3.4 s on a 34k-edge input by
-    // narrowing 128 → 1). This is exactly what AQE partition coalescing
-    // does; explicit here because sessions tuned for wide CPU-bound scans
-    // often disable coalescing globally. HERMETIC form: the width is
-    // applied with explicit key-repartitions inside the star rounds (which
-    // EnsureRequirements then reuses for the groupBy/join exchanges) — a
-    // session-conf mutation here would silently narrow any query planned
-    // concurrently in the same session.
-    val sessionWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(32)
-    var sig = obs0
-    val nEdges = sig._1
-    val width = math.max(1L, math.min(sessionWidth.toLong, nEdges / 250000L + 1L)).toInt
+    val width = Rounds.width(pairs.sparkSession, sig.head)
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
@@ -90,6 +70,7 @@ object Components {
       val (next, nextSig) = observed(smallStar(largeStar(e, width), width))
       converged = nextSig == sig
       sig = nextSig
+      Rounds.release(e)
       e = next
       it += 1
     }
@@ -148,21 +129,13 @@ object Components {
       .distinct()
   }
 
-  /** Eagerly materialize an edge frame (lineage truncation) with its
-    * order-independent fixed-point signature — (row count, sum of row
-    * hashes) — computed as observe() aggregates INSIDE the checkpoint's own
-    * materialization pass: zero extra jobs, identical values to a separate
-    * aggregate. Collision would stop iteration one round early — at 64-bit
-    * sums over committed edge sets the risk is negligible and the result
-    * is still validated by the caller's own checks/oracles.
+  /** Eagerly materialize an edge frame with its order-independent
+    * fixed-point signature — (row count, sum of row hashes) — observed on
+    * the checkpoint's own pass ([[Rounds.materialize]]). Collision would
+    * stop iteration one round early — at 64-bit sums over committed edge
+    * sets the risk is negligible and the result is still validated by the
+    * caller's own checks/oracles.
     */
-  private def observed(e: DataFrame): (DataFrame, (Long, Long)) = {
-    val obs = org.apache.spark.sql.Observation()
-    val out = e.observe(obs,
-        count(lit(1)).as("n"),
-        coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L))), lit(0L)).as("h"))
-      .localCheckpoint(true)
-    val m = obs.get
-    (out, (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long]))
-  }
+  private def observed(e: DataFrame): (DataFrame, Seq[Long]) =
+    Rounds.materialize(e, sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L))))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.{bloom_agg, bloom_merge_agg}
-import graft.core.Fs
+import graft.core.{Fs, Rounds}
 
 /** Persistent seen-set ledger, the 10^10-scale layout the north rule names:
   * a BUCKETED catalog table of (url_hash, canonical_url, wave) plus an
@@ -334,11 +334,12 @@ final class Ledger(
       .localCheckpoint(true)
     // empty batch (second unsee of the same keys, or keys never seen):
     // writing a 0-row tombstone file would flip committedFrame onto the
-    // subtraction path for nothing — bail before any state changes
-    if (dead.isEmpty) return
-    dead.select(col("url_hash"), lit(wave).cast("int").as("t_wave"))
-      .coalesce(1) // maintenance-sized batch; one tombstone file per unsee
-      .write.mode(SaveMode.Append).parquet(tombstoneDir)
+    // subtraction path for nothing — skip the write, change no state
+    if (!dead.isEmpty)
+      dead.select(col("url_hash"), lit(wave).cast("int").as("t_wave"))
+        .coalesce(1) // maintenance-sized batch; one tombstone file per unsee
+        .write.mode(SaveMode.Append).parquet(tombstoneDir)
+    Rounds.release(dead)
   }
 
   /** Exact unseen filter against the committed ledger: bloom-bank pre-filter
@@ -435,6 +436,7 @@ final class Ledger(
         .where(col("t_wave") > upToWave).localCheckpoint(true)
       if (rest.isEmpty) Fs.deleteTree(tombstoneDir)
       else rest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tombstoneDir)
+      Rounds.release(rest)
     }
   }
 

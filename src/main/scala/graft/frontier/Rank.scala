@@ -1,24 +1,23 @@
 package graft.frontier
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 
 /** PageRank over the discovered link graph — the iterative authority score
   * behind frontier prioritization (the one-step
   * [[Scheduler.inDegreePriority]] is its first approximation; the scores
   * here feed [[Scheduler.priorityOrderKey]] the same way).
   *
-  * Scale shape, learned from [[graft.dedup.Components]]:
+  * Scale shape: the round rules of [[graft.core.Rounds]] (per-round
+  * checkpoint with observed counts, right-sized hermetic shuffles,
+  * superseded rounds released), plus:
   *
-  *  - the edge list (+ per-source out-degree) is staged ONCE with
-  *    `localCheckpoint` — it is read every iteration, and its upstream is
-  *    typically the expensive link-extraction pipeline;
+  *  - the edge list (+ per-source out-degree) is staged ONCE — it is read
+  *    every iteration, and its upstream is typically the expensive
+  *    link-extraction pipeline;
   *  - every iteration is one join + one map-side-combinable sum keyed by
-  *    dst — rows on the wire are (node: LONG, score: DOUBLE) = 16 bytes;
-  *  - the score frame is checkpointed per round so the plan does not grow
-  *    with the iteration count (lineage truncation);
-  *  - per-round shuffles are right-sized to the edge count with explicit
-  *    key-repartitions (hermetic — no session-conf mutation).
+  *    dst — rows on the wire are (node: LONG, score: DOUBLE) = 16 bytes.
   *
   * Semantics: `score ← (1 − d) + d × Σ_{u→v} score(u) ∕ outdeg(u)` from a
   * uniform 1.0 start — the classic unnormalized formulation (sums to ~|V|,
@@ -28,16 +27,47 @@ import org.apache.spark.sql.functions._
   */
 object Rank {
 
-  /** Eagerly materialize a frame with its row COUNT observed inside the
-    * checkpoint's own pass (the [[graft.dedup.Components]] discipline):
-    * iterative operators need the count for shuffle right-sizing or loop
-    * control, and a separate `.count()` action per call was pure driver
-    * round-trip overhead on per-round frames that are typically tiny.
+  /** The node ids of a staged edge list, one row each, keyed by `node`. */
+  private def nodeIds(e: DataFrame, width: Int): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .repartition(width, col("node"))
+      .distinct()
+
+  /** The one power iteration behind [[pageRank]] and [[trustRank]]:
+    * `score ← (1 − d)·base(v) + d × Σ_{u→v} score(u)·w(u,v) ∕ W(u)`,
+    * `W(u) = Σ_v w(u,v)`, from `score = base`. `edges` is (src, dst) plus
+    * what `w` reads; `withBase` adds what `base` reads to the node ids.
+    * Literal 1.0 for base (PageRank) or w (TrustRank) stages no column and
+    * keeps every double exact: (1 − d)·1.0 = 1 − d, score·1.0 = score, and
+    * 1.0 weights sum to the exact out-degree below 2^53.
     */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (out, obs.get("n").asInstanceOf[Long])
+  private def powerIteration(edges: DataFrame, w: Column, base: Column,
+      iters: Int, damping: Double)(withBase: DataFrame => DataFrame): DataFrame = {
+    require(iters >= 1, s"iters: $iters")
+    require(damping > 0.0 && damping < 1.0, s"damping: $damping")
+    val (e, Seq(nEdges)) = Rounds.materialize(edges)
+    val width = Rounds.width(edges.sparkSession, nEdges)
+    val deg = e.repartition(width, col("src"))
+      .groupBy("src").agg(sum(w).as("outw"))
+    val withDeg = e.join(deg, "src").localCheckpoint(true) // read every round
+    val nodes = withBase(nodeIds(e, width)).localCheckpoint(true)
+    var scores = nodes.select(col("node"), base.as("score"))
+    for (_ <- 1 to iters) {
+      val contrib = withDeg
+        .join(scores.select(col("node").as("src"), col("score")), "src")
+        .select(col("dst").as("node"), (col("score") * w / col("outw")).as("c"))
+        .repartition(width, col("node"))
+        .groupBy("node").agg(sum(col("c")).as("c"))
+      val next = nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"), (lit(1.0d - damping) * base
+          + lit(damping) * coalesce(col("c"), lit(0.0d))).as("score"))
+        .localCheckpoint(true)
+      Rounds.release(scores, keep = Seq(nodes))
+      scores = next
+    }
+    Seq(e, withDeg, nodes).foreach(Rounds.release(_))
+    scores
   }
 
   /** `weightCol`: optional per-edge weight (e.g. the link multiplicity the
@@ -50,41 +80,11 @@ object Rank {
     */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       iters: Int = 3, damping: Double = 0.85,
-      weightCol: Option[String] = None): DataFrame = {
-    require(iters >= 1, s"iters: $iters")
-    require(damping > 0.0 && damping < 1.0, s"damping: $damping")
-    val spark = edges.sparkSession
-    val sessionWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(32)
-    val (e, nEdges) = checkpointCounted(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
-        weightCol.map(col(_).cast("double")).getOrElse(lit(1.0d)).as("w")))
-    val width = math.max(1L, math.min(sessionWidth.toLong, nEdges / 250000L + 1L)).toInt
-    val deg = e.repartition(width, col("src"))
-      .groupBy("src").agg(sum(col("w")).as("outw"))
-    val withDeg = e.join(deg, "src").localCheckpoint(true) // read every round
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .repartition(width, col("node"))
-      .distinct()
-      .localCheckpoint(true)
-    var scores = nodes.withColumn("score", lit(1.0d))
-    var it = 0
-    while (it < iters) {
-      val contrib = withDeg
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          (col("score") * col("w") / col("outw")).as("c"))
-        .repartition(width, col("node"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      scores = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0d - damping) + lit(damping) * coalesce(col("c"), lit(0.0d))).as("score"))
-        .localCheckpoint(true)
-      it += 1
-    }
-    scores
-  }
+      weightCol: Option[String] = None): DataFrame =
+    powerIteration(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"),
+        weightCol.map(col(_).cast("double")).getOrElse(lit(1.0d)).as("w")),
+      col("w"), lit(1.0d), iters, damping)(identity)
 
   /** TrustRank (Gyöngyi et al., VLDB '04) — PageRank with the teleport
     * restricted to a TRUSTED SEED set: trust flows only out of
@@ -97,50 +97,19 @@ object Rank {
     * `score ← (1 − d)·seed(v) + d × Σ_{u→v} score(u)/outdeg(u)`, starting
     * from the seed indicator — the unnormalized convention of [[pageRank]]
     * (dividing by |S| only rescales every iterate linearly; relative order
-    * is what the scheduler consumes). Same loop shape: staged edges,
-    * 16-byte rows, per-round right-sized shuffles + localCheckpoint;
-    * dangling mass leaks, as documented on [[pageRank]].
+    * is what the scheduler consumes). Same loop as [[pageRank]] (one power
+    * iteration with base = the seed indicator and w ≡ 1); dangling mass
+    * leaks, as documented there.
     */
   def trustRank(edges: DataFrame, seeds: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", seedCol: String = "node",
-      iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters: $iters")
-    require(damping > 0.0 && damping < 1.0, s"damping: $damping")
-    val spark = edges.sparkSession
-    val sessionWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(32)
-    val (e, nEdges) = checkpointCounted(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
-    val width = math.max(1L, math.min(sessionWidth.toLong, nEdges / 250000L + 1L)).toInt
-    val deg = e.repartition(width, col("src"))
-      .groupBy("src").agg(count(lit(1)).cast("double").as("outw"))
-    val withDeg = e.join(deg, "src").localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .repartition(width, col("node"))
-      .distinct()
-      .join(seeds.select(col(seedCol).cast("long").as("node"),
-        lit(true).as("__seed")).distinct(), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed"), lit(1.0d)).otherwise(lit(0.0d)).as("base"))
-      .localCheckpoint(true)
-    var scores = nodes.select(col("node"), col("base").as("score"))
-    var it = 0
-    while (it < iters) {
-      val contrib = withDeg
-        .join(scores.select(col("node").as("src"), col("score")), "src")
-        .select(col("dst").as("node"), (col("score") / col("outw")).as("c"))
-        .repartition(width, col("node"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      scores = nodes.join(contrib, Seq("node"), "left")
+      iters: Int = 3, damping: Double = 0.85): DataFrame =
+    powerIteration(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")), lit(1.0d), col("base"), iters, damping)(
+      _.join(seeds.select(col(seedCol).cast("long").as("node"),
+          lit(true).as("__seed")).distinct(), Seq("node"), "left")
         .select(col("node"),
-          (lit(1.0d - damping) * col("base")
-            + lit(damping) * coalesce(col("c"), lit(0.0d))).as("score"))
-        .localCheckpoint(true)
-      it += 1
-    }
-    scores
-  }
+          when(col("__seed"), lit(1.0d)).otherwise(lit(0.0d)).as("base")))
 
   /** HITS hubs & authorities (Kleinberg '99) — the complementary authority
     * signal to [[pageRank]]: a GOOD HUB (link directory, sitemap page,
@@ -158,58 +127,44 @@ object Rank {
     *
     * Scale shape mirrors [[pageRank]]: edges staged once, per-round rows
     * are (node LONG, score LONG) = 16 bytes, map-side-combinable sums
-    * keyed by dst then src, per-round localCheckpoint truncates lineage,
-    * and each normalization total rides a one-row broadcast crossJoin —
-    * never a driver collect.
+    * keyed by dst then src, one checkpoint per half-step (the superseded
+    * one released), and each normalization total observed on that
+    * checkpoint — never a driver collect.
     */
   def hits(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       iters: Int = 2, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters: $iters")
     require(scale >= 1000L, s"scale: $scale")
-    val spark = edges.sparkSession
-    val sessionWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(32)
-    val (e, nEdges) = checkpointCounted(edges
+    val (e, Seq(nEdges)) = Rounds.materialize(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
-    val width = math.max(1L, math.min(sessionWidth.toLong, nEdges / 250000L + 1L)).toInt
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .repartition(width, col("node"))
-      .distinct()
-      .localCheckpoint(true)
-    // The L1 total rides the half-step's own checkpoint as an observe()
-    // aggregate and normalization is then a projection with a LITERAL
-    // divisor over the cached raw sums — the round-5 layout ran the total
-    // as a one-row broadcast crossJoin, i.e. a separate broadcast-build
-    // sub-job per half-step plus the join. Integer arithmetic unchanged
-    // ((scale·raw) DIV tot), so every iterate is still bit-identical.
-    def normalize(raw0: DataFrame, outCol: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val raw = raw0.observe(obs, coalesce(sum(col("raw")), lit(0L)).as("tot"))
-        .localCheckpoint(true)
-      val tot = obs.get("tot").asInstanceOf[Long]
+    val width = Rounds.width(edges.sparkSession, nEdges)
+    val nodes = nodeIds(e, width).localCheckpoint(true)
+    // One half-step: sum the `in` scores along the edges `from` → `to`,
+    // superseding `prev`. The L1 total is observed on the raw sums'
+    // checkpoint, so the normalization ((scale·raw) DIV tot) divides by a
+    // literal.
+    def halfStep(scores: DataFrame, in: String, from: String, to: String,
+        prev: DataFrame, out: String): DataFrame = {
+      val (raw, Seq(_, tot)) = Rounds.materialize(
+        e.join(scores.withColumnRenamed("node", from), from)
+          .select(col(to).as("node"), col(in))
+          .repartition(width, col("node"))
+          .groupBy("node").agg(sum(col(in)).as("raw")),
+        coalesce(sum(col("raw")), lit(0L)))
+      Rounds.release(prev, keep = Seq(nodes))
       val scored =
-        if (tot > 0) raw.select(col("node"), expr(s"($scale * raw) DIV $tot").as(outCol))
-        else raw.select(col("node"), lit(0L).as(outCol))
+        if (tot > 0) raw.select(col("node"), expr(s"($scale * raw) DIV $tot").as(out))
+        else raw.select(col("node"), lit(0L).as(out))
       nodes.join(scored, Seq("node"), "left")
-        .select(col("node"), coalesce(col(outCol), lit(0L)).as(outCol))
+        .select(col("node"), coalesce(col(out), lit(0L)).as(out))
     }
     var hub = nodes.withColumn("hub", lit(scale))
     var auth = nodes.withColumn("auth", lit(0L))
-    var it = 0
-    while (it < iters) {
-      auth = normalize(
-        e.join(hub.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"), col("hub"))
-          .repartition(width, col("node"))
-          .groupBy("node").agg(sum(col("hub")).as("raw")), "auth")
-      hub = normalize(
-        e.join(auth.withColumnRenamed("node", "dst"), "dst")
-          .select(col("src").as("node"), col("auth"))
-          .repartition(width, col("node"))
-          .groupBy("node").agg(sum(col("auth")).as("raw")), "hub")
-      it += 1
+    for (_ <- 1 to iters) {
+      auth = halfStep(hub, "hub", "src", "dst", auth, "auth")
+      hub = halfStep(auth, "auth", "dst", "src", hub, "hub")
     }
+    Rounds.release(e)
     auth.join(hub, Seq("node"))
   }
 
@@ -294,27 +249,22 @@ object Rank {
     * (the per-round emptiness probe is a count of 8-byte rows, the same
     * driver action the wave loop pays). Edges are deduplicated up front
     * (parallel edges add nothing to reachability), every per-round frame
-    * is `localCheckpoint`ed so the plan never grows with depth, and
-    * shuffles are right-sized to the edge count like [[pageRank]]'s.
+    * is checkpointed so the plan never grows with depth, and shuffles are
+    * right-sized to the edge count ([[graft.core.Rounds]]). The staged
+    * edges are released on return; the per-depth frontiers ARE the output,
+    * so they stay (at most maxDepth + 1 of them).
     */
   def seedDistance(edges: DataFrame, seeds: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node", maxDepth: Int = 6): DataFrame = {
     require(maxDepth >= 0, s"maxDepth: $maxDepth")
-    val spark = edges.sparkSession
-    val sessionWidth = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(32)
-    val (e, nEdges) = checkpointCounted(edges
+    val (e, Seq(nEdges)) = Rounds.materialize(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
-    val width = math.max(1L, math.min(sessionWidth.toLong, nEdges / 250000L + 1L)).toInt
-    // Per round: ONE action — the next-frontier checkpoint with the
-    // emptiness probe riding it as an observed count. The visited set stays
-    // a LAZY union of the checkpointed per-depth frontiers (≤ maxDepth
-    // cached leaves — the anti-join re-reads cache, never recomputes), so
-    // the round-5 layout's separate count job and visited-union checkpoint
-    // per round are gone.
-    var (frontier, nFrontier) = checkpointCounted(
+    val width = Rounds.width(edges.sparkSession, nEdges)
+    // Per round ONE action: the next frontier's checkpoint, its emptiness
+    // probe observed on it. Visited stays a lazy union of those checkpoints.
+    var (frontier, Seq(nFrontier)) = Rounds.materialize(
       seeds.select(col(seedCol).cast("long").as("node"))
         .distinct()
         .repartition(width, col("node")))
@@ -322,7 +272,7 @@ object Rank {
     var d = 0
     while (d < maxDepth && nFrontier > 0) {
       d += 1
-      val (next, nNext) = checkpointCounted(
+      val (next, Seq(nNext)) = Rounds.materialize(
         frontier.withColumnRenamed("node", "src")
           .join(e, "src")
           .select(col("dst").as("node"))
@@ -333,6 +283,7 @@ object Rank {
       frontier = next
       nFrontier = nNext
     }
+    Rounds.release(e)
     visited
   }
 

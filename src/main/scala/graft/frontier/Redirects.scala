@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 
 /** HTTP redirect-chain resolution over the link graph's 3xx subset.
   *
@@ -21,8 +22,9 @@ import org.apache.spark.sql.functions._
   * count). That is O(log maxHops) equi-joins over the 3xx subset (≪ the
   * frontier: a few percent of fetches on real crawls), each round
   * materialized via localCheckpoint so the self-join reads the previous
-  * round's rows once instead of re-deriving an exponentially deep lineage
-  * — the same iterative discipline as [[graft.dedup.Components]]. A
+  * round's rows once instead of re-deriving an exponentially deep lineage,
+  * and the superseded round released — the round rules of
+  * [[graft.core.Rounds]], shared with [[graft.dedup.Components]]. A
   * hop-by-hop loop would be maxHops sequential joins; at 10^10 URLs the
   * doubling form does the same work in 3-6 rounds.
   */
@@ -62,11 +64,13 @@ object Redirects {
       // compose the map with itself: a dst that is itself a src jumps
       // ahead by that row's covered hops; a terminal dst has no match and
       // the row is already a fixed point. Left join keeps fixed points.
-      e = e.join(m, col("dst") === col("m_src"), "left")
+      val next = e.join(m, col("dst") === col("m_src"), "left")
         .select(col("src"),
           coalesce(col("m_dst"), col("dst")).as("dst"),
           (col("h") + coalesce(col("m_h"), lit(0L))).as("h"))
         .localCheckpoint(true)
+      Rounds.release(e)
+      e = next
       covered <<= 1
     }
     // after the loop e maps every src min(chainLen, covered) hops ahead,

@@ -101,6 +101,11 @@ object Revisit {
     * Urls in only one snapshot are [[classify]]'s new/gone business and
     * are excluded here: the null-sentinel union keeps zero-line urls
     * grouped, so the inner join IS the both-snapshots gate.
+    *
+    * Versioned behaviour change (round 6): lines split on `\r?\n` (was
+    * `\n`, so a CRLF snapshot read as rewritten against its LF twin) and a
+    * line's identity is its xxhash64 (was md5). q113's LF-only fixture
+    * counts the same under both, so its oracle is unchanged.
     */
   def lineDiff(prev: DataFrame, cur: DataFrame, urlCol: String = "url",
       textCol: String = "text"): DataFrame = {

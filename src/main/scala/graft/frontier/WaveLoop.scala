@@ -3,7 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.core.Fs
+import graft.core.{Fs, Rounds}
 
 /** Iterative-batch frontier loop with checkpoint/resume and per-partition
   * lineage (north rule: "checkpoint-resumable frontier state with
@@ -12,7 +12,9 @@ import graft.core.Fs
   * A steady wave runs about 23 Spark jobs (22.7 measured on 10k-URL
   * PageTable waves with robots rules, 4 cores), one pages join among them.
   * State crosses waves ONLY via storage (a 10^10-frontier
-  * cannot live in driver memory). Every table the loop reads back is
+  * cannot live in driver memory), so every local checkpoint a wave makes
+  * is released at its commit and executor storage does not grow with the
+  * wave count ([[graft.core.Rounds.release]]). Every table the loop reads back is
   * written through and read with one declared schema (`next/` with the
   * schema of the frame just written), so no read pays a Parquet
   * schema-inference job:
@@ -187,17 +189,14 @@ object WaveLoop {
       refreshAfter: Option[Int] = None,
       edgesOf: Option[DataFrame => DataFrame] = None,
       rankEvery: Int = 4,
-      rankIters: Int = 3,
       urlGate: Option[(DataFrame, Seq[String])] = None,
       retryErrorsAfter: Option[Int] = None,
       dustEvery: Int = 0,
       dustMinSupport: Long = 2L,
       hostCards: Boolean = false,
-      hostCardsP: Int = 11,
       maxPerDomain: Option[Long] = None,
       focusQueries: Option[DataFrame] = None,
-      focusEvery: Int = 4,
-      focusTopK: Int = 10000): Seq[WaveResult] = {
+      focusEvery: Int = 4): Seq[WaveResult] = {
 
     require(retryErrorsAfter.forall(n => n >= 1 && pages.nonEmpty),
       "retryErrorsAfter needs n >= 1 and pages metrics (errors live there)")
@@ -217,14 +216,19 @@ object WaveLoop {
       if (startWave == 0) seeds
       else spark.read.parquet(s"$root/next/wave=${startWave - 1}")
 
+    // the caller's frames: a wave releases no checkpoint these read
+    val callerFrames = Seq(seeds) ++ pages ++ urlGate.map(_._1) ++ focusQueries
     var exhausted = false
     while (wave < maxWaves && !exhausted) {
+      // the checkpoints this wave makes, released at its commit (class doc)
+      val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       // refresh channel: committed urls due for a re-fetch this wave. The
       // staleness scan is one groupBy over the bucketed ledger — checkpoint
       // it so the emptiness probe and the union below run it once.
-      val refreshRows = (for { n <- refreshAfter if wave > 0 }
-        yield seen.staleFrontier(wave - 1, n).select("url", "seed_idx").localCheckpoint(true))
-        .filter(!_.isEmpty)
+      val refreshAll = for { n <- refreshAfter if wave > 0 }
+        yield seen.staleFrontier(wave - 1, n).select("url", "seed_idx").localCheckpoint(true)
+      made ++= refreshAll
+      val refreshRows = refreshAll.filter(!_.isEmpty)
       // error-retry channel: fetch errors (status 404) of wave K−n get ONE
       // retry — tombstoned out of the seen set ([[Ledger.unsee]]) and
       // re-injected as plain frontier rows that flow the NORMAL path: url
@@ -255,6 +259,7 @@ object WaveLoop {
             errs0.join(spark.read.schema(RetriedSchema).parquet(retriedDir),
               Seq("url_hash"), "left_anti")
           else errs0).localCheckpoint(true)
+        made += errs
         if (!errs.isEmpty) {
           seen.unsee(errs.select("url_hash"), wave - 1)
           conform(errs, RetriedSchema).write.mode(SaveMode.Append).parquet(retriedDir)
@@ -429,6 +434,9 @@ object WaveLoop {
       val scheduled = Scheduler.schedule(
         toScheduleAuth, gapSeconds, salted = true, orderKeyRange = schedRange,
         gapCol = gapCol, orderCol = schedOrderCol)
+      // the scheduler and the domain cap each freeze their input inside
+      // their output; the scheduler's checkpoint hides the cap's from it
+      made ++= Seq(scheduled, unseenCapped) ++ deferredRows
 
       // wave data writes (overwrite → idempotent re-run of an uncommitted wave)
       conform(scheduled, ScheduleSchema)
@@ -463,14 +471,14 @@ object WaveLoop {
       next.write.mode(SaveMode.Overwrite).parquet(s"$root/next/wave=$wave")
 
       // cardinality channel (`hostCards`): one HLL sketch per host per wave
-      // over the scheduled url hashes. Sketches are tiny (2^p bytes/host),
+      // over the scheduled url hashes. Sketches are tiny (2^11 bytes/host),
       // duplicate-insensitive (re-crawls via the refresh/retry channels add
       // nothing), and register-max merge is idempotent — so
       // [[hostCardinalities]] rolls ANY subset of waves up to exact-union
       // estimates without ever re-reading urls. Overwrite → idempotent.
       if (hostCards) {
         conform(sched.groupBy("host_rev")
-          .agg(graft.functions.hll_agg(col("url_hash"), hostCardsP).as("sketch")), CardsSchema)
+          .agg(graft.functions.hll_agg(col("url_hash"), 11).as("sketch")), CardsSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/cards/wave=$wave")
       }
 
@@ -487,8 +495,9 @@ object WaveLoop {
         if ((wave + 1) % math.max(1, rankEvery) == 0) {
           val edges = (0 to wave).map(w => s"$root/edges/wave=$w").filter(Fs.exists)
             .map(spark.read.schema(EdgesSchema).parquet(_)).reduce(_.unionByName(_))
-          conform(Rank.pageRank(edges, iters = rankIters), RankSchema)
-            .write.mode(SaveMode.Overwrite).parquet(s"$root/rank/scores")
+          val scores = Rank.pageRank(edges, iters = 3)
+          conform(scores, RankSchema).write.mode(SaveMode.Overwrite).parquet(s"$root/rank/scores")
+          made += scores
         }
       }
 
@@ -568,7 +577,7 @@ object WaveLoop {
       // _SUCCESS-fenced like the other learned channels.
       if (focusQueries.nonEmpty && (wave + 1) % math.max(1, focusEvery) == 0)
         for (fq <- focusQueries; pg <- pages) {
-          conform(Anchors.focusPriorities(fetchedCorpus(pg), fq, k = focusTopK)
+          conform(Anchors.focusPriorities(fetchedCorpus(pg), fq, k = 10000)
             .groupBy("url").agg(sum(col("score_fp")).as("focus_fp"))
             .select(xxhash64(graft.functions.canonicalize_url(col("url")))
               .as("url_hash"), col("focus_fp")), FocusSchema)
@@ -586,6 +595,7 @@ object WaveLoop {
       frontier = spark.read.schema(next.schema).parquet(s"$root/next/wave=$wave")
       wave += 1
       } // else (non-exhausted wave body)
+      made.foreach(Rounds.release(_, keep = callerFrames))
     }
     results.toSeq
   }

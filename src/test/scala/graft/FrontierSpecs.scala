@@ -640,8 +640,11 @@ class WaveLoopSpec extends AnyFunSuite {
     val pinned = Seq(14, 18, 18)
     val root = java.nio.file.Files.createTempDirectory("wavejobs").toString
     val perWave = pinned.indices.map { w =>
-      SparkTestSession.jobsDuring(
-        WaveLoop.run(spark, root, seeds, discover, maxWaves = w + 1))._2
+      val (jobs, held) = SparkTestSession.persistedDuring(SparkTestSession.jobsDuring(
+        WaveLoop.run(spark, root, seeds, discover, maxWaves = w + 1))._2)
+      // every local checkpoint of the wave is released at its commit
+      assert(held.isEmpty, s"wave $w holds ${held.values}")
+      jobs
     }
     assert(perWave.map(_.size) == pinned, s"jobs per wave: ${perWave.map(_.size)}")
     // loop state is read back with its declared schema: the only schema
@@ -734,17 +737,15 @@ class WaveLoopSpec extends AnyFunSuite {
     val pinned = Seq(21, 25, 25)
     val (pages, rules, seeds) = pageSite()
     val root = java.nio.file.Files.createTempDirectory("wavepagejobs").toString
-    val sc = spark.sparkContext
     // the session is shared across suites: start from an empty cache
     spark.catalog.clearCache()
     val cache = spark.sharedState.cacheManager
     val perWave = (0 until 3).map { w =>
-      val rdds = sc.getPersistentRDDs.keySet
-      val jobs = SparkTestSession.jobsDuring(pageCrawl(root, pages, rules, seeds, waves = w + 1))._2
-      // the wave's fetched frame is released at its commit: no cached
-      // relation and no RDD of one (local checkpoints are unnamed) survive
-      val held = sc.getPersistentRDDs.filter { case (id, r) => !rdds(id) && r.name != null }
-      assert(cache.isEmpty && held.isEmpty, s"wave $w holds ${held.values.map(_.name)}")
+      val (jobs, held) = SparkTestSession.persistedDuring(
+        SparkTestSession.jobsDuring(pageCrawl(root, pages, rules, seeds, waves = w + 1))._2)
+      // the wave's fetched frame and its local checkpoints are released at
+      // its commit: no cached relation and no persisted RDD survive
+      assert(cache.isEmpty && held.isEmpty, s"wave $w holds ${held.values}")
       jobs
     }
     def pruneCollects(jobs: Seq[SparkTestSession.Job]) = jobs
@@ -752,6 +753,46 @@ class WaveLoopSpec extends AnyFunSuite {
     assert(perWave.map(pruneCollects(_).size) == Seq(1, 1, 1),
       perWave.map(_.flatMap(_.sqlCallSite).distinct).toString)
     assert(perWave.map(_.size) == pinned, s"jobs per wave: ${perWave.map(_.size)}")
+  }
+
+  test("all channels on: no wave leaves a persisted RDD behind") {
+    // refresh, error retry, the domain cap and the authority channel each
+    // checkpoint something in a wave; wave 1's refresh probe finds nothing
+    // due (TTL 2), wave 3's finds wave 0's pages
+    val pages = (0 until 60).map { i =>
+      (s"http://h${i % 3}.test/p/$i",
+        s"""<html><body><p>doc $i</p><a href="${i + 3}">n</a><a href="/p/${2 * i}">d</a></body></html>""")
+    }.toDF("url", "html")
+    val seeds = Seq(("http://h0.test/p/0", 0L), ("http://h1.test/p/1", 1L),
+      ("http://h2.test/p/2", 2L), ("http://h0.test/missing", 3L)).toDF("url", "seed_idx")
+    val root = java.nio.file.Files.createTempDirectory("wavestorage").toString
+    for (w <- 0 until 4) {
+      val held = SparkTestSession.persistedDuring(WaveLoop.run(spark, root, seeds,
+        Discover.fromPages(pages), maxWaves = w + 1, pages = Some(pages),
+        refreshAfter = Some(2), retryErrorsAfter = Some(1), maxPerDomain = Some(1L),
+        edgesOf = Some(Discover.edgesFromPages(pages)), rankEvery = 1))._2
+      assert(held.isEmpty, s"wave $w holds ${held.values}")
+    }
+    assert(WaveLoop.committedWaves(root) == (0 until 4))
+    // every channel ran: retries, rank scores, refresh rows
+    // (priority-packed keys) in wave 3 only, and deferrals (a deferred row
+    // rides from a wave's input into its next/ unchanged)
+    assert(spark.read.parquet(s"$root/retried").count() > 0)
+    assert(graft.core.Fs.exists(s"$root/rank/scores/_SUCCESS"))
+    def refreshed(w: Int) =
+      WaveLoop.readSchedule(spark, root, w).where(col("seed_idx") >= (1L << 40)).count()
+    assert((1 to 3).map(refreshed).map(_ > 0) == Seq(false, false, true))
+    def input(w: Int) = if (w == 0) seeds else spark.read.parquet(s"$root/next/wave=${w - 1}")
+    assert((0 to 3).map(w => spark.read.parquet(s"$root/next/wave=$w").select("url", "seed_idx")
+      .intersect(input(w).select("url", "seed_idx")).count()).sum > 0, "nothing deferred")
+  }
+
+  test("a caller's checkpointed seeds stay readable after the crawl") {
+    val frozen = seeds.localCheckpoint(true)
+    val root = java.nio.file.Files.createTempDirectory("wavecallerseeds").toString
+    WaveLoop.run(spark, root, frozen, discover, maxWaves = 2, maxPerDomain = Some(5L))
+    assert(WaveLoop.committedWaves(root) == Seq(0, 1))
+    assert(frozen.collect().toSet == seeds.collect().toSet)
   }
 
   test("learned channels read their state back without schema inference, every wave") {

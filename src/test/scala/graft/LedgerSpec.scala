@@ -384,4 +384,26 @@ class LedgerSpec extends AnyFunSuite {
     assert(back == (0L until 600L).filter(_ % 3 == 0).toSet,
       "post-compaction unseen set")
   }
+
+  test("unsee and compact leave the persistent RDD set as they found it") {
+    val root = java.nio.file.Files.createTempDirectory("unseestorage").toString
+    val l = new Ledger(spark, root, buckets = 4, expectedPerBucket = 4096)
+    l.append(keyed(0 until 300).select("url_hash", "canonical_url"), 0)
+    l.writeBlooms(keyed(0 until 300).select("url_hash", "canonical_url"), 0)
+    l.append(keyed(300 until 600).select("url_hash", "canonical_url"), 1)
+    def holdsNothing(what: String)(f: => Unit): Unit = {
+      val held = SparkTestSession.persistedDuring(f)._2
+      assert(held.isEmpty, s"$what holds ${held.values}")
+    }
+    holdsNothing("unsee")(l.unsee(keyed(0 until 100).select("url_hash"), 0))
+    holdsNothing("an empty unsee")(l.unsee(keyed(5000 until 5050).select("url_hash"), 0))
+    holdsNothing("unsee at wave 1")(l.unsee(keyed(300 until 350).select("url_hash"), 1))
+    // compacting to wave 0 rewrites the wave-1 tombstones; to wave 1 clears them
+    holdsNothing("compact rewriting tombstones")(l.compact(upToWave = 0))
+    assert(graft.core.Fs.exists(s"$root/tombstones"))
+    holdsNothing("compact clearing tombstones")(l.compact(upToWave = 1))
+    assert(!graft.core.Fs.exists(s"$root/tombstones"))
+    val back = l.filterUnseen(keyed(0 until 600), 1).select("seed_idx").as[Long].collect().toSet
+    assert(back == ((0L until 100L) ++ (300L until 350L)).toSet)
+  }
 }

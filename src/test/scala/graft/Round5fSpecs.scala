@@ -2,49 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.frontier.Rank
-
-class SeedDistanceSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  private def run(edges: Seq[(Long, Long)], seeds: Seq[Long],
-      maxDepth: Int = 6): Map[Long, Int] =
-    Rank.seedDistance(edges.toDF("src", "dst"), seeds.toDF("node"),
-        maxDepth = maxDepth)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-
-  test("shortcut wins: depth is the MINIMUM hop count") {
-    val out = run(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 1L -> 4L),
-      Seq(1L))
-    assert(out == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 2))
-  }
-
-  test("cycles terminate; unreachable nodes are absent") {
-    val out = run(Seq(1L -> 2L, 2L -> 1L, 7L -> 8L), Seq(1L))
-    assert(out == Map(1L -> 0, 2L -> 1))
-  }
-
-  test("maxDepth bounds the expansion exactly") {
-    val out = run(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L), Seq(1L), maxDepth = 1)
-    assert(out == Map(1L -> 0, 2L -> 1))
-  }
-
-  test("isolated seed reports depth 0 and the loop exits early") {
-    val out = run(Seq(5L -> 6L), Seq(10L))
-    assert(out == Map(10L -> 0))
-  }
-
-  test("parallel edges and duplicate seeds add no rows") {
-    val out = run(Seq(1L -> 2L, 1L -> 2L, 1L -> 2L), Seq(1L, 1L))
-    assert(out == Map(1L -> 0, 2L -> 1))
-  }
-
-  test("multi-seed: each node takes the nearest seed's distance") {
-    val out = run(Seq(1L -> 2L, 2L -> 3L, 9L -> 3L), Seq(1L, 9L))
-    assert(out == Map(1L -> 0, 9L -> 0, 2L -> 1, 3L -> 1))
-  }
-}
 
 class C4CleanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -107,58 +64,6 @@ class C4CleanSpec extends AnyFunSuite {
     assert((nlC, nkC, keepC) == ((nlL, nkL, keepL)))
     assert(nkC == 3 && keepC)
     assert(keptL.split("\n").length == 3)
-  }
-}
-
-class TrianglesSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  private def run(edges: Seq[(String, String)]): Map[String, (Long, Long, Long)] =
-    graft.frontier.Rank.triangles(edges.toDF("src_host", "dst_host"))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
-
-  test("a 4-clique: every host in 3 triangles, clustering 1e6 ppm") {
-    val hosts = Seq("a", "b", "c", "d")
-    val clique = for { x <- hosts; y <- hosts if x < y } yield (x, y)
-    val out = run(clique)
-    hosts.foreach { h => assert(out(h) == ((3L, 3L, 1000000L)), h) }
-  }
-
-  test("a path has no triangles; degree-1 endpoints score 0") {
-    val out = run(Seq("a" -> "b", "b" -> "c", "c" -> "d"))
-    assert(out("a") == ((1L, 0L, 0L)))
-    assert(out("b") == ((2L, 0L, 0L)))
-  }
-
-  test("direction, duplicates and self-loops do not inflate the census") {
-    val out = run(Seq(
-      "a" -> "b", "b" -> "a", "a" -> "b",   // one undirected edge
-      "b" -> "c", "c" -> "a",
-      "a" -> "a"))                          // self-loop dropped
-    assert(out == Map(
-      "a" -> ((2L, 1L, 1000000L)),
-      "b" -> ((2L, 1L, 1000000L)),
-      "c" -> ((2L, 1L, 1000000L))))
-  }
-
-  test("a self-loop-ONLY host surfaces with degree 0, not silently dropped") {
-    // the spam shape: a host linking only to itself must appear in the
-    // census (degree 0, no triangles) so downstream score ensembles see it
-    val out = run(Seq("loner" -> "loner", "a" -> "b"))
-    assert(out("loner") == ((0L, 0L, 0L)))
-    assert(out("a") == ((1L, 0L, 0L)))
-  }
-
-  test("triangle hanging off a hub counts once per member") {
-    // hub h connected to t1..t5; triangle only among h, t1, t2
-    val spokes = (1 to 5).map(i => ("h", s"t$i"))
-    val out = run(spokes :+ ("t1" -> "t2"))
-    assert(out("h") == ((5L, 1L, 100000L))) // 2e6*1/(5*4)
-    assert(out("t1") == ((2L, 1L, 1000000L)))
-    assert(out("t3") == ((1L, 0L, 0L)))
   }
 }
 

@@ -39,6 +39,17 @@ object SparkTestSession {
     def schemaInference: Boolean = !sql && stageNames.exists(_.startsWith("parquet at "))
   }
 
+  /** Runs `f` and returns its value plus the RDDs it left persisted, local
+    * checkpoints included, as id → description (e.g.
+    * `MapPartitionsRDD[42] at localCheckpoint at Scheduler.scala:76`).
+    */
+  def persistedDuring[A](f: => A): (A, Map[Int, String]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = f
+    (out, sc.getPersistentRDDs.collect { case (id, r) if !before(id) => id -> r.toString }.toMap)
+  }
+
   /** Runs `f` and returns its value plus the jobs it started, in start
     * order. The listener bus is drained on both sides, so jobs started
     * before `f` are not counted.
