@@ -2,9 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
-/** Typed row models (SURVEY.md §1). One definition site; Parquet schemas are
-  * derived from these via Spark encoders so the storage contract and the
-  * typed API cannot drift.
+/** Typed row model of the page table (SURVEY.md §1); its Parquet schema is
+  * derived via Spark encoders so the storage contract and the typed API
+  * cannot drift.
   */
 object Schemas {
 
@@ -19,37 +19,4 @@ object Schemas {
       html: Array[Byte],
       text: String,
       lang: String)
-
-  /** A frontier seed: reference CLI arg list order = seed_idx. */
-  final case class Seed(url: String, seed_idx: Long)
-
-  /** Canonicalized, keyed frontier entry. */
-  final case class FrontierEntry(
-      url: String,
-      canonical_url: String,
-      url_hash: Long,
-      host: String,
-      host_rev: String,
-      seed_idx: Long)
-
-  /** One scheduled fetch: global crawl order = (wave, slot, host_rev, seed_idx). */
-  final case class Scheduled(
-      wave: Int,
-      slot: Long,
-      host_rev: String,
-      canonical_url: String,
-      url: String,
-      url_hash: Long,
-      seed_idx: Long,
-      host_pos: Long)
-
-  /** One chunk of one document (reference `:192`, `:207`). */
-  final case class Chunk(url: String, chunk_id: Int, chunk: String)
-
-  /** Reference output contract: one row per url (`README.md:38-47`). */
-  final case class PageResult(
-      url: String,
-      full_text: String,
-      chunks: Seq[String],
-      embeddings: Seq[Seq[Float]])
 }

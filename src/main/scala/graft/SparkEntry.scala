@@ -32,12 +32,16 @@ object SparkEntry {
     * CPU-bound text kernel (tokenize, n-gram hash, window hash, HTML scan)
     * serializes behind it — measured as multi-hundred-ms single-task
     * stages in the q68/q105 traces (the same rationale as the headline
-    * bench's `docsTimes` repartition; at real scale the input is thousands
-    * of files and this repartition disappears). Scan-bound queries keep
-    * the plain `docs`: for them the payload shuffle would be pure cost.
+    * bench's `docsTimes` repartition). A scan that already yields at least
+    * one partition per core — real scale, thousands of files — is kept
+    * as is: the payload shuffle would only cost. Scan-bound queries keep
+    * the plain `docs` for the same reason.
     */
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(s.sparkContext.defaultParallelism)
+  private def docsWide(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir)
+    val cores = s.sparkContext.defaultParallelism
+    if (d.rdd.getNumPartitions < cores) d.repartition(cores) else d
+  }
   private def embeddings(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
   private def events(s: SparkSession, dir: String): DataFrame =

@@ -177,15 +177,6 @@ object Ann {
       .select(col("q_id"), col("rank"), col("nn_id"), col("cosine"))
   }
 
-  /** Add SRP bucket columns (one per table) to a vector frame. Codegen'd
-    * expression with the ±1 hyperplane matrix precomputed per (bits, seed) —
-    * `dim` fmas per bit per row, zero per-row hashing (the round-1 udf
-    * re-derived bits×dim murmur hashes for every row of every table).
-    */
-  def withSrpBuckets(df: DataFrame, vecCol: String, bits: Int, tables: Int): DataFrame =
-    (0 until tables).foldLeft(df)((d, t) =>
-      d.withColumn(s"bucket_$t", graft.functions.srp_bucket(col(vecCol), bits, seed = 7 + t)))
-
   // ---------- IVF (inverted-file) path --------------------------------------
 
   /** Deterministic Lloyd's k-means over a driver-side sample — the coarse
@@ -268,104 +259,6 @@ object Ann {
       .where(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("nn_id"), col("cosine"))
   }
-
-  /** Persist an IVF index: the corpus written PARTITIONED BY its cell id
-    * (one directory per cell) plus the centroid table as a JSON sidecar —
-    * the durable form of [[ivfTopK]]'s "write it bucketed by ivf_cell"
-    * note. At 100 TB the index is built once and probed many times;
-    * [[ivfTopKIndexed]] then reads ONLY the probed cells' files (static
-    * partition pruning on a collected cell list that is ≤ nlist ints —
-    * bounded by construction, never by data volume).
-    */
-  def ivfWriteIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      root: String, nlist: Int = 16, iters: Int = 8,
-      quantize: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val centroids = kmeansCentroids(corpus, idCol, vecCol, nlist, iters)
-    val cents = new IvfCentroids(spark.sparkContext.broadcast(centroids))
-    val cellOf = Bridge.column(
-      graft.functions.IvfCells(cents, Bridge.expression(col("vec")), 1))
-    val assigned = corpus
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("ivf_cell", element_at(cellOf, 1))
-    // quantize=true stores PACKED int8 vectors (qvec_bin BINARY + qscale)
-    // instead of floats — a real ~4× smaller index: tinyint ARRAYS would be
-    // written at Parquet's INT32 physical width (measured: no size win),
-    // while the byte-per-component BINARY keeps the cut. Probes rank on the
-    // int8 components directly (cosine scale-invariance via the codegen'd
-    // cosine_int8 — see [[quantizeInt8]]); CELL ASSIGNMENT uses the float
-    // vectors either way, so both layouts probe the same cells.
-    // [[ivfTopKIndexed]] detects the layout from the stored schema.
-    val stored =
-      if (quantize)
-        quantizeInt8(assigned, "vec")
-          .select(col("id"), graft.functions.pack_int8(col("qvec")).as("qvec_bin"),
-            col("qscale"), col("ivf_cell"))
-      else assigned
-    stored
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("ivf_cell").parquet(s"$root/cells")
-    val json = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    // sidecar through the same Hadoop FileSystem as the cells parquet: a
-    // java.nio write would land on the DRIVER-LOCAL disk when root is
-    // hdfs://… or s3a://… — exactly the "built once, probed many times"
-    // setting where the index outlives the driver machine
-    val path = new org.apache.hadoop.fs.Path(root, "_centroids.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Probe a persisted IVF index: queries → their nProbe nearest cells →
-    * a cell-pruned scan of `root/cells` → exact scoring → per-query top-k.
-    * Identical results to [[ivfTopK]] at the same (nlist, iters) because
-    * the sidecar pins the exact centroids the index was built with.
-    */
-  def ivfTopKIndexed(queries: DataFrame, root: String,
-      qidCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val sidecar = new org.apache.hadoop.fs.Path(root, "_centroids.json")
-    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(sidecar)
-    val jsonBytes =
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    val centroids = parseCentroids(
-      new String(jsonBytes, java.nio.charset.StandardCharsets.UTF_8))
-    val cents = new IvfCentroids(spark.sparkContext.broadcast(centroids))
-    def cellsOf(vec: Column, probes: Int): Column =
-      Bridge.column(graft.functions.IvfCells(cents, Bridge.expression(vec), probes))
-    val q = queries.select(col(qidCol).as("q_id"), col(vecCol).as("qv_raw"),
-      explode(cellsOf(col(vecCol), nProbe)).as("ivf_cell"))
-    // probed cell ids: ≤ nlist ints no matter the query count — safe to
-    // collect, and the isin becomes a PARTITION filter on the cells scan
-    val probed = q.select("ivf_cell").distinct().collect().map(_.getInt(0)).toSeq
-    val cellsAll = spark.read.parquet(s"$root/cells")
-    // int8 layout (see ivfWriteIndex(quantize = true)): score the packed
-    // bytes directly with the codegen'd cosine_int8 — cosine is
-    // scale-invariant, so no dequantization and no per-row scale read
-    val quantized = cellsAll.columns.contains("qvec_bin")
-    val vecExpr = if (quantized) col("qvec_bin") else col("vec")
-    val c = cellsAll
-      .where(col("ivf_cell").isin(probed: _*))
-      .select(col("ivf_cell"), col("id").as("nn_id"), vecExpr.as("cv_raw"))
-    val scoreExpr =
-      if (quantized) graft.functions.cosine_int8(col("cv_raw"), asDouble(col("qv_raw")))
-      else cosineCol(asDouble(col("qv_raw")), asDouble(col("cv_raw")))
-    val scored = q.join(c, "ivf_cell")
-      .withColumn("cosine", scoreExpr)
-      .select(col("q_id"), col("nn_id"), col("cosine"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("nn_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("nn_id"), col("cosine"))
-  }
-
-  private def parseCentroids(json: String): Array[Array[Float]] =
-    json.trim.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.trim.toFloat))
 
   /** LSH-bucketed approximate top-k: candidates from `tables` SRP tables,
     * scored exactly, ranked per query. Recall grows with tables and falls

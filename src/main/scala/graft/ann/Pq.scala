@@ -164,103 +164,6 @@ object Pq {
       qidCol, "_tab", "_probe", k, ksub)
   }
 
-  /** Persist an IVFPQ index — the durable form of [[ivfTopK]] and the
-    * smallest index this engine writes: the corpus partitioned by coarse
-    * cell with each vector stored as `m` PACKED code bytes (`pack_int8`
-    * BINARY — requires `ksub ≤ 128`; ARRAY<TINYINT> would sit at INT32
-    * physical width in parquet), plus BOTH codebooks as JSON sidecars
-    * through the root's own Hadoop FileSystem (`_centroids.json` the
-    * coarse cells, `_pqbooks.json` the product codebooks) — built once,
-    * probed many times, from any machine. A 384-float corpus row (1536 B)
-    * stores in 8 code bytes + the 16-byte id.
-    */
-  def ivfPqWriteIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      root: String, nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-      iters: Int = 8): Unit = {
-    require(ksub >= 1 && ksub <= 128,
-      s"ksub must fit a signed code byte (1..128): $ksub")
-    val spark = corpus.sparkSession
-    val centroids = Ann.kmeansCentroids(corpus, idCol, vecCol, nlist, iters)
-    val cents = new IvfCentroids(spark.sparkContext.broadcast(centroids))
-    val rawBooks = train(corpus, idCol, vecCol, m, ksub, iters)
-    val books = new PqBooks(spark.sparkContext.broadcast(rawBooks))
-    val cellOf = Bridge.column(
-      graft.functions.IvfCells(cents, Bridge.expression(col("vec")), 1))
-    corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("ivf_cell", element_at(cellOf, 1))
-      .withColumn("pq_code",
-        Bridge.column(PqEncode(books, Bridge.expression(col("vec")))))
-      .select(col("id"),
-        // pack_int8 takes ARRAY<TINYINT>; codes are INT but ksub ≤ 128
-        // keeps every value inside a signed byte
-        graft.functions.pack_int8(col("pq_code").cast("array<tinyint>"))
-          .as("code_bin"),
-        col("ivf_cell"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("ivf_cell").parquet(s"$root/cells")
-    def writeSidecar(name: String, json: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(root, name)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(path, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    writeSidecar("_centroids.json",
-      centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    writeSidecar("_pqbooks.json",
-      rawBooks.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-        .mkString("[", ",", "]"))
-  }
-
-  /** Probe a persisted IVFPQ index: queries → nProbe nearest coarse cells
-    * (partition-pruned scan of `root/cells`) → ADC on the PACKED code
-    * bytes directly — the vectors were never stored and are never needed.
-    * Identical cells and codes to [[ivfTopK]] at the same parameters
-    * because the sidecars pin the exact codebooks the index was built
-    * with.
-    */
-  def ivfPqTopKIndexed(queries: DataFrame, root: String,
-      qidCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    def readSidecar(name: String): String = {
-      val path = new org.apache.hadoop.fs.Path(root, name)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(path)
-      val bytes =
-        try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        finally in.close()
-      new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    }
-    val centroids = readSidecar("_centroids.json")
-      .trim.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.trim.toFloat))
-    val rawBooks = readSidecar("_pqbooks.json")
-      .trim.stripPrefix("[[[").stripSuffix("]]]").split("\\]\\],\\[\\[")
-      .map(_.split("\\],\\[").map(_.split(",").map(_.trim.toFloat)))
-    val ksub = rawBooks(0).length
-    val cents = new IvfCentroids(spark.sparkContext.broadcast(centroids))
-    val books = new PqBooks(spark.sparkContext.broadcast(rawBooks))
-    val q = queries.select(col(qidCol).as("q_id"),
-      adcTable(books, col(vecCol)).as("_tab"),
-      explode(Bridge.column(graft.functions.IvfCells(cents,
-        Bridge.expression(col(vecCol)), nProbe))).as("ivf_cell"))
-    // probed cell ids: ≤ nlist ints regardless of query count — safe to
-    // collect; the isin becomes a PARTITION filter on the cells scan
-    val probed = q.select("ivf_cell").distinct().collect().map(_.getInt(0)).toSeq
-    val c = spark.read.parquet(s"$root/cells")
-      .where(col("ivf_cell").isin(probed: _*))
-      .select(col("ivf_cell"), col("id").as("nn_id"), col("code_bin"))
-    val scored = q.join(c, "ivf_cell")
-      .withColumn("score",
-        Bridge.column(PqAdcLookupBin(Bridge.expression(col("_tab")),
-          Bridge.expression(col("code_bin")), ksub)))
-      .select(col("q_id"), col("nn_id"), col("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("nn_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("nn_id"), col("score"))
-  }
-
   /** End-to-end PQ top-k: train (unless codebooks are supplied), encode
     * the corpus once, table the queries once, rank on codes.
     */
@@ -350,23 +253,6 @@ object PqEval {
     new GenericArrayData(out)
   }
 
-  /** [[lookup]] over PACKED code bytes (the persisted-index layout;
-    * ksub ≤ 128 keeps codes non-negative as signed bytes).
-    */
-  def lookupBin(table: ArrayData, codes: Array[Byte], ksub: Int): Double = {
-    val m = codes.length
-    require(table.numElements() == m * ksub,
-      s"ADC table has ${table.numElements()} entries, codes need ${m * ksub}")
-    var s = 0.0; var j = 0
-    while (j < m) {
-      val c = codes(j).toInt
-      require(c >= 0 && c < ksub, s"code $c out of range [0, $ksub)")
-      s += table.getDouble(j * ksub + c)
-      j += 1
-    }
-    s
-  }
-
   def lookup(table: ArrayData, codes: ArrayData, ksub: Int): Double = {
     val m = codes.numElements()
     // fail fast on a ksub mismatch: a wrong ksub would otherwise read
@@ -419,23 +305,6 @@ case class PqAdcTable(books: PqBooks, child: Expression) extends UnaryExpression
   }
   override protected def withNewChildInternal(c: Expression): PqAdcTable = copy(child = c)
   override def prettyName: String = "pq_adc_table"
-}
-
-/** (table ARRAY<DOUBLE>, codes BINARY) → ADC score over the persisted
-  * packed-code layout.
-  */
-case class PqAdcLookupBin(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
-  require(ksub >= 1 && ksub <= 128, s"ksub: $ksub")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(t: Any, c: Any): Any =
-    PqEval.lookupBin(t.asInstanceOf[ArrayData], c.asInstanceOf[Array[Byte]], ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, c) => s"graft.ann.PqEval.lookupBin($t, $c, $ksub)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcLookupBin =
-    copy(left = l, right = r)
-  override def prettyName: String = "pq_adc_bin"
 }
 
 /** (table ARRAY<DOUBLE>, codes ARRAY<INT>) → ADC score: m lookups, no

@@ -5,12 +5,13 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Round mechanics of the iterative operators ([[graft.frontier.Rank]],
-  * [[graft.dedup.Components]], [[graft.frontier.Redirects]]) and the wave
-  * loop: each round's frame is a local checkpoint (the plan does not grow
-  * with the round count) whose row count and loop-control aggregates ride
-  * its own pass ([[materialize]]); its shuffles are right-sized ([[width]]);
-  * and once round N is materialized the checkpoints only earlier rounds
-  * read are released ([[release]]), so storage does not grow with rounds.
+  * [[graft.dedup.Components]], [[graft.frontier.Redirects]],
+  * [[graft.text.Bpe]]) and the wave loop: each round's frame is a local
+  * checkpoint (the plan does not grow with the round count) whose row
+  * count and loop-control aggregates ride its own pass ([[materialize]]);
+  * its shuffles are right-sized ([[width]]); and once round N is
+  * materialized the checkpoints only earlier rounds read are released
+  * ([[release]]), so storage does not grow with rounds.
   */
 object Rounds {
 

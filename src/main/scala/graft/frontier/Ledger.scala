@@ -446,9 +446,9 @@ final class Ledger(
 
   /** Batch refresh-crawl frontier: committed urls whose LAST fetch is at
     * least `maxAgeWaves` waves old, as (url, seed_idx) frontier rows ready
-    * to re-enter the wave loop — the batch twin of the streaming TTL
-    * seen-filter. seed_idx = [[Scheduler.priorityOrderKey]](age, url_hash
-    * folded to the 2^40 seed domain): ordering is oldest-first among
+    * to re-enter the wave loop. seed_idx =
+    * [[Scheduler.priorityOrderKey]](age, url_hash folded to the 2^40 seed
+    * domain): ordering is oldest-first among
     * refreshes, and every packed refresh key sorts AFTER the plain
     * (< 2^40) discovery seed_idx domain — within a host, new content
     * fetches before re-fetches, by construction rather than by luck.

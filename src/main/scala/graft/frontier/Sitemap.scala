@@ -23,9 +23,6 @@ object Sitemap {
       regexp_extract_all(xml, lit("<loc>([^<]+)</loc>"), lit(1)),
       x => trim(x))
 
-  /** Count without materializing the array downstream. */
-  def locCount(xml: Column): Column = size(locs(xml))
-
   /** `<url>` entries WITH their change metadata:
     * `array<struct<loc: string, lastmod: string>>` in document order —
     * `lastmod` is the raw W3C-datetime text ("" when the element is

@@ -1,7 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal columns: image/audio/video as opaque BINARY with typed
   * metadata (the Common-Crawl/WARC framing the north-rule table already
@@ -163,13 +162,6 @@ object Multimodal {
       }
     }
   }
-
-  /** Feature table joined back to metadata — the end-to-end plumbing shape:
-    * binary column pruned away after decode, features carried forward.
-    */
-  def featureTable(assets: Dataset[Asset]): DataFrame =
-    imageFeatures(assets).toDF()
-      .join(assets.toDF().select(col("asset_id"), col("source_url")), "asset_id")
 
   // ---------- REAL image decode (graft.multimodal.Png) ----------------------
 

@@ -36,10 +36,7 @@ object PageTable {
   // the same store as the snapshot files — java.nio.file would pin the
   // table's committed-ness to one driver's local disk
   private def snapDir(root: String, snap: Int) = s"$root/snap=$snap"
-  private def marker(root: String, snap: Int) = f"$root/_committed_$snap%05d"
-
-  /** Test hook: path of a snapshot's commit marker (for crash simulation). */
-  def marker_unsafe(root: String, snap: Int): String = marker(root, snap)
+  private[graft] def marker(root: String, snap: Int) = f"$root/_committed_$snap%05d"
 
   def committedSnapshots(root: String): Seq[Int] =
     Fs.childNames(root)

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import graft.core.Rounds
 import graft.functions.BpeMergePair
 
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich '16) — the step that
@@ -65,12 +66,13 @@ object Bpe {
 
   /** Train `numMerges` merges; returns them in rank order. Each round is
     * one pair-count aggregate + a 1-row collect + a codegen map; lineage
-    * is truncated every few rounds (localCheckpoint) so round N's plan
-    * does not replay rounds 0..N-1.
+    * is truncated every few rounds (a local checkpoint) so round N's plan
+    * does not replay rounds 0..N-1, and each superseded checkpoint is
+    * released, so storage does not grow with the merge count.
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
       lowercase: Boolean = true, minPairCount: Long = 2L): Seq[(String, String)] = {
-    var syms = init(wordFreqs(docs, textCol, lowercase)).localCheckpoint()
+    var syms = Rounds.materialize(init(wordFreqs(docs, textCol, lowercase)))._1
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var round = 0
     var exhausted = false
@@ -83,10 +85,15 @@ object Bpe {
         val (a, b) = (top(0).getAs[String]("a"), top(0).getAs[String]("b"))
         merges += ((a, b))
         syms = applyMerge(syms, a, b)
-        if (round % 4 == 3) syms = syms.localCheckpoint()
+        if (round % 4 == 3) {
+          val prev = syms
+          syms = Rounds.materialize(syms)._1
+          Rounds.release(prev)
+        }
       }
       round += 1
     }
+    Rounds.release(syms)
     merges.toSeq
   }
 

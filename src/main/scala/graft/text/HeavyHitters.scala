@@ -47,9 +47,8 @@ object HeavyHitters {
     * window hashes, so a doc spamming its own phrase can't inflate either
     * the doc frequency or its own density), heavy grams via the exact
     * sketch-pruned [[aboveThreshold]] over doc-frequency rows, then one
-    * broadcast-friendly semi-structured join back. Returns
-    * `(id, n_grams, n_hot, hot_ppm)` — one row per input doc, integers
-    * only.
+    * semi join back. Returns `(id, n_grams, n_hot, hot_ppm)` — one row per
+    * input doc, integers only.
     */
   def boilerplateDensity(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 5, minDocFreq: Long = 3L,
@@ -61,8 +60,7 @@ object HeavyHitters {
     // per-doc gram totals WITHOUT the explode: |kernel output| is already
     // the row's distinct-gram count, so one projection + an 8-byte-row sum
     // replaces a full explode pass (the round-5 layout ran the n-gram
-    // kernel 4× per call; this and the broadcast below make it 3×, with
-    // the explode paths the only ones that shuffle). A null text has no
+    // kernel 4× per call; this makes it 3×). A null text has no
     // grams: array_size is NULL for it in every ANSI mode (size(NULL) is -1
     // with ANSI off), so the coalesce counts it as 0
     val perDoc = docs
@@ -70,9 +68,10 @@ object HeavyHitters {
         coalesce(array_size(graft.functions.ngram_hash_keys(col(textCol), n)), lit(0))
           .cast("long").as("__k"))
       .groupBy("id").agg(sum(col("__k")).as("n_grams"))
-    // hot is bounded by rows/minDocFreq — broadcast it so the hits pass
-    // filters grams in the explode's own stage instead of shuffling them
-    val hits = grams.join(broadcast(hot), Seq("gram"), "left_semi")
+    // hot is bounded only by rows/minDocFreq, so the join strategy is left
+    // to AQE: it broadcasts a small hot set from its measured size, and a
+    // large one shuffles instead of overflowing the driver and executors
+    val hits = grams.join(hot, Seq("gram"), "left_semi")
       .groupBy("id").agg(count(lit(1)).as("n_hot"))
     docs.select(col(idCol).as("id")).distinct()
       .join(perDoc, Seq("id"), "left")

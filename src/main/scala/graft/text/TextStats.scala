@@ -150,9 +150,6 @@ object TextStats {
     Repetition(nLines, dupLineFrac, excess, topFrac)
   }
 
-  /** Whitespace token count (Python str.split). */
-  def tokenCountWs(text: String): Int = if (text == null) 0 else Py.wordCount(text)
-
   /** BPE-ish sub-token count: runs of letters, runs of digits, and each
     * other non-space char count as one token — the standard cheap proxy for
     * tokenizer budget. Regex twin: `[\p{L}]+|[0-9]+|[^\p{L}0-9\s]`.
@@ -257,8 +254,6 @@ object TextStats {
     while (b < 64) { if (acc(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
-
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   // ----- MinHash over word shingles (Broder '97) ---------------------------
 

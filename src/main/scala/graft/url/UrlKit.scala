@@ -272,8 +272,6 @@ object UrlKit {
     sb.toString
   }
 
-  def hostReverseOfUrl(url: String): String = hostReverse(host(url))
-
   /** Multi-label public suffixes the registrable-domain fold recognizes —
     * a documented SUBSET of the public suffix list (Mozilla PSL; the full
     * list is data, not algorithm): the high-traffic ccTLD second levels

@@ -170,7 +170,7 @@ class SchedulerSpec extends AnyFunSuite {
       .as[Seq[String]].collect()(0)
     assert(got == Seq("http://a.test/sitemap1.xml", "http://a.test/sitemap2.xml"))
     assert(Seq(Tuple1("<urlset></urlset>")).toDF("xml")
-      .select(graft.frontier.Sitemap.locCount(col("xml"))).as[Int].collect()(0) == 0)
+      .select(size(graft.frontier.Sitemap.locs(col("xml")))).as[Int].collect()(0) == 0)
   }
 }
 
@@ -943,5 +943,65 @@ class TrapsSpec extends AnyFunSuite {
       Seq(("http://t.test/static", 100L))).toDF("canonical_url", "seed_idx")
     val stats = Traps.templateStats(rows).as[(String, Long)].collect().toMap
     assert(stats == Map("t.test /a/N" -> 7L, "t.test /static" -> 1L))
+  }
+}
+
+class SitemapRefreshSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+  import graft.frontier.Sitemap
+
+  test("entries: loc+lastmod per <url> block; loose index locs excluded") {
+    val xml = Seq(
+      """<urlset>
+        |<url><loc> http://a.test/1 </loc><lastmod> 2024-01-05 </lastmod></url>
+        |<url><loc>http://a.test/2</loc></url>
+        |</urlset>""".stripMargin,
+      // sitemapindex: lastmod stamps the FILE, not a page — entries must
+      // not surface it (locs still does)
+      "<sitemapindex><sitemap><loc>http://a.test/s.xml</loc>" +
+        "<lastmod>2024-01-01</lastmod></sitemap></sitemapindex>").toDF("xml")
+    val got = xml.select(explode(Sitemap.entries(col("xml"))).as("e"))
+      .select("e.loc", "e.lastmod").as[(String, String)].collect().toSeq
+    assert(got == Seq(("http://a.test/1", "2024-01-05"), ("http://a.test/2", "")))
+    val allLocs = xml.select(explode(Sitemap.locs(col("xml")))).as[String]
+      .collect().toSet
+    assert(allLocs.contains("http://a.test/s.xml"))
+  }
+
+  test("lastmodTs: W3C forms parse, offsets convert, garbage is null") {
+    val got = Seq("2024-01-05", "2024-01-05T10:30:00Z", "2024-01-05 10:30:00",
+        "2024-01-05T12:30:00+02:00", "2024-01-05T10:30:00.123Z",
+        "not a date", "").toDF("s")
+      .select(Sitemap.lastmodTs(col("s")).cast("string")).as[String]
+      .collect().toSeq
+    assert(got == Seq(
+      "2024-01-05 00:00:00",
+      "2024-01-05 10:30:00",
+      "2024-01-05 10:30:00",
+      "2024-01-05 10:30:00", // +02:00 converted to the UTC session tz
+      "2024-01-05 10:30:00.123",
+      null, null))
+  }
+
+  test("staleBySitemap: newest stamp wins; null lastmod never re-fetches") {
+    val sitemaps = Seq(
+      // /p listed twice across files — the NEWER stamp must decide
+      "<urlset><url><loc>http://s.test/p</loc><lastmod>2024-01-01</lastmod></url></urlset>",
+      "<urlset><url><loc>http://s.test/p</loc><lastmod>2024-03-01</lastmod></url>" +
+        "<url><loc>http://s.test/q</loc><lastmod>2024-01-01</lastmod></url>" +
+        "<url><loc>http://s.test/r</loc></url>" +
+        "<url><loc>http://s.test/new</loc></url></urlset>").toDF("xml")
+    val fetched = Seq(
+      ("http://s.test/p", "2024-02-01 00:00:00"), // stale: 03-01 > 02-01
+      ("http://s.test/q", "2024-02-01 00:00:00"), // fresh: 01-01 < 02-01
+      ("http://s.test/r", "2024-02-01 00:00:00")) // unknown lastmod: fresh
+      .toDF("url", "ts")
+      .select(col("url"), to_timestamp(col("ts")).as("fetched_at"))
+    val got = Sitemap.staleBySitemap(sitemaps, fetched)
+      .select("url", "reason").as[(String, String)].collect().toSet
+    assert(got == Set(
+      ("http://s.test/p", "modified"),
+      ("http://s.test/new", "never_fetched")))
   }
 }

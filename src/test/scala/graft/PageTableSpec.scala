@@ -22,7 +22,7 @@ class PageTableSpec extends AnyFunSuite {
     assert(PageTable.read(spark, root).count() == 80)
     assert(PageTable.read(spark, root, Some(0)).count() == 50)
     // a data dir without its marker is invisible
-    java.nio.file.Files.delete(java.nio.file.Paths.get(PageTable.marker_unsafe(root, 1)))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(PageTable.marker(root, 1)))
     assert(PageTable.read(spark, root).count() == 50)
   }
 

@@ -302,54 +302,6 @@ class PackIntColSpec extends AnyFunSuite {
   }
 }
 
-class QuantizedIvfSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  private def corpus = {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(23)
-    // big enough that vector DATA dominates parquet footer overhead (16
-    // cell files × ~4 KB metadata) — the size assertion measures the
-    // layout, not the footers
-    (0 until 2000).map { i =>
-      val center = i % 8
-      val mag = 0.5f + (i % 5) * 0.7f
-      (i.toLong, Array.tabulate(128)(d =>
-        (math.sin(center * 31 + d) + rnd.nextGaussian() * 0.05).toFloat * mag))
-    }.toDF("vec_id", "embedding")
-  }
-
-  test("int8 persisted index: ~4x smaller on disk, same cells, high recall vs float index") {
-    val s = spark
-    import s.implicits._
-    val v = corpus
-    val q = v.where(col("vec_id") < 10)
-    val rootF = java.nio.file.Files.createTempDirectory("ivff").toString
-    val rootQ = java.nio.file.Files.createTempDirectory("ivfq").toString
-    graft.ann.Ann.ivfWriteIndex(v, "vec_id", "embedding", rootF, nlist = 16)
-    graft.ann.Ann.ivfWriteIndex(v, "vec_id", "embedding", rootQ, nlist = 16,
-      quantize = true)
-    // identical centroids → identical probed cells; the int8 layout stores
-    // tinyint components and must be well under half the float bytes
-    val bytesF = graft.core.Fs.treeBytes(s"$rootF/cells", ".parquet")
-    val bytesQ = graft.core.Fs.treeBytes(s"$rootQ/cells", ".parquet")
-    assert(bytesQ * 2 < bytesF, s"int8 cells $bytesQ vs float cells $bytesF")
-    val top = graft.ann.Ann.ivfTopKIndexed(q, rootF, "vec_id", "embedding", k = 5)
-      .select("q_id", "nn_id").as[(Long, Long)].collect().groupBy(_._1)
-    val topQ = graft.ann.Ann.ivfTopKIndexed(q, rootQ, "vec_id", "embedding", k = 5)
-      .select("q_id", "nn_id").as[(Long, Long)].collect().groupBy(_._1)
-    val overlap = (0L until 10L).map { qid =>
-      val a = top(qid).map(_._2).toSet
-      val b = topQ(qid).map(_._2).toSet
-      (a intersect b).size.toDouble / 5.0
-    }.sum / 10.0
-    assert(overlap >= 0.9, s"quantized top-k overlap $overlap")
-    // every query still finds itself at rank 1 through the int8 ranking
-    for (qid <- 0L until 10L) assert(topQ(qid).map(_._2).contains(qid))
-  }
-}
-
 class AuthorityLoopSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import graft.frontier.WaveLoop

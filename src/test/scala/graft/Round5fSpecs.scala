@@ -201,143 +201,6 @@ class FocusPrioritiesSpec extends AnyFunSuite {
   }
 }
 
-class PqSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import graft.ann.{Ann, Pq, PqBooks}
-
-  private def books(raw: Array[Array[Array[Float]]]): PqBooks =
-    new PqBooks(spark.sparkContext.broadcast(raw))
-
-  test("encode: per-subspace argmin L2, ties to the lower code") {
-    val b = books(Array(
-      Array(Array(0f, 0f), Array(10f, 10f)),
-      Array(Array(5f, 0f), Array(0f, 5f))))
-    val out = Seq((1L, Seq(1f, 1f, 4f, 0f)), (2L, Seq(9f, 9f, 0f, 4f)),
-        // sub0 [5,5] equidistant to both centroids → code 0
-        (3L, Seq(5f, 5f, 9f, 9f)))
-      .toDF("id", "vec")
-    val got = Pq.encode(out, b, "vec").select("id", "pq_code")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(got(1L) == Seq(0, 0))
-    assert(got(2L) == Seq(1, 1))
-    assert(got(3L).head == 0) // tie → lower code
-  }
-
-  test("adc table + lookup reproduce exact subspace dot products") {
-    val b = books(Array(
-      Array(Array(1f, 0f), Array(0f, 1f)),
-      Array(Array(2f, 2f), Array(-1f, 3f))))
-    val q = Seq((0L, Seq(3f, 4f, 5f, 6f))).toDF("qid", "vec")
-    val tab = q.select(Pq.adcTable(b, col("vec"))).collect().head.getSeq[Double](0)
-    // j=0: dot([3,4],[1,0])=3, dot([3,4],[0,1])=4; j=1: dot([5,6],[2,2])=22, dot([5,6],[-1,3])=13
-    assert(tab == Seq(3.0, 4.0, 22.0, 13.0))
-    val scored = Seq((1L, Seq(0, 1)), (2L, Seq(1, 0))).toDF("id", "codes")
-      .crossJoin(q.select(Pq.adcTable(b, col("vec")).as("tab")))
-      .select(col("id"), Pq.adcScore(col("tab"), col("codes"), 2).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(scored(1L) == 3.0 + 13.0 && scored(2L) == 4.0 + 22.0)
-  }
-
-  test("end-to-end: PQ top-k recalls the brute-force neighbors on clustered data") {
-    // 4 well-separated clusters of EXACTLY k members in dim 8 — PQ
-    // resolves clusters, not the within-cluster jitter (it quantizes that
-    // away by design), so the recall set must be the cluster itself
-    val corpus = (0 until 40).map { i =>
-      val c = i % 4
-      val v = Array.tabulate(8)(d =>
-        (if (d / 2 == c) 10f else 0f) + ((i * 31 + d * 7) % 5) * 0.1f)
-      (i.toLong, v.toSeq)
-    }.toDF("id", "vec")
-    val queries = (0 until 4).map { c =>
-      (c.toLong, Array.tabulate(8)(d => if (d / 2 == c) 10f else 0f).toSeq)
-    }.toDF("id", "vec")
-    val exact = Ann.bruteForceTopK(corpus, queries, "id", "id", "vec", k = 10)
-      .select("q_id", "nn_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val pq = Pq.topK(corpus, queries, "id", "id", "vec", k = 10, m = 4, ksub = 4)
-      .select("q_id", "nn_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val recalls = exact.keys.map { q =>
-      (exact(q) intersect pq(q)).size.toDouble / exact(q).size
-    }
-    assert(recalls.forall(_ >= 0.8), recalls.toSeq)
-    // training is deterministic: two runs produce identical codebooks
-    val b1 = Pq.train(corpus, "id", "vec", m = 4, ksub = 4)
-    val b2 = Pq.train(corpus, "id", "vec", m = 4, ksub = 4)
-    assert(b1.flatten.flatten.toSeq == b2.flatten.flatten.toSeq)
-  }
-
-  test("ivfAdc with probe-everything equals plain PQ; pruning prunes") {
-    val codes = (0L until 60L).map(i =>
-      (i, Seq(((i / 1) % 4).toInt, ((i / 2 + 1) % 4).toInt), (i % 5).toInt))
-      .toDF("id", "codes", "cell")
-    val tab = (0 until 8).map(i => (i * 3 + 1).toDouble)
-    val all = Seq((0L, tab, List(0, 1, 2, 3, 4))).toDF("qid", "tab", "probe")
-    val ivfAll = Pq.ivfAdcTopKAssigned(codes, all, "id", "codes", "cell",
-        "qid", "tab", "probe", k = 10, ksub = 4)
-      .select("rank", "nn_id").as[(Int, Long)].collect().toSeq.sorted
-    val plain = Pq.topKFromCodes(codes, all.select("qid", "tab"),
-        "id", "codes", "qid", "tab", k = 10, ksub = 4)
-      .select("rank", "nn_id").as[(Int, Long)].collect().toSeq.sorted
-    assert(ivfAll == plain)
-    // probing only cell 2 restricts candidates to id % 5 == 2
-    val one = Seq((0L, tab, Seq(2))).toDF("qid", "tab", "probe")
-    val pruned = Pq.ivfAdcTopKAssigned(codes, one, "id", "codes", "cell",
-        "qid", "tab", "probe", k = 50, ksub = 4)
-      .select("nn_id").as[Long].collect().toSet
-    assert(pruned.nonEmpty && pruned.forall(_ % 5 == 2))
-  }
-
-  test("persisted IVFPQ probes byte-identically to the in-memory path") {
-    val corpus = (0 until 40).map { i =>
-      val c = i % 4
-      val v = Array.tabulate(8)(d =>
-        (if (d / 2 == c) 10f else 0f) + ((i * 31 + d * 7) % 5) * 0.1f)
-      (i.toLong, v.toSeq)
-    }.toDF("id", "vec")
-    val queries = (0 until 4).map { c =>
-      (c.toLong, Array.tabulate(8)(d => if (d / 2 == c) 10f else 0f).toSeq)
-    }.toDF("id", "vec")
-    val root = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    Pq.ivfPqWriteIndex(corpus, "id", "vec", root, nlist = 4, m = 4, ksub = 4)
-    val indexed = Pq.ivfPqTopKIndexed(queries, root, "id", "vec",
-        k = 10, nProbe = 2)
-      .select("q_id", "rank", "nn_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    val mem = Pq.ivfTopK(corpus, queries, "id", "id", "vec", k = 10,
-        nlist = 4, nProbe = 2, m = 4, ksub = 4)
-      .select("q_id", "rank", "nn_id", "score")
-      .as[(Long, Int, Long, Double)].collect().toSet
-    assert(indexed == mem) // same deterministic training → same everything
-    // storage shape: m code bytes per row, vectors absent
-    val cells = spark.read.parquet(s"$root/cells")
-    assert(cells.columns.toSet == Set("id", "code_bin", "ivf_cell"))
-    assert(cells.select(length(col("code_bin"))).as[Int].collect().forall(_ == 4))
-  }
-
-  test("trained IVFPQ recalls the cluster at nProbe=1 on separable data") {
-    val corpus = (0 until 40).map { i =>
-      val c = i % 4
-      val v = Array.tabulate(8)(d =>
-        (if (d / 2 == c) 10f else 0f) + ((i * 31 + d * 7) % 5) * 0.1f)
-      (i.toLong, v.toSeq)
-    }.toDF("id", "vec")
-    val queries = (0 until 4).map { c =>
-      (c.toLong, Array.tabulate(8)(d => if (d / 2 == c) 10f else 0f).toSeq)
-    }.toDF("id", "vec")
-    val got = Pq.ivfTopK(corpus, queries, "id", "id", "vec", k = 10,
-        nlist = 4, nProbe = 2, m = 4, ksub = 4)
-      .select("q_id", "nn_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    (0 until 4).foreach { c =>
-      val members = (0 until 40).filter(_ % 4 == c).map(_.toLong).toSet
-      val overlap = (got(c.toLong) intersect members).size
-      assert(overlap >= 8, s"cluster $c overlap $overlap")
-    }
-  }
-}
-
 class RegistrableDomainSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._

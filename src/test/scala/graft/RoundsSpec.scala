@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.core.Rounds
 import graft.dedup.Components
 import graft.frontier.{Rank, Redirects}
+import graft.text.Bpe
 
 /** The iterative operators hold storage that does not grow with their
   * round count: each pair runs one operator at a small and a large round
@@ -60,6 +61,18 @@ class RoundsSpec extends AnyFunSuite {
     val urls = Seq("http://r.test/n0", "http://r.test/n60").toDF("url")
     sameHeld("redirects")(Redirects.resolve(urls, hops, maxHops = 2),
       Redirects.resolve(urls, hops, maxHops = 64))
+  }
+
+  test("BPE training holds the same storage after 4 and 16 merges") {
+    // one 26-letter word, three times: every round has a pair counted 3×
+    val docs = Seq.fill(3)("abcdefghijklmnopqrstuvwxyz").toDF("text")
+    def trained(merges: Int) = {
+      val (got, rdds) = SparkTestSession.persistedDuring(Bpe.train(docs, "text", merges))
+      assert(got.size == merges)
+      rdds
+    }
+    val (a, b) = (trained(4), trained(16))
+    assert(a.size == b.size, s"bpe: ${a.values} vs ${b.values}")
   }
 
   test("release runs no job and spares the checkpoints a kept frame reads") {

@@ -51,7 +51,7 @@ class UrlKitSpec extends AnyFunSuite {
     assert(UrlKit.hostReverse("www.example.org") == "org.example.www")
     assert(UrlKit.hostReverse("localhost") == "localhost")
     assert(UrlKit.hostReverse("") == "")
-    assert(UrlKit.hostReverseOfUrl("http://a.b.c/x") == "c.b.a")
+    assert(UrlKit.hostReverse(UrlKit.host("http://a.b.c/x")) == "c.b.a")
   }
 
   test("dot-segment resolution follows RFC 3986 §5.2.4") {
