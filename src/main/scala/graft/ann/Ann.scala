@@ -110,30 +110,6 @@ object Ann {
       .select(col("q_id"), col("rank"), col("nn_id"), col("cosine"))
   }
 
-  /** Int8 scalar quantization of an embedding column: per-vector
-    * `qscale = maxAbs ∕ 127`, `qvec[i] = round(v[i] ∕ qscale)` — a 4×
-    * memory/disk/shuffle cut for the 100 TB corpus side of ANN. COSINE IS
-    * SCALE-INVARIANT, so ranking runs on the quantized vectors directly
-    * (cast to double, same [[cosineCol]]) with no dequantization and no
-    * extra per-row work; `qscale` is kept for consumers that need real
-    * magnitudes (dot products, L2, reconstruction ≤ qscale∕2 per
-    * component). All codegen'd higher-order functions — no UDF.
-    */
-  def quantizeInt8(vecs: DataFrame, vecCol: String,
-      qvecCol: String = "qvec", scaleCol: String = "qscale"): DataFrame = {
-    val v = col(vecCol)
-    val maxAbs = aggregate(v, lit(0.0d), (acc, x) => greatest(acc, abs(x.cast("double"))))
-    vecs
-      .withColumn(scaleCol, (greatest(maxAbs, lit(java.lang.Double.MIN_NORMAL)) / 127.0d)
-        .cast("float"))
-      .withColumn(qvecCol,
-        transform(v, x => round(x.cast("double") / col(scaleCol)).cast("tinyint")))
-  }
-
-  /** Reconstruct approximate floats from a quantized vector. */
-  def dequantizeCol(qvec: Column, scale: Column): Column =
-    transform(qvec, q => (q.cast("double") * scale).cast("float"))
-
   /** Chunk→document embedding: component-wise MEAN of each group's
     * vectors, L2-normalized — the standard pooled-document representation
     * for retrieval/dedup over chunked corpora. One hash aggregate via
@@ -154,27 +130,6 @@ object Ann {
     summed.select(col(keyCol),
       transform(when(norm === 0.0, mean).otherwise(transform(mean, x => x / norm)),
         x => x.cast("float")).as(outCol))
-  }
-
-  /** [[bruteForceTopK]] over an int8-quantized corpus: identical plan, the
-    * corpus side streams 1-byte components instead of 4-byte floats. The
-    * cosine is computed on the integer vectors (scale-invariance), so the
-    * only deviation from the exact result is the quantization error itself
-    * (recall pinned in DedupAnnSpecs).
-    */
-  def bruteForceTopKInt8(corpusQ: DataFrame, queries: DataFrame,
-      idCol: String, qidCol: String, vecCol: String, k: Int,
-      qvecCol: String = "qvec"): DataFrame = {
-    val c = corpusQ.select(col(idCol).as("nn_id"), asDouble(col(qvecCol)).as("cv"))
-    val q = queries.select(col(qidCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .withColumn("cosine", cosineCol(col("qv"), col("cv")))
-      .select(col("q_id"), col("nn_id"), col("cosine"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("nn_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("nn_id"), col("cosine"))
   }
 
   // ---------- IVF (inverted-file) path --------------------------------------

@@ -76,20 +76,4 @@ object Fs {
     if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
   }
-
-  /** Total bytes of files under `path` (recursive) whose name ends with
-    * `suffix` — file METADATA only, no reads (the broadcast-ceiling probe).
-    */
-  def treeBytes(path: String, suffix: String): Long = {
-    val p = new Path(path)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) return 0L
-    var total = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(suffix)) total += st.getLen
-    }
-    total
-  }
 }

@@ -1,9 +1,10 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.functions.{bloom_agg, bloom_merge_agg}
+import org.apache.spark.util.sketch.BloomFilter
+import graft.functions.bloom_bank_agg
 import graft.core.{Fs, Rounds}
 
 /** Persistent seen-set ledger, the 10^10-scale layout the north rule names:
@@ -17,9 +18,11 @@ import graft.core.{Fs, Rounds}
   *    key, so only the (small) candidate side shuffles — the round-1 layout
   *    re-shuffled the whole ledger every wave, a cost that grows with crawl
   *    age instead of wave size.
-  *  - '''incremental blooms''': wave K's bank = merge(bank K-1, bloom over
-  *    delta K) via [[graft.functions.BloomMergeAgg]] — an O(|delta| +
-  *    buckets) job. Round 1 re-aggregated the FULL ledger per wave.
+  *  - '''incremental blooms''': wave K's bank = bank K-1 OR the bank of
+  *    delta K. The delta bank is one [[graft.functions.bloom_bank_agg]]
+  *    over the delta (riding the append as an observed aggregate), the OR
+  *    runs on the driver — O(|delta| + buckets). Round 1 re-aggregated the
+  *    FULL ledger per wave.
   *  - '''wave column''': appends are at-least-once (a crash between append
   *    and manifest re-appends the delta on resume). Membership semantics
   *    make duplicates harmless, and filtering `wave <= lastCommitted` keeps
@@ -27,14 +30,23 @@ import graft.core.{Fs, Rounds}
   *    fixture's exactness guarantee.
   *  - '''compaction''' ([[Ledger.compact]]): collapses the per-wave delta
   *    files (one file per bucket per wave) to one file per bucket and
-  *    dedups to min-wave per url, bounding file counts on long crawls.
+  *    dedups to max-wave per url, bounding file counts on long crawls.
   *
-  * Broadcast ceiling ([[Ledger.filterUnseen]]): the collected bank is
-  * tens of GB at 10^10 keys and CANNOT broadcast. When its serialized size
-  * exceeds `maxBankBytes` the probe falls back to the plain bucket-aligned
-  * anti-join — in vanilla Spark the bucketed table IS the co-partitioned
-  * probe structure (each task checks candidates against its own bucket's
-  * sorted files); the bloom then lives only in per-bucket row-group stats.
+  * Two regimes, fixed at construction: a bank's serialized size is
+  * `buckets` × one bloom of (expectedPerBucket, fpp), whatever its fill.
+  *  - '''under `maxBankBytes`''': the ledger keeps a bank. The driver
+  *    merges it, writes it as one file per wave (`blooms/wave=K`) and
+  *    broadcasts it to [[filterUnseen]]'s probe.
+  *  - '''over it''' (tens of GB at 10^10 keys cannot broadcast): the
+  *    ledger keeps no bank, and [[filterUnseen]] is the plain
+  *    bucket-aligned anti-join — in vanilla Spark the bucketed table IS the
+  *    co-partitioned probe structure (each task checks candidates against
+  *    its own bucket's sorted files).
+  *
+  * Held bank: the instance keeps the bank rows it last wrote or read,
+  * labelled with their wave, and serves that wave from them while its
+  * `_SUCCESS` exists. A ledger shared across waves collects no bank in a
+  * steady wave; a fresh one (resume, another session) reads it once.
   */
 final class Ledger(
     spark: SparkSession,
@@ -42,9 +54,20 @@ final class Ledger(
     val buckets: Int = 64,
     val expectedPerBucket: Long = 1 << 16,
     val fpp: Double = 1e-2,
-    val maxBankBytes: Long = 256L << 20,
-    val compactEvery: Int = 8,
-    val bankSingleFileBytes: Long = 64L << 20) extends Serializable {
+    val maxBankBytes: Long = 64L << 20,
+    val compactEvery: Int = 8) extends Serializable {
+
+  /** One empty per-bucket bloom, serialized — the shape every bucket of
+    * the bank has (the size is fixed by (expectedPerBucket, fpp)).
+    */
+  @transient private lazy val emptyBloom: Array[Byte] =
+    Ledger.ser(BloomFilter.create(math.max(expectedPerBucket, 1024L), fpp))
+
+  private val keepsBank: Boolean = buckets.toLong * emptyBloom.length <= maxBankBytes
+
+  // the held bank (see class doc): the wave it is, and its (bucket, bloom) rows
+  @transient private var heldWave: Int = -1
+  @transient private var heldRows: Array[(Int, Array[Byte])] = _
 
   /** Catalog name is derived from the root path so independent crawls in one
     * session never collide; the version suffix changes on compaction.
@@ -139,108 +162,93 @@ final class Ledger(
     else Ledger.applyTombstones(base, readTombstones.where(col("t_wave") <= upToWave))
   }
 
+  private def deltaRows(delta: DataFrame, wave: Int): DataFrame =
+    delta.select(col("url_hash"), col("canonical_url"), lit(wave).cast("int").as("wave"))
+
   /** Append one wave's delta: one file per bucket. */
   def append(delta: DataFrame, wave: Int): Unit = {
     ensure()
-    appendRows(delta.select(col("url_hash"), col("canonical_url"),
-      lit(wave).cast("int").as("wave")), currentVersion)
+    appendRows(deltaRows(delta, wave), currentVersion)
   }
 
   private def bloomDir(wave: Int) = s"$root/blooms/wave=$wave"
 
-  /** The bank committed at `wave`, in either layout (see [[writeBlooms]]). */
-  private def readBank(wave: Int) = spark.read.schema(Ledger.BankSchema).parquet(bloomDir(wave))
-
-  /** Bank-size estimate from FILE METADATA of the previous bank (or one
-    * empty serialized bloom per bucket when there is none) — never the data.
+  /** The bank committed at `wave` (its `_SUCCESS` checked by the caller):
+    * the held rows when they are that wave's, else one collect, then held.
     */
-  private def estBankBytes(prev: Option[Int]): Long =
-    prev.map(w => Fs.treeBytes(bloomDir(w), ".parquet"))
-      .getOrElse(buckets.toLong * emptyBloomBytes)
+  private def bank(wave: Int): Array[(Int, Array[Byte])] = {
+    if (heldRows == null || heldWave != wave)
+      hold(wave, spark.read.schema(Ledger.BankSchema).parquet(bloomDir(wave)).collect()
+        .map(r => (r.getInt(0), r.getAs[Array[Byte]](1))))
+    heldRows
+  }
 
-  /** GC: each bank is FULL state (tens of GB at 10^10 keys), so stale wave
-    * dirs accumulate unboundedly on a long crawl. Keep one predecessor for
-    * crash-resume (a crash before this wave's manifest re-runs against it),
-    * drop everything older.
+  private def hold(wave: Int, rows: Array[(Int, Array[Byte])]): Unit = {
+    heldWave = wave
+    heldRows = rows
+  }
+
+  /** The whole-bank aggregate over `url_hash`: one bloom per bucket. */
+  private def bankAgg: Column =
+    bloom_bank_agg(col("url_hash"), buckets, expectedPerBucket, fpp)
+
+  /** Commits wave K's bank = bank `prev` OR `delta` (one serialized bloom
+    * per bucket), merged on the driver, as ONE file, and holds it. Bloom
+    * OR is bitwise-commutative, so the merge order never changes a byte.
+    */
+  private def commitBank(wave: Int, prev: Option[Int],
+      delta: scala.collection.Seq[Array[Byte]]): Unit = {
+    val prevRows = prev.map(bank(_).toMap).getOrElse(Map.empty[Int, Array[Byte]])
+    val merged = Array.tabulate(buckets) { b =>
+      (b, prevRows.get(b) match {
+        case Some(p) => Ledger.ser(Ledger.des(p).mergeInPlace(Ledger.des(delta(b))))
+        case None => delta(b)
+      })
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        merged.toSeq.map { case (b, by) => Row(b, by) }, 1), Ledger.BankSchema)
+      .write.mode(SaveMode.Overwrite).parquet(bloomDir(wave))
+    hold(wave, merged)
+    dropBanksBefore(wave)
+  }
+
+  /** GC: each bank is FULL state, so stale wave dirs accumulate
+    * unboundedly on a long crawl. Keep one predecessor for crash-resume (a
+    * crash before this wave's manifest re-runs against it), drop
+    * everything older.
     */
   private def dropBanksBefore(wave: Int): Unit =
     for (n <- Fs.childNames(s"$root/blooms")
          if n.startsWith("wave=") && n.stripPrefix("wave=").toIntOption.exists(_ < wave - 1))
       Fs.deleteTree(s"$root/blooms/$n")
 
-  /** [[append]] + [[writeBlooms]] in ONE pass over the delta: the
-    * per-bucket delta blooms ride the bucketed table append as `observe()`
-    * aggregates (partials computed inside the append's own tasks), and the
-    * merge with the previous bank happens on the driver — legal exactly
-    * when the bank is SMALL (≤ `bankSingleFileBytes`, the same threshold
-    * that already switches the bank to a single file), because bloom OR is
-    * bitwise-commutative, so the driver-side merge is byte-identical to
-    * the distributed `bloom_merge_agg`. Falls back to the two-pass
-    * append + writeBlooms when either precondition fails: a coverage gap
-    * (healing must read the table), or a bank past the driver threshold
-    * (the merge must stay distributed). The wave loop calls this — at
-    * steady state it saves one full delta read + aggregate job per wave.
+  /** [[append]] + [[writeBlooms]] in ONE pass over the delta: the delta
+    * bank rides the bucketed table append as an `observe()` aggregate
+    * (partials computed inside the append's own tasks) and is merged with
+    * the previous bank on the driver. A coverage gap takes the two-pass
+    * append + writeBlooms (healing must read the table); a ledger over
+    * the bank ceiling only appends. The wave loop calls this — at steady
+    * state the bank costs no job beyond its one-file write.
     */
   def appendWithBlooms(delta: DataFrame, wave: Int): Unit = {
+    if (!keepsBank) return append(delta, wave)
     ensure()
-    val prevOpt = latestBloomWave(wave - 1)
-    val covered = prevOpt.getOrElse(-1)
-    if (covered < wave - 1 || estBankBytes(prevOpt) > bankSingleFileBytes) {
+    val prev = latestBloomWave(wave - 1)
+    if (prev.getOrElse(-1) < wave - 1) {
       append(delta, wave)
       writeBlooms(delta, wave)
       return
     }
     val obs = org.apache.spark.sql.Observation()
-    appendRows(delta.select(col("url_hash"), col("canonical_url"), lit(wave).cast("int").as("wave"))
-      // ONE whole-bank aggregate (bucket computed once per row): the
-      // N-separate-bloom_agg form evaluated N when() children per row and
-      // measurably slowed the append it was riding
-      .observe(obs, graft.functions.bloom_bank_agg(col("url_hash"), buckets,
-        expectedPerBucket, fpp).as("bank")), currentVersion)
+    // ONE whole-bank aggregate (bucket computed once per row): the
+    // N-separate-bloom form evaluated N when() children per row and
+    // measurably slowed the append it was riding
+    appendRows(deltaRows(delta, wave).observe(obs, bankAgg.as("bank")), currentVersion)
     val observed = obs.get
-    if (observed.isEmpty) {
-      // an EMPTY delta write surfaces no observed metrics — the append
-      // above was a no-op; let writeBlooms carry the bank label forward
-      // (its delta aggregate over zero rows handles this case already)
-      writeBlooms(delta, wave)
-      return
-    }
-    def des(b: Array[Byte]) = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(b))
-    def ser(f: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(); f.writeTo(out); out.toByteArray
-    }
-    val prevRows: Map[Int, Array[Byte]] = prevOpt match {
-      case None => Map.empty
-      case Some(w) => readBank(w).collect()
-        .map(r => r.getAs[Int]("bucket") -> r.getAs[Array[Byte]]("bloom")).toMap
-    }
-    val deltaBank = observed("bank").asInstanceOf[scala.collection.Seq[Array[Byte]]]
-    val merged = (0 until buckets).map { b =>
-      val d = deltaBank(b)
-      prevRows.get(b) match {
-        case Some(p) => (b, ser(des(p).mergeInPlace(des(d))))
-        case None => (b, d)
-      }
-    }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          merged.map { case (b, by) => org.apache.spark.sql.Row(b, by) }, 1),
-        Ledger.BankSchema)
-      .write.mode(SaveMode.Overwrite).parquet(bloomDir(wave))
-    dropBanksBefore(wave)
-  }
-
-  /** Serialized bytes of one EMPTY per-bucket bloom — the bank-size
-    * estimator's unit when no previous bank exists (the serialized size is
-    * fixed by (expectedPerBucket, fpp) regardless of fill, so this is the
-    * right order of magnitude pre-compression).
-    */
-  private lazy val emptyBloomBytes: Long = {
-    val out = new java.io.ByteArrayOutputStream()
-    org.apache.spark.util.sketch.BloomFilter
-      .create(math.max(expectedPerBucket, 1024L), fpp).writeTo(out)
-    out.size().toLong
+    // an EMPTY delta write surfaces no observed metrics: its bank is empty
+    commitBank(wave, prev,
+      if (observed.isEmpty) Seq.fill(buckets)(emptyBloom)
+      else observed("bank").asInstanceOf[scala.collection.Seq[Array[Byte]]])
   }
 
   /** Latest materialized bloom state at or before `wave` (committed waves
@@ -252,10 +260,11 @@ final class Ledger(
   private def latestBloomWave(wave: Int): Option[Int] =
     (wave to 0 by -1).find(w => Fs.exists(s"${bloomDir(w)}/_SUCCESS"))
 
-  /** Write wave K's bloom state = merge(state K-1, bloom over delta K).
-    * Cost: one pass over the DELTA plus `buckets` sketch rows — never the
-    * full ledger (LedgerSpec pins the records-read bound) — EXCEPT when
-    * healing a coverage gap (below), which additionally reads exactly the
+  /** Write wave K's bank = bank K-1 OR the bank of delta K (a no-op on a
+    * ledger over the bank ceiling). Cost: one aggregate over the DELTA,
+    * merged on the driver with the previous bank — never the full ledger
+    * (LedgerSpec pins the records-read bound) — EXCEPT when healing a
+    * coverage gap (below), where the same aggregate also reads exactly the
     * uncovered slice.
     *
     * Gap healing: a bank labeled wave K is trusted COMPLETELY by
@@ -266,38 +275,15 @@ final class Ledger(
     * it doesn't cover would turn into bloom false negatives = silent lost
     * dedup. In the normal loop the gap is empty and this reads nothing.
     */
-  def writeBlooms(delta: DataFrame, wave: Int): Unit = {
+  def writeBlooms(delta: DataFrame, wave: Int): Unit = if (keepsBank) {
     ensure() // gap healing reads the table; make sure it exists
-    val prevOpt = latestBloomWave(wave - 1)
-    val covered = prevOpt.getOrElse(-1)
+    val prev = latestBloomWave(wave - 1)
+    val covered = prev.getOrElse(-1)
     val keys =
       if (covered >= wave - 1) delta.select("url_hash")
       else delta.select("url_hash").unionByName(
         committedFrame(wave - 1).where(col("wave") > covered).select("url_hash"))
-    val deltaBlooms = keys
-      .groupBy(Seen.bucketOf(col("url_hash"), buckets).as("bucket"))
-      .agg(bloom_agg(col("url_hash"), math.max(expectedPerBucket, 1024L), fpp).as("bloom"))
-    val merged = prevOpt match {
-      case None => deltaBlooms
-      case Some(prev) =>
-        readBank(prev).unionByName(deltaBlooms)
-          .groupBy("bucket").agg(bloom_merge_agg(col("bloom")).as("bloom"))
-    }
-    // SIZE-ADAPTIVE layout. Big bank (estimated > bankSingleFileBytes):
-    // one FILE per bucket (dir partitioned by bucket) — the merge stays
-    // parallel (a coalesce(1) would funnel tens of GB at 10^10 keys through
-    // ONE serializing task every wave) and a selective reader loads only
-    // its buckets. Small bank: ONE file — the per-bucket layout costs
-    // ~`buckets` extra file commits per wave, pure overhead when the whole
-    // bank is a few MB (measured: it cost WaveBench ~10% end-to-end).
-    // Readers are layout-blind: both forms surface (bucket, bloom) rows.
-    if (estBankBytes(prevOpt) <= bankSingleFileBytes)
-      merged.coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(bloomDir(wave))
-    else
-      merged.repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(bloomDir(wave))
-    dropBanksBefore(wave)
+    commitBank(wave, prev, keys.select(bankAgg).head().getSeq[Array[Byte]](0))
   }
 
   /** Maintenance op: UNSEE a batch of keys (purge fetch-error urls for
@@ -344,44 +330,33 @@ final class Ledger(
 
   /** Exact unseen filter against the committed ledger: bloom-bank pre-filter
     * (negatives skip the join entirely), positives verified by the
-    * bucket-aligned anti-join. Falls back to the plain anti-join when the
-    * bank outgrows `maxBankBytes` (see class doc).
+    * bucket-aligned anti-join. A ledger over the bank ceiling, or one with
+    * no committed bank yet, runs the plain anti-join (see class doc).
     */
   def filterUnseen(candidates: DataFrame, upToWave: Int): DataFrame = {
     ensure()
     if (upToWave < 0) return candidates
     val committed = committedFrame(upToWave)
-    latestBloomWave(upToWave) match {
+    (if (keepsBank) latestBloomWave(upToWave) else None) match {
       case None =>
-        // no (committed) bloom state. The LEDGER is the ground truth — a
-        // missing/disabled bank must degrade to the exact anti-join, never
-        // to a pass-through (which would re-crawl everything the table
-        // remembers). Cheap when the table is actually empty.
+        // no bank. The LEDGER is the ground truth — a missing bank must
+        // degrade to the exact anti-join (the bucketed scan probes in
+        // place), never to a pass-through (which would re-crawl everything
+        // the table remembers). Cheap when the table is actually empty.
         candidates.join(committed.select("url_hash"), Seq("url_hash"), "left_anti")
       case Some(w) =>
-        // broadcast-ceiling check from FILE METADATA: collecting first and
-        // measuring after would OOM the driver at exactly the scale the
-        // fallback exists for
-        val bankBytes = Fs.treeBytes(bloomDir(w), ".parquet")
-        if (bankBytes > maxBankBytes) {
-          // co-partitioned fallback: bucketed scan probes in place
-          candidates.join(committed.select("url_hash"), Seq("url_hash"), "left_anti")
-        } else {
-          val rows = readBank(w).collect()
-            .map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom")))
-          // The bank may lag the table (caller appended waves (w, upToWave]
-          // without writeBlooms, or a bloom write crashed): keys committed in
-          // that gap probe bloom-NEGATIVE and would bypass the anti-join —
-          // silent lost dedup, the worst seen-set failure. Negatives must
-          // anti-join the uncovered slice; when the bank is current
-          // (w == upToWave, the WaveLoop invariant) this adds nothing.
-          val checkNegatives: DataFrame => DataFrame =
-            if (w >= upToWave) identity
-            else _.join(committed.where(col("wave") > w).select("url_hash"),
-              Seq("url_hash"), "left_anti")
-          Seen.verifyPositives(candidates, Seen.bloomBankProbe(spark, rows, buckets),
-            committed, checkNegatives)
-        }
+        // The bank may lag the table (caller appended waves (w, upToWave]
+        // without writeBlooms, or a bloom write crashed): keys committed in
+        // that gap probe bloom-NEGATIVE and would bypass the anti-join —
+        // silent lost dedup, the worst seen-set failure. Negatives must
+        // anti-join the uncovered slice; when the bank is current
+        // (w == upToWave, the WaveLoop invariant) this adds nothing.
+        val checkNegatives: DataFrame => DataFrame =
+          if (w >= upToWave) identity
+          else _.join(committed.where(col("wave") > w).select("url_hash"),
+            Seq("url_hash"), "left_anti")
+        Seen.verifyPositives(candidates, Seen.bloomBankProbe(spark, bank(w), buckets),
+          committed, checkNegatives)
     }
   }
 
@@ -542,6 +517,11 @@ object Ledger {
       .where(col("_ts_t_wave").isNull || col("wave") > col("_ts_t_wave"))
       .drop("_ts_t_wave")
   }
+
+  private def ser(f: BloomFilter): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(); f.writeTo(out); out.toByteArray
+  }
+  private def des(b: Array[Byte]): BloomFilter = BloomFilter.readFrom(b)
 
   /** Recursive delete for state roots (benchmarks, tests). */
   def deleteTree(path: String): Unit = graft.core.Fs.deleteTree(path)

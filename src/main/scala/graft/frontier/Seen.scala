@@ -3,7 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.functions.{bloom_agg, bloom_might_contain, canonicalize_url, cuckoo_agg, host_of, host_reverse, BloomBank, BloomBankProbe, CuckooBank, CuckooBankProbe}
+import graft.functions.{bloom_bank_agg, canonicalize_url, cuckoo_agg, host_of, host_reverse, BloomBank, BloomBankProbe, CuckooBank, CuckooBankProbe}
 
 /** URL-seen set: exact membership, bloom-accelerated.
   *
@@ -22,8 +22,9 @@ import graft.functions.{bloom_agg, bloom_might_contain, canonicalize_url, cuckoo
   *     pre-partitioned and shuffles only the candidate side. The helpers
   *     in THIS object take ad-hoc ledger frames (benchmarks, single-shot
   *     jobs) with a sketch built on the fly or supplied by the caller;
-  *   - bloom pre-filter: one BloomFilter per run (or per bucket at scale),
-  *     built by the [[graft.functions.BloomAgg]] TypedImperativeAggregate.
+  *   - bloom pre-filter: a bank of one BloomFilter per hash bucket (one
+  *     bucket for an ad-hoc ledger), built by one
+  *     [[graft.functions.bloom_bank_agg]] (a TypedImperativeAggregate).
   *     `might_contain == false` → DEFINITELY new → skips the join entirely.
   *     Only bloom-positives (true hits + fpp·|new|) reach the left-anti join,
   *     so the shuffled fraction is ≈ |dups| + 0.1% of |new| instead of 100%.
@@ -43,7 +44,9 @@ object Seen {
       .withColumn("host_rev", host_reverse(col("host")))
   }
 
-  /** Exact de-dup of candidates against the seen ledger, bloom-accelerated.
+  /** Exact de-dup of candidates against an ad-hoc seen ledger: a
+    * one-bucket bloom bank built from the ledger and probed through
+    * [[filterUnseenWithBank]].
     *
     * @param candidates must carry `url_hash`
     * @param seenLedger must carry `url_hash`; pass an empty frame for wave 0
@@ -51,22 +54,16 @@ object Seen {
     */
   def filterUnseen(candidates: DataFrame, seenLedger: DataFrame,
       expectedSeen: Long = 1L << 20, fpp: Double = 1e-3): DataFrame = {
-    // Build the bloom with one aggregate job over the ledger. At sf scale a
-    // single bloom is fine; at 10^10 this becomes one bloom per hash bucket
-    // with the probe routed by pmod(url_hash, buckets) — same dataflow.
-    val bloomRow = seenLedger.select(
-      bloom_agg(col("url_hash"), math.max(expectedSeen, 1024L), fpp).as("bloom"))
-      .collect()
-    val bloomBytes = if (bloomRow.isEmpty || bloomRow(0).isNullAt(0)) null
-      else bloomRow(0).getAs[Array[Byte]](0)
-    if (bloomBytes == null) return candidates
+    // one aggregate job builds a ONE-bucket bank over the ledger; at 10^10
+    // the same dataflow runs with one bloom per hash bucket ([[Ledger]]).
     // NOTE the verify split re-evaluates `candidates` on both branches —
     // callers should pass a cheap upstream (scan + canonicalize), i.e. run
     // this BEFORE any shuffling stage like dropInWaveDuplicates (the two
     // commute: seen-status is a function of url_hash, constant within a
     // duplicate group).
-    verifyPositives(candidates, bloom_might_contain(lit(bloomBytes), col("url_hash")),
-      seenLedger)
+    val bank = seenLedger.select(bloom_bank_agg(col("url_hash"), 1, expectedSeen, fpp))
+      .head().getSeq[Array[Byte]](0)
+    filterUnseenWithBank(candidates, seenLedger, Array(0 -> bank.head), buckets = 1)
   }
 
   /** Partitioned-bloom variant of [[filterUnseen]] with a CALLER-SUPPLIED

@@ -9,8 +9,9 @@ import graft.core.{Fs, Rounds}
   * lineage (north rule: "checkpoint-resumable frontier state with
   * per-partition lineage and fetch/parse metrics").
   *
-  * A steady wave runs about 23 Spark jobs (22.7 measured on 10k-URL
-  * PageTable waves with robots rules, 4 cores), one pages join among them.
+  * A steady wave runs about 21 Spark jobs (21.3 measured on 10k-URL
+  * PageTable waves with robots rules and a shared [[Ledger]], 4 cores),
+  * one pages join among them.
   * State crosses waves ONLY via storage (a 10^10-frontier
   * cannot live in driver memory), so every local checkpoint a wave makes
   * is released at its commit and executor storage does not grow with the
@@ -101,7 +102,9 @@ object WaveLoop {
     *                    the 10^10-scale layout: per-wave cost tracks the
     *                    delta, the anti-join never re-shuffles the ledger,
     *                    and compaction bounds file counts. None opens a
-    *                    default-parameter Ledger at `root/seenstate`
+    *                    default-parameter Ledger at `root/seenstate` for
+    *                    this call (it reads the bank once); one instance
+    *                    passed across calls reuses the bank it holds
     * @param fullRules   PARSED robots rules ([[Robots.parse]]): longest-match
     *                    Allow/Disallow gate AND per-host Crawl-delay — the
     *                    scheduler slots each host at its own gap. Denied rows
@@ -503,9 +506,10 @@ object WaveLoop {
 
       // ledger + bloom state BEFORE the manifest (the commit point): a crash
       // here re-appends on resume — harmless, the wave column fences it.
-      // The delta is the committed schedule's keys; the per-bucket delta
-      // blooms ride the append as observed aggregates (coverage gaps and
-      // big banks take the two-pass path — see Ledger.appendWithBlooms)
+      // The delta is the committed schedule's keys; the delta bank rides
+      // the append as an observed aggregate and is merged on the driver
+      // with the bank the ledger holds (a coverage gap takes the two-pass
+      // path — see Ledger.appendWithBlooms)
       seen.appendWithBlooms(sched.select("url_hash", "canonical_url"), wave)
 
       // per-partition lineage from the COMMITTED files, one pass over each

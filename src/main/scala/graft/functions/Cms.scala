@@ -80,7 +80,7 @@ final class CmsBuffer(val depth: Int, val width: Int) extends Serializable {
 
 /** CMS build aggregate: BIGINT keys → serialized sketch BINARY. Map-side
   * partials merge by element-wise add (fixed-size arrays on the wire,
-  * never rows — the bloom_agg shape).
+  * never rows — the bloom_bank_agg shape).
   */
 case class CmsAgg(
     child: Expression,

@@ -319,8 +319,8 @@ case class CuckooAgg(
 }
 
 /** Cuckoo membership probe: (serialized filter BINARY, key BIGINT) →
-  * BOOLEAN. Mirrors [[BloomMightContain]]: the filter side is a Literal,
-  * deserialized once per distinct array reference per thread.
+  * BOOLEAN. The filter side is a Literal, deserialized once per distinct
+  * array reference per thread.
   */
 case class CuckooMightContain(filterBytes: Expression, key: Expression)
     extends BinaryExpression {
@@ -340,8 +340,9 @@ case class CuckooMightContain(filterBytes: Expression, key: Expression)
   override def prettyName: String = "cuckoo_might_contain"
 }
 
-/** Static probe entry for [[CuckooMightContain]] codegen — per-thread
-  * last-reference memo, same lifecycle argument as [[BloomProbe]].
+/** Static probe entry for [[CuckooMightContain]] codegen — a per-thread
+  * last-reference memo: the filter side is a Literal (one array instance
+  * per task), so each task deserializes it once.
   */
 object CuckooProbe {
   private val last = new ThreadLocal[(Array[Byte], CuckooFilter)]

@@ -496,58 +496,6 @@ case class Fingerprints(child: Expression, k: Int, w: Int)
   override def prettyName: String = "fingerprints"
 }
 
-/** Bloom membership probe: (serialized bloom BINARY, key BIGINT) → BOOLEAN.
-  * The bloom side is expected to be a Literal (a broadcast-materialized
-  * sketch); it is deserialized once per task and cached by reference.
-  */
-case class BloomMightContain(bloomBytes: Expression, key: Expression)
-    extends BinaryExpression {
-  override def left: Expression = bloomBytes
-  override def right: Expression = key
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedBloom: BloomFilter = _
-
-  private def bloomOf(bytes: Array[Byte]): BloomFilter = {
-    if (cachedBloom == null || (cachedBytes ne bytes)) {
-      cachedBloom = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      cachedBytes = bytes
-    }
-    cachedBloom
-  }
-
-  override def nullSafeEval(bloom: Any, k: Any): Any =
-    bloomOf(bloom.asInstanceOf[Array[Byte]]).mightContainLong(k.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, k) => s"graft.functions.BloomProbe.mightContain($b, $k)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(bloomBytes = l, key = r)
-  override def prettyName: String = "bloom_might_contain"
-}
-
-/** Static probe entry for [[BloomMightContain]] codegen: deserializes the
-  * sketch once per distinct byte-array reference per thread (the bloom side
-  * is a Literal — one array instance per task), swallows the checked
-  * IOException that `BloomFilter.readFrom` declares (it cannot actually fire
-  * from a ByteArrayInputStream) so generated code needs no try/catch.
-  */
-object BloomProbe {
-  private val last = new ThreadLocal[(Array[Byte], BloomFilter)]
-  def mightContain(bytes: Array[Byte], key: Long): Boolean = {
-    var e = last.get()
-    if (e == null || (e._1 ne bytes)) {
-      val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      e = (bytes, bf)
-      last.set(e)
-    }
-    e._2.mightContainLong(key)
-  }
-}
-
 /** A bank of per-bucket bloom filters riding one TorrentBroadcast. The task
   * binary carries only the broadcast HANDLE (bytes move once per executor,
   * not once per stage as a plan literal would); deserialized sketches are
@@ -621,15 +569,10 @@ case class BloomBankProbe(bank: BloomBank, bucket: Expression, key: Expression)
   override def prettyName: String = "bloom_bank_probe"
 }
 
-/** Bloom-filter build aggregate over BIGINT keys → serialized bloom BINARY.
-  * TypedImperativeAggregate with map-side partial aggregation: each task
-  * builds a local bloom, partials merge by OR — the classic scalable sketch
-  * pattern (no row ever crosses the wire, only fixed-size bitsets).
-  */
 /** Whole-bank bloom aggregate: BIGINT keys → ARRAY<BINARY> of `buckets`
   * serialized blooms, key k landing in bloom `pmod(k, buckets)`. ONE
-  * aggregate evaluating its child once per row — the N-separate
-  * `bloom_agg(when(bucket = b, …))` form costs N child evals per row
+  * aggregate evaluating its child once per row — N separate one-bloom
+  * aggregates over `when(bucket = b, …)` cost N child evals per row
   * (measured: it cost WaveBench ~15% when the bank rode an `observe()`),
   * while this is O(1) per row with the same output bytes. Buffer is the
   * live bloom array; partials merge element-wise (bloom OR — order-free).
@@ -705,50 +648,6 @@ case class BloomBankAgg(
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): BloomBankAgg =
     copy(child = cs.head)
   override def prettyName: String = "bloom_bank_agg"
-}
-
-case class BloomAgg(
-    child: Expression,
-    expectedItems: Long,
-    fpp: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): BloomFilter =
-    BloomFilter.create(expectedItems, fpp)
-
-  override def update(buf: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v != null) buf.putLong(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: BloomFilter, other: BloomFilter): BloomFilter =
-    buf.mergeInPlace(other)
-
-  override def eval(buf: BloomFilter): Any = serialize(buf)
-
-  override def serialize(buf: BloomFilter): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    buf.writeTo(out)
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): BloomAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "bloom_agg"
 }
 
 /** Component-wise vector sum over ARRAY<FLOAT>/ARRAY<DOUBLE> — the
@@ -1181,71 +1080,4 @@ object IvfEval {
     }
     ArrayData.toArrayData(graft.ann.IvfCentroids.topCells(cents.mat, arr, nProbe))
   }
-}
-
-/** Merge aggregate over SERIALIZED blooms (all built with identical
-  * (expectedItems, fpp) so the bitsets are compatible): BINARY → BINARY.
-  * This is what makes the per-bucket seen-set sketch INCREMENTAL across
-  * crawl waves — wave K's bank = merge(bank K-1, bloom over delta K), an
-  * O(|delta| + buckets) job instead of re-aggregating the full ledger.
-  */
-case class BloomMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomMergeAgg.Holder] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): BloomMergeAgg.Holder =
-    new BloomMergeAgg.Holder(null)
-
-  override def update(buf: BloomMergeAgg.Holder, input: InternalRow): BloomMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(v.asInstanceOf[Array[Byte]]))
-      if (buf.bf == null) buf.bf = other else buf.bf.mergeInPlace(other)
-    }
-    buf
-  }
-
-  override def merge(buf: BloomMergeAgg.Holder, other: BloomMergeAgg.Holder): BloomMergeAgg.Holder = {
-    if (other.bf != null) {
-      if (buf.bf == null) buf.bf = other.bf else buf.bf.mergeInPlace(other.bf)
-    }
-    buf
-  }
-
-  override def eval(buf: BloomMergeAgg.Holder): Any =
-    if (buf.bf == null) null else serializeBloom(buf.bf)
-
-  private def serializeBloom(bf: BloomFilter): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    bf.writeTo(out)
-    out.toByteArray
-  }
-
-  override def serialize(buf: BloomMergeAgg.Holder): Array[Byte] =
-    if (buf.bf == null) Array.emptyByteArray else serializeBloom(buf.bf)
-
-  override def deserialize(bytes: Array[Byte]): BloomMergeAgg.Holder =
-    if (bytes.isEmpty) new BloomMergeAgg.Holder(null)
-    else new BloomMergeAgg.Holder(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): BloomMergeAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "bloom_merge_agg"
-}
-object BloomMergeAgg {
-  /** Mutable cell: the buffer starts empty (null) and adopts the first bloom
-    * it sees — merge requires compatible sizes, so no dummy sketch exists.
-    */
-  final class Holder(var bf: BloomFilter)
 }

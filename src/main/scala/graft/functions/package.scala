@@ -78,14 +78,6 @@ package object functions {
   def fingerprints(c: Column, k: Int = 5, w: Int = 4): Column =
     col(Fingerprints(expr(c), k, w))
 
-  /** Bloom membership probe (bloom BINARY literal/column, key BIGINT). */
-  def bloom_might_contain(bloom: Column, key: Column): Column =
-    col(BloomMightContain(expr(bloom), expr(key)))
-
-  /** Bloom build aggregate: BIGINT keys → serialized bloom BINARY. */
-  def bloom_agg(keys: Column, expectedItems: Long, fpp: Double = 1e-3): Column =
-    col(BloomAgg(expr(keys), expectedItems, fpp).toAggregateExpression())
-
   /** Whole-bank bloom aggregate: keys → ARRAY<BINARY> of `buckets`
     * serialized blooms (index = pmod(key, buckets)); one child eval per
     * row, so it can ride an `observe()` cheaply.
@@ -94,10 +86,6 @@ package object functions {
       fpp: Double = 1e-2): Column =
     col(BloomBankAgg(expr(keys), buckets, math.max(expectedPerBucket, 1024L), fpp)
       .toAggregateExpression())
-
-  /** Merge aggregate over serialized blooms of identical shape → BINARY. */
-  def bloom_merge_agg(blooms: Column): Column =
-    col(BloomMergeAgg(expr(blooms)).toAggregateExpression())
 
   /** Count-min frequency estimate (sketch BINARY, key BIGINT) → BIGINT;
     * never under-counts.

@@ -27,13 +27,6 @@ object Multimodal {
       bytes: Array[Byte],
       source_url: String)
 
-  final case class ImageFeatures(
-      asset_id: Long,
-      width: Int,
-      height: Int,
-      channels: Int,
-      mean_luma: Double)
-
   final case class AudioFeatures(
       asset_id: Long,
       sample_rate: Int,
@@ -63,32 +56,7 @@ object Multimodal {
     }
   }
 
-  /** Decode + feature-extract over binary payloads — REAL [[Png]] decode
-    * (`mean_luma` = mean of channel 0). See [[pngFeatures]] for the richer
-    * feature set with per-row status; this is the minimal-schema variant.
-    *
-    * `mapPartitions` (not a per-row UDF) is deliberate: codecs have
-    * per-task init cost (native context, model weights) — the iterator
-    * pattern pays it once per partition, processes rows streaming (never
-    * materializing a partition of images), and is the Scala twin of
-    * `mapInPandas` batching.
-    */
-  def imageFeatures(assets: Dataset[Asset]): Dataset[ImageFeatures] = {
-    import assets.sparkSession.implicits._
-    assets.filter(_.modality == "image").mapPartitions { it =>
-      // >>> per-partition codec init would go here (once, not per row) <<<
-      it.map { a =>
-        val (w, h, ch, px) = Png.decode(a.bytes)
-        var sum = 0.0
-        var i = 0
-        val n = w * h
-        while (i < n) { sum += px(i * ch) & 0xff; i += 1 }
-        ImageFeatures(a.asset_id, w, h, ch, if (n > 0) sum / n else 0.0)
-      }
-    }
-  }
-
-  /** Audio twin of [[imageFeatures]]: REAL RIFF/WAVE PCM decode through
+  /** Audio twin of [[pngFeatures]]: REAL RIFF/WAVE PCM decode through
     * [[Wav]] — same mapPartitions shape (init-once per task, streaming
     * iterator). `rms` is over all channels' samples normalized to
     * [-1, 1); `n_samples` counts FRAMES. Per-row error containment as in
@@ -179,7 +147,13 @@ object Multimodal {
     * streams. Features: `mean_luma` = full-image mean of the first channel;
     * `mean_luma8` = mean of the top-left 8×8 block, a value that depends on
     * the row STRIDE — a decoder that mis-unfilters or mis-strides cannot
-    * reproduce it. Init-once `mapPartitions` streaming shape.
+    * reproduce it.
+    *
+    * `mapPartitions` (not a per-row UDF) is deliberate: codecs have
+    * per-task init cost (native context, model weights) — the iterator
+    * pattern pays it once per partition, processes rows streaming (never
+    * materializing a partition of images), and is the Scala twin of
+    * `mapInPandas` batching.
     *
     * Per-row error containment: crawl-harvested assets are UNTRUSTED — one
     * corrupt/unsupported PNG in a 10^10-asset partition must yield a

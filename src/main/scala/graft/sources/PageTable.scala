@@ -69,7 +69,7 @@ object PageTable {
     * k = snapshot k−1's data files PLUS the delta's, with NOTHING
     * rewritten. The marker is the manifest list: it names the directories
     * composing the snapshot, so an append is one delta write + one marker
-    * (metadata-only reuse of every earlier file), and [[readAsOf]] of any
+    * (metadata-only reuse of every earlier file), and a [[read]] of any
     * older version keeps reading exactly the files it always did.
     *
     * Row-level append semantics (like Iceberg's AppendFiles): a url
@@ -138,7 +138,10 @@ object PageTable {
       .map(_.group(1).toInt).getOrElse(64)
   }
 
-  /** Latest committed snapshot (time-travel: pass an explicit snapshot).
+  /** Latest committed snapshot, or time travel: `snapshot = Some(k)`
+    * reads the table exactly as of committed version k — resolved through
+    * that version's marker (manifest list), so the read is immune to any
+    * LATER append/commit activity, including appends that reuse its files.
     * The returned frame's `bucket` column carries the layout's bucket count
     * as column metadata ([[BucketCountKey]]) so downstream pruning derives
     * the modulus from the data, never from an independent parameter.
@@ -158,22 +161,13 @@ object PageTable {
     df.withColumn("bucket", col("bucket").as("bucket", md))
   }
 
-  /** Time travel by name: the table exactly as of committed `version` —
-    * resolved through that version's marker (manifest list), so the read
-    * is immune to any LATER append/commit activity, including appends that
-    * reuse this version's files. `readAsOf(k)` after `append`s returns
-    * precisely the rows the table held when marker k was written.
-    */
-  def readAsOf(spark: SparkSession, root: String, version: Int): DataFrame =
-    read(spark, root, Some(version))
-
   /** Incremental scan (Iceberg's "changes between snapshots"): ONLY the
     * rows `version` added over the previous committed version — the
     * manifest-list DIFF, so an incremental consumer (bloom maintenance,
     * downstream re-extraction, refresh detection) reads the delta files
     * and nothing else. For an [[append]] version that is the delta dir;
     * for a full [[commit]] the whole new snapshot IS the change set; for
-    * the first version it equals [[readAsOf]].
+    * the first version it equals [[read]] of that version.
     */
   def changesOf(spark: SparkSession, root: String, version: Int): DataFrame = {
     val snaps = committedSnapshots(root)

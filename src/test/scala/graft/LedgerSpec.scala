@@ -230,9 +230,11 @@ class LedgerSpec extends AnyFunSuite {
   private def resumeSeeds =
     (0 until 15).map(i => (s"http://h${i % 5}.test/$i", i.toLong)).toDF("url", "seed_idx")
 
-  private def runLedgerCrawl(root: String, waves: Int): Unit =
+  private def crawlLedger(root: String) = new Ledger(spark, root + "/seenstate", buckets = 4)
+
+  private def runLedgerCrawl(root: String, waves: Int, ledger: Option[Ledger] = None): Unit =
     WaveLoop.run(spark, root, resumeSeeds, resumeDiscover, maxWaves = waves,
-      ledger = Some(new Ledger(spark, root + "/seenstate", buckets = 4)))
+      ledger = Some(ledger.getOrElse(crawlLedger(root))))
 
   private lazy val completedCrawl: String = {
     val root = java.nio.file.Files.createTempDirectory("ledgerA").toString
@@ -240,29 +242,32 @@ class LedgerSpec extends AnyFunSuite {
     root
   }
 
-  for ((state, waveDone, artifacts) <- crashStates)
-    test(s"ledger-mode resume: crash $state is exact") {
+  // each crash state twice: resumed by a FRESH Ledger instance (a new
+  // session), and by the one instance that ran before the crash, whose
+  // held bank must not outlive the files the crash removed
+  for ((state, waveDone, artifacts) <- crashStates; shared <- Seq(false, true))
+    test(s"ledger-mode resume${if (shared) ", one shared ledger" else ""}: crash $state is exact") {
       val rootA = completedCrawl
       val rootB = java.nio.file.Files.createTempDirectory("ledgerB").toString
+      val ledger = if (shared) Some(crawlLedger(rootB)) else None
       if (waveDone) {
-        runLedgerCrawl(rootB, resumeWave + 1)
+        runLedgerCrawl(rootB, resumeWave + 1, ledger)
         artifacts.foreach(a => graft.core.Fs.deleteTree(s"$rootB/$a"))
         java.nio.file.Files.delete(
           java.nio.file.Paths.get(WaveLoop.manifestPath(rootB, resumeWave)))
       } else {
-        runLedgerCrawl(rootB, resumeWave)
+        runLedgerCrawl(rootB, resumeWave, ledger)
         for (a <- artifacts)
           org.apache.commons.io.FileUtils.copyDirectory(
             new java.io.File(s"$rootA/$a"), new java.io.File(s"$rootB/$a"))
       }
       assert(WaveLoop.committedWaves(rootB) == (0 until resumeWave))
-      // resume with a FRESH Ledger instance (same root): wave 1 re-runs
-      // against committed state only; a duplicate append is fenced by the
-      // wave column
-      runLedgerCrawl(rootB, 3)
+      // resume on the same root: wave 1 re-runs against committed state
+      // only; a duplicate append is fenced by the wave column
+      runLedgerCrawl(rootB, 3, ledger)
       def order(root: String) = WaveLoop.crawlOrder(spark, root)
         .select("wave", "slot", "host_rev", "canonical_url").collect().toSeq
-      def committed(root: String) = new Ledger(spark, root + "/seenstate", buckets = 4)
+      def committed(root: String) = crawlLedger(root)
         .committedFrame(2).select("url_hash", "canonical_url", "wave")
         .distinct().collect().map(_.toString).sorted.toSeq
       assert(order(rootA) == order(rootB))
@@ -405,5 +410,105 @@ class LedgerSpec extends AnyFunSuite {
     assert(!graft.core.Fs.exists(s"$root/tombstones"))
     val back = l.filterUnseen(keyed(0 until 600), 1).select("seed_idx").as[Long].collect().toSet
     assert(back == ((0L until 100L) ++ (300L until 350L)).toSet)
+  }
+
+  private def bloomFiles(root: String, wave: Int): Seq[String] = {
+    val dir = java.nio.file.Paths.get(root, "blooms", s"wave=$wave")
+    val st = java.nio.file.Files.walk(dir)
+    try {
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      st.forEach(p => if (p.toString.endsWith(".parquet")) out += dir.relativize(p).toString)
+      out.toSeq
+    } finally st.close()
+  }
+
+  test("two bank regimes: one file per wave, or no blooms/ at all") {
+    def delta(ids: Range) =
+      ids.map(i => (i.toLong, s"http://h.test/$i")).toDF("url_hash", "canonical_url")
+    val rootK = java.nio.file.Files.createTempDirectory("ledgerkept").toString
+    val rootN = java.nio.file.Files.createTempDirectory("ledgernone").toString
+    val kept = new Ledger(spark, rootK, buckets = 4)
+    val none = new Ledger(spark, rootN, buckets = 4, maxBankBytes = 0)
+    def unseen(cand: Range, upTo: Int) = Seq(kept, none).map(
+      _.filterUnseen(delta(cand), upTo).select("url_hash").as[Long].collect().sorted.toSeq)
+    // wave 0 through the two-pass write, wave 1 through the fused one
+    for (l <- Seq(kept, none)) { l.append(delta(0 until 100), 0); l.writeBlooms(delta(0 until 100), 0) }
+    assert(unseen(50 until 150, 0) == Seq.fill(2)((100L until 150L).toSeq))
+    for (l <- Seq(kept, none)) l.appendWithBlooms(delta(100 until 120), 1)
+    assert(unseen(90 until 130, 1) == Seq.fill(2)((120L until 130L).toSeq))
+    // under the ceiling: ONE bank file per wave, no per-bucket layout
+    for (w <- 0 to 1) assert(bloomFiles(rootK, w).size == 1, bloomFiles(rootK, w))
+    // at maxBankBytes = 0: no bank is ever written
+    assert(!graft.core.Fs.exists(s"$rootN/blooms"))
+  }
+
+  /** The bank rows a ledger holds: a private field, read here to show the
+    * held bank is the bank on disk.
+    */
+  private def held(l: Ledger): Seq[(Int, Seq[Byte])] = {
+    val f = classOf[Ledger].getDeclaredFields.find(_.getName.endsWith("heldRows")).get
+    f.setAccessible(true)
+    Option(f.get(l).asInstanceOf[Array[(Int, Array[Byte])]]).toSeq.flatten
+      .map { case (b, by) => (b, by.toSeq) }
+  }
+
+  private def diskBank(root: String, wave: Int): Seq[(Int, Seq[Byte])] =
+    spark.read.parquet(s"$root/blooms/wave=$wave").collect().toSeq
+      .map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("bloom").toSeq)).sortBy(_._1)
+
+  private def bankCollects(jobs: Seq[SparkTestSession.Job]): Int =
+    jobs.filter(_.sqlCallSite.exists(_.startsWith("collect at Ledger.scala")))
+      .flatMap(_.execution).distinct.size
+
+  test("held bank: a shared ledger collects no bank in steady waves; a fresh one reads it once") {
+    val root = java.nio.file.Files.createTempDirectory("ledgerheld").toString
+    val a = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096)
+    var expectedSeen = Set.empty[Long]
+    val collects = (0 until 4).map { w =>
+      val lo = w * 400 // half of each wave was seen the wave before
+      val (unseen, jobs) = SparkTestSession.jobsDuring {
+        val u = a.filterUnseen(keyed(lo until lo + 800), w - 1)
+          .select("seed_idx").as[Long].collect().toSet
+        a.appendWithBlooms(keyed(lo until lo + 800).where(col("seed_idx").isin(u.toSeq: _*))
+          .select("url_hash", "canonical_url"), w)
+        u
+      }
+      assert(unseen == (lo until lo + 800).map(_.toLong).toSet -- expectedSeen, s"wave $w")
+      expectedSeen ++= unseen
+      bankCollects(jobs)
+    }
+    assert(collects.drop(1) == Seq(0, 0, 0), s"bank collects per wave: $collects")
+    // the held bank is the bank on disk, and equals one aggregate over
+    // every committed key (bloom OR of the per-wave deltas)
+    assert(held(a) == diskBank(root, 3))
+    val whole = a.committedFrame(3)
+      .select(graft.functions.bloom_bank_agg(col("url_hash"), 8, 4096, 1e-2))
+      .head().getSeq[Array[Byte]](0).map(_.toSeq).zipWithIndex.map(_.swap)
+    assert(held(a) == whole)
+    // a fresh ledger on the same root: same answers, one bank read, same bytes
+    val probe = keyed(0 until 2400)
+    def answers(l: Ledger) = l.filterUnseen(probe, 3).select("seed_idx").as[Long].collect().toSet
+    val b = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096)
+    val (ub, bJobs) = SparkTestSession.jobsDuring(answers(b))
+    assert(bankCollects(bJobs) == 1)
+    assert(ub == answers(a) && ub == (2000L until 2400L).toSet)
+    assert(held(b) == held(a))
+    assert(bankCollects(SparkTestSession.jobsDuring(answers(b))._2) == 0)
+  }
+
+  test("held bank: a wave whose _SUCCESS is gone is never served from memory") {
+    val root = java.nio.file.Files.createTempDirectory("ledgerheldgone").toString
+    val l = new Ledger(spark, root, buckets = 8, expectedPerBucket = 4096)
+    for (w <- 0 until 3)
+      l.appendWithBlooms(keyed(w * 300 until (w + 1) * 300).select("url_hash", "canonical_url"), w)
+    assert(held(l) == diskBank(root, 2))
+    // the wave-2 bank reads as absent: the probe falls back to wave 1's
+    // bank plus the anti-join of the uncovered wave-2 slice
+    graft.core.Fs.deleteIfExists(s"$root/blooms/wave=2/_SUCCESS")
+    val (unseen, jobs) = SparkTestSession.jobsDuring(
+      l.filterUnseen(keyed(0 until 1200), 2).select("seed_idx").as[Long].collect().toSet)
+    assert(unseen == (900L until 1200L).toSet)
+    assert(bankCollects(jobs) == 1, "the wave-1 bank is read from disk")
+    assert(held(l) == diskBank(root, 1))
   }
 }

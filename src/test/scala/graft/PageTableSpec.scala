@@ -44,8 +44,8 @@ class PageTableSpec extends AnyFunSuite {
     assert(v1 == 0 && v2 == 1)
     // latest = v1 rows + delta rows (row-level append semantics)
     assert(PageTable.read(spark, root).count() == 50 + nDelta)
-    // readAsOf(v1) returns v1's rows exactly
-    val asOf = PageTable.readAsOf(spark, root, v1)
+    // read as of v1 returns v1's rows exactly
+    val asOf = PageTable.read(spark, root, Some(v1))
     assert(asOf.count() == 50)
     assert(asOf.select("url").as[String].collect().sorted.toSeq ==
       pagesDf(50).select("url").as[String].collect().sorted.toSeq)
@@ -75,8 +75,8 @@ class PageTableSpec extends AnyFunSuite {
     assert(PageTable.committedSnapshots(root) == Seq(2, 3))
     // survivors read exactly as before: v3 = v2's files + v3's delta
     assert(PageTable.read(spark, root).count() == v3Count)
-    assert(PageTable.readAsOf(spark, root, 2).count() == 10)
-    intercept[IllegalArgumentException](PageTable.readAsOf(spark, root, 0))
+    assert(PageTable.read(spark, root, Some(2)).count() == 10)
+    intercept[IllegalArgumentException](PageTable.read(spark, root, Some(0)))
     // idempotent: nothing left to expire at the same horizon
     assert(PageTable.expireSnapshots(root, 2) == ((Seq.empty, Seq.empty)))
   }
@@ -142,9 +142,9 @@ class PageTableSpec extends AnyFunSuite {
       df.select(col("url"), col("full_text"), size(col("chunks")).as("nc"),
           size(col("embeddings")).as("ne"))
         .as[(String, String, Int, Int)].collect().sorted.toSeq
-    val full = key(pipe(PageTable.readAsOf(spark, root, v2)))
+    val full = key(pipe(PageTable.read(spark, root, Some(v2))))
     val incremental = key(
-      pipe(PageTable.readAsOf(spark, root, v1))
+      pipe(PageTable.read(spark, root, Some(v1)))
         .unionByName(pipe(PageTable.changesOf(spark, root, v2))))
     assert(full == incremental)
   }

@@ -346,48 +346,6 @@ class AuthorityLoopSpec extends AnyFunSuite {
   }
 }
 
-class BloomLayoutSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  private def delta(ids: Range) =
-    ids.map(i => (i.toLong, s"http://h.test/$i")).toDF("url_hash", "canonical_url")
-
-  test("size-adaptive bank: one file when small, per-bucket above threshold, same answers") {
-    import graft.frontier.Ledger
-    def files(root: String, wave: Int): Seq[String] = {
-      val dir = java.nio.file.Paths.get(root, "blooms", s"wave=$wave")
-      val st = java.nio.file.Files.walk(dir)
-      try {
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        st.forEach(p => if (p.toString.endsWith(".parquet"))
-          out += dir.relativize(p).toString)
-        out.toSeq
-      } finally st.close()
-    }
-    val rootS = java.nio.file.Files.createTempDirectory("ledgerlayS").toString
-    val small = new Ledger(spark, rootS, buckets = 4)
-    small.append(delta(0 until 100), 0); small.writeBlooms(delta(0 until 100), 0)
-    assert(files(rootS, 0).size == 1, files(rootS, 0))
-    assert(!files(rootS, 0).head.contains("bucket="))
-    val rootB = java.nio.file.Files.createTempDirectory("ledgerlayB").toString
-    val big = new Ledger(spark, rootB, buckets = 4, bankSingleFileBytes = 0L)
-    big.append(delta(0 until 100), 0); big.writeBlooms(delta(0 until 100), 0)
-    assert(files(rootB, 0).forall(_.contains("bucket=")), files(rootB, 0))
-    assert(files(rootB, 0).size == 4)
-    // both layouts answer identically
-    val cand = delta(50 until 150)
-    val u1 = small.filterUnseen(cand, 0).select("url_hash").as[Long].collect().sorted.toSeq
-    val u2 = big.filterUnseen(cand, 0).select("url_hash").as[Long].collect().sorted.toSeq
-    assert(u1 == (100L until 150L).toSeq && u2 == u1)
-    // incremental merge reads a single-file predecessor fine
-    small.append(delta(100 until 120), 1); small.writeBlooms(delta(100 until 120), 1)
-    val u3 = small.filterUnseen(delta(90 until 130), 1)
-      .select("url_hash").as[Long].collect().sorted.toSeq
-    assert(u3 == (120L until 130L).toSeq)
-  }
-}
-
 class DupSpansSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -568,38 +526,6 @@ class CrawlRankSpec extends AnyFunSuite {
     val s3 = byNode(hashes.getLong(3)); val s1 = byNode(hashes.getLong(1))
     val s0 = byNode(hashes.getLong(0))
     assert(s3 > s1 && s1 > s0, s"scores not ordered by authority: $byNode")
-  }
-}
-
-class QuantizedPoolSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  test("composition: chunk meanPool -> int8 quantize -> brute-force rank agrees with float path") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(31)
-    // 120 docs x 4 chunks, clustered chunk embeddings
-    val chunks = (0 until 480).map { i =>
-      val doc = i / 4
-      val center = doc % 6
-      (doc.toLong, Array.tabulate(24)(d =>
-        (math.sin(center * 17 + d) + rnd.nextGaussian() * 0.08).toFloat))
-    }.toDF("doc", "vec")
-    val pooled = graft.ann.Ann.meanPool(chunks, "doc", "vec")
-      .withColumnRenamed("doc_embedding", "embedding")
-    val queries = pooled.where(col("doc") < 8)
-    val exact = graft.ann.Ann.bruteForceTopK(pooled, queries,
-      "doc", "doc", "embedding", k = 5)
-      .select("q_id", "nn_id").as[(Long, Long)].collect().groupBy(_._1)
-    val q8 = graft.ann.Ann.quantizeInt8(pooled, "embedding")
-    val viaInt8 = graft.ann.Ann.bruteForceTopKInt8(q8, queries,
-      "doc", "doc", "embedding", k = 5)
-      .select("q_id", "nn_id").as[(Long, Long)].collect().groupBy(_._1)
-    val overlap = (0L until 8L).map { q =>
-      (exact(q).map(_._2).toSet intersect viaInt8(q).map(_._2).toSet).size / 5.0
-    }.sum / 8.0
-    assert(overlap >= 0.9, s"pooled->quantized rank overlap $overlap")
-    for (q <- 0L until 8L) assert(viaInt8(q).map(_._2).contains(q)) // self at top-5
   }
 }
 
