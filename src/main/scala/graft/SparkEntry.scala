@@ -63,6 +63,15 @@ object SparkEntry {
       col("doc_id").as("seed_idx"),
       col("lang"))
 
+  /** `fetch_seq`: the schedule's global crawl order, row_number by (slot,
+    * host_rev, `tiebreak`). FIXTURE-ONLY total order (sf oracle scale): a
+    * global unpartitioned window is a single-task sort — never copy into a
+    * production path; the production rank is Scheduler.perHostRankSalted.
+    */
+  private def withFetchSeq(tiebreak: String)(sched: DataFrame): DataFrame =
+    sched.withColumn("fetch_seq", row_number().over(
+      Window.orderBy(col("slot"), col("host_rev"), col(tiebreak))).cast("long"))
+
   /** Messy-URL frontier (uppercase scheme/host, default port, dot-segments,
     * pct-encoded unreserved, fragment) for the canonicalizer.
     */
@@ -162,12 +171,7 @@ object SparkEntry {
         .select("url", "canonical_url", "url_hash", "host", "host_rev", "seed_idx")
       val sched = Scheduler.schedule(f, gapSeconds = 3L, salted = true)
       sched
-        .withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-        // window is a single-task sort — never copy into a production path;
-        // the production rank is Scheduler.perHostRankSalted.
-        row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("seed_idx")))
-            .cast("long"))
+        .transform(withFetchSeq("seed_idx"))
         .select(col("fetch_seq"), col("slot"), col("host_rev"), col("canonical_url"),
           col("seed_idx"), col("host_pos"))
         .orderBy("fetch_seq")
@@ -621,12 +625,7 @@ object SparkEntry {
       val sched = Scheduler.schedule(withGap, gapSeconds = 3L, salted = true,
         gapCol = Some(col("gap_seconds")))
       sched
-        .withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-        // window is a single-task sort — never copy into a production path;
-        // the production rank is Scheduler.perHostRankSalted.
-        row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("seed_idx")))
-            .cast("long"))
+        .transform(withFetchSeq("seed_idx"))
         .select(col("fetch_seq"), col("slot"), col("host_rev"), col("canonical_url"),
           col("seed_idx"), col("host_pos"), col("gap_seconds"))
         .orderBy("fetch_seq")
@@ -820,12 +819,7 @@ object SparkEntry {
           Scheduler.priorityOrderKey(col("priority"), col("seed_idx")))
         .drop("target")
       Scheduler.schedule(f, gapSeconds = 3L, salted = true, orderCol = "order_key")
-        .withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-          // window is a single-task sort — never copy into a production path;
-          // the production rank is Scheduler.perHostRankSalted.
-          row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("order_key")))
-            .cast("long"))
+        .transform(withFetchSeq("order_key"))
         .select(col("fetch_seq"), col("slot"), col("host_rev"), col("canonical_url"),
           col("seed_idx"), col("priority"), col("host_pos"))
         .orderBy("fetch_seq")
@@ -2302,12 +2296,7 @@ object SparkEntry {
         .select("canonical_url", "host_rev", "seed_idx")
       val sched = Scheduler.schedule(f, gapSeconds = 3L, salted = true)
       val (kept, _) = Scheduler.capPerHost(sched, 15L)
-      kept.withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-        // window is a single-task sort — never copy into a production path;
-        // the production rank is Scheduler.perHostRankSalted.
-        row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("seed_idx")))
-            .cast("long"))
+      kept.transform(withFetchSeq("seed_idx"))
         .select("fetch_seq", "slot", "host_rev", "canonical_url", "seed_idx", "host_pos")
         .orderBy("fetch_seq")
     }),
@@ -2369,12 +2358,7 @@ object SparkEntry {
           Scheduler.priorityOrderKey(col("priority"), col("seed_idx")))
         .drop("target")
       Scheduler.schedule(f, gapSeconds = 3L, salted = true, orderCol = "order_key")
-        .withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-        // window is a single-task sort — never copy into a production path;
-        // the production rank is Scheduler.perHostRankSalted.
-        row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("order_key")))
-            .cast("long"))
+        .transform(withFetchSeq("order_key"))
         .select(col("fetch_seq"), col("slot"), col("host_rev"), col("canonical_url"),
           col("seed_idx"), col("priority"), col("host_pos"))
         .orderBy("fetch_seq")
@@ -2390,12 +2374,7 @@ object SparkEntry {
       val gaps = Scheduler.adaptiveGaps(metrics, base = 1L, scale = 3)
       Scheduler.schedule(f.join(gaps, Seq("host")), salted = true,
           gapCol = Some(col("gap_seconds")))
-        .withColumn("fetch_seq",
-          // FIXTURE-ONLY total order (sf oracle scale): a global unpartitioned
-        // window is a single-task sort — never copy into a production path;
-        // the production rank is Scheduler.perHostRankSalted.
-        row_number().over(Window.orderBy(col("slot"), col("host_rev"), col("seed_idx")))
-            .cast("long"))
+        .transform(withFetchSeq("seed_idx"))
         .select(col("fetch_seq"), col("slot"), col("host_rev"), col("canonical_url"),
           col("seed_idx"), col("host_pos"), col("gap_seconds"))
         .orderBy("fetch_seq")

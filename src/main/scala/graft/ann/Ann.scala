@@ -20,7 +20,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    one bucket's candidates.
   */
 /** Broadcast IVF centroid matrix with a per-deserialized-instance memo
-  * (same pattern as [[graft.functions.BloomBank]] — the memo keeps the
+  * (same pattern as [[graft.functions.FilterBank]] — the memo keeps the
   * broadcast `value()` call off the per-row path).
   */
 final class IvfCentroids(

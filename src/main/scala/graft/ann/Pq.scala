@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import graft.functions.KernelCall
 
 /** Product quantization for ANN (Jégou, Douze & Schmid, PAMI '11) — the
   * memory lever past int8: a `dim`-float vector compresses to `m` one-byte
@@ -272,37 +272,21 @@ object PqEval {
 }
 
 /** vec → ARRAY<INT> PQ codes (one codegen pass/row). */
-case class PqEncode(books: PqBooks, child: Expression) extends UnaryExpression {
+case class PqEncode(books: PqBooks, child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  private def elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def nullSafeEval(v: Any): Any =
-    PqEval.encode(books, v.asInstanceOf[ArrayData], elemIsDouble)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftPqBooks", books, classOf[PqBooks].getName)
-    defineCodeGen(ctx, ev, c => s"graft.ann.PqEval.encode($ref, $c, $elemIsDouble)")
-  }
+  override protected def call: Expression =
+    static(PqEval, "encode", const(books), child, Literal(elemIsDouble(child)))
   override protected def withNewChildInternal(c: Expression): PqEncode = copy(child = c)
   override def prettyName: String = "pq_encode"
 }
 
 /** query vec → flattened m·ksub ADC table (once per query row). */
-case class PqAdcTable(books: PqBooks, child: Expression) extends UnaryExpression {
+case class PqAdcTable(books: PqBooks, child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  private def elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def nullSafeEval(v: Any): Any =
-    PqEval.table(books, v.asInstanceOf[ArrayData], elemIsDouble)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftPqBooks", books, classOf[PqBooks].getName)
-    defineCodeGen(ctx, ev, c => s"graft.ann.PqEval.table($ref, $c, $elemIsDouble)")
-  }
+  override protected def call: Expression =
+    static(PqEval, "table", const(books), child, Literal(elemIsDouble(child)))
   override protected def withNewChildInternal(c: Expression): PqAdcTable = copy(child = c)
   override def prettyName: String = "pq_adc_table"
 }
@@ -311,14 +295,12 @@ case class PqAdcTable(books: PqBooks, child: Expression) extends UnaryExpression
   * vectors anywhere near the hot path.
   */
 case class PqAdcLookup(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   require(ksub >= 1, s"ksub: $ksub")
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(t: Any, c: Any): Any =
-    PqEval.lookup(t.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, c) => s"graft.ann.PqEval.lookup($t, $c, $ksub)")
+  override protected def call: Expression =
+    static(PqEval, "lookup", left, right, Literal(ksub))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcLookup =
     copy(left = l, right = r)
   override def prettyName: String = "pq_adc"

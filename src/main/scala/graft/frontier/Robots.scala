@@ -3,6 +3,10 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import graft.functions.KernelCall
 
 /** Robots.txt gate.
   *
@@ -240,59 +244,29 @@ object Robots {
 /** (host, path) → allowed? over broadcast PARSED [[Robots.FullRules]]
   * (longest-match Allow/Disallow precedence, RFC 9309). The rules ride a
   * TorrentBroadcast (bytes once per executor, not per task) and the probe
-  * stays inside whole-stage codegen via `addReferenceObj`.
+  * stays inside whole-stage codegen as a call on the broadcast's value.
   */
-case class RobotsFullAllowedExpr(
-    bc: org.apache.spark.broadcast.Broadcast[Robots.FullRules],
-    left: org.apache.spark.sql.catalyst.expressions.Expression,
-    right: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{BooleanType, DataType}
-  import org.apache.spark.unsafe.types.UTF8String
-
+case class RobotsFullAllowedExpr(bc: Broadcast[Robots.FullRules],
+    left: Expression, right: Expression) extends BinaryExpression with KernelCall {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(host: Any, path: Any): Any =
-    bc.value.allows(host.asInstanceOf[UTF8String].toString, path.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftRobotsFull", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[Robots.FullRules]].getName)
-    defineCodeGen(ctx, ev, (h, p) =>
-      s"((graft.frontier.Robots.FullRules) $ref.value()).allows($h.toString(), $p.toString())")
-  }
-  override protected def withNewChildrenInternal(
-      l: org.apache.spark.sql.catalyst.expressions.Expression,
-      r: org.apache.spark.sql.catalyst.expressions.Expression): RobotsFullAllowedExpr =
-    copy(left = l, right = r)
+  override protected def call: Expression =
+    invoke(broadcastValue(bc, classOf[Robots.FullRules]), "allows", str(left), str(right))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression)
+      : RobotsFullAllowedExpr = copy(left = l, right = r)
   override def prettyName: String = "robots_allowed_full"
 }
 
 /** host → per-host politeness gap (Crawl-delay, whole seconds) over
   * broadcast [[Robots.FullRules]] — the scheduler's per-host slot width.
   */
-case class RobotsGapExpr(
-    bc: org.apache.spark.broadcast.Broadcast[Robots.FullRules],
-    child: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, LongType}
-  import org.apache.spark.unsafe.types.UTF8String
-
+case class RobotsGapExpr(bc: Broadcast[Robots.FullRules], child: Expression)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(host: Any): Any =
-    bc.value.gapSeconds(host.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftRobotsFull", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[Robots.FullRules]].getName)
-    defineCodeGen(ctx, ev, h =>
-      s"((graft.frontier.Robots.FullRules) $ref.value()).gapSeconds($h.toString())")
-  }
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): RobotsGapExpr =
+  override protected def call: Expression =
+    invoke(broadcastValue(bc, classOf[Robots.FullRules]), "gapSeconds", str(child))
+  override protected def withNewChildInternal(c: Expression): RobotsGapExpr =
     copy(child = c)
   override def prettyName: String = "robots_gap"
 }
@@ -302,26 +276,13 @@ case class RobotsGapExpr(
   * body is a column. A real crawl parses each host once into broadcast
   * [[Robots.FullRules]] instead (see [[RobotsGapExpr]]).
   */
-case class RobotsGapSeconds(
-    child: org.apache.spark.sql.catalyst.expressions.Expression,
-    agent: String, defaultGap: Long)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, LongType}
-  import org.apache.spark.unsafe.types.UTF8String
-
+case class RobotsGapSeconds(child: Expression, agent: String, defaultGap: Long)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(txt: Any): Any =
-    Robots.gapSecondsOf(txt.asInstanceOf[UTF8String].toString, agent, defaultGap)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = ctx.addReferenceObj("graftAgent", agent, "java.lang.String")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.frontier.Robots.gapSecondsOf($t.toString(), $a, ${defaultGap}L)")
-  }
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): RobotsGapSeconds =
+  override protected def call: Expression =
+    static(Robots, "gapSecondsOf", str(child), const(agent), Literal(defaultGap))
+  override protected def withNewChildInternal(c: Expression): RobotsGapSeconds =
     copy(child = c)
   override def prettyName: String = "robots_gap_seconds"
 }
@@ -329,29 +290,13 @@ case class RobotsGapSeconds(
 /** (robots.txt body, path) → allowed? for `agent` — per-row parser twin of
   * [[RobotsGapSeconds]] for fixtures/oracles.
   */
-case class RobotsTxtAllows(
-    left: org.apache.spark.sql.catalyst.expressions.Expression,
-    right: org.apache.spark.sql.catalyst.expressions.Expression,
-    agent: String)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{BooleanType, DataType}
-  import org.apache.spark.unsafe.types.UTF8String
-
+case class RobotsTxtAllows(left: Expression, right: Expression, agent: String)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(txt: Any, path: Any): Any =
-    Robots.txtAllows(txt.asInstanceOf[UTF8String].toString, agent,
-      path.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = ctx.addReferenceObj("graftAgent", agent, "java.lang.String")
-    defineCodeGen(ctx, ev, (t, p) =>
-      s"graft.frontier.Robots.txtAllows($t.toString(), $a, $p.toString())")
-  }
-  override protected def withNewChildrenInternal(
-      l: org.apache.spark.sql.catalyst.expressions.Expression,
-      r: org.apache.spark.sql.catalyst.expressions.Expression): RobotsTxtAllows =
+  override protected def call: Expression =
+    static(Robots, "txtAllows", str(left), const(agent), str(right))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsTxtAllows =
     copy(left = l, right = r)
   override def prettyName: String = "robots_txt_allows"
 }

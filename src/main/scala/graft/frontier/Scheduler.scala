@@ -45,8 +45,8 @@ object Scheduler {
     * ~64 buckets regardless of key magnitude. A fixed width against an
     * unknown key range is a trap measured the hard way: 100k-wide buckets
     * over a 10^9 key range made the "tiny" offsets frame ~1M rows — a
-    * multi-second driver-side broadcast build per wave. The extra min/max
-    * scan is one cheap column-stat job.
+    * multi-second driver-side broadcast build per wave. The min/max are
+    * observed on the pass that materializes the input: no extra job.
     *
     * `offsetsJoin` — how the per-(host,bucket) offsets come back to the big
     * frame. At 10^8+ hosts the offsets frame (hosts × ~64 rows) outgrows
@@ -68,22 +68,20 @@ object Scheduler {
     // are separate consumers of the same frame, so without this the caller's
     // whole upstream executes twice (the round-5 bench plan showed the full
     // scan→bloom→anti-join→in-wave-window chain duplicated under the offsets
-    // BroadcastExchange), and the no-range width probe would make it three.
-    // One pass + a narrow cache beats 2-3 passes for every caller whose
-    // upstream is more than a bare scan — which is every production wave.
-    val frozen = df.localCheckpoint(true)
-    val width =
-      if (bucketWidth > 0) bucketWidth
-      else orderKeyRange match {
-        case Some((lo, hi)) => math.max(1L, (hi - lo) / 64L + 1L)
-        case None =>
-          // cheap now: a column-stat scan over the materialized blocks (any
-          // superset range yields identical ranks — the bucketing only
-          // needs consistent ordered segments)
-          val mm = frozen.agg(min(col(orderCol)).as("lo"), max(col(orderCol)).as("hi")).collect()(0)
-          if (mm.isNullAt(0)) 1L
-          else math.max(1L, (mm.getAs[Long]("hi") - mm.getAs[Long]("lo")) / 64L + 1L)
-      }
+    // BroadcastExchange). One pass + a narrow cache beats two passes for
+    // every caller whose upstream is more than a bare scan — which is every
+    // production wave. With no width and no range given, the orderKey's
+    // min/max ride that same pass (any superset range yields identical
+    // ranks — the bucketing only needs consistent ordered segments; an
+    // empty frame reads 0/0, width 1).
+    def span(lo: Long, hi: Long): Long = math.max(1L, (hi - lo) / 64L + 1L)
+    val (frozen, width) = orderKeyRange match {
+      case _ if bucketWidth > 0 => (df.localCheckpoint(true), bucketWidth)
+      case Some((lo, hi)) => (df.localCheckpoint(true), span(lo, hi))
+      case None =>
+        val (f, m) = graft.core.Rounds.materialize(df, min(col(orderCol)), max(col(orderCol)))
+        (f, span(m(1), m(2)))
+    }
     val bucketed = frozen.withColumn("_bucket", (col(orderCol) / width).cast("long"))
     val wInBucket = Window.partitionBy(col(hostCol), col("_bucket")).orderBy(col(orderCol))
     val ranked = bucketed.withColumn("_rank_in_bucket", row_number().over(wInBucket).cast("long"))

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Count-min sketch over BIGINT keys (Cormode & Muthukrishnan '05) — the
@@ -132,35 +131,22 @@ case class CmsAgg(
 }
 
 /** Frequency estimate probe: (sketch BINARY, key BIGINT) → BIGINT.
-  * Literal-cached per thread like the bloom/cuckoo probes; codegen'd.
+  * Literal-cached per thread like the cuckoo probe ([[CmsProbe]]).
   */
-case class CmsEstimate(sketchBytes: Expression, key: Expression)
-    extends BinaryExpression {
-  override def left: Expression = sketchBytes
-  override def right: Expression = key
+case class CmsEstimate(left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(s: Any, k: Any): Any =
-    CmsProbe.estimate(s.asInstanceOf[Array[Byte]], k.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, k) => s"graft.functions.CmsProbe.estimate($s, $k)")
-
+  override protected def call: Expression = static(CmsProbe, "estimate", left, right)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEstimate =
-    copy(sketchBytes = l, key = r)
+    copy(left = l, right = r)
   override def prettyName: String = "cms_estimate"
 }
 
 object CmsProbe {
-  private val last = new ThreadLocal[(Array[Byte], (Int, Int, Array[Long]))]
+  private val last = new LastDecoded(CmSketch.deserialize)
   def estimate(bytes: Array[Byte], key: Long): Long = {
-    var e = last.get()
-    if (e == null || (e._1 ne bytes)) {
-      e = (bytes, CmSketch.deserialize(bytes))
-      last.set(e)
-    }
-    val (d, w, c) = e._2
+    val (d, w, c) = last(bytes)
     CmSketch.estimate(d, w, c, key)
   }
 }

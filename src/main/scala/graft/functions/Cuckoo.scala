@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Partial-key cuckoo filter over BIGINT keys (Fan et al., "Cuckoo Filter:
@@ -319,99 +318,21 @@ case class CuckooAgg(
 }
 
 /** Cuckoo membership probe: (serialized filter BINARY, key BIGINT) →
-  * BOOLEAN. The filter side is a Literal, deserialized once per distinct
-  * array reference per thread.
+  * BOOLEAN. The filter side is a Literal, decoded once per distinct
+  * array reference per thread ([[CuckooProbe]]).
   */
-case class CuckooMightContain(filterBytes: Expression, key: Expression)
-    extends BinaryExpression {
-  override def left: Expression = filterBytes
-  override def right: Expression = key
+case class CuckooMightContain(left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(f: Any, k: Any): Any =
-    CuckooProbe.mightContain(f.asInstanceOf[Array[Byte]], k.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (f, k) => s"graft.functions.CuckooProbe.mightContain($f, $k)")
-
+  override protected def call: Expression =
+    static(CuckooProbe, "mightContain", left, right)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooMightContain =
-    copy(filterBytes = l, key = r)
+    copy(left = l, right = r)
   override def prettyName: String = "cuckoo_might_contain"
 }
 
-/** Static probe entry for [[CuckooMightContain]] codegen — a per-thread
-  * last-reference memo: the filter side is a Literal (one array instance
-  * per task), so each task deserializes it once.
-  */
 object CuckooProbe {
-  private val last = new ThreadLocal[(Array[Byte], CuckooFilter)]
-  def mightContain(bytes: Array[Byte], key: Long): Boolean = {
-    var e = last.get()
-    if (e == null || (e._1 ne bytes)) {
-      e = (bytes, CuckooFilter.deserialize(bytes))
-      last.set(e)
-    }
-    e._2.mightContain(key)
-  }
-}
-
-/** A bank of per-bucket cuckoo filters riding one TorrentBroadcast — the
-  * partitioned form the north rule names ("partitioned bloom/cuckoo URL-seen
-  * set"). Identical lifecycle discipline to [[BloomBank]]: UUID cache key
-  * (broadcast ids restart per SparkContext), per-instance lock-free memo
-  * after one synchronized resolution.
-  */
-class CuckooBank(bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Byte])]])
-    extends Serializable {
-  private val bankId: String = java.util.UUID.randomUUID().toString
-
-  @transient private var local: java.util.HashMap[Int, CuckooFilter] = _
-
-  def mightContain(bucket: Int, key: Long): Boolean = {
-    var m = local
-    if (m == null) { m = CuckooBank.cached(bankId, bc); local = m }
-    val f = m.get(bucket)
-    f != null && f.mightContain(key)
-  }
-}
-object CuckooBank {
-  private val MaxEntries = 32
-  private val cache = new java.util.LinkedHashMap[String, java.util.HashMap[Int, CuckooFilter]](
-    16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, java.util.HashMap[Int, CuckooFilter]]): Boolean =
-      size() > MaxEntries
-  }
-  private[functions] def cached(
-      bankId: String,
-      bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Byte])]])
-      : java.util.HashMap[Int, CuckooFilter] = cache.synchronized {
-    val hit = cache.get(bankId)
-    if (hit != null) hit
-    else {
-      val built = new java.util.HashMap[Int, CuckooFilter]()
-      bc.value.foreach { case (b, bytes) => built.put(b, CuckooFilter.deserialize(bytes)) }
-      cache.put(bankId, built)
-      built
-    }
-  }
-}
-
-/** Probe a [[CuckooBank]]: (bucket INT, key BIGINT) → BOOLEAN. */
-case class CuckooBankProbe(bank: CuckooBank, bucket: Expression, key: Expression)
-    extends BinaryExpression {
-  override def left: Expression = bucket
-  override def right: Expression = key
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(b: Any, k: Any): Any =
-    bank.mightContain(b.asInstanceOf[Int], k.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftCuckooBank", bank, classOf[CuckooBank].getName)
-    defineCodeGen(ctx, ev, (b, k) => s"$ref.mightContain($b, $k)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooBankProbe =
-    copy(bucket = l, key = r)
-  override def prettyName: String = "cuckoo_bank_probe"
+  private val last = new LastDecoded(CuckooFilter.deserialize)
+  def mightContain(bytes: Array[Byte], key: Long): Boolean = last(bytes).mightContain(key)
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** HyperLogLog distinct-count sketch (Flajolet et al., AofA '07) — the
@@ -224,13 +223,10 @@ case class HllMergeAgg(
 }
 
 /** Cardinality probe: sketch BINARY → BIGINT fixed-point estimate. */
-case class HllCard(child: Expression) extends UnaryExpression {
+case class HllCard(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    HllProbe.card(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllProbe.card($c)")
+  override protected def call: Expression = static(HllProbe, "card", child)
   override protected def withNewChildInternal(c: Expression): HllCard = copy(c)
   override def prettyName: String = "hll_card"
 }
@@ -255,13 +251,10 @@ object HllProbe {
   * column arithmetic when they operate in the n ≲ m regime the fixed-point
   * estimate deliberately ignores.
   */
-case class HllZeros(child: Expression) extends UnaryExpression {
+case class HllZeros(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    HllProbe.zeros(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllProbe.zeros($c)")
+  override protected def call: Expression = static(HllProbe, "zeros", child)
   override protected def withNewChildInternal(c: Expression): HllZeros = copy(c)
   override def prettyName: String = "hll_zeros"
 }
@@ -269,13 +262,10 @@ case class HllZeros(child: Expression) extends UnaryExpression {
 /** Register count `m = 2^p` of a sketch image (companion to [[HllZeros]]
   * for the linear-counting arithmetic).
   */
-case class HllM(child: Expression) extends UnaryExpression {
+case class HllM(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    HllProbe.m(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllProbe.m($c)")
+  override protected def call: Expression = static(HllProbe, "m", child)
   override protected def withNewChildInternal(c: Expression): HllM = copy(c)
   override def prettyName: String = "hll_m"
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,12 +13,12 @@ import graft.embed.HashEmbed
 import graft.text.{Chunker, HtmlText, TextStats}
 import graft.url.UrlKit
 
-/** Static eval helpers referenced BY GENERATED CODE (whole-stage codegen
-  * emits `graft.functions.Impl.xxx(...)` calls), so every custom expression
-  * stays inside the codegen'd stage instead of forcing an interpreted
-  * fallback — the "native Catalyst Expression beats UDF" rule from the north
-  * design. Methods take/return Catalyst internal types (UTF8String,
-  * ArrayData) to avoid per-row codec churn.
+/** The kernel calls the custom expressions bind through [[KernelCall]]:
+  * whole-stage codegen emits `graft.functions.Impl.xxx(...)` directly, so
+  * every custom expression stays inside the codegen'd stage instead of
+  * forcing an interpreted fallback — the "native Catalyst Expression beats
+  * UDF" rule from the north design. Methods take/return Catalyst internal
+  * types (UTF8String, ArrayData) to avoid per-row codec churn.
   */
 object Impl {
   def repetitionStats(t: UTF8String): InternalRow = {
@@ -60,6 +60,9 @@ object Impl {
 
   def simHash64(text: UTF8String): Long = TextStats.simHash64(text.toString)
 
+  def minHashSig(text: UTF8String, k: Int, coeffs: Array[(Long, Long)]): ArrayData =
+    ArrayData.toArrayData(TextStats.minHashSignature(text.toString, k, coeffs))
+
   def langId(text: UTF8String): UTF8String =
     UTF8String.fromString(TextStats.langId(text.toString))
 
@@ -91,9 +94,6 @@ object Impl {
     val r = UrlKit.resolve(base.toString, ref.toString)
     if (r == null) null else UTF8String.fromString(r)
   }
-
-  def srpBucket(v: ArrayData, bits: Int, seed: Int, elemIsDouble: Boolean): Int =
-    SrpEval.bucket(v, bits, seed, elemIsDouble)
 
   /** Token n-gram hash kernel shared by [[NgramHashKeys]] /
     * [[NgramHashes]]: one scan tokenizes (whitespace runs, empties
@@ -204,9 +204,8 @@ object Impl {
     * pre-tokenization hygiene step (decomposed é = e + U+0301 must equal
     * composed é for every downstream hash/dedup/count operator).
     */
-  def normalizeUnicode(t: UTF8String, form: String): UTF8String =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      t.toString, java.text.Normalizer.Form.valueOf(form)))
+  def normalizeUnicode(t: UTF8String, form: java.text.Normalizer.Form): UTF8String =
+    UTF8String.fromString(java.text.Normalizer.normalize(t.toString, form))
 
   /** ARRAY<TINYINT> → packed binary, one byte per component (the DISK form
     * of an int8 embedding — Parquet stores tinyint arrays at INT32 physical
@@ -244,8 +243,8 @@ object Impl {
   * PRECOMPUTED once per (bits, seed, dim) and cached per JVM — the codegen
   * path does `dim` float fmas per bit instead of `dim` murmur hashes per bit
   * per row (the round-1 udf recomputed bits×dim hashes for every row).
-  * Bit-for-bit identical to [[graft.embed.HashEmbed.srpBucket]], which stays
-  * as the 20-line spec twin the tests compare against.
+  * Bit-for-bit identical to `SrpReference.srpBucket`, the test-scope spec
+  * twin the tests compare against.
   */
 object SrpEval {
   private val cache =
@@ -279,67 +278,49 @@ object SrpEval {
   }
 }
 
-/** RFC 3986 canonicalization (SURVEY.md §2.3). String → String, null-safe,
-  * codegen'd via static call.
-  */
-case class CanonicalizeUrl(child: Expression)
-    extends UnaryExpression {
+/** RFC 3986 canonicalization (SURVEY.md §2.3). String → String, null-safe. */
+case class CanonicalizeUrl(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.canonicalizeUrl(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.canonicalizeUrl($c)")
+  override protected def call: Expression = static(Impl, "canonicalizeUrl", child)
   override protected def withNewChildInternal(c: Expression): CanonicalizeUrl = copy(c)
   override def prettyName: String = "canonicalize_url"
 }
 
 /** Host of a URL ("" if unparseable). */
-case class HostOf(child: Expression)
-    extends UnaryExpression {
+case class HostOf(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.hostOf(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.hostOf($c)")
+  override protected def call: Expression = static(Impl, "hostOf", child)
   override protected def withNewChildInternal(c: Expression): HostOf = copy(c)
   override def prettyName: String = "host_of"
 }
 
 /** SURT-style host reversal (input = a host, not a URL). */
-case class HostReverse(child: Expression)
-    extends UnaryExpression {
+case class HostReverse(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.hostReverse(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.hostReverse($c)")
+  override protected def call: Expression = static(Impl, "hostReverse", child)
   override protected def withNewChildInternal(c: Expression): HostReverse = copy(c)
   override def prettyName: String = "host_reverse"
 }
 
 /** Content-type sniff over fetched bytes (WHATWG magic-byte subset;
-  * [[graft.multimodal.Mime]]). Binary in, mime string out, codegen'd.
+  * [[graft.multimodal.Mime]]). Binary in, mime string out.
   */
-case class SniffMime(child: Expression)
-    extends UnaryExpression {
+case class SniffMime(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    graft.multimodal.Mime.sniff(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.multimodal.Mime.sniff($c)")
+  override protected def call: Expression = static(graft.multimodal.Mime, "sniff", child)
   override protected def withNewChildInternal(c: Expression): SniffMime = copy(c)
   override def prettyName: String = "sniff_mime"
 }
 
 /** Full text invariant: extract + preprocess (reference `:72-99`). */
-case class ExtractReadable(child: Expression)
-    extends UnaryExpression {
+case class ExtractReadable(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.extractReadable(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.extractReadable($c)")
+  override protected def call: Expression = static(Impl, "extractReadable", child)
   override protected def withNewChildInternal(c: Expression): ExtractReadable = copy(c)
   override def prettyName: String = "extract_readable"
 }
@@ -351,31 +332,26 @@ case class ExtractReadable(child: Expression)
   * stages, and needs no `transform(chunks, hash_embed)` (Spark runs
   * `ArrayTransform` interpreted: it is `CodegenFallback`).
   */
-case class PageResults(child: Expression)
-    extends UnaryExpression {
+case class PageResults(child: Expression) extends UnaryExpression with KernelCall {
   override val dataType: DataType = StructType(Seq(
     StructField("full_text", StringType, nullable = false),
     StructField("chunks", ArrayType(StringType, containsNull = false), nullable = false),
     StructField("embeddings", ArrayType(ArrayType(FloatType, containsNull = false),
       containsNull = false), nullable = false)))
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.pageResults(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.pageResults($c)")
+  override protected def call: Expression = static(Impl, "pageResults", child)
   override protected def withNewChildInternal(c: Expression): PageResults = copy(c)
   override def prettyName: String = "page_results"
 }
 
 /** Hybrid chunker as a scalar expression: String → ARRAY<STRING>. */
 case class ChunkText(child: Expression, maxWords: Int, overlapWords: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   def this(child: Expression) = this(child, Chunker.MaxWords, Chunker.OverlapWords)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    Impl.chunkText(v.asInstanceOf[UTF8String], maxWords, overlapWords)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.chunkText($c, $maxWords, $overlapWords)")
+  override protected def call: Expression =
+    static(Impl, "chunkText", child, Literal(maxWords), Literal(overlapWords))
   override protected def withNewChildInternal(c: Expression): ChunkText =
     copy(child = c)
   override def prettyName: String = "chunk_text"
@@ -383,65 +359,45 @@ case class ChunkText(child: Expression, maxWords: Int, overlapWords: Int)
 
 /** Hashed-token-frequency embedding: String → ARRAY<FLOAT> (dim entries). */
 case class HashEmbedExpr(child: Expression, dim: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   def this(child: Expression) = this(child, HashEmbed.Dim)
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.hashEmbed(v.asInstanceOf[UTF8String], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.hashEmbed($c, $dim)")
+  override protected def call: Expression = static(Impl, "hashEmbed", child, Literal(dim))
   override protected def withNewChildInternal(c: Expression): HashEmbedExpr =
     copy(child = c)
   override def prettyName: String = "hash_embed"
 }
 
 /** SimHash: String → 64-bit signature. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.simHash64(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.simHash64($c)")
+  override protected def call: Expression = static(Impl, "simHash64", child)
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(c)
   override def prettyName: String = "simhash64"
 }
 
-/** MinHash signature: String → ARRAY<BIGINT> (numHashes entries). */
+/** MinHash signature: String → ARRAY<BIGINT> (numHashes entries). The
+  * coefficient table is built once per expression and rides the call as a
+  * constant.
+  */
 case class MinHashSig(child: Expression, shingleK: Int, numHashes: Int)
-    extends UnaryExpression {
-  @transient private lazy val coeffs = TextStats.minHashCoeffs(numHashes)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ArrayData.toArrayData(
-      TextStats.minHashSignature(v.asInstanceOf[UTF8String].toString, shingleK, coeffs))
+  override protected def call: Expression = static(Impl, "minHashSig", child,
+    Literal(shingleK), const(TextStats.minHashCoeffs(numHashes)))
   override protected def withNewChildInternal(c: Expression): MinHashSig =
     copy(child = c)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  graft.functions.MinHashSigEval.eval($c, $shingleK, $numHashes));""".stripMargin)
   override def prettyName: String = "minhash_sig"
 }
 
-/** Codegen entry for MinHashSig (coeff table cached per (numHashes)). */
-object MinHashSigEval {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[Int, Array[(Long, Long)]]()
-  def eval(text: UTF8String, k: Int, n: Int): Array[Long] = {
-    val coeffs = cache.computeIfAbsent(n, nn => TextStats.minHashCoeffs(nn))
-    TextStats.minHashSignature(text.toString, k, coeffs)
-  }
-}
-
 /** Language-ID heuristic: String → lang code. */
-case class LangIdExpr(child: Expression)
-    extends UnaryExpression {
+case class LangIdExpr(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.langId(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.langId($c)")
+  override protected def call: Expression = static(Impl, "langId", child)
   override protected def withNewChildInternal(c: Expression): LangIdExpr = copy(c)
   override def prettyName: String = "lang_id"
 }
@@ -452,13 +408,10 @@ case class LangIdExpr(child: Expression)
   * of these signals is an interpreted O(tokens²·distinct) trap — see
   * [[graft.text.TextStats.repetitionStats]].)
   */
-case class RepetitionStatsExpr(child: Expression)
-    extends UnaryExpression {
+case class RepetitionStatsExpr(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = RepetitionStatsExpr.Schema
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.repetitionStats(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.repetitionStats($c)")
+  override protected def call: Expression = static(Impl, "repetitionStats", child)
   override protected def withNewChildInternal(c: Expression): RepetitionStatsExpr = copy(c)
   override def prettyName: String = "repetition_stats"
 }
@@ -472,101 +425,24 @@ object RepetitionStatsExpr {
 }
 
 /** BPE-ish token count: String → Int. */
-case class TokenCountBpe(child: Expression)
-    extends UnaryExpression {
+case class TokenCountBpe(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.tokenCountBpe(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.tokenCountBpe($c)")
+  override protected def call: Expression = static(Impl, "tokenCountBpe", child)
   override protected def withNewChildInternal(c: Expression): TokenCountBpe = copy(c)
   override def prettyName: String = "token_count_bpe"
 }
 
 /** Winnowing fingerprints: String → ARRAY<BIGINT>. */
 case class Fingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.fingerprints(v.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.fingerprints($c, $k, $w)")
+  override protected def call: Expression =
+    static(Impl, "fingerprints", child, Literal(k), Literal(w))
   override protected def withNewChildInternal(c: Expression): Fingerprints =
     copy(child = c)
   override def prettyName: String = "fingerprints"
-}
-
-/** A bank of per-bucket bloom filters riding one TorrentBroadcast. The task
-  * binary carries only the broadcast HANDLE (bytes move once per executor,
-  * not once per stage as a plan literal would); deserialized sketches are
-  * cached per-JVM keyed by broadcast id.
-  */
-class BloomBank(bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Byte])]])
-    extends Serializable {
-  // Cache key MUST be unique per bank instance, NOT bc.id: broadcast ids
-  // restart from 0 with every SparkContext, so a multi-session JVM (tests,
-  // repeated benchmarks) would silently resolve a NEW bank to a STALE cache
-  // entry — bloom false-negatives for ledger keys, i.e. wrong results.
-  // (Found by row-count drift in ScalingBench; pinned by SeenSpec.)
-  private val bankId: String = java.util.UUID.randomUUID().toString
-
-  // Per-deserialized-instance memo of the resolved bucket→bloom map. The
-  // JVM-wide cache lookup is `synchronized`, and going through it PER ROW
-  // serialized all task threads on one lock — measured as 2.8× task-time
-  // inflation at 16 cores vs 4 (the round-2 scaling-efficiency killer).
-  // Each task gets its own BloomBank instance from the task binary, touches
-  // the lock once, then probes lock-free. Benign race: re-resolution is
-  // idempotent.
-  @transient private var local: java.util.HashMap[Int, BloomFilter] = _
-
-  def mightContain(bucket: Int, key: Long): Boolean = {
-    var m = local
-    if (m == null) { m = BloomBank.cached(bankId, bc); local = m }
-    val bloom = m.get(bucket)
-    bloom != null && bloom.mightContainLong(key)
-  }
-}
-object BloomBank {
-  private val MaxEntries = 32 // waves in flight per executor JVM — LRU bound
-  private val cache = new java.util.LinkedHashMap[String, java.util.HashMap[Int, BloomFilter]](
-    16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, java.util.HashMap[Int, BloomFilter]]): Boolean =
-      size() > MaxEntries
-  }
-  private[functions] def cached(
-      bankId: String,
-      bc: org.apache.spark.broadcast.Broadcast[Array[(Int, Array[Byte])]])
-      : java.util.HashMap[Int, BloomFilter] = cache.synchronized {
-    val hit = cache.get(bankId)
-    if (hit != null) hit
-    else {
-      val built = new java.util.HashMap[Int, BloomFilter]()
-      bc.value.foreach { case (b, bytes) =>
-        built.put(b, BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
-      }
-      cache.put(bankId, built)
-      built
-    }
-  }
-}
-
-/** Probe a [[BloomBank]]: (bucket INT, key BIGINT) → BOOLEAN. */
-case class BloomBankProbe(bank: BloomBank, bucket: Expression, key: Expression)
-    extends BinaryExpression {
-  override def left: Expression = bucket
-  override def right: Expression = key
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(b: Any, k: Any): Any =
-    bank.mightContain(b.asInstanceOf[Int], k.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftBloomBank", bank, classOf[BloomBank].getName)
-    defineCodeGen(ctx, ev, (b, k) => s"$ref.mightContain($b, $k)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomBankProbe =
-    copy(bucket = l, key = r)
-  override def prettyName: String = "bloom_bank_probe"
 }
 
 /** Whole-bank bloom aggregate: BIGINT keys → ARRAY<BINARY> of `buckets`
@@ -764,28 +640,23 @@ case class ChunkGenerator(child: Expression, maxWords: Int, overlapWords: Int)
   * matching key. Parser-backed, so a '?' before the first '/' never leaks
   * query bytes into the path.
   */
-case class UrlPath(child: Expression)
-    extends UnaryExpression {
+case class UrlPath(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.urlPath(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.urlPath($c)")
+  override protected def call: Expression = static(Impl, "urlPath", child)
   override protected def withNewChildInternal(c: Expression): UrlPath = copy(c)
   override def prettyName: String = "url_path"
 }
 
 /** Exact k-word-shingle Jaccard between two texts — the LSH verifier kernel
-  * as a codegen'd binary expression (was a udf in round 1).
+  * as a binary expression (was a udf in round 1).
   */
 case class JaccardShingles(left: Expression, right: Expression, shingleK: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Impl.jaccardShingles(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], shingleK)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Impl.jaccardShingles($a, $b, $shingleK)")
+  override protected def call: Expression =
+    static(Impl, "jaccardShingles", left, right, Literal(shingleK))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardShingles =
     copy(left = l, right = r)
   override def prettyName: String = "jaccard_shingles"
@@ -795,13 +666,10 @@ case class JaccardShingles(left: Expression, right: Expression, shingleK: Int)
   * attribute values, entities decoded; resolution/canonicalization is a
   * separate expression so the pieces stay individually testable).
   */
-case class ExtractLinks(child: Expression)
-    extends UnaryExpression {
+case class ExtractLinks(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.extractLinks(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.extractLinks($c)")
+  override protected def call: Expression = static(Impl, "extractLinks", child)
   override protected def withNewChildInternal(c: Expression): ExtractLinks = copy(c)
   override def prettyName: String = "extract_links"
 }
@@ -812,32 +680,26 @@ case class ExtractLinks(child: Expression)
   * opens, inner tags stripped, entities decoded, `\s` runs collapsed) —
   * feeds the per-target anchor aggregation ([[graft.frontier.Anchors]]).
   */
-case class ExtractAnchors(child: Expression)
-    extends UnaryExpression {
+case class ExtractAnchors(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("href", StringType, nullable = false),
     StructField("anchor", StringType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.extractAnchors(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.extractAnchors($c)")
+  override protected def call: Expression = static(Impl, "extractAnchors", child)
   override protected def withNewChildInternal(c: Expression): ExtractAnchors = copy(c)
   override def prettyName: String = "extract_anchors"
 }
 
 /** `<link rel="alternate" hreflang href>` declarations in document order:
   * ARRAY<STRUCT<lang, href>> — the multilingual alternate graph
-  * ([[graft.text.HtmlText.hreflangAlternates]]'s scanner, codegen-called).
+  * ([[graft.text.HtmlText.hreflangAlternates]]'s scanner).
   */
-case class ExtractHreflang(child: Expression)
-    extends UnaryExpression {
+case class ExtractHreflang(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("lang", StringType, nullable = false),
     StructField("href", StringType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.hreflangAlternates(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.hreflangAlternates($c)")
+  override protected def call: Expression = static(Impl, "hreflangAlternates", child)
   override protected def withNewChildInternal(c: Expression): ExtractHreflang = copy(c)
   override def prettyName: String = "extract_hreflang"
 }
@@ -847,19 +709,11 @@ case class ExtractHreflang(child: Expression)
   * javascript:, …) so a downstream filter drops them by null semantics.
   */
 case class ResolveUrl(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(base: Any, ref: Any): Any =
-    Impl.resolveUrl(base.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // resolveUrl returns null for non-http(s) schemes → can't use
-    // defineCodeGen (it assumes non-null results); emit the null re-check
-    nullSafeCodeGen(ctx, ev, (b, r) =>
-      s"""${ev.value} = graft.functions.Impl.resolveUrl($b, $r);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-  }
+  override protected def call: Expression = static(Impl, "resolveUrl", left, right)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ResolveUrl =
     copy(left = l, right = r)
   override def prettyName: String = "resolve_url"
@@ -870,18 +724,12 @@ case class ResolveUrl(left: Expression, right: Expression)
   * — see [[SrpEval]].
   */
 case class SrpBucket(child: Expression, bits: Int, seed: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(bits >= 1 && bits <= 30, s"bits out of range: $bits")
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  private def elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def nullSafeEval(v: Any): Any =
-    Impl.srpBucket(v.asInstanceOf[ArrayData], bits, seed, elemIsDouble)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.srpBucket($c, $bits, $seed, $elemIsDouble)")
+  override protected def call: Expression = static(SrpEval, "bucket", child,
+    Literal(bits), Literal(seed), Literal(elemIsDouble(child)))
   override protected def withNewChildInternal(c: Expression): SrpBucket =
     copy(child = c)
   override def prettyName: String = "srp_bucket"
@@ -890,15 +738,12 @@ case class SrpBucket(child: Expression, bits: Int, seed: Int)
 /** Page-level crawl directives of an HTML column →
   * STRUCT(noindex BOOLEAN, nofollow BOOLEAN, canonical STRING) — the
   * meta-robots / rel-canonical signals a polite crawler must honor
-  * ([[Impl.pageDirectives]]); codegen'd, one scan per row.
+  * ([[Impl.pageDirectives]]); one scan per row.
   */
-case class PageDirectivesExpr(child: Expression) extends UnaryExpression {
+case class PageDirectivesExpr(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = PageDirectivesExpr.Schema
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    Impl.pageDirectives(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.pageDirectives($c)")
+  override protected def call: Expression = static(Impl, "pageDirectives", child)
   override protected def withNewChildInternal(c: Expression): PageDirectivesExpr =
     copy(c)
   override def prettyName: String = "page_directives"
@@ -914,13 +759,10 @@ object PageDirectivesExpr {
 /** Title + h1..h6 outline of a page, one kernel pass
   * ([[graft.text.HtmlText.outline]]).
   */
-case class PageOutlineExpr(child: Expression) extends UnaryExpression {
+case class PageOutlineExpr(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = PageOutlineExpr.Schema
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    Impl.pageOutline(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.pageOutline($c)")
+  override protected def call: Expression = static(Impl, "pageOutline", child)
   override protected def withNewChildInternal(c: Expression): PageOutlineExpr =
     copy(c)
   override def prettyName: String = "page_outline"
@@ -932,37 +774,33 @@ object PageOutlineExpr {
     (1 to 6).map(k => StructField(s"h$k", IntegerType, nullable = false)))
 }
 
-/** Unicode normalization of a text column (NFC/NFD/NFKC/NFKD) —
-  * codegen'd ([[Impl.normalizeUnicode]]); NFC is cross-engine replayable
+/** Unicode normalization of a text column (NFC/NFD/NFKC/NFKD)
+  * ([[Impl.normalizeUnicode]]); NFC is cross-engine replayable
   * (DuckDB `nfc_normalize`), which is what q62's oracle checks.
   */
 case class NormalizeUnicode(child: Expression, form: String)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form), s"form: $form")
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(t: Any): Any =
-    Impl.normalizeUnicode(t.asInstanceOf[UTF8String], form)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.normalizeUnicode($c, \"$form\")")
+  override protected def call: Expression = static(Impl, "normalizeUnicode", child,
+    const(java.text.Normalizer.Form.valueOf(form)))
   override protected def withNewChildInternal(c: Expression): NormalizeUnicode =
     copy(child = c)
   override def prettyName: String = "normalize_unicode"
 }
 
 /** Distinct token-n-gram 64-bit hash keys of a text column →
-  * ARRAY<BIGINT> ([[Impl.ngramHashKeys]]); codegen'd, no per-window
-  * string allocation.
+  * ARRAY<BIGINT> ([[Impl.ngramHashKeys]]); no per-window string
+  * allocation.
   */
 case class NgramHashKeys(child: Expression, n: Int, lowercase: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(n >= 1, s"n: $n")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(t: Any): Any =
-    Impl.ngramHashKeys(t.asInstanceOf[UTF8String], n, lowercase)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.ngramHashKeys($c, $n, $lowercase)")
+  override protected def call: Expression =
+    static(Impl, "ngramHashKeys", child, Literal(n), Literal(lowercase))
   override protected def withNewChildInternal(c: Expression): NgramHashKeys =
     copy(child = c)
   override def prettyName: String = "ngram_hash_keys"
@@ -972,14 +810,12 @@ case class NgramHashKeys(child: Expression, n: Int, lowercase: Boolean)
   * ARRAY<BIGINT> ([[Impl.ngramHashes]]).
   */
 case class NgramHashes(child: Expression, n: Int, lowercase: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(n >= 1, s"n: $n")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(t: Any): Any =
-    Impl.ngramHashes(t.asInstanceOf[UTF8String], n, lowercase)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.ngramHashes($c, $n, $lowercase)")
+  override protected def call: Expression =
+    static(Impl, "ngramHashes", child, Literal(n), Literal(lowercase))
   override protected def withNewChildInternal(c: Expression): NgramHashes =
     copy(child = c)
   override def prettyName: String = "ngram_hashes"
@@ -989,36 +825,25 @@ case class NgramHashes(child: Expression, n: Int, lowercase: Boolean)
   * left-to-right, non-overlapping ("aaa" + merge(a,a) → ["aa","a"]) —
   * the inner step of [[graft.text.Bpe.train]], run once per word per
   * round, so it must stay inside codegen ([[Impl.bpeMergePair]]). The
-  * pair constants ride `addReferenceObj` (no string-literal escaping in
-  * generated code).
+  * pair constants are string literals of the call (stage references, no
+  * string-literal escaping in generated code).
   */
 case class BpeMergePair(child: Expression, a: String, b: String)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  @transient private lazy val aU8 = UTF8String.fromString(a)
-  @transient private lazy val bU8 = UTF8String.fromString(b)
-  override def nullSafeEval(arr: Any): Any =
-    Impl.bpeMergePair(arr.asInstanceOf[ArrayData], aU8, bU8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ar = ctx.addReferenceObj("bpeA", aU8, classOf[UTF8String].getName)
-    val br = ctx.addReferenceObj("bpeB", bU8, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.bpeMergePair($c, $ar, $br)")
-  }
+  override protected def call: Expression =
+    static(Impl, "bpeMergePair", child, Literal(a), Literal(b))
   override protected def withNewChildInternal(c: Expression): BpeMergePair =
     copy(child = c)
   override def prettyName: String = "bpe_merge_pair"
 }
 
-/** ARRAY<TINYINT> → BINARY byte-per-component packing ([[Impl.packInt8]]);
-  * codegen'd, no UDF.
-  */
-case class PackInt8(child: Expression) extends UnaryExpression {
+/** ARRAY<TINYINT> → BINARY byte-per-component packing ([[Impl.packInt8]]). */
+case class PackInt8(child: Expression) extends UnaryExpression with KernelCall {
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = Impl.packInt8(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Impl.packInt8($c)")
+  override protected def call: Expression = static(Impl, "packInt8", child)
   override protected def withNewChildInternal(c: Expression): PackInt8 = copy(child = c)
   override def prettyName: String = "pack_int8"
 }
@@ -1026,17 +851,12 @@ case class PackInt8(child: Expression) extends UnaryExpression {
 /** cosine(packed-int8 BINARY, ARRAY<FLOAT|DOUBLE>) → DOUBLE
   * ([[Impl.cosineInt8]]); the probe-side scorer of the int8 IVF layout.
   */
-case class CosineInt8(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineInt8(left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
-  private def elemIsDouble: Boolean = right.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def nullSafeEval(b: Any, q: Any): Any =
-    Impl.cosineInt8(b.asInstanceOf[Array[Byte]], q.asInstanceOf[ArrayData], elemIsDouble)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, q) => s"graft.functions.Impl.cosineInt8($b, $q, $elemIsDouble)")
+  override protected def call: Expression =
+    static(Impl, "cosineInt8", left, right, Literal(elemIsDouble(right)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineInt8 =
     copy(left = l, right = r)
   override def prettyName: String = "cosine_int8"
@@ -1048,21 +868,12 @@ case class CosineInt8(left: Expression, right: Expression) extends BinaryExpress
   * assignment; queries probe several cells.
   */
 case class IvfCells(cents: graft.ann.IvfCentroids, child: Expression, nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(nProbe >= 1, s"nProbe: $nProbe")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  private def elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def nullSafeEval(v: Any): Any =
-    IvfEval.cells(cents, v.asInstanceOf[ArrayData], nProbe, elemIsDouble)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftIvfCents", cents, classOf[graft.ann.IvfCentroids].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.IvfEval.cells($ref, $c, $nProbe, $elemIsDouble)")
-  }
+  override protected def call: Expression = static(IvfEval, "cells", const(cents), child,
+    Literal(nProbe), Literal(elemIsDouble(child)))
   override protected def withNewChildInternal(c: Expression): IvfCells =
     copy(child = c)
   override def prettyName: String = "ivf_cells"

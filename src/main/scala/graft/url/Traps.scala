@@ -56,13 +56,7 @@ object Traps {
       urlCol: String = "canonical_url", orderCol: String = "seed_idx")
       : (DataFrame, DataFrame) = {
     require(maxPerTemplate >= 1, s"maxPerTemplate: $maxPerTemplate")
-    // staged once: the salted rank's width probe (min/max of orderCol) and
-    // the rank itself both read this frame — un-staged, the probe would
-    // re-execute the frontier's entire upstream (discovery + gating +
-    // dedup) a second time, the exact cost the Scheduler's own warning
-    // names. Rows here are (url, order, template) — slim by construction.
     val withT = frontier.withColumn("template", urlTemplate(col(urlCol)))
-      .localCheckpoint(true)
     val ranked = graft.frontier.Scheduler
       .perHostRankSalted(withT, "template", orderCol)
       .withColumnRenamed("host_pos", "template_pos")

@@ -236,6 +236,32 @@ class PlanSpec extends AnyFunSuite {
     assert(countShuffles(plan) == 0, plan.toString)
   }
 
+  test("benchmark-path kernels compile to direct calls, no reflection") {
+    import spark.implicits._
+    import graft.frontier.{Ledger, Seen}
+    import org.apache.spark.sql.execution.debug.codegenString
+    // the page_results contract and the frontier_probe shape: withUrlKeys
+    // → Ledger.filterUnseen over a bloom bank; all over parquet scans
+    val dir = java.nio.file.Files.createTempDirectory("plancodegen").toString
+    spark.createDataset(graft.fixtures.PageGen.pages(10)).toDF().write.parquet(s"$dir/pages")
+    (0 until 200).map(i => (s"HTTP://H${i % 7}.Test/p/$i", i.toLong)).toDF("url", "seed_idx")
+      .write.parquet(s"$dir/cands")
+    val cands = spark.read.parquet(s"$dir/cands")
+    val ledger = new Ledger(spark, s"$dir/ledger", buckets = 4, expectedPerBucket = 1024)
+    ledger.appendWithBlooms(Seen.withUrlKeys(cands.where(col("seed_idx") % 2 === 0))
+      .select("url_hash", "canonical_url"), 0)
+    val unseen = ledger.filterUnseen(Seen.withUrlKeys(cands), 0)
+    val results = graft.pipeline.TextPipeline.results(spark.read.parquet(s"$dir/pages"))
+    assert(unseen.count() == 100 && results.count() == 10)
+    for ((df, calls) <- Seq(results -> Seq("pageResults("),
+        unseen -> Seq("canonicalizeUrl(", "hostOf(", "mightContain("))) {
+      df.collect()
+      val code = codegenString(df.queryExecution.executedPlan)
+      for (c <- calls) assert(code.contains(c), s"no $c in:\n$code")
+      assert(!code.contains("java.lang.reflect"), code)
+    }
+  }
+
   test("repetition signals are a shuffle-free projection (quality gate in the scan)") {
     import graft.text.Repetition
     val docs = spark.range(100).select(col("id"),

@@ -415,41 +415,6 @@ class WarcSinkSpec extends AnyFunSuite {
   }
 }
 
-class NgramKernelSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("hash kernel matches the string-spec twin: counts on real fixture texts") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    for (n <- Seq(3, 8, 13)) {
-      val mismatch = docs.select(
-        size(graft.dedup.Decontaminate.ngramKeys(col("text"), n)).as("spec"),
-        size(graft.functions.ngram_hash_keys(col("text"), n)).as("fast"))
-        .where(col("spec") =!= col("fast")).count()
-      assert(mismatch == 0, s"n=$n")
-    }
-    // positional kernel: length = max(0, tokens - k + 1), case-sensitive
-    val posMismatch = docs.select(
-      size(filter(split(col("text"), "\\s+"), t => t =!= "")).as("toks"),
-      size(graft.functions.ngram_hashes(col("text"), 5)).as("wins"))
-      .where(col("wins") =!= greatest(col("toks") - 4, lit(0))).count()
-    assert(posMismatch == 0)
-  }
-
-  test("hash kernel distinguishes token boundaries and case") {
-    def keysOf(t: String, n: Int, lower: Boolean) =
-      Seq(t).toDF("t").select(
-        if (lower) graft.functions.ngram_hash_keys(col("t"), n)
-        else graft.functions.ngram_hashes(col("t"), n)).collect()(0).getSeq[Long](0)
-    // "ab c" vs "a bc": same chars, different token split → different grams
-    assert(keysOf("ab c x", 2, lower = true) != keysOf("a bc x", 2, lower = true))
-    // lowercase kernel folds case; positional (case-sensitive) does not
-    assert(keysOf("Foo bar", 2, lower = true) == keysOf("foo BAR", 2, lower = true))
-    assert(keysOf("Foo bar", 2, lower = false) != keysOf("foo bar", 2, lower = false))
-  }
-}
-
 class SpanCutSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -566,27 +531,6 @@ class UrlGateSpec extends AnyFunSuite {
     assert(gated.where(!col("url_ok")).count() == 200)
     val plan = gated.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-}
-
-class NormalizeUnicodeSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("NFC composes combining marks; NFKC also folds compatibility forms") {
-    def norm(s: String, form: String): String =
-      Seq(s).toDF("t")
-        .select(graft.functions.normalize_unicode(col("t"), form)).collect()(0).getString(0)
-    assert(norm("café", "NFC") == "café")
-    assert(norm("café", "NFC") == "café") // idempotent on composed
-    assert(norm("ﬁle", "NFC") == "ﬁle")   // NFC leaves the fi-ligature
-    assert(norm("ﬁle", "NFKC") == "file")      // NFKC folds it
-    // downstream effect: dedup now sees the two spellings as one text
-    val texts = Seq((1L, "café menu"), (2L, "café menu")).toDF("id", "text")
-    val normed = texts.select(col("id"),
-      graft.functions.normalize_unicode(col("text")).as("text"))
-    assert(graft.dedup.Dedup.exactDuplicates(normed, "id", "text").count() == 1)
-    assert(graft.dedup.Dedup.exactDuplicates(texts, "id", "text").count() == 0)
   }
 }
 

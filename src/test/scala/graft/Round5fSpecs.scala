@@ -386,22 +386,6 @@ class TextUrlsSpec extends AnyFunSuite {
   }
 }
 
-class HllSqlSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("hll card/zeros/m probes work through SQL registration") {
-    graft.functions.registerAll(spark)
-    (1L to 100L).map(_ * 0x9E3779B97F4A7C15L).toDF("h")
-      .agg(graft.functions.hll_agg(col("h"), 8).as("sk"))
-      .createOrReplaceTempView("hllsk")
-    val r = spark.sql(
-      "SELECT hll_card(sk) c, hll_zeros(sk) z, hll_m(sk) m FROM hllsk")
-      .collect().head
-    assert(r.getInt(2) == 256 && r.getInt(1) < 256 && r.getLong(0) >= 0)
-  }
-}
-
 class ShuffleShardsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.core.Rounds
 import graft.dedup.Components
-import graft.frontier.{Rank, Redirects}
+import graft.frontier.{Rank, Redirects, Scheduler}
+import graft.url.Traps
 import graft.text.Bpe
 
 /** The iterative operators hold storage that does not grow with their
@@ -73,6 +74,32 @@ class RoundsSpec extends AnyFunSuite {
     }
     val (a, b) = (trained(4), trained(16))
     assert(a.size == b.size, s"bpe: ${a.values} vs ${b.values}")
+  }
+
+  test("capPerTemplate holds one checkpoint: the salted rank's frozen input") {
+    val frontier = (0 until 60).map(i => (s"http://t.test/cal/$i", i))
+      .toDF("canonical_url", "seed_idx")
+    val ((kept, deferred), rdds) =
+      SparkTestSession.persistedDuring(Traps.capPerTemplate(frontier, 10L))
+    assert(rdds.size == 1, rdds.values)
+    assert(kept.count() == 10 && deferred.count() == 50)
+    Rounds.release(kept)
+  }
+
+  test("an unranged salted rank reads its bucket width off its one freezing job") {
+    def ranked(df: DataFrame, jobs: Int) = {
+      val (out, started) = SparkTestSession.jobsDuring(
+        Scheduler.perHostRankSalted(df, "host", "seed_idx"))
+      assert(started.size == jobs, started)
+      val rows = out.collect()
+      Rounds.release(out)
+      rows
+    }
+    val df = (0 until 300).map(i => (s"h${i % 3}", i * 1000L)).toDF("host", "seed_idx")
+    val got = ranked(df, jobs = 1).map(r => r.getAs[Long]("seed_idx") -> r.getAs[Long]("host_pos")).toMap
+    assert(got == (0 until 300).map(i => i * 1000L -> (i / 3 + 1).toLong).toMap)
+    // an empty input materializes without a job and still ranks (width 1)
+    assert(ranked(df.limit(0), jobs = 0).isEmpty)
   }
 
   test("release runs no job and spares the checkpoints a kept frame reads") {
