@@ -37,10 +37,14 @@ object Rounds {
     val obs = Observation()
     val named = (count(lit(1)) +: aggs).zipWithIndex.map { case (a, i) => a.as(s"m$i") }
     val out = df.observe(obs, named.head, named.tail: _*).localCheckpoint(true)
-    val m = obs.get
-    (out, named.indices.map(i =>
-      m.get(s"m$i").flatMap(Option(_)).fold(0L)(_.asInstanceOf[Number].longValue)))
+    (out, named.indices.map(i => observed(obs, s"m$i")))
   }
+
+  /** An observed integral metric. A sum over zero rows is NULL, and a pass
+    * over zero rows observes nothing at all: either way it reads 0.
+    */
+  def observed(obs: Observation, name: String): Long =
+    obs.get.get(name).flatMap(Option(_)).fold(0L)(_.asInstanceOf[Number].longValue)
 
   /** Unpersist the local checkpoints `df` reads that no `keep` frame reads:
     * for a superseded round, the checkpoint it is. Nothing may read them

@@ -314,14 +314,14 @@ final class Ledger(
     ensure()
     // materialize BEFORE writing tombstones: `dead` reads committedFrame,
     // which reads the tombstone directory the append below writes into
-    val dead = keys.select(col("url_hash").cast("long").as("url_hash")).distinct()
-      .join(committedFrame(wave).select("url_hash"), Seq("url_hash"), "left_semi")
-      .distinct() // committedFrame keeps at-least-once duplicate appends
-      .localCheckpoint(true)
+    val (dead, rows) = Rounds.materialize(
+      keys.select(col("url_hash").cast("long").as("url_hash")).distinct()
+        .join(committedFrame(wave).select("url_hash"), Seq("url_hash"), "left_semi")
+        .distinct()) // committedFrame keeps at-least-once duplicate appends
     // empty batch (second unsee of the same keys, or keys never seen):
     // writing a 0-row tombstone file would flip committedFrame onto the
     // subtraction path for nothing — skip the write, change no state
-    if (!dead.isEmpty)
+    if (rows.head > 0)
       dead.select(col("url_hash"), lit(wave).cast("int").as("t_wave"))
         .coalesce(1) // maintenance-sized batch; one tombstone file per unsee
         .write.mode(SaveMode.Append).parquet(tombstoneDir)
@@ -407,9 +407,8 @@ final class Ledger(
       // consumed tombstones go; a crash BEFORE this point leaves them in
       // place, which is idempotent — re-applying a tombstone against the
       // compacted table matches nothing it hasn't already killed
-      val rest = readTombstones
-        .where(col("t_wave") > upToWave).localCheckpoint(true)
-      if (rest.isEmpty) Fs.deleteTree(tombstoneDir)
+      val (rest, rows) = Rounds.materialize(readTombstones.where(col("t_wave") > upToWave))
+      if (rows.head == 0) Fs.deleteTree(tombstoneDir)
       else rest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tombstoneDir)
       Rounds.release(rest)
     }

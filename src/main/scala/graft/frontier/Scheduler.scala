@@ -200,18 +200,16 @@ object Scheduler {
     * through its subdomains (or let a wildcard-subdomain spam farm dodge
     * every cap). Same salted skew-proof rank as the trap cap — a
     * 10^7-subdomain blogspot is exactly the skew case; returns
-    * (kept, deferred) by FIRST-`maxPerDomain` in discovery order.
+    * (kept, deferred) by FIRST-`maxPerDomain` in discovery order. The rank
+    * freezes its input once and observes the order key's range on that
+    * pass, so the cap costs no stats job of its own.
     */
   def capPerDomain(frontier: DataFrame, maxPerDomain: Long,
-      urlCol: String = "canonical_url", orderCol: String = "seed_idx",
-      orderKeyRange: Option[(Long, Long)] = None): (DataFrame, DataFrame) = {
+      urlCol: String = "canonical_url", orderCol: String = "seed_idx"): (DataFrame, DataFrame) = {
     require(maxPerDomain >= 1, s"maxPerDomain: $maxPerDomain")
     val withD = frontier.withColumn("domain",
       graft.functions.registrable_domain(graft.functions.host_of(col(urlCol))))
-    // perHostRankSalted freezes its input itself (probe + both rank
-    // consumers read one materialization) — no outer checkpoint needed
-    val ranked = perHostRankSalted(withD, "domain", orderCol,
-        orderKeyRange = orderKeyRange)
+    val ranked = perHostRankSalted(withD, "domain", orderCol)
       .withColumnRenamed("host_pos", "domain_pos")
     (ranked.where(col("domain_pos") <= maxPerDomain),
       ranked.where(col("domain_pos") > maxPerDomain))

@@ -9,9 +9,10 @@ import graft.core.{Fs, Rounds}
   * lineage (north rule: "checkpoint-resumable frontier state with
   * per-partition lineage and fetch/parse metrics").
   *
-  * A steady wave runs about 21 Spark jobs (21.3 measured on 10k-URL
-  * PageTable waves with robots rules and a shared [[Ledger]], 4 cores),
-  * one pages join among them.
+  * A steady PageTable wave with robots rules and edges runs 22 Spark jobs
+  * when it is its own `run` call (WaveLoopSpec pins it; a [[Ledger]]
+  * shared across calls saves its bank read), one pages join among them;
+  * its frontier is counted on the next/ write that made it, not re-read.
   * State crosses waves ONLY via storage (a 10^10-frontier
   * cannot live in driver memory), so every local checkpoint a wave makes
   * is released at its commit and executor storage does not grow with the
@@ -26,7 +27,8 @@ import graft.core.{Fs, Rounds}
   *     metrics/wave=K/     [[MetricsSchema]]            (with `pages`)
   *     seenstate/          the seen-set [[Ledger]] (default location)
   *     _manifest_K.json    commit marker: counts (from the wave's own work,
-  *                         not re-reads) + per-partition lineage
+  *                         not re-reads; `next` = rows in next/wave=K) +
+  *                         per-partition lineage
   *
   * The seen-set's commit order within a wave: schedule → next → ledger
   * append (fed from the committed schedule) → bloom bank → manifest; the
@@ -63,13 +65,30 @@ object WaveLoop {
     "url_hash BIGINT, seed_idx BIGINT, status INT, n_chars BIGINT, n_chunks BIGINT")
   val EdgesSchema: StructType = StructType.fromDDL("src BIGINT, dst BIGINT")
   private val RetriedSchema = StructType.fromDDL("url_hash BIGINT")
-  private val RankSchema = StructType.fromDDL("node BIGINT, score DOUBLE")
-  private val DustSchema = StructType.fromDDL("host STRING, param STRING, support BIGINT")
-  private val FocusSchema = StructType.fromDDL("url_hash BIGINT, focus_fp BIGINT")
   private val CardsSchema = StructType.fromDDL("host_rev STRING, sketch BINARY")
 
   private def conform(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+
+  /** A learned channel's table (rank scores, DUST rules, focus scores):
+    * relearned in place every `every` waves while the channel is `on`, and
+    * trusted only once its `_SUCCESS` exists.
+    */
+  private final class Learned(spark: SparkSession, dir: String, ddl: String,
+      on: Boolean, every: Int) {
+    private val schema = StructType.fromDDL(ddl)
+    def read: Option[DataFrame] =
+      if (on && Fs.exists(s"$dir/_SUCCESS")) Some(spark.read.schema(schema).parquet(dir)) else None
+    def due(wave: Int): Boolean = on && (wave + 1) % math.max(1, every) == 0
+    def write(df: DataFrame): Unit = conform(df, schema).write.mode(SaveMode.Overwrite).parquet(dir)
+  }
+
+  /** The `"next"` row count of wave `wave`'s manifest (None in a manifest
+    * written before the field existed).
+    */
+  private def nextRows(root: String, wave: Int): Option[Long] =
+    """"next":(\d+)""".r.findFirstMatchIn(Fs.readString(manifestPath(root, wave)))
+      .map(_.group(1).toLong)
 
   def readSchedule(spark: SparkSession, root: String, wave: Int): DataFrame =
     spark.read.schema(ScheduleSchema).parquet(s"$root/schedule/wave=$wave")
@@ -117,8 +136,9 @@ object WaveLoop {
     *                    order keys put refreshes after the wave's fresh
     *                    discoveries per host, oldest first. Refresh rows
     *                    BYPASS the seen-filter (they are in the ledger by
-    *                    definition — that is what makes them refreshes) but
-    *                    still pass the robots gate and the in-wave dedup;
+    *                    definition — that is what makes them refreshes) and
+    *                    the domain cap, but pass the URL gate and robots
+    *                    with the discovered rows (denials audited as 452/451);
     *                    scheduling one re-appends it, re-stamping its age,
     *                    so each page re-crawls exactly once per TTL window.
     *                    The loop keeps running on refresh work even when
@@ -218,6 +238,17 @@ object WaveLoop {
     var frontier: DataFrame =
       if (startWave == 0) seeds
       else spark.read.parquet(s"$root/next/wave=${startWave - 1}")
+    // the frontier's row count, observed on the next/ write that made it
+    // (carried across calls by the manifest); None counts it once
+    var frontierRows: Option[Long] = if (startWave == 0) None else nextRows(root, startWave - 1)
+
+    // the learned channels' tables (see the channel docs above)
+    val rank = new Learned(spark, s"$root/rank/scores", "node BIGINT, score DOUBLE",
+      edgesOf.nonEmpty, rankEvery)
+    val dust = new Learned(spark, s"$root/dust/rules", "host STRING, param STRING, support BIGINT",
+      dustEvery > 0, dustEvery)
+    val focus = new Learned(spark, s"$root/focus/scores", "url_hash BIGINT, focus_fp BIGINT",
+      focusQueries.nonEmpty, focusEvery)
 
     // the caller's frames: a wave releases no checkpoint these read
     val callerFrames = Seq(seeds) ++ pages ++ urlGate.map(_._1) ++ focusQueries
@@ -225,13 +256,18 @@ object WaveLoop {
     while (wave < maxWaves && !exhausted) {
       // the checkpoints this wave makes, released at its commit (class doc)
       val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def materialize(df: DataFrame): (DataFrame, Long) = {
+        val (out, m) = Rounds.materialize(df)
+        made += out
+        (out, m.head)
+      }
+      val inputRows = frontierRows.getOrElse(frontier.agg(count(lit(1))).collect()(0).getLong(0))
       // refresh channel: committed urls due for a re-fetch this wave. The
       // staleness scan is one groupBy over the bucketed ledger — checkpoint
-      // it so the emptiness probe and the union below run it once.
-      val refreshAll = for { n <- refreshAfter if wave > 0 }
-        yield seen.staleFrontier(wave - 1, n).select("url", "seed_idx").localCheckpoint(true)
-      made ++= refreshAll
-      val refreshRows = refreshAll.filter(!_.isEmpty)
+      // it so its count and the union below run it once.
+      val refreshRows = refreshAfter.filter(_ => wave > 0)
+        .map(n => materialize(seen.staleFrontier(wave - 1, n).select("url", "seed_idx")))
+        .collect { case (r, rows) if rows > 0 => r }
       // error-retry channel: fetch errors (status 404) of wave K−n get ONE
       // retry — tombstoned out of the seen set ([[Ledger.unsee]]) and
       // re-injected as plain frontier rows that flow the NORMAL path: url
@@ -248,6 +284,7 @@ object WaveLoop {
       // unsee is idempotent, so a crash between them resumes into a full
       // retry (errs recomputes, the unsee no-ops, injection proceeds) —
       // at-least-tombstoned, at-most-once-retired.
+      var errRows = 0L
       for {
         n <- retryErrorsAfter if wave >= n
         dir = s"$root/metrics/wave=${wave - n}" if Fs.exists(dir)
@@ -258,49 +295,44 @@ object WaveLoop {
         val retriedDir = s"$root/retried"
         // materialize BEFORE mutating state: the anti-join reads retried/,
         // which the append below is about to grow under it
-        val errs = (if (Fs.exists(retriedDir))
+        val (errs, rows) = materialize(if (Fs.exists(retriedDir))
             errs0.join(spark.read.schema(RetriedSchema).parquet(retriedDir),
               Seq("url_hash"), "left_anti")
-          else errs0).localCheckpoint(true)
-        made += errs
-        if (!errs.isEmpty) {
+          else errs0)
+        if (rows > 0) {
           seen.unsee(errs.select("url_hash"), wave - 1)
           conform(errs, RetriedSchema).write.mode(SaveMode.Append).parquet(retriedDir)
           frontier = frontier.unionByName(errs.select("url", "seed_idx"))
+          errRows = rows
         }
       }
-      // size and seed range of the raw wave input in one cheap pruned scan;
-      // the range spares the domain cap and the scheduler a stats pass
-      // that would re-execute the dedup/anti-join upstream
-      val stats = frontier.agg(count(lit(1)), min(col("seed_idx")), max(col("seed_idx")))
-        .collect()(0)
-      if (stats.getLong(0) == 0L && refreshRows.isEmpty) {
+      if (inputRows + errRows == 0L && refreshRows.isEmpty) {
         exhausted = true
       } else {
       // DUST channel (apply side): strip learned content-irrelevant params
       // BEFORE url keys — aliases collapse to one canonical url and die in
-      // the seen filter instead of burning fetch budget. Rules are trusted
-      // only once their _SUCCESS exists (same fencing as the rank scores).
-      val dustFrontier =
-        if (dustEvery > 0 && Fs.exists(s"$root/dust/rules/_SUCCESS"))
-          Dust.applyRules(frontier, spark.read.schema(DustSchema).parquet(s"$root/dust/rules"))
-        else frontier
-      val keyed0 = Seen.withUrlKeys(dustFrontier)
+      // the seen filter instead of burning fetch budget.
+      val dustFrontier = dust.read.fold(frontier)(Dust.applyRules(frontier, _))
+      // refresh rows join the frontier here under the `_refresh` tag: the
+      // URL gate, robots and the denied audit below bind them like any
+      // row (a rule change since first crawl must deny the re-fetch), but
+      // they bypass the seen filter (being in the ledger is what makes them
+      // refreshes) and the domain cap
+      val keyed0 = Seen.withUrlKeys(refreshRows.foldLeft(dustFrontier.withColumn("_refresh", lit(false)))(
+        (f, r) => f.unionByName(r.withColumn("_refresh", lit(true)))))
       // URL-policy gate FIRST (blocklist + path words, [[graft.url.UrlGate]]):
       // the cheapest signal runs before robots matching and the seen-set
       // machinery — a blocked fetch should cost nothing downstream. Denied
       // rows stay audit surface (status 452 in the wave metrics), mirroring
       // the robots gate; like robots denials they stay OUT of the seen
       // ledger, so a blocklist change lets them crawl later.
-      def applyUrlGate(df: DataFrame): (DataFrame, Option[DataFrame]) =
-        urlGate match {
-          case Some((bl, words)) =>
-            val g = graft.url.UrlGate.gate(df, "canonical_url", bl, words)
-            (g.where(col("url_ok")).drop("url_ok", "url_reasons"),
-              Some(g.where(!col("url_ok")).drop("url_ok", "url_reasons")))
-          case None => (df, None)
-        }
-      val (keyed, urlDeniedMain) = applyUrlGate(keyed0)
+      val (keyed, urlDenied) = urlGate match {
+        case Some((bl, words)) =>
+          val g = graft.url.UrlGate.gate(keyed0, "canonical_url", bl, words)
+          (g.where(col("url_ok")).drop("url_ok", "url_reasons"),
+            Some(g.where(!col("url_ok")).drop("url_ok", "url_reasons")))
+        case None => (keyed0, None)
+      }
       // ONE allow-predicate (one FullRules broadcast) shared by the gate and
       // the denied audit branch — building it twice re-broadcast the rule
       // map every wave and re-ran the matcher over the frontier a second
@@ -308,33 +340,15 @@ object WaveLoop {
       val allowedPred = fullRules.map(fr => Robots.allowedColFull(spark, fr,
         col("host"), graft.functions.url_path(col("canonical_url"))))
       val gated = allowedPred.fold(keyed)(keyed.where(_))
-      // refresh rows get their own keyed frame: they must NOT pass through
-      // filterUnseen (being in the ledger is what makes them refreshes) but
-      // robots still binds — a rule change since first crawl must deny the
-      // re-fetch
-      val refreshGated = refreshRows.map(r => applyUrlGate(
-        Seen.withUrlKeys(r).select(keyed.columns.map(col): _*)))
-      val refreshKeyed = refreshGated.map(_._1)
-      val urlDeniedRows = (for {
-        d <- urlDeniedMain if pages.nonEmpty
-      } yield Seen.dropInWaveDuplicates(refreshGated.flatMap(_._2) match {
-        case Some(rd) => d.unionByName(rd)
-        case None => d
-      }))
       // denied rows are audit surface, not garbage: with metrics on they are
-      // written as status-451 rows next to the wave's fetch metrics below.
+      // written as status-451/452 rows next to the wave's fetch metrics below.
       // In-wave DEDUPED like the fetched side (two parents discovering the
       // same disallowed url is one denied url, not two); still re-reported
       // in LATER waves if rediscovered — denied urls deliberately stay out
       // of the seen ledger so a robots change lets them crawl.
+      val urlDeniedRows = urlDenied.filter(_ => pages.nonEmpty).map(Seen.dropInWaveDuplicates)
       val deniedRows = allowedPred.filter(_ => pages.nonEmpty)
-        .map { p =>
-          val d = refreshKeyed match {
-            case Some(rk) => keyed.where(!p).unionByName(rk.where(!p))
-            case None => keyed.where(!p)
-          }
-          Seen.dropInWaveDuplicates(d)
-        }
+        .map(p => Seen.dropInWaveDuplicates(keyed.where(!p)))
       // partitioned bloom pre-filter (north rule): the ledger's PERSISTED
       // per-bucket bank (committed waves only: wave-1), probes routed by
       // pmod(url_hash, buckets), positives verified exactly by the
@@ -342,8 +356,7 @@ object WaveLoop {
       // probe split reads its input twice, so the input must stay
       // scan-cheap, and the two stages commute (seen-status is constant per
       // url_hash group)
-      val unseen = seen.filterUnseen(gated, wave - 1)
-      val range = if (stats.isNullAt(1)) None else Some((stats.getLong(1), stats.getLong(2)))
+      val unseen = seen.filterUnseen(gated.where(!col("_refresh")), wave - 1)
       // domain-budget channel (`maxPerDomain`): per-SITE cap at
       // registrable-domain grain via the salted skew-proof rank — a
       // 10^7-subdomain farm shares ONE budget instead of dodging the
@@ -360,23 +373,17 @@ object WaveLoop {
       val (unseenCapped, deferredRows) = maxPerDomain match {
         case Some(m) =>
           val (kept, deferred) = Scheduler.capPerDomain(
-            unseenDeduped, m, urlCol = "canonical_url",
-            orderCol = "seed_idx", orderKeyRange = range)
+            unseenDeduped, m, urlCol = "canonical_url", orderCol = "seed_idx")
           (kept.select(keyed.columns.map(col): _*),
             Some(deferred.select(col("url"), col("seed_idx"))
               .localCheckpoint(true)))
         case None => (unseenDeduped, None)
       }
-      // refresh rows join AFTER the seen filter and the cap (disjoint from
+      // refresh rows rejoin AFTER the seen filter and the cap (disjoint from
       // the discovery channel by construction: filterUnseen removes exactly
       // the committed urls staleFrontier emits, and staleFrontier is
       // url-distinct), so a url can never schedule twice in one wave
-      val inWave = refreshKeyed match {
-        case Some(rk) =>
-          val rkGated = allowedPred.fold(rk)(rk.where(_))
-          unseenCapped.unionByName(rkGated.select(keyed.columns.map(col): _*))
-        case None => unseenCapped
-      }
+      val inWave = unseenCapped.unionByName(gated.where(col("_refresh")))
       // per-host politeness: robots Crawl-delay (whole seconds) when parsed
       // rules are present, the single global gap otherwise
       val robotsGap = fullRules.map(fr => Robots.gapColFull(spark, fr, col("host")))
@@ -406,25 +413,18 @@ object WaveLoop {
       }
       // authority priority: the latest committed PageRank scores (if the
       // channel is on and a refresh has completed) join by url_hash and
-      // pack into the salted scheduler's integral order key. The range
-      // hint only applies to the plain seed_idx order — the packed key's
-      // range is computed by the scheduler itself.
-      val authority = edgesOf
-        .filter(_ => Fs.exists(s"$root/rank/scores/_SUCCESS"))
-        .map(_ => spark.read.schema(RankSchema).parquet(s"$root/rank/scores")
-          .select(col("node").as("url_hash"),
-            floor(col("score") * 100.0d).cast("long").as("_prio")))
+      // pack into the salted scheduler's integral order key.
+      val authority = rank.read.map(_.select(col("node").as("url_hash"),
+        floor(col("score") * 100.0d).cast("long").as("_prio")))
       // focus channel (consume side): the latest committed anchor-BM25
       // relevance scores, scaled into priorityOrderKey's clamp range.
       // With BOTH channels on, priorities ADD (both are "fetch me
       // sooner"; the order key clamps the sum).
-      val focusScores = focusQueries
-        .filter(_ => Fs.exists(s"$root/focus/scores/_SUCCESS"))
-        .map(_ => spark.read.schema(FocusSchema).parquet(s"$root/focus/scores")
-          .select(col("url_hash"), expr("focus_fp DIV 100000").as("_prio")))
+      val focusScores = focus.read.map(_.select(col("url_hash"),
+        expr("focus_fp DIV 100000").as("_prio")))
       val prios = authority.toSeq ++ focusScores.toSeq
-      val (toScheduleAuth, schedOrderCol, schedRange) =
-        if (prios.isEmpty) (toSchedule, "seed_idx", range)
+      val (toScheduleAuth, schedOrderCol) =
+        if (prios.isEmpty) (toSchedule, "seed_idx")
         else {
           val combined = prios.reduce(_.unionByName(_))
             .groupBy("url_hash").agg(sum(col("_prio")).as("_prio"))
@@ -432,11 +432,11 @@ object WaveLoop {
             .withColumn("order_key",
               Scheduler.priorityOrderKey(coalesce(col("_prio"), lit(0L)), col("seed_idx")))
             .drop("_prio"),
-            "order_key", None)
+            "order_key")
         }
+      // the salted rank observes its order key's range on its own input pass
       val scheduled = Scheduler.schedule(
-        toScheduleAuth, gapSeconds, salted = true, orderKeyRange = schedRange,
-        gapCol = gapCol, orderCol = schedOrderCol)
+        toScheduleAuth, gapSeconds, salted = true, gapCol = gapCol, orderCol = schedOrderCol)
       // the scheduler and the domain cap each freeze their input inside
       // their output; the scheduler's checkpoint hides the cap's from it
       made ++= Seq(scheduled, unseenCapped) ++ deferredRows
@@ -471,7 +471,11 @@ object WaveLoop {
           .unionByName(d)
         case None => next0
       }
-      next.write.mode(SaveMode.Overwrite).parquet(s"$root/next/wave=$wave")
+      // its row count is the next wave's frontier size (and the manifest's)
+      val nextObs = Observation()
+      next.observe(nextObs, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/next/wave=$wave")
+      val nNext = Rounds.observed(nextObs, "rows")
 
       // cardinality channel (`hostCards`): one HLL sketch per host per wave
       // over the scheduled url hashes. Sketches are tiny (2^11 bytes/host),
@@ -495,11 +499,11 @@ object WaveLoop {
             xxhash64(graft.functions.canonicalize_url(col("src"))).as("src"),
             xxhash64(graft.functions.canonicalize_url(col("dst"))).as("dst")), EdgesSchema)
           .write.mode(SaveMode.Overwrite).parquet(s"$root/edges/wave=$wave")
-        if ((wave + 1) % math.max(1, rankEvery) == 0) {
+        if (rank.due(wave)) {
           val edges = (0 to wave).map(w => s"$root/edges/wave=$w").filter(Fs.exists)
             .map(spark.read.schema(EdgesSchema).parquet(_)).reduce(_.unionByName(_))
           val scores = Rank.pageRank(edges, iters = 3)
-          conform(scores, RankSchema).write.mode(SaveMode.Overwrite).parquet(s"$root/rank/scores")
+          rank.write(scores)
           made += scores
         }
       }
@@ -547,11 +551,8 @@ object WaveLoop {
             rows(status === Discover.StatusUrlPolicyDenied).as("url_denied"),
             sum(col("n_chars")).as("parse_chars"), sum(col("n_chunks")).as("parse_chunks"))
           .write.mode(SaveMode.Overwrite).parquet(s"$root/metrics/wave=$wave")
-        // a sum over zero rows is NULL, and a write of zero rows observes
-        // nothing at all: either way that total is 0
-        val m = obs.get
         Seq("fetched", "missed", "denied", "url_denied", "parse_chars", "parse_chunks")
-          .map(k => s""","$k":${m.get(k).flatMap(Option(_)).getOrElse(0L)}""").mkString
+          .map(k => s""","$k":${Rounds.observed(obs, k)}""").mkString
       }.getOrElse("")
       // The learned channels write after the metrics, whose denied rows still
       // read this wave's DUST rules. Their evidence is everything fetched so
@@ -568,9 +569,8 @@ object WaveLoop {
       // param-strip rules from everything fetched so far. Overwrite →
       // idempotent on crash-resume; the apply side trusts the table only
       // via its _SUCCESS.
-      if (dustEvery > 0 && (wave + 1) % dustEvery == 0) pages.foreach { pg =>
-        conform(Dust.paramStripRules(fetchedCorpus(pg), minSupport = dustMinSupport), DustSchema)
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/dust/rules")
+      if (dust.due(wave)) pages.foreach { pg =>
+        dust.write(Dust.paramStripRules(fetchedCorpus(pg), minSupport = dustMinSupport))
       }
 
       // focus channel (learn side): every focusEvery waves, re-score link
@@ -579,17 +579,16 @@ object WaveLoop {
       // '99): relevance evidence accumulates as coverage grows, and later
       // waves fetch on-topic urls first. Overwrite → idempotent;
       // _SUCCESS-fenced like the other learned channels.
-      if (focusQueries.nonEmpty && (wave + 1) % math.max(1, focusEvery) == 0)
+      if (focus.due(wave))
         for (fq <- focusQueries; pg <- pages) {
-          conform(Anchors.focusPriorities(fetchedCorpus(pg), fq, k = 10000)
+          focus.write(Anchors.focusPriorities(fetchedCorpus(pg), fq, k = 10000)
             .groupBy("url").agg(sum(col("score_fp")).as("focus_fp"))
             .select(xxhash64(graft.functions.canonicalize_url(col("url")))
-              .as("url_hash"), col("focus_fp")), FocusSchema)
-            .write.mode(SaveMode.Overwrite).parquet(s"$root/focus/scores")
+              .as("url_hash"), col("focus_fp")))
         }
 
       val manifest =
-        s"""{"wave":$wave,"scheduled":$nScheduled,"gap_seconds":$gapSeconds$fetchStats,
+        s"""{"wave":$wave,"scheduled":$nScheduled,"next":$nNext,"gap_seconds":$gapSeconds$fetchStats,
            |"lineage":$byPartition}""".stripMargin.replace("\n", "")
       Fs.writeString(manifestPath(root, wave), manifest)
       held.foreach(_.unpersist(blocking = true))
@@ -597,6 +596,7 @@ object WaveLoop {
       results += WaveResult(wave, nScheduled, nScheduled)
       seen.maybeCompact(wave)
       frontier = spark.read.schema(next.schema).parquet(s"$root/next/wave=$wave")
+      frontierRows = Some(nNext)
       wave += 1
       } // else (non-exhausted wave body)
       made.foreach(Rounds.release(_, keep = callerFrames))

@@ -54,32 +54,40 @@ object HllSketch {
     if (r > (registers(idx) & 0xFF)) registers(idx) = r.toByte
   }
 
+  /** Bytes before the registers of a serialized image: magic + `p`. */
+  val Header = 5
+
   def serialize(p: Int, registers: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](5 + registers.length)
+    val out = new Array[Byte](Header + registers.length)
     val bb = java.nio.ByteBuffer.wrap(out)
     bb.putInt(Magic); bb.put(p.toByte)
-    System.arraycopy(registers, 0, out, 5, registers.length)
+    System.arraycopy(registers, 0, out, Header, registers.length)
     out
   }
 
-  /** (p, registers) of a serialized image. */
-  def deserialize(bytes: Array[Byte]): (Int, Array[Byte]) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    require(bb.getInt() == Magic, "not an HLL image")
-    val p = bb.get().toInt
-    require(bytes.length == 5 + (1 << p), "truncated HLL image")
-    val regs = new Array[Byte](1 << p)
-    System.arraycopy(bytes, 5, regs, 0, regs.length)
-    (p, regs)
+  /** `p` of a serialized image, after checking its header; its registers
+    * are `bytes(Header until bytes.length)`, read in place.
+    */
+  def precision(bytes: Array[Byte]): Int = {
+    require(java.nio.ByteBuffer.wrap(bytes).getInt() == Magic, "not an HLL image")
+    val p = bytes(4).toInt
+    require(bytes.length == Header + (1 << p), "truncated HLL image")
+    p
   }
 
-  /** Fixed-point cardinality estimate (see object doc). */
-  def estimate(p: Int, registers: Array[Byte]): Long = {
+  /** (p, a copy of the registers) of a serialized image. */
+  def deserialize(bytes: Array[Byte]): (Int, Array[Byte]) =
+    (precision(bytes), java.util.Arrays.copyOfRange(bytes, Header, bytes.length))
+
+  /** Fixed-point cardinality estimate (see object doc) of the `2^p`
+    * registers starting at `from`.
+    */
+  def estimate(p: Int, registers: Array[Byte], from: Int = 0): Long = {
     val mm = 1 << p
     var sumQ = 0L
     var j = 0
     while (j < mm) {
-      val r = registers(j) & 0xFF
+      val r = registers(from + j) & 0xFF
       sumQ += (if (r >= 64) 0L else (1L << K) >>> r)
       j += 1
     }
@@ -90,22 +98,22 @@ object HllSketch {
     (raw / b) * a + ((raw % b) * a) / b
   }
 
-  /** Zero registers (for caller-side small-range correction). */
-  def zeros(registers: Array[Byte]): Int = {
-    var z = 0; var j = 0
+  /** Zero registers from `from` on (for caller-side small-range correction). */
+  def zeros(registers: Array[Byte], from: Int = 0): Int = {
+    var z = 0; var j = from
     while (j < registers.length) { if (registers(j) == 0) z += 1; j += 1 }
     z
   }
 }
 
 /** Mutable HLL aggregation buffer. */
-final class HllBuffer(val p: Int) extends Serializable {
-  val registers = new Array[Byte](1 << p)
-  def maxInto(other: HllBuffer): Unit = {
+final class HllBuffer(val p: Int, val registers: Array[Byte]) extends Serializable {
+  def this(p: Int) = this(p, new Array[Byte](1 << p))
+  /** Register-max with the registers of `src` starting at `from`. */
+  def maxFrom(src: Array[Byte], from: Int): Unit = {
     var i = 0
     while (i < registers.length) {
-      if ((other.registers(i) & 0xFF) > (registers(i) & 0xFF))
-        registers(i) = other.registers(i)
+      if ((src(from + i) & 0xFF) > (registers(i) & 0xFF)) registers(i) = src(from + i)
       i += 1
     }
   }
@@ -138,7 +146,7 @@ case class HllAgg(
   }
 
   override def merge(buf: HllBuffer, other: HllBuffer): HllBuffer = {
-    buf.maxInto(other)
+    buf.maxFrom(other.registers, 0)
     buf
   }
 
@@ -147,9 +155,7 @@ case class HllAgg(
     HllSketch.serialize(buf.p, buf.registers)
   override def deserialize(bytes: Array[Byte]): HllBuffer = {
     val (pp, regs) = HllSketch.deserialize(bytes)
-    val buf = new HllBuffer(pp)
-    System.arraycopy(regs, 0, buf.registers, 0, regs.length)
-    buf
+    new HllBuffer(pp, regs)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllAgg =
@@ -180,26 +186,18 @@ case class HllMergeAgg(
   override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
     val v = child.eval(input)
     if (v == null) return buf
-    val (pp, regs) = HllSketch.deserialize(v.asInstanceOf[Array[Byte]])
-    if (buf.p == 0) {
-      val nb = new HllBuffer(pp)
-      System.arraycopy(regs, 0, nb.registers, 0, regs.length)
-      nb
-    } else {
-      require(buf.p == pp, s"mixed HLL precisions: ${buf.p} vs $pp")
-      var i = 0
-      while (i < regs.length) {
-        if ((regs(i) & 0xFF) > (buf.registers(i) & 0xFF)) buf.registers(i) = regs(i)
-        i += 1
-      }
-      buf
-    }
+    val bytes = v.asInstanceOf[Array[Byte]]
+    if (buf.p == 0) return deserialize(bytes)
+    val pp = HllSketch.precision(bytes)
+    require(buf.p == pp, s"mixed HLL precisions: ${buf.p} vs $pp")
+    buf.maxFrom(bytes, HllSketch.Header)
+    buf
   }
 
   override def merge(buf: HllBuffer, other: HllBuffer): HllBuffer = {
     if (other.p == 0) buf
     else if (buf.p == 0) other
-    else { require(buf.p == other.p, "mixed HLL precisions"); buf.maxInto(other); buf }
+    else { require(buf.p == other.p, "mixed HLL precisions"); buf.maxFrom(other.registers, 0); buf }
   }
 
   override def eval(buf: HllBuffer): Any =
@@ -208,9 +206,7 @@ case class HllMergeAgg(
     HllSketch.serialize(buf.p, buf.registers)
   override def deserialize(bytes: Array[Byte]): HllBuffer = {
     val (pp, regs) = HllSketch.deserialize(bytes)
-    val buf = new HllBuffer(pp)
-    System.arraycopy(regs, 0, buf.registers, 0, regs.length)
-    buf
+    new HllBuffer(pp, regs)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
@@ -231,19 +227,15 @@ case class HllCard(child: Expression) extends UnaryExpression with KernelCall {
   override def prettyName: String = "hll_card"
 }
 
+/** The per-row probes read the image's registers in place. */
 object HllProbe {
-  def card(bytes: Array[Byte]): Long = {
-    val (p, regs) = HllSketch.deserialize(bytes)
-    HllSketch.estimate(p, regs)
-  }
+  def card(bytes: Array[Byte]): Long =
+    HllSketch.estimate(HllSketch.precision(bytes), bytes, HllSketch.Header)
   def zeros(bytes: Array[Byte]): Int = {
-    val (_, regs) = HllSketch.deserialize(bytes)
-    HllSketch.zeros(regs)
+    HllSketch.precision(bytes)
+    HllSketch.zeros(bytes, HllSketch.Header)
   }
-  def m(bytes: Array[Byte]): Int = {
-    val (p, _) = HllSketch.deserialize(bytes)
-    1 << p
-  }
+  def m(bytes: Array[Byte]): Int = 1 << HllSketch.precision(bytes)
 }
 
 /** Zero-register count of a sketch image — the input to the small-range

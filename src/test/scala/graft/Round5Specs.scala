@@ -302,50 +302,6 @@ class PackIntColSpec extends AnyFunSuite {
   }
 }
 
-class AuthorityLoopSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import graft.frontier.WaveLoop
-
-  test("PageRank authority reorders later waves: high-score url fetches first in-host") {
-    val s = spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("wavesauth").toString
-    val seeds = Seq(("http://h.test/s0", 0L), ("http://h.test/s1", 1L))
-      .toDF("url", "seed_idx")
-    // discovery order favors A (lower seed_idx); the link graph favors B:
-    // s0 → {B, A}, s1 → {B} ⇒ score(B) ≈ 1.42 > score(A) ≈ 0.58
-    val discover: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      wave =>
-        if (wave.where(col("canonical_url").contains("/s0")).count() > 0)
-          Seq(("http://h.test/a", 100L), ("http://h.test/b", 200L)).toDF("url", "seed_idx")
-        else wave.sparkSession.emptyDataFrame
-          .withColumn("url", lit("")).withColumn("seed_idx", lit(0L))
-          .select("url", "seed_idx")
-    val edgesOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      wave =>
-        if (wave.where(col("canonical_url").contains("/s0")).count() > 0)
-          Seq(("http://h.test/s0", "http://h.test/b"),
-            ("http://h.test/s0", "http://h.test/a"),
-            ("http://h.test/s1", "http://h.test/b")).toDF("src", "dst")
-        else Seq.empty[(String, String)].toDF("src", "dst")
-    val res = WaveLoop.run(spark, root, seeds, discover, maxWaves = 2,
-      edgesOf = Some(edgesOf), rankEvery = 1)
-    assert(res.length == 2 && res(1).scheduled == 2)
-    val w1 = spark.read.parquet(s"$root/schedule/wave=1")
-      .select("canonical_url", "host_pos").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(w1("http://h.test/b") == 1L, s"authority did not reorder: $w1")
-    assert(w1("http://h.test/a") == 2L, s"authority did not reorder: $w1")
-    // scores live in storage with a commit marker
-    assert(graft.core.Fs.exists(s"$root/rank/scores/_SUCCESS"))
-    // wave-0 ran BEFORE any scores existed: discovery order there
-    val w0 = spark.read.parquet(s"$root/schedule/wave=0")
-      .select("canonical_url", "host_pos").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(w0("http://h.test/s0") == 1L)
-  }
-}
-
 class DupSpansSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -531,53 +487,5 @@ class UrlGateSpec extends AnyFunSuite {
     assert(gated.where(!col("url_ok")).count() == 200)
     val plan = gated.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-}
-
-class WaveUrlGateSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import graft.frontier.{Discover, WaveLoop}
-
-  test("wave loop URL gate: blocked host never scheduled, audited as 452, crawl continues") {
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    // seed links to one good and one blocked host plus a casino path
-    def page(url: String, hrefs: Seq[String]) = graft.Schemas.Page(url, ts,
-      (s"<html><body><p>w</p>" +
-        hrefs.map(h => s"""<a href="$h">l</a>""").mkString + "</body></html>")
-        .getBytes("UTF-8"),
-      "w", "en")
-    val pages = Seq(
-      page("http://good.test/p/0", Seq("http://good.test/p/1",
-        "http://spam.bad.test/p/x", "http://good.test/casino/p")),
-      page("http://good.test/p/1", Seq.empty),
-      page("http://spam.bad.test/p/x", Seq.empty),
-      page("http://good.test/casino/p", Seq.empty))
-    val ptRoot = java.nio.file.Files.createTempDirectory("waveug").toString
-    graft.sources.PageTable.commit(spark, ptRoot, spark.createDataset(pages).toDF())
-    val stored = graft.sources.PageTable.read(spark, ptRoot)
-    val root = java.nio.file.Files.createTempDirectory("waveugrun").toString
-    val blocked = Seq("bad.test").toDF("host")
-    WaveLoop.run(spark, root, Seq(("http://good.test/p/0", 0L)).toDF("url", "seed_idx"),
-      Discover.fromPages(stored), maxWaves = 2, pages = Some(stored),
-      urlGate = Some((blocked, Seq("casino"))))
-    val scheduled = (0 to 1).flatMap(w =>
-      spark.read.parquet(s"$root/schedule/wave=$w").select("canonical_url")
-        .as[String].collect())
-    assert(scheduled.toSet == Set("http://good.test/p/0", "http://good.test/p/1"))
-    // both denials audited in wave-1 metrics with the 452 policy status
-    val m1 = spark.read.parquet(s"$root/metrics/wave=1")
-      .select("canonical_url", "status").as[(String, Int)].collect().toMap
-    assert(m1("http://spam.bad.test/p/x") == 452)
-    assert(m1("http://good.test/casino/p") == 452)
-    assert(m1("http://good.test/p/1") == 200)
-    val manifest = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(WaveLoop.manifestPath(root, 1)))
-    assert(manifest.contains("\"url_denied\":2"), manifest)
-    assert(manifest.contains("\"missed\":0"), manifest) // denials are not misses
-    for (w <- 0 to 1) {
-      val (totals, recomputed) = WaveManifest.totals(spark, root, w)
-      assert(totals == recomputed, s"wave $w")
-    }
   }
 }

@@ -67,99 +67,6 @@ class C4CleanSpec extends AnyFunSuite {
   }
 }
 
-class DustLoopSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import org.apache.spark.sql.DataFrame
-  import graft.frontier.WaveLoop
-
-  test("dust channel: learned rules collapse aliases in later waves") {
-    val root = java.nio.file.Files.createTempDirectory("dustloop").toString
-    // the crawl observes BOTH aliases of /x?page=1 with identical bodies in
-    // wave 0 — that is the digest evidence the sid rule is learned from
-    val pages = Seq(
-      ("http://a.test/x?page=1&sid=1", "<html>body-x1</html>"),
-      ("http://a.test/x?page=1", "<html>body-x1</html>")).toDF("url", "html")
-    val seeds = Seq(
-      ("http://a.test/x?page=1&sid=1", 0L),
-      ("http://a.test/x?page=1", 1L)).toDF("url", "seed_idx")
-    var calls = 0
-    val discover: DataFrame => DataFrame = { _ =>
-      calls += 1
-      if (calls == 1)
-        // a FRESH sid alias of the seen page (must die in the seen filter
-        // after the strip) and a sid-carrying new page (must schedule
-        // under its stripped form)
-        Seq(("http://a.test/x?page=1&sid=99", 0L),
-          ("http://a.test/y?page=2&sid=7", 1L)).toDF("url", "seed_idx")
-      else Seq.empty[(String, Long)].toDF("url", "seed_idx")
-    }
-    val res = WaveLoop.run(spark, root, seeds, discover, maxWaves = 3,
-      pages = Some(pages), metricsParseStats = false,
-      dustEvery = 1, dustMinSupport = 1L)
-    // wave 0: both seed aliases scheduled (no rules yet)
-    assert(res.head.scheduled == 2)
-    // rules learned after wave 0: (a.test, sid)
-    val rules = spark.read.parquet(s"$root/dust/rules")
-      .select("host", "param").as[(String, String)].collect().toSet
-    assert(rules == Set(("a.test", "sid")))
-    // wave 1: sid stripped BEFORE the seen filter — the x alias dies, the
-    // new y url schedules under its stripped canonical form
-    val w1 = spark.read.parquet(s"$root/schedule/wave=1")
-      .select("canonical_url").as[String].collect().toSet
-    assert(w1 == Set("http://a.test/y?page=2"))
-  }
-}
-
-class HostCardsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import org.apache.spark.sql.DataFrame
-  import graft.frontier.WaveLoop
-
-  test("host cardinality channel: merged sketches track exact uniques") {
-    val root = java.nio.file.Files.createTempDirectory("cards").toString
-    val seeds = (0 until 30)
-      .map(i => (s"http://h${i % 3}.test/p/$i", i.toLong))
-      .toDF("url", "seed_idx")
-    val discover: DataFrame => DataFrame = { sched =>
-      sched.where(col("seed_idx") < 60)
-        .select(concat(lit("http://h"), (col("seed_idx") % 3).cast("string"),
-          lit(".test/p/"), (col("seed_idx") + 30).cast("string")).as("url"),
-          (col("seed_idx") + 30).as("seed_idx"))
-    }
-    WaveLoop.run(spark, root, seeds, discover, maxWaves = 3,
-      metricsParseStats = false, hostCards = true)
-    // the sketches are read back with their declared schema: no Parquet
-    // schema-inference job, however many waves are committed
-    val cardJobs = SparkTestSession.jobsDuring(WaveLoop.hostCardinalities(spark, root))._2
-    assert(cardJobs.count(_.schemaInference) == 0, cardJobs.flatMap(_.stageNames).toString)
-    val exact = WaveLoop.crawlOrder(spark, root)
-      .groupBy("host_rev").agg(countDistinct("url_hash").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val est = WaveLoop.hostCardinalities(spark, root)
-      .select("host_rev", "est_urls")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est.keySet == exact.keySet && exact.values.sum == 90)
-    // linear-counting regime at n << m: estimates within a few percent
-    est.foreach { case (h, e) =>
-      assert(math.abs(e.toDouble / exact(h) - 1.0) < 0.05, s"$h: $e vs ${exact(h)}")
-    }
-    // duplicate insensitivity across waves: merging the SAME wave twice
-    // changes nothing (register max is idempotent)
-    val twice = spark.read.parquet(s"$root/cards/wave=0")
-      .unionByName(spark.read.parquet(s"$root/cards/wave=0"))
-      .groupBy("host_rev")
-      .agg(graft.functions.hll_merge_agg(col("sketch")).as("sketch"))
-      .select(col("host_rev"), graft.functions.hll_card_corrected(col("sketch")).as("e"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val once = spark.read.parquet(s"$root/cards/wave=0")
-      .select(col("host_rev"), graft.functions.hll_card_corrected(col("sketch")).as("e"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(twice == once)
-  }
-}
-
 class FocusPrioritiesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -247,68 +154,6 @@ class RegistrableDomainSpec extends AnyFunSuite {
     val keptFarm = kept.where(col("canonical_url").contains("farm"))
       .select("seed_idx").as[Long].collect().toSet
     assert(keptFarm == (0L until 10L).toSet)
-  }
-}
-
-class DomainBudgetLoopSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import org.apache.spark.sql.DataFrame
-  import graft.frontier.WaveLoop
-
-  test("maxPerDomain: a subdomain farm drains at the budget rate, nothing lost") {
-    val root = java.nio.file.Files.createTempDirectory("dombudget").toString
-    val seeds = ((0 until 30).map(i => (s"http://sub$i.farm.co.uk/p/$i", i.toLong))
-      ++ (0 until 5).map(i => (s"http://ok.example.com/p/$i", (100 + i).toLong)))
-      .toDF("url", "seed_idx")
-    val noDiscovery: DataFrame => DataFrame =
-      _ => Seq.empty[(String, Long)].toDF("url", "seed_idx")
-    val res = WaveLoop.run(spark, root, seeds, noDiscovery, maxWaves = 5,
-      metricsParseStats = false, maxPerDomain = Some(10L))
-    // wave 0: 10 farm + 5 ok; waves 1-2: 10 farm each; then exhausted
-    assert(res.map(_.scheduled) == Seq(15, 10, 10))
-    val order = WaveLoop.crawlOrder(spark, root)
-      .select("canonical_url").as[String].collect()
-    assert(order.length == 35 && order.distinct.length == 35)
-    // deferral preserves discovery order inside the domain
-    val w0farm = spark.read.parquet(s"$root/schedule/wave=0")
-      .where(col("canonical_url").contains("farm"))
-      .select("seed_idx").as[Long].collect().toSet
-    assert(w0farm == (0L until 10L).toSet)
-  }
-}
-
-class FocusLoopSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-  import graft.frontier.{Discover, WaveLoop}
-
-  test("focus channel: on-topic targets fetch first once anchor evidence lands") {
-    val root = java.nio.file.Files.createTempDirectory("focusloop").toString
-    // one host, a root page linking a topical and an off-topic child with
-    // telling anchor text; wave 0 fetches the root, the end-of-wave focus
-    // pass scores /topic, and wave 1 must schedule /topic BEFORE /cats
-    // within the host even though /cats was discovered first (href order)
-    val pages = Seq(
-      ("http://f.test/root",
-        "<html><body>" +
-          "<a href=\"/cats\">cat pictures daily</a>" +
-          "<a href=\"/topic\">rust compiler internals guide</a>" +
-          "</body></html>"),
-      ("http://f.test/cats", "<html><body><p>cats</p></body></html>"),
-      ("http://f.test/topic", "<html><body><p>rust</p></body></html>"))
-      .toDF("url", "html")
-    val seeds = Seq(("http://f.test/root", 0L)).toDF("url", "seed_idx")
-    val topics = Seq((0L, "rust compiler")).toDF("qid", "qtext")
-    WaveLoop.run(spark, root, seeds, Discover.fromPages(pages),
-      maxWaves = 2, pages = Some(pages), metricsParseStats = false,
-      focusQueries = Some(topics), focusEvery = 1)
-    val w1 = spark.read.parquet(s"$root/schedule/wave=1")
-      .select("canonical_url", "host_pos")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(w1.keySet == Set("http://f.test/topic", "http://f.test/cats"))
-    assert(w1("http://f.test/topic") < w1("http://f.test/cats"),
-      s"topical url must fetch first: $w1")
   }
 }
 
