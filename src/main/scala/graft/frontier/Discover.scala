@@ -188,7 +188,8 @@ object Discover {
     fetched(frontier, pages, urlCol, buckets, robots, parseStats, maxWords, overlap)()
 
   /** The fetch builder: frontier ⋈ bucket-pruned pages (one
-    * [[PageTable.pruneTo]], one left join; a miss is a NULL page), projected
+    * [[PageTable.pruneTo]] to `keyBuckets` when the caller observed the
+    * frontier's buckets, one left join; a miss is a NULL page), projected
     * once to the frontier columns, the [[fetchParse]] columns and `extra`
     * columns over the page cast to string once (NULL on a miss or a robots
     * denial: denied rows parse nothing). Every reader of a page selects
@@ -198,14 +199,13 @@ object Discover {
       buckets: Int = 64, robots: Robots.FullRules = Robots.FullAllowAll,
       parseStats: Boolean = true,
       maxWords: Int = graft.text.Chunker.MaxWords,
-      overlap: Int = graft.text.Chunker.OverlapWords)(
+      overlap: Int = graft.text.Chunker.OverlapWords,
+      keyBuckets: Option[Seq[Int]] = None)(
       extra: Column => Seq[Column] = _ => Nil): DataFrame = {
     val denied =
       if (robots.byHost.isEmpty && (robots.default eq Robots.HostRules.AllowAll)) lit(false)
-      else !Robots.allowedColFull(frontier.sparkSession, robots,
-        graft.functions.host_of(frontier(urlCol)),
-        graft.functions.url_path(frontier(urlCol)))
-    val p = PageTable.pruneTo(pages, frontier, urlCol, buckets)
+      else !Robots.allowedColFull(frontier.sparkSession, robots, frontier(urlCol))
+    val p = PageTable.pruneTo(pages, frontier, urlCol, buckets, keyBuckets)
       .select(col("url").as("__page_url"), col("html").as("__page"))
     val joined = frontier.join(p, frontier(urlCol) === p("__page_url"), "left")
       .withColumn("__html", col("__page").cast("string"))

@@ -3,8 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.sketch.BloomFilter
-import graft.functions.bloom_bank_agg
+import graft.functions.{sketch_agg, BankSketch, BloomBank, BloomFamily}
 import graft.core.{Fs, Rounds}
 
 /** Persistent seen-set ledger, the 10^10-scale layout the north rule names:
@@ -19,7 +18,7 @@ import graft.core.{Fs, Rounds}
   *    re-shuffled the whole ledger every wave, a cost that grows with crawl
   *    age instead of wave size.
   *  - '''incremental blooms''': wave K's bank = bank K-1 OR the bank of
-  *    delta K. The delta bank is one [[graft.functions.bloom_bank_agg]]
+  *    delta K. The delta bank is one bank aggregate ([[bankSketch]])
   *    over the delta (riding the append as an observed aggregate), the OR
   *    runs on the driver — O(|delta| + buckets). Round 1 re-aggregated the
   *    FULL ledger per wave.
@@ -57,11 +56,14 @@ final class Ledger(
     val maxBankBytes: Long = 64L << 20,
     val compactEvery: Int = 8) extends Serializable {
 
+  /** The bank: one bloom of (expectedPerBucket, fpp) per bucket. */
+  private val bankSketch = BankSketch(BloomFamily, buckets, expectedPerBucket, fpp)
+
   /** One empty per-bucket bloom, serialized — the shape every bucket of
     * the bank has (the size is fixed by (expectedPerBucket, fpp)).
     */
   @transient private lazy val emptyBloom: Array[Byte] =
-    Ledger.ser(BloomFilter.create(math.max(expectedPerBucket, 1024L), fpp))
+    BloomFamily.encode(bankSketch.emptyFilter())
 
   private val keepsBank: Boolean = buckets.toLong * emptyBloom.length <= maxBankBytes
 
@@ -189,8 +191,7 @@ final class Ledger(
   }
 
   /** The whole-bank aggregate over `url_hash`: one bloom per bucket. */
-  private def bankAgg: Column =
-    bloom_bank_agg(col("url_hash"), buckets, expectedPerBucket, fpp)
+  private def bankAgg: Column = sketch_agg(col("url_hash"), bankSketch)
 
   /** Commits wave K's bank = bank `prev` OR `delta` (one serialized bloom
     * per bucket), merged on the driver, as ONE file, and holds it. Bloom
@@ -201,7 +202,7 @@ final class Ledger(
     val prevRows = prev.map(bank(_).toMap).getOrElse(Map.empty[Int, Array[Byte]])
     val merged = Array.tabulate(buckets) { b =>
       (b, prevRows.get(b) match {
-        case Some(p) => Ledger.ser(Ledger.des(p).mergeInPlace(Ledger.des(delta(b))))
+        case Some(p) => BloomFamily.union(p, delta(b))
         case None => delta(b)
       })
     }
@@ -355,7 +356,8 @@ final class Ledger(
           if (w >= upToWave) identity
           else _.join(committed.where(col("wave") > w).select("url_hash"),
             Seq("url_hash"), "left_anti")
-        Seen.verifyPositives(candidates, Seen.bloomBankProbe(spark, bank(w), buckets),
+        Seen.verifyPositives(candidates,
+          Seen.bankProbe(new BloomBank(spark.sparkContext.broadcast(bank(w))), buckets),
           committed, checkNegatives)
     }
   }
@@ -516,11 +518,6 @@ object Ledger {
       .where(col("_ts_t_wave").isNull || col("wave") > col("_ts_t_wave"))
       .drop("_ts_t_wave")
   }
-
-  private def ser(f: BloomFilter): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(); f.writeTo(out); out.toByteArray
-  }
-  private def des(b: Array[Byte]): BloomFilter = BloomFilter.readFrom(b)
 
   /** Recursive delete for state roots (benchmarks, tests). */
   def deleteTree(path: String): Unit = graft.core.Fs.deleteTree(path)

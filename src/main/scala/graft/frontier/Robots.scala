@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import graft.functions.KernelCall
+import graft.url.UrlKit
 
 /** Robots.txt gate.
   *
@@ -15,7 +16,12 @@ import graft.functions.KernelCall
   * here is allow-all to preserve reference parity (SURVEY.md §2.3). The
   * north rule mandates the machinery: a per-executor robots cache broadcast
   * from the driver. Rules are each host's parsed robots.txt ([[FullRules]]:
-  * RFC 9309 longest-match Allow/Disallow plus Crawl-delay).
+  * RFC 9309 longest-match Allow/Disallow plus Crawl-delay). The gate is one
+  * expression over a url column (`robots_allowed_full`, [[allowedColFull]]):
+  * it reads the url's host and path itself, so a gate pushed below the
+  * keying projection evaluates `canonicalize_url` once, not once per
+  * component. The only per-row parser left is `robots_gap_seconds`, for
+  * fixtures and oracles.
   *
   * At 10^10 scale the broadcast holds rules only for hosts present in the
   * current wave (robots for 10^8 hosts do not fit one broadcast; per-wave
@@ -191,6 +197,8 @@ object Robots {
       defaultGapSeconds: Long = 3L) extends Serializable {
     def rulesOf(host: String): HostRules = byHost.getOrElse(host, default)
     def allows(host: String, path: String): Boolean = rulesOf(host).allows(path)
+    /** [[allows]] of a url's own host and path (the gate's one input). */
+    def allowsUrl(url: String): Boolean = allows(UrlKit.host(url), UrlKit.path(url))
     def gapSeconds(host: String): Long =
       rulesOf(host).crawlDelay
         .map(d => math.max(1L, math.ceil(d).toLong))
@@ -205,23 +213,23 @@ object Robots {
     FullRules(robotsTxtByHost.map { case (h, t) => h -> parse(t, agent) },
       HostRules.AllowAll, defaultGapSeconds)
 
-  /** The allow-predicate over broadcast [[FullRules]] as a Column (callers
-    * split allowed/denied without filtering the denied rows away — the
-    * denied side flows into metrics with status 451 instead of silently
-    * vanishing).
+  /** The allow-predicate of a url column over broadcast [[FullRules]]
+    * (callers split allowed/denied without filtering the denied rows away —
+    * the denied side flows into metrics with status 451 instead of
+    * silently vanishing). The host and path both come from `url` inside
+    * the one call, so a gate over `canonicalize_url(…)` evaluates it once.
     */
-  def allowedColFull(spark: SparkSession, full: FullRules,
-      host: Column, path: Column): Column = {
+  def allowedColFull(spark: SparkSession, full: FullRules, url: Column): Column = {
     val bc = spark.sparkContext.broadcast(full)
-    Bridge.column(RobotsFullAllowedExpr(bc,
-      Bridge.expression(host), Bridge.expression(path)))
+    Bridge.column(RobotsFullAllowedExpr(bc, Bridge.expression(url)))
   }
 
-  /** Filter by parsed full rules (longest-match Allow/Disallow). */
+  /** Filter a keyed frame ([[Seen.withUrlKeys]]) by parsed full rules
+    * (longest-match Allow/Disallow) on its `canonical_url`.
+    */
   def filterAllowedFull(df: DataFrame, full: FullRules): DataFrame = {
     if (full.byHost.isEmpty && (full.default eq HostRules.AllowAll)) return df
-    df.where(allowedColFull(df.sparkSession, full, col("host"),
-      graft.functions.url_path(col("canonical_url"))))
+    df.where(allowedColFull(df.sparkSession, full, col("canonical_url")))
   }
 
   /** Per-host politeness gap (Crawl-delay or the default) over broadcast
@@ -232,28 +240,27 @@ object Robots {
     Bridge.column(RobotsGapExpr(bc, Bridge.expression(host)))
   }
 
-  // static helpers the per-row parser expressions codegen against (the
+  // static helper the per-row parser expression codegens against (the
   // fixture/oracle surface — a real crawl parses each host's robots.txt
   // ONCE into broadcast FullRules, never per row)
   def gapSecondsOf(txt: String, agent: String, defaultGap: Long): Long =
     FullRules(Map.empty, parse(txt, agent), defaultGap).gapSeconds("")
-  def txtAllows(txt: String, agent: String, path: String): Boolean =
-    parse(txt, agent).allows(path)
 }
 
-/** (host, path) → allowed? over broadcast PARSED [[Robots.FullRules]]
-  * (longest-match Allow/Disallow precedence, RFC 9309). The rules ride a
-  * TorrentBroadcast (bytes once per executor, not per task) and the probe
-  * stays inside whole-stage codegen as a call on the broadcast's value.
+/** url → allowed? over broadcast PARSED [[Robots.FullRules]]
+  * (longest-match Allow/Disallow precedence, RFC 9309, on the url's host
+  * and path). The rules ride a TorrentBroadcast (bytes once per executor,
+  * not per task) and the probe stays inside whole-stage codegen as a call
+  * on the broadcast's value.
   */
-case class RobotsFullAllowedExpr(bc: Broadcast[Robots.FullRules],
-    left: Expression, right: Expression) extends BinaryExpression with KernelCall {
+case class RobotsFullAllowedExpr(bc: Broadcast[Robots.FullRules], child: Expression)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override protected def call: Expression =
-    invoke(broadcastValue(bc, classOf[Robots.FullRules]), "allows", str(left), str(right))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : RobotsFullAllowedExpr = copy(left = l, right = r)
+    invoke(broadcastValue(bc, classOf[Robots.FullRules]), "allowsUrl", str(child))
+  override protected def withNewChildInternal(c: Expression): RobotsFullAllowedExpr =
+    copy(child = c)
   override def prettyName: String = "robots_allowed_full"
 }
 
@@ -285,18 +292,4 @@ case class RobotsGapSeconds(child: Expression, agent: String, defaultGap: Long)
   override protected def withNewChildInternal(c: Expression): RobotsGapSeconds =
     copy(child = c)
   override def prettyName: String = "robots_gap_seconds"
-}
-
-/** (robots.txt body, path) → allowed? for `agent` — per-row parser twin of
-  * [[RobotsGapSeconds]] for fixtures/oracles.
-  */
-case class RobotsTxtAllows(left: Expression, right: Expression, agent: String)
-    extends BinaryExpression with KernelCall {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def call: Expression =
-    static(Robots, "txtAllows", str(left), const(agent), str(right))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsTxtAllows =
-    copy(left = l, right = r)
-  override def prettyName: String = "robots_txt_allows"
 }

@@ -1,9 +1,9 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.functions.{bloom_bank_agg, canonicalize_url, cuckoo_agg, host_of, host_reverse, BloomBank, BloomBankProbe, CuckooBank, CuckooBankProbe}
+import graft.functions.{canonicalize_url, host_of, host_reverse, sketch_agg, BankSketch, BloomBank, BloomFamily, CuckooBank, CuckooFamily, FilterBank}
 
 /** URL-seen set: exact membership, bloom-accelerated.
   *
@@ -22,12 +22,16 @@ import graft.functions.{bloom_bank_agg, canonicalize_url, cuckoo_agg, host_of, h
   *     pre-partitioned and shuffles only the candidate side. The helpers
   *     in THIS object take ad-hoc ledger frames (benchmarks, single-shot
   *     jobs) with a sketch built on the fly or supplied by the caller;
-  *   - bloom pre-filter: a bank of one BloomFilter per hash bucket (one
-  *     bucket for an ad-hoc ledger), built by one
-  *     [[graft.functions.bloom_bank_agg]] (a TypedImperativeAggregate).
-  *     `might_contain == false` → DEFINITELY new → skips the join entirely.
-  *     Only bloom-positives (true hits + fpp·|new|) reach the left-anti join,
-  *     so the shuffled fraction is ≈ |dups| + 0.1% of |new| instead of 100%.
+  *   - filter pre-filter: a bank of one filter per hash bucket (one
+  *     bucket for an ad-hoc ledger), bloom or cuckoo, built by the one
+  *     bank aggregate ([[graft.functions.BankSketch]] through
+  *     [[graft.functions.SketchAgg]]; `bloom_bank_agg` is its bloom name)
+  *     and probed through one [[graft.functions.FilterBank]]. A negative
+  *     probe → DEFINITELY new → skips the join entirely. Only positives
+  *     (true hits + fpp·|new|) reach the left-anti join, so the shuffled
+  *     fraction is ≈ |dups| + 0.1% of |new| instead of 100%. Every entry
+  *     point here and [[Ledger.filterUnseen]] share that aggregate, that
+  *     probe and one verify tail ([[verifyPositives]]).
   *
   * Keys are `xxhash64(canonical_url)` (north rule: murmur3-family hashing;
   * Spark's `hash` = Murmur3_x86_32 is used for bucketing where 32 bits
@@ -53,7 +57,7 @@ object Seen {
     * @return candidates minus seen (exact)
     */
   def filterUnseen(candidates: DataFrame, seenLedger: DataFrame,
-      expectedSeen: Long = 1L << 20, fpp: Double = 1e-3): DataFrame = {
+      expectedSeen: Long = 1L << 20, fpp: Double = 1e-3): DataFrame =
     // one aggregate job builds a ONE-bucket bank over the ledger; at 10^10
     // the same dataflow runs with one bloom per hash bucket ([[Ledger]]).
     // NOTE the verify split re-evaluates `candidates` on both branches —
@@ -61,10 +65,8 @@ object Seen {
     // this BEFORE any shuffling stage like dropInWaveDuplicates (the two
     // commute: seen-status is a function of url_hash, constant within a
     // duplicate group).
-    val bank = seenLedger.select(bloom_bank_agg(col("url_hash"), 1, expectedSeen, fpp))
-      .head().getSeq[Array[Byte]](0)
-    filterUnseenWithBank(candidates, seenLedger, Array(0 -> bank.head), buckets = 1)
-  }
+    filterUnseenWithBank(candidates, seenLedger,
+      bankOf(seenLedger, BankSketch(BloomFamily, 1, expectedSeen, fpp)), buckets = 1)
 
   /** Partitioned-bloom variant of [[filterUnseen]] with a CALLER-SUPPLIED
     * bank — the 10^10-scale shape the north rule names ("partitioned bloom
@@ -89,13 +91,14 @@ object Seen {
       bankRows: Array[(Int, Array[Byte])], buckets: Int): DataFrame = {
     if (bankRows.isEmpty) return candidates
     verifyPositives(candidates,
-      bloomBankProbe(candidates.sparkSession, bankRows, buckets), seenLedger)
+      bankProbe(new BloomBank(candidates.sparkSession.sparkContext.broadcast(bankRows)), buckets),
+      seenLedger)
   }
 
-  /** Cuckoo-bank twin of [[filterUnseenWithBank]] that builds its bank from
-    * `seenLedger` (the cuckoo family of "partitioned bloom/cuckoo URL-seen
-    * set"; oracle query q69). Same dataflow — per-bucket sketch aggregate →
-    * one broadcast bank → probe routes negatives past the anti-join — with
+  /** Cuckoo-bank twin of [[filterUnseen]] (the cuckoo family of
+    * "partitioned bloom/cuckoo URL-seen set"; oracle query q69). Same
+    * dataflow and the same bank aggregate — one filter per bucket, one
+    * broadcast bank, the probe routes negatives past the anti-join — with
     * the cuckoo trade: ~1.2e-4 fpp at 19.5 bits/key, fewer false positives
     * reach the anti-join than the 1e-2 bloom default at comparable bytes.
     * Membership stays exact either way: sketch positives are verified by
@@ -104,31 +107,26 @@ object Seen {
     */
   def filterUnseenCuckooBucketed(candidates: DataFrame, seenLedger: DataFrame,
       buckets: Int = 64, expectedPerBucket: Long = 1 << 16): DataFrame = {
-    val spark = candidates.sparkSession
-    val rows = seenLedger
-      .groupBy(bucketOf(col("url_hash"), buckets).as("bucket"))
-      .agg(cuckoo_agg(col("url_hash"), math.max(expectedPerBucket, 1024L)).as("ck"))
-      .collect()
-    if (rows.isEmpty) return candidates
-    val bank = new CuckooBank(spark.sparkContext.broadcast(
-      rows.map(r => (r.getAs[Int]("bucket"), r.getAs[Array[Byte]]("ck")))))
-    verifyPositives(candidates, Bridge.column(CuckooBankProbe(bank,
-      Bridge.expression(bucketOf(col("url_hash"), buckets)),
-      Bridge.expression(col("url_hash")))), seenLedger)
+    val rows = bankOf(seenLedger, BankSketch(CuckooFamily, buckets, expectedPerBucket, 0.0))
+    verifyPositives(candidates,
+      bankProbe(new CuckooBank(candidates.sparkSession.sparkContext.broadcast(rows)), buckets),
+      seenLedger)
   }
 
-  /** Bank bucket of a url_hash: the routing every per-bucket sketch shares. */
-  private[frontier] def bucketOf(c: Column, buckets: Int): Column =
-    pmod(c, lit(buckets)).cast("int")
+  /** A bank over `url_hash` of `keys` as (bucket, filter image) rows: the
+    * one bank aggregate, run as one job.
+    */
+  private def bankOf(keys: DataFrame, bank: BankSketch[_]): Array[(Int, Array[Byte])] =
+    keys.select(sketch_agg(col("url_hash"), bank)).head().getSeq[Array[Byte]](0)
+      .zipWithIndex.map(_.swap).toArray
 
-  /** Probe column over a broadcast bank of (bucket, serialized bloom) rows. */
-  private[frontier] def bloomBankProbe(spark: SparkSession,
-      rows: Array[(Int, Array[Byte])], buckets: Int): Column = {
-    val bank = new BloomBank(spark.sparkContext.broadcast(rows))
-    Bridge.column(BloomBankProbe(bank,
-      Bridge.expression(bucketOf(col("url_hash"), buckets)),
+  /** The probe column of a broadcast bank over `url_hash`, routed to the
+    * bucket `pmod(url_hash, buckets)` the bank aggregate filed it under.
+    */
+  private[frontier] def bankProbe(bank: FilterBank[_], buckets: Int): Column =
+    Bridge.column(bank.probe(
+      Bridge.expression(pmod(col("url_hash"), lit(buckets)).cast("int")),
       Bridge.expression(col("url_hash"))))
-  }
 
   /** The exact tail every sketch pre-filter shares: probe-negatives are
     * definitely new and skip the join; probe-positives are verified by the

@@ -4,14 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.core.{Fs, Rounds}
+import graft.sources.PageTable
 
 /** Iterative-batch frontier loop with checkpoint/resume and per-partition
   * lineage (north rule: "checkpoint-resumable frontier state with
   * per-partition lineage and fetch/parse metrics").
   *
-  * A steady PageTable wave with robots rules and edges runs 22 Spark jobs
+  * A steady PageTable wave with robots rules and edges runs 20 Spark jobs
   * when it is its own `run` call (WaveLoopSpec pins it; a [[Ledger]]
-  * shared across calls saves its bank read), one pages join among them;
+  * shared across calls saves its bank read), one pages join among them,
+  * pruned to the page buckets observed on the schedule write;
   * its frontier is counted on the next/ write that made it, not re-read.
   * State crosses waves ONLY via storage (a 10^10-frontier
   * cannot live in driver memory), so every local checkpoint a wave makes
@@ -337,8 +339,7 @@ object WaveLoop {
       // the denied audit branch — building it twice re-broadcast the rule
       // map every wave and re-ran the matcher over the frontier a second
       // time at metrics time
-      val allowedPred = fullRules.map(fr => Robots.allowedColFull(spark, fr,
-        col("host"), graft.functions.url_path(col("canonical_url"))))
+      val allowedPred = fullRules.map(Robots.allowedColFull(spark, _, col("canonical_url")))
       val gated = allowedPred.fold(keyed)(keyed.where(_))
       // denied rows are audit surface, not garbage: with metrics on they are
       // written as status-451/452 rows next to the wave's fetch metrics below.
@@ -441,9 +442,17 @@ object WaveLoop {
       // their output; the scheduler's checkpoint hides the cap's from it
       made ++= Seq(scheduled, unseenCapped) ++ deferredRows
 
-      // wave data writes (overwrite → idempotent re-run of an uncommitted wave)
-      conform(scheduled, ScheduleSchema)
+      // wave data writes (overwrite → idempotent re-run of an uncommitted wave).
+      // The schedule's page buckets ride its write, so the fetch below
+      // prunes the pages without a collect of its own
+      val schedObs = Observation()
+      val pageBucket = pages.flatMap(PageTable.bucketIn(_, col("canonical_url"), 64))
+      val schedule = conform(scheduled, ScheduleSchema)
+      pageBucket.fold(schedule)(b => schedule.observe(schedObs, collect_set(b).as("buckets")))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/schedule/wave=$wave")
+      // an empty write surfaces no metrics: its bucket set is empty
+      val schedBuckets = pageBucket.map(_ =>
+        schedObs.get.get("buckets").fold(Seq.empty[Int])(_.asInstanceOf[Seq[Int]]))
       // every later step of the wave reads the COMMITTED schedule
       val sched = readSchedule(spark, root, wave)
 
@@ -456,7 +465,8 @@ object WaveLoop {
       }
       val fetched = pages.map(pg => Discover.fetched(
         sched.select("url", "canonical_url", "url_hash", "seed_idx"), pg, "canonical_url",
-        parseStats = metricsParseStats)(h => linkGate.map(Discover.gatedLinks(h, _).as("links")).toSeq))
+        parseStats = metricsParseStats, keyBuckets = schedBuckets)(
+        h => linkGate.map(Discover.gatedLinks(h, _).as("links")).toSeq))
       val held = fetched.filter(_ => linkGate.nonEmpty).map(_.persist())
       def fromFetched(f: DataFrame => DataFrame): DataFrame = (f, fetched) match {
         case (p: Discover.PageLinks, Some(fr)) if shares(p) && linkGate.contains(p.respectNofollow) =>

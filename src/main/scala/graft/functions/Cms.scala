@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 /** Count-min sketch over BIGINT keys (Cormode & Muthukrishnan '05) — the
@@ -77,57 +75,33 @@ final class CmsBuffer(val depth: Int, val width: Int) extends Serializable {
   }
 }
 
-/** CMS build aggregate: BIGINT keys → serialized sketch BINARY. Map-side
-  * partials merge by element-wise add (fixed-size arrays on the wire,
-  * never rows — the bloom_bank_agg shape).
+/** CMS build (`cms_agg`): BIGINT keys → serialized sketch BINARY.
+  * Map-side partials merge by element-wise add (fixed-size arrays on the
+  * wire, never rows).
   */
-case class CmsAgg(
-    child: Expression,
-    depth: Int,
-    width: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CmsBuffer] {
-
+case class CmsBuild(depth: Int, width: Int) extends Sketch[CmsBuffer] {
   require(depth >= 1 && depth <= 16 && width >= 16,
     s"cms shape out of range: $depth x $width")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): CmsBuffer = new CmsBuffer(depth, width)
-
-  override def update(buf: CmsBuffer, input: InternalRow): CmsBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long], 1L)
+  def name: String = "cms_agg"
+  def dataType: DataType = BinaryType
+  def empty(): CmsBuffer = new CmsBuffer(depth, width)
+  def add(buf: CmsBuffer, value: Any, inputType: DataType): CmsBuffer = {
+    buf.add(value.asInstanceOf[Long], 1L)
     buf
   }
-
-  override def merge(buf: CmsBuffer, other: CmsBuffer): CmsBuffer = {
+  def merge(buf: CmsBuffer, other: CmsBuffer): CmsBuffer = {
     var i = 0
     while (i < buf.counts.length) { buf.counts(i) += other.counts(i); i += 1 }
     buf
   }
-
-  override def eval(buf: CmsBuffer): Any =
-    CmSketch.serialize(buf.depth, buf.width, buf.counts)
-  override def serialize(buf: CmsBuffer): Array[Byte] =
-    CmSketch.serialize(buf.depth, buf.width, buf.counts)
-  override def deserialize(bytes: Array[Byte]): CmsBuffer = {
+  def result(buf: CmsBuffer): Any = toBytes(buf)
+  def toBytes(buf: CmsBuffer): Array[Byte] = CmSketch.serialize(buf.depth, buf.width, buf.counts)
+  def fromBytes(bytes: Array[Byte]): CmsBuffer = {
     val (d, w, c) = CmSketch.deserialize(bytes)
     val buf = new CmsBuffer(d, w)
     System.arraycopy(c, 0, buf.counts, 0, c.length)
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CmsAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "cms_agg"
 }
 
 /** Frequency estimate probe: (sketch BINARY, key BIGINT) → BIGINT.

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types._
-
 /** Partial-key cuckoo filter over BIGINT keys (Fan et al., "Cuckoo Filter:
   * Practically Better Than Bloom", CoNEXT '14) — the second sketch family
   * the north rule names for the URL-seen set ("partitioned bloom/cuckoo").
@@ -273,66 +268,4 @@ object CuckooFilter {
 
   /** The alt-bucket XOR offset depends on the FINGERPRINT only. */
   @inline private def altOffset(fp: Short): Int = (mix64(fp.toLong & 0xFFFFL) >>> 16).toInt
-}
-
-/** Cuckoo-filter build aggregate over BIGINT keys → serialized filter
-  * BINARY. TypedImperativeAggregate with map-side partials; partials merge
-  * by fingerprint re-insertion (same-size filters — `expectedItems` is a
-  * literal, so every buffer agrees).
-  */
-case class CuckooAgg(
-    child: Expression,
-    expectedItems: Long,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooFilter] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): CuckooFilter =
-    CuckooFilter.create(expectedItems)
-
-  override def update(buf: CuckooFilter, input: InternalRow): CuckooFilter = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: CuckooFilter, other: CuckooFilter): CuckooFilter =
-    buf.mergeInPlace(other)
-
-  override def eval(buf: CuckooFilter): Any = buf.serialize()
-  override def serialize(buf: CuckooFilter): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CuckooFilter =
-    CuckooFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CuckooAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CuckooAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CuckooAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "cuckoo_agg"
-}
-
-/** Cuckoo membership probe: (serialized filter BINARY, key BIGINT) →
-  * BOOLEAN. The filter side is a Literal, decoded once per distinct
-  * array reference per thread ([[CuckooProbe]]).
-  */
-case class CuckooMightContain(left: Expression, right: Expression)
-    extends BinaryExpression with KernelCall {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def call: Expression =
-    static(CuckooProbe, "mightContain", left, right)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooMightContain =
-    copy(left = l, right = r)
-  override def prettyName: String = "cuckoo_might_contain"
-}
-
-object CuckooProbe {
-  private val last = new LastDecoded(CuckooFilter.deserialize)
-  def mightContain(bytes: Array[Byte], key: Long): Boolean = last(bytes).mightContain(key)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 /** HyperLogLog distinct-count sketch (Flajolet et al., AofA '07) — the
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types._
   * element-wise max — fully commutative and idempotent, so images are
   * partition-order-independent (bit-comparable, like CMS and unlike the
   * cuckoo's layout) and re-aggregating per-bucket sketches into a global
-  * one ([[HllMergeAgg]]) costs `m` bytes per group on the wire at ANY key
+  * one ([[HllMerge]]) costs `m` bytes per group on the wire at ANY key
   * cardinality.
   *
   * Register update (the classic low-bits convention): for 64-bit hash
@@ -119,103 +117,58 @@ final class HllBuffer(val p: Int, val registers: Array[Byte]) extends Serializab
   }
 }
 
-/** HLL build aggregate: pre-hashed BIGINT keys → serialized sketch
+/** The buffer bytes of both HLL aggregates: the serialized image. */
+sealed abstract class HllImages extends Sketch[HllBuffer] {
+  def dataType: DataType = BinaryType
+  def toBytes(buf: HllBuffer): Array[Byte] = HllSketch.serialize(buf.p, buf.registers)
+  def fromBytes(bytes: Array[Byte]): HllBuffer = {
+    val (pp, regs) = HllSketch.deserialize(bytes)
+    new HllBuffer(pp, regs)
+  }
+}
+
+/** HLL build (`hll_agg`): pre-hashed BIGINT keys → serialized sketch
   * BINARY. The hash contract is the caller's (`xxhash64(url)` in
   * production; plantable arithmetic values under test) — the kernel does
   * not re-mix, which is what keeps it oracle-replayable.
   */
-case class HllAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllBuffer] {
-
+case class HllBuild(p: Int) extends HllImages {
   require(p >= 4 && p <= 11, s"hll precision out of range (4..11): $p")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer(p)
-
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v != null) HllSketch.add(buf.registers, buf.p, v.asInstanceOf[Long])
+  def name: String = "hll_agg"
+  def empty(): HllBuffer = new HllBuffer(p)
+  def add(buf: HllBuffer, value: Any, inputType: DataType): HllBuffer = {
+    HllSketch.add(buf.registers, buf.p, value.asInstanceOf[Long])
     buf
   }
-
-  override def merge(buf: HllBuffer, other: HllBuffer): HllBuffer = {
-    buf.maxFrom(other.registers, 0)
-    buf
-  }
-
-  override def eval(buf: HllBuffer): Any = HllSketch.serialize(buf.p, buf.registers)
-  override def serialize(buf: HllBuffer): Array[Byte] =
-    HllSketch.serialize(buf.p, buf.registers)
-  override def deserialize(bytes: Array[Byte]): HllBuffer = {
-    val (pp, regs) = HllSketch.deserialize(bytes)
-    new HllBuffer(pp, regs)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HllAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "hll_agg"
+  def merge(buf: HllBuffer, other: HllBuffer): HllBuffer = { buf.maxFrom(other.registers, 0); buf }
+  def result(buf: HllBuffer): Any = toBytes(buf)
 }
 
-/** Re-aggregate serialized HLL images (element-wise register max) — the
-  * incremental path: per-bucket / per-wave sketches roll up to host or
-  * corpus cardinality without touching keys again.
+/** HLL merge (`hll_merge_agg`): serialized same-precision images →
+  * element-wise register max — the incremental path: per-bucket /
+  * per-wave sketches roll up to host or corpus cardinality without
+  * touching keys again. NULL over no image.
   */
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllBuffer] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = BinaryType
+case object HllMerge extends HllImages {
+  def name: String = "hll_merge_agg"
   override def nullable: Boolean = true
+  def empty(): HllBuffer = new HllBuffer(0) // sentinel: no image yet
 
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer(0) // sentinel
-
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v == null) return buf
-    val bytes = v.asInstanceOf[Array[Byte]]
-    if (buf.p == 0) return deserialize(bytes)
+  def add(buf: HllBuffer, value: Any, inputType: DataType): HllBuffer = {
+    val bytes = value.asInstanceOf[Array[Byte]]
+    if (buf.p == 0) return fromBytes(bytes)
     val pp = HllSketch.precision(bytes)
     require(buf.p == pp, s"mixed HLL precisions: ${buf.p} vs $pp")
     buf.maxFrom(bytes, HllSketch.Header)
     buf
   }
 
-  override def merge(buf: HllBuffer, other: HllBuffer): HllBuffer = {
+  def merge(buf: HllBuffer, other: HllBuffer): HllBuffer =
     if (other.p == 0) buf
     else if (buf.p == 0) other
     else { require(buf.p == other.p, "mixed HLL precisions"); buf.maxFrom(other.registers, 0); buf }
-  }
 
-  override def eval(buf: HllBuffer): Any =
-    if (buf.p == 0) null else HllSketch.serialize(buf.p, buf.registers)
-  override def serialize(buf: HllBuffer): Array[Byte] =
-    HllSketch.serialize(buf.p, buf.registers)
-  override def deserialize(bytes: Array[Byte]): HllBuffer = {
-    val (pp, regs) = HllSketch.deserialize(bytes)
-    new HllBuffer(pp, regs)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HllMergeAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "hll_merge_agg"
+  def result(buf: HllBuffer): Any = if (buf.p == 0) null else toBytes(buf)
 }
 
 /** Cardinality probe: sketch BINARY → BIGINT fixed-point estimate. */

@@ -2,12 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.embed.HashEmbed
 import graft.text.{Chunker, HtmlText, TextStats}
@@ -443,167 +441,6 @@ case class Fingerprints(child: Expression, k: Int, w: Int)
   override protected def withNewChildInternal(c: Expression): Fingerprints =
     copy(child = c)
   override def prettyName: String = "fingerprints"
-}
-
-/** Whole-bank bloom aggregate: BIGINT keys → ARRAY<BINARY> of `buckets`
-  * serialized blooms, key k landing in bloom `pmod(k, buckets)`. ONE
-  * aggregate evaluating its child once per row — N separate one-bloom
-  * aggregates over `when(bucket = b, …)` cost N child evals per row
-  * (measured: it cost WaveBench ~15% when the bank rode an `observe()`),
-  * while this is O(1) per row with the same output bytes. Buffer is the
-  * live bloom array; partials merge element-wise (bloom OR — order-free).
-  */
-case class BloomBankAgg(
-    child: Expression,
-    buckets: Int,
-    expectedPerBucket: Long,
-    fpp: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[BloomFilter]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Array[BloomFilter] =
-    Array.fill(buckets)(BloomFilter.create(expectedPerBucket, fpp))
-
-  override def update(buf: Array[BloomFilter], input: InternalRow): Array[BloomFilter] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val k = v.asInstanceOf[Long]
-      val b = ((k % buckets) + buckets) % buckets
-      buf(b.toInt).putLong(k)
-    }
-    buf
-  }
-
-  override def merge(buf: Array[BloomFilter], other: Array[BloomFilter]): Array[BloomFilter] = {
-    var i = 0
-    while (i < buf.length) { buf(i).mergeInPlace(other(i)); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[BloomFilter]): Any =
-    new GenericArrayData(buf.map { f =>
-      val out = new java.io.ByteArrayOutputStream()
-      f.writeTo(out)
-      out.toByteArray
-    }.toArray[Any])
-
-  override def serialize(buf: Array[BloomFilter]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val dos = new java.io.DataOutputStream(out)
-    dos.writeInt(buf.length)
-    buf.foreach { f =>
-      val b = new java.io.ByteArrayOutputStream()
-      f.writeTo(b)
-      dos.writeInt(b.size())
-      b.writeTo(dos)
-    }
-    dos.flush()
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[BloomFilter] = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    Array.fill(n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
-    }
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomBankAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomBankAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): BloomBankAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "bloom_bank_agg"
-}
-
-/** Component-wise vector sum over ARRAY<FLOAT>/ARRAY<DOUBLE> — the
-  * scalable pooling aggregate: the buffer is ONE double[dim] per group and
-  * map-side partials merge by element-wise add, so nothing proportional to
-  * GROUP SIZE is ever buffered or shuffled (a collect_list-based pool
-  * buffers every member vector of a group in one aggregate row — the
-  * mega-group trap exactDuplicateMembers exists to avoid). Nulls are
-  * skipped; mixed dimensions in one group reject loudly (a silent
-  * truncate-or-pad would corrupt every pooled embedding downstream).
-  */
-case class VecSumAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = false
-
-  @transient private lazy val elemIsDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-
-  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
-
-  override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
-    val v = child.eval(input)
-    if (v == null) return buf
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val b =
-      if (buf.length == 0) new Array[Double](n)
-      else {
-        require(buf.length == n,
-          s"vec_sum_agg: dimension mismatch ($n vs ${buf.length}) in one group")
-        buf
-      }
-    var i = 0
-    while (i < n) {
-      b(i) += (if (elemIsDouble) a.getDouble(i) else a.getFloat(i).toDouble)
-      i += 1
-    }
-    b
-  }
-
-  override def merge(buf: Array[Double], other: Array[Double]): Array[Double] = {
-    if (other.length == 0) return buf
-    if (buf.length == 0) return other
-    require(buf.length == other.length,
-      s"vec_sum_agg: dimension mismatch (${other.length} vs ${buf.length}) across partials")
-    var i = 0
-    while (i < buf.length) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Double]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putDouble(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val out = new Array[Double](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getDouble(); i += 1 }
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): VecSumAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "vec_sum_agg"
 }
 
 /** Lateral-view form of the chunker: one output row per chunk with its

@@ -84,8 +84,13 @@ package object functions {
     */
   def bloom_bank_agg(keys: Column, buckets: Int, expectedPerBucket: Long,
       fpp: Double = 1e-2): Column =
-    col(BloomBankAgg(expr(keys), buckets, math.max(expectedPerBucket, 1024L), fpp)
-      .toAggregateExpression())
+    sketch_agg(keys, BankSketch(BloomFamily, buckets, expectedPerBucket, fpp))
+
+  /** A [[Sketch]] as an aggregate column ([[SketchAgg]]): the one binding
+    * the named sketch aggregates and the filter banks share.
+    */
+  private[graft] def sketch_agg(input: Column, sketch: Sketch[_]): Column =
+    col(SketchAgg(expr(input), sketch).toAggregateExpression())
 
   /** Count-min frequency estimate (sketch BINARY, key BIGINT) → BIGINT;
     * never under-counts.
@@ -95,19 +100,19 @@ package object functions {
 
   /** Count-min sketch build aggregate: BIGINT keys → serialized sketch. */
   def cms_agg(keys: Column, depth: Int = 4, width: Int = 1 << 16): Column =
-    col(CmsAgg(expr(keys), depth, width).toAggregateExpression())
+    sketch_agg(keys, CmsBuild(depth, width))
 
   /** HLL distinct-count build aggregate: pre-hashed BIGINT keys →
     * serialized sketch BINARY (2^p one-byte registers).
     */
   def hll_agg(hashes: Column, p: Int = 11): Column =
-    col(HllAgg(expr(hashes), p).toAggregateExpression())
+    sketch_agg(hashes, HllBuild(p))
 
   /** Merge aggregate over serialized same-precision HLL images → BINARY
     * (element-wise register max — commutative AND idempotent).
     */
   def hll_merge_agg(sketches: Column): Column =
-    col(HllMergeAgg(expr(sketches)).toAggregateExpression())
+    sketch_agg(sketches, HllMerge)
 
   /** Fixed-point HLL cardinality estimate: sketch BINARY → BIGINT. */
   def hll_card(sketch: Column): Column = col(HllCard(expr(sketch)))
@@ -178,21 +183,11 @@ package object functions {
       u => F.length(F.regexp_replace(u, "^https?://", "")) > 0)
   }
 
-  /** Cuckoo membership probe (filter BINARY literal/column, key BIGINT). */
-  def cuckoo_might_contain(filter: Column, key: Column): Column =
-    col(CuckooMightContain(expr(filter), expr(key)))
-
-  /** Cuckoo-filter build aggregate: BIGINT keys → serialized filter BINARY
-    * (16-bit fingerprints, 4-way buckets, fpp ≈ 1.2e-4; supports delete).
-    */
-  def cuckoo_agg(keys: Column, expectedItems: Long): Column =
-    col(CuckooAgg(expr(keys), expectedItems).toAggregateExpression())
-
   /** Component-wise vector-sum aggregate (ARRAY<FLOAT|DOUBLE> →
     * ARRAY<DOUBLE>); one double[dim] buffer per group, map-side partials.
     */
   def vec_sum_agg(vecs: Column): Column =
-    col(VecSumAgg(expr(vecs)).toAggregateExpression())
+    sketch_agg(vecs, VecSum)
 
   /** Path component of a URL ("/" when empty/unparseable) — robots key. */
   def url_path(c: Column): Column = col(UrlPath(expr(c)))
@@ -247,10 +242,6 @@ package object functions {
   def robots_gap_seconds(txt: Column, agent: String = "graft",
       defaultGap: Long = 3L): Column =
     col(graft.frontier.RobotsGapSeconds(expr(txt), agent, defaultGap))
-
-  /** (robots.txt body, path) → allowed? for the agent (RFC 9309 longest-match). */
-  def robots_txt_allows(txt: Column, path: Column, agent: String = "graft"): Column =
-    col(graft.frontier.RobotsTxtAllows(expr(txt), expr(path), agent))
 
   /** Repetition quality signals, one kernel pass per row:
     * STRUCT(n_lines, dup_line_frac, excess_char_frac, top_bigram_frac).

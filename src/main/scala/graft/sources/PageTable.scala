@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Fs
@@ -103,7 +103,7 @@ object PageTable {
 
   private def writeData(pages: DataFrame, dir: String, buckets: Int): Unit =
     pages.select(schema.fieldNames.map(col): _*)
-      .withColumn("bucket", pmod(hash(col("url")), lit(buckets)))
+      .withColumn("bucket", bucketOf(col("url"), buckets))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("bucket")
       .parquet(dir)
@@ -215,24 +215,34 @@ object PageTable {
     (drop, dropDirs)
   }
 
+  /** The layout's url → bucket column. */
+  private def bucketOf(url: Column, buckets: Int): Column = pmod(hash(url), lit(buckets))
+
+  /** `url`'s bucket in the layout of `pages`: the modulus from the table's
+    * own metadata when present — a caller-supplied count that disagrees
+    * with the committed layout would prune away MATCHING pages (false 404s
+    * / lost links) — else `buckets`. None for frames without the `bucket`
+    * column (nothing to prune).
+    */
+  def bucketIn(pages: DataFrame, url: Column, buckets: Int): Option[Column] =
+    if (pages.columns.contains("bucket"))
+      Some(bucketOf(url, bucketCountOf(pages).getOrElse(buckets)))
+    else None
+
   /** Static bucket pruning of a [[read]] frame to the DISTINCT derived
-    * buckets of a url-keyed frame (one cheap job), so a selective wave reads
-    * only its buckets. (Dynamic partition pruning doesn't fire: it wants a
-    * selective predicate on the frontier side — measured.) No-op for frames
-    * without the `bucket` column.
+    * buckets of a url-keyed frame, so a selective wave reads only its
+    * buckets. (Dynamic partition pruning doesn't fire: it wants a
+    * selective predicate on the frontier side — measured.) The set is
+    * `keyBuckets` when the caller observed it on the write that made the
+    * keys, else one cheap collect. No-op for frames without the `bucket`
+    * column.
     */
   def pruneTo(pages: DataFrame, keys: DataFrame, urlCol: String,
-      buckets: Int = 64): DataFrame =
-    if (pages.columns.contains("bucket")) {
-      // modulus from the table's own metadata when present — a
-      // caller-supplied count that disagrees with the committed layout
-      // would prune away MATCHING pages (false 404s / lost links)
-      val b = bucketCountOf(pages).getOrElse(buckets)
-      val keyBuckets = keys
-        .select(pmod(hash(col(urlCol)), lit(b)).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      pages.where(col("bucket").isin(keyBuckets: _*))
-    } else pages
+      buckets: Int = 64, keyBuckets: Option[Seq[Int]] = None): DataFrame =
+    bucketIn(pages, col(urlCol), buckets).fold(pages) { b =>
+      val in = keyBuckets.getOrElse(keys.select(b).distinct().collect().map(_.getInt(0)).toSeq)
+      pages.where(col("bucket").isin(in: _*))
+    }
 
   /** Fetch replay: frontier(url, …) ⋈ pages ON url — the rebuild's analogue
     * of the reference's `driver.get(url)` (`web_scraper_pipeline.py:61`):

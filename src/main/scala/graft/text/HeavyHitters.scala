@@ -11,7 +11,7 @@ import graft.functions.{cms_agg, cms_estimate}
   * row PER DISTINCT KEY — at 10^10 distinct n-grams that is the whole
   * corpus through the exchange to find the ~10^3 keys that matter. This
   * operator applies the seen-set discipline to counting: a count-min
-  * sketch (fixed 2 MiB, [[graft.functions.CmsAgg]]) absorbs the corpus in
+  * sketch (fixed 2 MiB, [[graft.functions.CmsBuild]]) absorbs the corpus in
   * one map-side-combined pass, and because CMS estimates never
   * UNDER-count, `estimate < threshold` rows are DEFINITELY below
   * threshold and skip the exact pass entirely. Only sketch-positive rows

@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.frontier.Seen
-import graft.functions.CuckooFilter
+import graft.functions.{sketch_agg, BankSketch, CuckooBank, CuckooBankProbe, CuckooFamily, CuckooFilter}
 
 /** Cuckoo filter (Fan '14): the deletable second sketch of the north rule's
   * "partitioned bloom/cuckoo URL-seen set". Local-structure tests pin the
@@ -84,12 +85,14 @@ class CuckooSpec extends AnyFunSuite {
     assert(in.forall(f.mightContain), "saturated filter answers true for everything")
   }
 
-  test("cuckoo_agg + cuckoo_might_contain: zero false negatives through SQL") {
+  test("one-bucket cuckoo bank + CuckooBankProbe: zero false negatives through SQL") {
     val keys = spark.range(5000).select(xxhash64(col("id").cast("string")).as("url_hash"))
-    val ck = keys.select(graft.functions.cuckoo_agg(col("url_hash"), 5000).as("c"))
-      .collect()(0).getAs[Array[Byte]](0)
+    val ck = keys.select(sketch_agg(col("url_hash"), BankSketch(CuckooFamily, 1, 5000, 0.0)))
+      .head().getSeq[Array[Byte]](0)
+    val bank = new CuckooBank(spark.sparkContext.broadcast(Array(0 -> ck.head)))
     val misses = keys
-      .where(!graft.functions.cuckoo_might_contain(lit(ck), col("url_hash")))
+      .where(!Bridge.column(CuckooBankProbe(bank, Bridge.expression(lit(0)),
+        Bridge.expression(col("url_hash")))))
       .count()
     assert(misses == 0)
   }

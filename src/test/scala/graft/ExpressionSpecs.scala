@@ -41,26 +41,24 @@ class ExpressionSpec extends AnyFunSuite {
     def image(agg: Column) = keys.agg(agg).head().getAs[Array[Byte]](0)
     val cms = image(cms_agg(col("k"), 4, 64))
     val hll = image(hll_agg(col("k"), 6))
-    val ck = image(cuckoo_agg(col("k"), 100L))
     val rows = Seq(
       Row(0L, "HTTP://Ex.COM:80/a/./b?q=%7E1#f", "<p>a  b</p><script>x</script>",
         "the cat sat on the mat, the cat sat", "the cat sat on a hat", Array[Byte](-119, 80, 78, 71),
         Seq(0.5f, -1f, 2f, 0.25f), Seq[Byte](1, -2, 3, 4), Seq("a", "b", "a", "b"),
-        "User-agent: *\nDisallow: /private\nCrawl-delay: 2.4", "/private/x", 7919L, cms, hll, ck),
+        "User-agent: *\nDisallow: /private\nCrawl-delay: 2.4", "/private/x", 7919L, cms, hll),
       Row(1L, "HTTP://BÜCHER.Example/Straße?x=ä#frag", html,
         "Cafe\u0301 naïve Grüße — \u00e9t\u00e9 ﬁ", "Café naïve", "<!DOCTYPE html>".getBytes("UTF-8"),
         Seq(-1f, 0.5f, 0.5f, 3f), Seq[Byte](-128, 0, 127, 5), Seq("ü", "ß", "ü", "ß"),
-        "User-agent: graft\nAllow: /private/ok\nDisallow: /", "/private/ok", 123L, cms, hll, ck),
+        "User-agent: graft\nAllow: /private/ok\nDisallow: /", "/private/ok", 123L, cms, hll),
       Row(2L, "https://XN--BCHER-KVA.example/Ä/../b", "", "", "x", Array.emptyByteArray,
         Seq(0f, 0f, 0f, 0f), Seq[Byte](0, 0, 0, 0), Seq.empty[String], "", "mailto:u@h.t", 0L,
-        cms, hll, ck),
-      Row.fromSeq(3L +: Seq.fill(14)(null)))
+        cms, hll),
+      Row.fromSeq(3L +: Seq.fill(13)(null)))
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)) ++ Seq(
       "url" -> StringType, "html" -> StringType, "text" -> StringType, "text2" -> StringType,
       "raw" -> BinaryType, "vec" -> ArrayType(FloatType), "i8" -> ArrayType(ByteType),
       "syms" -> ArrayType(StringType, containsNull = false), "robots" -> StringType,
-      "path" -> StringType, "key" -> LongType, "cms" -> BinaryType, "hll" -> BinaryType,
-      "ck" -> BinaryType).map { case (n, t) => StructField(n, t) })
+      "path" -> StringType, "key" -> LongType, "cms" -> BinaryType, "hll" -> BinaryType).map { case (n, t) => StructField(n, t) })
     val dir = java.nio.file.Files.createTempDirectory("kernels").toString + "/in"
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).write.parquet(dir)
     spark.read.parquet(dir)
@@ -76,7 +74,8 @@ class ExpressionSpec extends AnyFunSuite {
     def e(c: Column) = Bridge.expression(c)
     def k(x: Expression) = Bridge.column(x)
     val blooms = keys.agg(bloom_bank_agg(col("k"), 2, 100L)).head().getSeq[Array[Byte]](0)
-    val ck = keys.agg(cuckoo_agg(col("k"), 100L)).head().getAs[Array[Byte]](0)
+    val cuckoos = keys.agg(sketch_agg(col("k"), BankSketch(CuckooFamily, 2, 100L, 0.0)))
+      .head().getSeq[Array[Byte]](0)
     val bucket = e(pmod(col("key"), lit(2)).cast("int"))
     val cents = new graft.ann.IvfCentroids(sc.broadcast(Array(
       Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 1f))))
@@ -123,15 +122,13 @@ class ExpressionSpec extends AnyFunSuite {
       "hll_zeros" -> hll_zeros(col("hll")),
       "hll_m" -> hll_m(col("hll")),
       "cms_estimate" -> cms_estimate(col("cms"), col("key")),
-      "cuckoo_might_contain" -> cuckoo_might_contain(col("ck"), col("key")),
       "bloom_bank_probe" -> k(BloomBankProbe(new BloomBank(sc.broadcast(
         blooms.zipWithIndex.map { case (b, i) => (i, b) }.toArray)), bucket, e(col("key")))),
       "cuckoo_bank_probe" -> k(CuckooBankProbe(new CuckooBank(sc.broadcast(
-        Array((0, ck), (1, ck)))), bucket, e(col("key")))),
-      "robots_allowed_full" -> Robots.allowedColFull(spark, rules, host_of(col("url")), col("path")),
+        cuckoos.zipWithIndex.map { case (b, i) => (i, b) }.toArray)), bucket, e(col("key")))),
+      "robots_allowed_full" -> Robots.allowedColFull(spark, rules, col("url")),
       "robots_gap" -> Robots.gapColFull(spark, rules, host_of(col("url"))),
-      "robots_gap_seconds" -> robots_gap_seconds(col("robots")),
-      "robots_txt_allows" -> robots_txt_allows(col("robots"), col("path")))
+      "robots_gap_seconds" -> robots_gap_seconds(col("robots")))
   }
 
   /** Pure-Scala twins: kernel name → staged input row → expected value. */
@@ -167,8 +164,7 @@ class ExpressionSpec extends AnyFunSuite {
         java.text.Normalizer.normalize(text(r), java.text.Normalizer.Form.NFC)),
       "srp_bucket" -> (r =>
         SrpReference.srpBucket(r.getAs[Seq[Float]]("vec").toArray, 4, 7)),
-      "robots_gap_seconds" -> (r => Robots.gapSecondsOf(s("robots")(r), "graft", 3L)),
-      "robots_txt_allows" -> (r => Robots.txtAllows(s("robots")(r), "graft", s("path")(r))))
+      "robots_gap_seconds" -> (r => Robots.gapSecondsOf(s("robots")(r), "graft", 3L)))
   }
 
   private def withConf[A](kv: Map[String, String])(f: => A): A = {
@@ -265,6 +261,68 @@ class ExpressionSpec extends AnyFunSuite {
     val missed = df.where(col("g") === 0).select("k").as[Long].collect()
       .count(k => !b0.mightContainLong(k))
     assert(missed == 0)
+  }
+
+  test("sketch aggregates equal a driver-side fold over any partitioning") {
+    import org.apache.spark.util.sketch.BloomFilter
+    // keys with nulls and vectors with nulls, the vectors' sums exact in
+    // any order (quarters), so every image can be compared byte for byte
+    val rows = (0 until 2000).map { i =>
+      Row(if (i % 13 == 0) null else i * 0x9E3779B97F4A7C15L,
+        if (i % 11 == 0) null else Seq.tabulate(4)(j => ((i + j) % 8) * 0.25f))
+    }
+    val all = spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("k", LongType), StructField("v", ArrayType(FloatType)))))
+    val ks = rows.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+    val vs = rows.flatMap(r => Option(r.getSeq[Float](1)))
+    // the driver-side folds, through each sketch's own Scala code
+    def bloom(keys: Seq[Long]) = {
+      val fs = Array.fill(4)(BloomFilter.create(2000, 1e-2))
+      keys.foreach(k => fs(java.lang.Math.floorMod(k, 4L).toInt).putLong(k))
+      fs.toSeq.map { f =>
+        val out = new java.io.ByteArrayOutputStream(); f.writeTo(out); out.toByteArray.toSeq
+      }
+    }
+    def cms(keys: Seq[Long]) = {
+      val c = new Array[Long](4 * 64)
+      for (k <- keys; d <- 0 until 4) c(d * 64 + CmSketch.rowIndex(k, d, 64)) += 1
+      CmSketch.serialize(4, 64, c).toSeq
+    }
+    def hll(keys: Seq[Long]) = {
+      val r = new Array[Byte](64)
+      keys.foreach(HllSketch.add(r, 6, _))
+      HllSketch.serialize(6, r).toSeq
+    }
+    def vecSum(v: Seq[Seq[Float]]) =
+      if (v.isEmpty) Seq.empty[Double]
+      else v.map(_.map(_.toDouble)).reduce((a, b) => a.zip(b).map { case (x, y) => x + y })
+    def images(df: DataFrame, parts: Int) = {
+      val in = df.repartition(parts)
+      val r = in.agg(bloom_bank_agg(col("k"), 4, 2000), cms_agg(col("k"), 4, 64),
+        hll_agg(col("k"), 6), vec_sum_agg(col("v"))).head()
+      // per-group images plus a null image, merged over `parts` partitions
+      val groups = in.groupBy(pmod(col("k"), lit(5))).agg(hll_agg(col("k"), 6).as("h"))
+        .select("h").unionByName(spark.range(1).select(lit(null).cast("binary").as("h")))
+      val merged = groups.repartition(parts).agg(hll_merge_agg(col("h"))).head()
+      (r.getSeq[Array[Byte]](0).map(_.toSeq), r.getAs[Array[Byte]](1).toSeq,
+        r.getAs[Array[Byte]](2).toSeq, r.getSeq[Double](3), Option(merged.getAs[Array[Byte]](0)).map(_.toSeq))
+    }
+    for (parts <- Seq(1, 8))
+      assert(images(all, parts) == ((bloom(ks), cms(ks), hll(ks), vecSum(vs), Some(hll(ks)))),
+        s"$parts partitions")
+    assert(images(all.where(lit(false)), 8) ==
+      ((bloom(Nil), cms(Nil), hll(Nil), Seq.empty[Double], None)), "empty input")
+    // the cuckoo bank's layout depends on merge order, its answers do not
+    val cuckoo = BankSketch(CuckooFamily, 4, 2000, 0.0)
+    val probes = ks ++ (0 until 3000).map(i => i * 31L + 7)
+    val answers = Seq(1, 8).map { parts =>
+      val fs = all.repartition(parts).agg(sketch_agg(col("k"), cuckoo)).head()
+        .getSeq[Array[Byte]](0).map(CuckooFamily.decode)
+      def has(k: Long) = CuckooFamily.contains(fs(java.lang.Math.floorMod(k, 4L).toInt), k)
+      assert(ks.forall(has), s"false negative at $parts partitions")
+      probes.map(has)
+    }
+    assert(answers(0) == answers(1))
   }
 
   test("srp_bucket expression == HashEmbed.srpBucket spec twin") {

@@ -150,6 +150,26 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("LeftAnti"), plan)
   }
 
+  test("url- and robots-gated frontier: the robots gate canonicalizes each url once") {
+    // built the way WaveLoop builds its gated frame: url keys, the url
+    // policy gate on canonical_url, then the robots gate on canonical_url
+    import spark.implicits._
+    val keyed = frontier.Seen.withUrlKeys(spark.range(50)
+      .select(concat(lit("http://H"), (col("id") % 5).cast("string"),
+        lit(".test/p/"), col("id").cast("string")).as("url"),
+        col("id").as("seed_idx")))
+    val g = graft.url.UrlGate.gate(keyed, "canonical_url", Seq("h1.test").toDF("host"), Seq("casino"))
+    val urlOk = g.where(col("url_ok")).drop("url_ok", "url_reasons")
+    val rules = frontier.Robots.parseAll(Map("h2.test" -> "User-agent: *\nDisallow: /p/2\n"))
+    val gated = urlOk.where(frontier.Robots.allowedColFull(spark, rules, col("canonical_url")))
+    // the keying projection canonicalizes once, the url gate's blocked-host
+    // side twice (its host projection and not-null filter), and the robots
+    // gate pushed below the projection once: host and path are read inside
+    // one call (a gate over host_of(…) and url_path(…) made it five)
+    val plan = gated.queryExecution.optimizedPlan.toString
+    assert("canonicalize_url\\(".r.findAllMatchIn(plan).size == 4, plan)
+  }
+
   test("minhash near-dups evaluate minhash_sig ZERO times in the final plan (staged once)") {
     import spark.implicits._
     val docs = spark.range(60).select(col("id"),

@@ -322,8 +322,8 @@ class WaveLoopSpec extends AnyFunSuite {
       // denied rows: the wave's input frontier, keyed, failing robots, deduped
       val input = if (w == 0) seeds else spark.read.parquet(s"$root/next/wave=${w - 1}")
       val keyed = Seen.withUrlKeys(input)
-      val denied = Seen.dropInWaveDuplicates(keyed.where(!Robots.allowedColFull(spark, rules,
-          col("host"), graft.functions.url_path(col("canonical_url")))))
+      val denied = Seen.dropInWaveDuplicates(keyed.where(
+          !Robots.allowedColFull(spark, rules, col("canonical_url"))))
         .select(col("url"), col("canonical_url"), col("url_hash"), col("seed_idx"),
           lit(451).as("status"), lit(null).cast("long").as("n_chars"),
           lit(null).cast("long").as("n_chunks"))
@@ -340,11 +340,12 @@ class WaveLoopSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/next/wave=1").count() > 0)
   }
 
-  test("one pages join per wave: pinned jobs, one bucket-pruning collect, no storage held") {
+  test("one pages join per wave: pinned jobs, no pruning collect, no storage held") {
     // every wave is one run call, as in the seen-set pin above. The pages
     // table is joined once per wave for discovery, edges and metrics
-    // together, so one PageTable.pruneTo bucket collect runs per wave.
-    val pinned = Seq(21, 22, 22)
+    // together, pruned to the bucket set observed on the schedule write,
+    // so no PageTable.pruneTo bucket collect runs.
+    val pinned = Seq(19, 20, 20)
     val (pages, rules, seeds) = pageSite()
     val root = java.nio.file.Files.createTempDirectory("wavepagejobs").toString
     // the session is shared across suites: start from an empty cache
@@ -360,7 +361,7 @@ class WaveLoopSpec extends AnyFunSuite {
     }
     def pruneCollects(jobs: Seq[SparkTestSession.Job]) = jobs
       .filter(_.sqlCallSite.exists(_.startsWith("collect at PageTable.scala"))).flatMap(_.execution).distinct
-    assert(perWave.map(pruneCollects(_).size) == Seq(1, 1, 1),
+    assert(perWave.map(pruneCollects(_).size) == Seq(0, 0, 0),
       perWave.map(_.flatMap(_.sqlCallSite).distinct).toString)
     assert(perWave.map(_.size) == pinned, s"jobs per wave: ${perWave.map(_.size)}")
   }

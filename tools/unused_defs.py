@@ -4,7 +4,8 @@
 A name counts as used when it occurs, as a whole word, in src/main or in
 perfbench/src more often than it is defined there. Comments are ignored;
 string literals are not (SQL text names registered functions), so a name
-that only a string mentions counts as used. Overrides and `main` are entry
+that only a string mentions counts as used, except an expression's own
+`prettyName` line, which names it without using it. Overrides and `main` are entry
 points and are skipped. Run from the repository root:
 
     python3 tools/unused_defs.py
@@ -37,8 +38,11 @@ def unused():
     for root in ROOTS:
         for path in sorted(root.rglob("*.scala")):
             code = strip_comments(path.read_text(encoding="utf-8"))
-            for word in WORD.findall(code):
-                uses[word] = uses.get(word, 0) + 1
+            for line in code.split("\n"):
+                if "prettyName" in line:
+                    continue  # an expression naming itself is no use
+                for word in WORD.findall(line):
+                    uses[word] = uses.get(word, 0) + 1
             if root != ROOTS[0]:
                 continue
             for n, line in enumerate(code.split("\n"), 1):
